@@ -7,10 +7,7 @@ from kafka_sink_azure_kusto_spark.functions.filters import (  # noqa: F401
     drop_tombstones,
     drop_empty_serializations,
 )
-from kafka_sink_azure_kusto_spark.functions.routing import (  # noqa: F401
-    routing_table_df,
-    with_route,
-)
+from kafka_sink_azure_kusto_spark.functions.routing import with_route  # noqa: F401
 from kafka_sink_azure_kusto_spark.functions.encoders import (  # noqa: F401
     decode_payload,
     encode_csv_line,

@@ -4,51 +4,24 @@ Reference: per-record lookup with exact topic match first, then ``*``
 wildcard fallback; an unmapped topic is a hard error
 (KustoSinkTask.java:334-340 lookup, :145-184 map build, :400-402 error).
 
-Spark-first design: the routing table is tiny (one row per configured
-topic), so we express the lookup as a **broadcast left join** against a
-routing DataFrame — Catalyst turns this into a BroadcastHashJoin, i.e.
-a map-side lookup with no shuffle, which is exactly the reference's
-in-memory Map<String, TopicIngestionProperties> at any scale.
-The wildcard fallback becomes a ``coalesce`` with the broadcast-joined
-wildcard row's values.
+Spark-first design: the routing config is tiny (one entry per
+configured topic, O(10) in the reference), so it compiles into one CASE
+expression per route column — the reference's in-memory
+Map<String, TopicIngestionProperties> as a narrow projection: no join,
+no shuffle, whole-stage codegen'd. The wildcard is the CASE's ELSE
+branch; with no wildcard an unmapped topic gets null routes, and the
+caller decides what null means (the sink: an error under FAIL, the DLQ
+otherwise).
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from kafka_sink_azure_kusto_spark.config import TopicToTableMapping
-
-_ROUTE_SCHEMA = StructType(
-    [
-        StructField("topic", StringType(), False),
-        StructField("db", StringType(), False),
-        StructField("table", StringType(), False),
-        StructField("format", StringType(), False),
-        StructField("mapping", StringType(), True),
-        StructField("streaming", BooleanType(), False),
-    ]
-)
-
-
-def routing_table_df(
-    spark: SparkSession, mappings: Sequence[TopicToTableMapping]
-) -> DataFrame:
-    """Materialize the routing config as a (tiny) DataFrame."""
-    rows = [
-        (m.topic, m.db, m.table, m.ingest_format, m.mapping, m.streaming)
-        for m in mappings
-    ]
-    return spark.createDataFrame(rows, _ROUTE_SCHEMA)
 
 
 def with_route(

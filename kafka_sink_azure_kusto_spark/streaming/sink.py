@@ -9,18 +9,29 @@ guarantee as the reference's lastCommittedOffset scheme with replay
 granularity of a micro-batch instead of a file (SURVEY §7.4).
 
 Scale notes:
-- Encoding is JVM-side (``to_json``/``concat_ws``; whole-stage codegen).
-- File staging runs on executors via ``applyInPandas`` grouped by
-  (topic, partition, file_seq): each Kafka partition's records land in
-  rolled files exactly like one TopicPartitionWriter, groups are bounded
-  by flush_size_bytes so no group can OOM an executor, and the only
-  shuffle is keyed on the natural (topic, partition) parallelism unit.
+- One pass per epoch, whatever the mapping count: every record is
+  routed once (the compiled CASE of ``functions.routing.with_route``)
+  and encoded once, JVM-side (one ``line`` CASE on the route's format).
+  The encoded frame is persisted, so the source is read once; one
+  aggregate over it sizes the epoch and counts unmapped records.
+- The only exchange is keyed on (topic, partition), the natural Kafka
+  parallelism unit. File assignment and the grouped staging call
+  (``applyInPandas`` over (topic, partition, file_seq), all routes at
+  once) both reuse it: each Kafka partition's records land in rolled
+  files exactly like one TopicPartitionWriter, and groups are bounded by
+  flush_size_bytes so no group can OOM an executor.
+- Staging tasks are sized by bytes, not by cores: the exchange gets
+  ceil(encoded bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+  partitions — AQE's own rule with ``parallelismFirst`` off. Every Python
+  staging task holds a worker process of about 130 MB, so a small epoch
+  stages in one task and a large one scales out.
 - Only the tiny per-file manifest is collected to the driver; record
-  data never is (DLQ records — failed files only — are the bounded
-  exception).
-- Ingestion of a batch's staged files runs on a bounded thread pool
+  data never is (the custom DLQ writer's failure tail is the bounded
+  exception). The DLQ reads the persisted frame, narrowed to the failed
+  topics and offset ranges, never the source.
+- Every mapping's staged files ingest through one bounded thread pool
   (``config.ingest_threads``): ingest RPCs are I/O-bound HTTP, so one
-  slow file no longer serializes the whole batch behind its retry loop.
+  slow file does not serialize the epoch behind its retry loop.
 
 Staging-directory requirement (multi-node clusters): in the default
 driver-ingest mode, files are WRITTEN by executors (``applyInPandas``)
@@ -42,64 +53,46 @@ manifest (metrics, behavior.on.error, DLQ).
 from __future__ import annotations
 
 import logging
+import math
 import os
-from dataclasses import dataclass
-from typing import Iterable, Optional
+from typing import Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, StructType
 
 from kafka_sink_azure_kusto_spark.config import (
     BehaviorOnError,
+    ConfigException,
     KustoSinkConfig,
     TopicToTableMapping,
 )
-from kafka_sink_azure_kusto_spark.functions.encoders import encode_for_format
+from kafka_sink_azure_kusto_spark.functions.encoders import encode_csv_line
 from kafka_sink_azure_kusto_spark.functions.filters import drop_tombstones
+from kafka_sink_azure_kusto_spark.functions.routing import with_route
 from kafka_sink_azure_kusto_spark.operators.batching import with_file_assignment
 from kafka_sink_azure_kusto_spark.streaming.backends import (
     IngestBackend,
     IngestionProperties,
+    IngestResult,
+    classify_ingest_error,
 )
 from kafka_sink_azure_kusto_spark.streaming.metrics import SinkMetrics
 from kafka_sink_azure_kusto_spark.streaming.retry import retry_with_backoff
 
 log = logging.getLogger(__name__)
 
-_MANIFEST_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("topic", StringType(), False),
-        StructField("partition", LongType(), False),
-        StructField("file_offset", LongType(), False),
-        StructField("records", LongType(), False),
-        StructField("raw_bytes", LongType(), False),
-        # Executor-side-ingest outcome (driver-mode rows carry "Staged").
-        StructField("status", StringType(), False),
-        StructField("error", StringType(), False),
-        StructField("attempts", LongType(), False),
-    ]
+_AVRO_FORMATS = ("avro", "apacheavro")
+_COLUMNAR_FORMATS = ("parquet", "orc")
+_CONTAINER_FORMATS = (*_AVRO_FORMATS, *_COLUMNAR_FORMATS)
+
+# One row per rolled file (the staged-file manifest); status, error and
+# attempts carry the executor-side ingest outcome (driver mode: "Staged").
+_MANIFEST_SCHEMA = (
+    "path string, topic string, partition long, file_offset long, last_offset long, "
+    "records long, raw_bytes long, status string, error string, attempts long"
 )
-
-
-@dataclass(frozen=True)
-class StagedFile:
-    path: str
-    topic: str
-    partition: int
-    file_offset: int
-    records: int
-    raw_bytes: int
-    status: str = "Staged"
-    error: str = ""
-    attempts: int = 0
 
 
 # Per-Python-worker backend cache for executor-side ingest: one client
@@ -120,142 +113,180 @@ def _cached_backend(token: str, factory):
     return b
 
 
-def _stage_writer(
-    out_dir: str,
-    fmt: str,
-    binary_mode: bool = False,
-    avro_schema: Optional[dict] = None,
-    arrow_schema=None,
-    ingest: Optional[dict] = None,
+def _ingest_file(backend, path, props, max_attempts, backoff_ms, is_permanent, on_attempt):
+    """R2 constant backoff + R3 permanent classification around K1/K2."""
+
+    def attempt():
+        result = backend.ingest_file(path, props)
+        if not result.accepted:
+            raise RuntimeError(f"ingestion final status {result.status}")
+        return result
+
+    retry_with_backoff(
+        attempt,
+        max_attempts=max_attempts,
+        backoff_ms=backoff_ms,
+        is_permanent=is_permanent,
+        on_attempt=on_attempt,
+    )
+
+
+def _encode_line(df: DataFrame) -> Column:
+    """E1–E4 — one ``line`` per record, JVM-side, by the route's format.
+    Dispatch mirrors FileWriter.initializeRecordWriter (F4): a struct
+    payload is serialized per format; a string payload already IS the
+    line (StringRecordWriterProvider); a binary payload stays bytes on
+    every route (ByteRecordWriterProvider), as a CASE has one result
+    type. Unrouted records get the default rendering, their DLQ value."""
+    if "line" in df.columns:
+        return F.col("line")
+    value_type = df.schema["value"].dataType
+    if isinstance(value_type, BinaryType):
+        return F.col("value")
+    if not isinstance(value_type, StructType):
+        return F.col("value").cast("string")
+    fmt = F.col("route_format")
+    cols = [f"value.{c}" for c in value_type.fieldNames()]
+    # Container formats stage the struct itself; their line is a size
+    # proxy (B1 then tracks the container size within a small constant
+    # factor — documented deviation, the reference counts exact avro
+    # bytes) AND the DLQ value, so it keeps null fields to stay
+    # schema-faithful (to_json drops nulls by default).
+    return (
+        F.when(
+            fmt.isin(*_CONTAINER_FORMATS),
+            F.to_json(F.col("value"), {"ignoreNullFields": "false"}),
+        )
+        .when(fmt == "csv", encode_csv_line(df, cols))
+        .when(fmt == "tsv", encode_csv_line(df, cols, sep="\t"))
+        .otherwise(F.to_json(F.col("value")))
+    )
+
+
+def _failed_records(failed: list[Row], staged: list[Row]) -> Column:
+    """Predicate for the records of the ``failed`` files in the persisted
+    epoch frame. A file holds the offsets from its first to its last in
+    its (topic, partition), so each run of adjacent failed files in
+    ``staged`` (sorted by (topic, partition, file_offset) per mapping) is
+    one offset range: a whole failed partition is one term."""
+    bad = {(s.topic, s.partition, s.file_offset) for s in failed}
+    ranges: list[list] = []
+    prev = None
+    for s in staged:
+        key = (s.topic, s.partition)
+        if (*key, s.file_offset) not in bad:
+            prev = None
+        elif prev == key:
+            ranges[-1][3] = s.last_offset
+        else:
+            ranges.append([s.topic, s.partition, s.file_offset, s.last_offset])
+            prev = key
+    terms = [
+        (F.col("topic") == t) & (F.col("partition") == p) & F.col("offset").between(lo, hi)
+        for t, p, lo, hi in ranges
+    ]
+    while len(terms) > 1:  # a balanced OR keeps the expression tree shallow
+        terms = [terms[i] | terms[i + 1] if i + 1 < len(terms) else terms[i]
+                 for i in range(0, len(terms), 2)]
+    return F.col("topic").isin(sorted({s.topic for s in failed})) & terms[0]
+
+
+def _dlq_value(line, avro: bool):
+    """A DLQ record's value: Avro bytes stay bytes, any other line is text."""
+    if isinstance(line, (bytes, bytearray)):
+        return bytes(line) if avro else bytes(line).decode("utf-8", "replace")
+    return str(line)
+
+
+def _epoch_writer(
+    staging_root: str,
+    binary_values: bool,
+    avro_schema: Optional[dict],
+    arrow_schema,
+    ingest: Optional[dict],
 ):
-    """Build the applyInPandas group writer: one rolled gzipped file per
-    (topic, partition, file_seq) group, named per B4
-    (TopicPartitionWriter.java:235-242), owner-only perms like
-    FileWriter.openFile (FileWriter.java:93-154).
+    """Build the applyInPandas group writer of one epoch: one rolled file
+    per (topic, partition, file_seq) group in its route's format under
+    ``staging_root/db/table``, named per B4 (TopicPartitionWriter.java:
+    235-242), owner-only perms like FileWriter.openFile (:93-154).
 
-    ``binary_mode`` is the E4 bytes passthrough: payloads are written
-    verbatim with no newline separator (Avro bytes = one complete
-    container file per message, ByteRecordWriterProvider.java:21-39).
-
-    ``avro_schema`` switches on E2 struct→Avro: the group's ``value``
-    structs are serialized into ONE Avro Object Container File per rolled
-    file (pure-Python writer, functions/avro_io.py — the DataFileWriter
-    path of AvroRecordWriterProvider.java:27-73), then gzipped like every
-    other staged format (FileWriter.java:151).
-
-    ``arrow_schema`` switches on struct→parquet (extension beyond the
-    reference's writer set; Kusto ingests parquet natively): one parquet
-    file per rolled file via pyarrow, typed by the Spark struct schema.
+    Avro with binary values is the E4 passthrough, one complete container
+    per message (ByteRecordWriterProvider.java:21-39); avro with struct
+    values is E2, ONE container of the group's structs
+    (AvroRecordWriterProvider.java:27-73); parquet/orc with struct values
+    is one pyarrow file (extension; Kusto ingests both natively, but
+    rejects a .gz wrapper around them — text and Avro keep the
+    reference's .gz); anything else is ``line`` newline-terminated.
 
     ``ingest`` (executor-side-ingest mode) carries ``{"factory", "token",
-    "props", "max_attempts", "backoff_ms"}``: the group ingests its OWN
-    rolled file right after writing it — write and ingest co-located on
-    the executor, so ``staging_dir`` needs no shared filesystem and
-    ingest parallelism equals staging parallelism. The manifest row
-    reports the per-file outcome instead of raising, so one poisoned
-    group can't kill the Spark stage before its siblings finish."""
+    "props", "max_attempts", "backoff_ms"}``, ``props`` keyed by topic: the group ingests its OWN file right
+    after writing it and reports the outcome in its manifest row instead
+    of raising, so one poisoned group can't kill its siblings' stage."""
     import gzip
-
-    # Parquet/ORC must NOT be externally gzipped: they are internally
-    # compressed columnar containers and Kusto rejects a .gz wrapper
-    # around them (deliberate deviation from the reference's
-    # gzip-everything COMPRESSION_EXTENSION — the reference never stages
-    # these formats). Text formats and Avro keep the reference's .gz.
-    compress = arrow_schema is None
+    import io
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("offset")
-        topic = str(pdf["topic"].iloc[0])
-        partition = int(pdf["partition"].iloc[0])
-        file_offset = int(pdf["file_offset"].iloc[0])
-        ext = f".{fmt}.gz" if compress else f".{fmt}"
-        name = f"kafka_{topic}_{partition}_{file_offset}{ext}"
+        head = pdf.iloc[0]
+        topic, partition = str(head["topic"]), int(head["partition"])
+        file_offset, fmt = int(head["file_offset"]), str(head["route_format"])
+        avro = fmt in _AVRO_FORMATS
+        columnar = fmt in _COLUMNAR_FORMATS and arrow_schema is not None
+        ext = f".{fmt}" if columnar else f".{fmt}.gz"
+        out_dir = os.path.join(staging_root, str(head["route_db"]), str(head["route_table"]))
         os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, name)
-        if avro_schema is not None:
+        path = os.path.join(out_dir, f"kafka_{topic}_{partition}_{file_offset}{ext}")
+        bio = io.BytesIO()
+        if avro and avro_schema is not None:
             from kafka_sink_azure_kusto_spark.functions.avro_io import write_container
 
-            bio = __import__("io").BytesIO()
             write_container((dict(v) for v in pdf["value"]), avro_schema, bio)
-            body = bio.getvalue()
-        elif arrow_schema is not None:
-            import io as _io
-
+        elif columnar:
             import pyarrow as pa
 
-            table = pa.Table.from_pylist(
-                [dict(v) for v in pdf["value"]], schema=arrow_schema
-            )
-            bio = _io.BytesIO()
             if fmt == "orc":
-                import pyarrow.orc as _orc
-
-                _orc.write_table(table, bio)
+                import pyarrow.orc as writer
             else:
-                import pyarrow.parquet as pq
+                import pyarrow.parquet as writer
 
-                pq.write_table(table, bio)
-            body = bio.getvalue()
-        elif binary_mode:
-            body = b"".join(bytes(b) for b in pdf["line"])
+            table = pa.Table.from_pylist([dict(v) for v in pdf["value"]], schema=arrow_schema)
+            writer.write_table(table, bio)
+        elif binary_values:
+            sep = b"" if avro else b"\n"
+            bio.write(b"".join(bytes(b) + sep for b in pdf["line"]))
         else:
-            body = ("\n".join(pdf["line"].astype(str)) + "\n").encode("utf-8")
+            bio.write(("\n".join(pdf["line"].astype(str)) + "\n").encode("utf-8"))
+        body = bio.getvalue()
         with open(path, "wb") as raw:
             os.fchmod(raw.fileno(), 0o600)
-            if compress:
+            if columnar:
+                raw.write(body)
+            else:
                 with gzip.GzipFile(fileobj=raw, mode="wb", mtime=0) as gz:
                     gz.write(body)
-            else:
-                raw.write(body)
-        status, error, attempts = "Staged", "", 0
+        status, error, attempts = "Staged", "", [0]
         if ingest is not None:
-            from kafka_sink_azure_kusto_spark.streaming.backends import (
-                classify_ingest_error,
-            )
-            from kafka_sink_azure_kusto_spark.streaming.retry import (
-                retry_with_backoff,
-            )
-
-            backend = _cached_backend(ingest["token"], ingest["factory"])
-            n_attempts = [0]
-
-            def attempt():
-                result = backend.ingest_file(path, ingest["props"])
-                if not result.accepted:
-                    raise RuntimeError(f"ingestion final status {result.status}")
-                return result
-
+            props = ingest["props"].get(topic) or ingest["props"]["*"]
             try:
-                retry_with_backoff(
-                    attempt,
-                    max_attempts=ingest["max_attempts"],
-                    backoff_ms=ingest["backoff_ms"],
-                    is_permanent=classify_ingest_error,
-                    on_attempt=lambda _: n_attempts.__setitem__(0, n_attempts[0] + 1),
+                _ingest_file(
+                    _cached_backend(ingest["token"], ingest["factory"]),
+                    path, props, ingest["max_attempts"], ingest["backoff_ms"],
+                    classify_ingest_error,
+                    lambda _: attempts.__setitem__(0, attempts[0] + 1),
                 )
                 status = "Succeeded"
             except Exception as e:  # noqa: BLE001 — reported via manifest
                 status, error = "Failed", f"{type(e).__name__}: {e}"
-            attempts = n_attempts[0]
             try:
                 os.remove(path)  # B5 — co-located cleanup, success or not
             except OSError:
                 pass
-        return pd.DataFrame(
-            [
-                {
-                    "path": path,
-                    "topic": topic,
-                    "partition": partition,
-                    "file_offset": file_offset,
-                    "records": len(pdf),
-                    "raw_bytes": len(body),
-                    "status": status,
-                    "error": error,
-                    "attempts": attempts,
-                }
-            ]
+        row = dict(
+            path=path, topic=topic, partition=partition, file_offset=file_offset,
+            last_offset=int(pdf["offset"].iloc[-1]), records=len(pdf), raw_bytes=len(body),
+            status=status, error=error, attempts=attempts[0],
         )
+        return pd.DataFrame([row])
 
     return write_group
 
@@ -266,10 +297,6 @@ class _WarmupNullBackend:
     trace in the real backend's tables/ingest log."""
 
     def ingest_file(self, path: str, props: IngestionProperties):
-        from kafka_sink_azure_kusto_spark.streaming.backends import (
-            IngestResult,
-        )
-
         return IngestResult(status="Succeeded", source_id="warmup")
 
     def validate(self, props: IngestionProperties) -> None:
@@ -351,293 +378,267 @@ class KustoSparkSink:
             streaming=m.streaming,
         )
 
-    def _mapped_topics(self) -> list[str]:
-        return [m.topic for m in self.config.mappings if not m.is_wildcard]
+    def _mapping_index(self, topic: str) -> int:
+        """F3 on the driver for a manifest row: exact topic, else ``*``."""
+        indexes = {m.topic: i for i, m in enumerate(self.config.mappings)}
+        return indexes.get(topic, indexes.get("*"))
 
     # ------------------------------------------------------- the data plane
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """SURVEY §3.2 collapsed: kafkaDF → filter tombstones → per-mapping
-        (filter topic → encode → stage → ingest-with-retry → else DLQ)."""
-        df = drop_tombstones(batch_df)  # F1
-        exact_topics = self._mapped_topics()
-        for m in self.config.mappings:
-            if m.is_wildcard:
-                sub = df.filter(~F.col("topic").isin(exact_topics))  # F3 remainder
-            else:
-                sub = df.filter(F.col("topic") == m.topic)  # F3 exact
-            self._process_mapping(sub, m, epoch_id)
-
-    def _process_mapping(
-        self, df: DataFrame, m: TopicToTableMapping, epoch_id: int
-    ) -> None:
-        fmt = m.ingest_format
-        value_type = df.schema["value"].dataType.typeName()
-        # E4 special case — pre-serialized Avro payloads: one message is a
-        # complete container file, forcing an immediate roll per record
-        # (FileWriter.java:320-323,298; the reference's B3 degenerate mode).
-        avro_bytes_mode = fmt in ("avro", "apacheavro") and value_type == "binary"
-        # B3 — flush.interval.ms == 0 rolls EVERY record into its own file
-        # regardless of format (FileWriter.java:298), not just avro-bytes.
-        per_record_roll = avro_bytes_mode or self.config.flush_interval_ms == 0
-        # E1/E3/E4 encode to one line per record, JVM-side. Dispatch mirrors
-        # FileWriter.initializeRecordWriter (F4): a struct payload is
-        # serialized per the mapping's format; a string/binary payload
-        # already IS the line (String/ByteRecordWriterProvider).
-        avro_struct_mode = fmt in ("avro", "apacheavro") and value_type == "struct"
-        parquet_struct_mode = fmt in ("parquet", "orc") and value_type == "struct"
-        avro_schema: Optional[dict] = None
-        arrow_schema = None
-        if parquet_struct_mode:
-            # Parquet/ORC staging (extension; Kusto ingests both
-            # natively): typed by the Spark struct schema so the round
-            # trip is lossless.
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(df.schema["value"].dataType)
-        if avro_struct_mode:
-            # E2 — struct payloads staged as real Avro container files
-            # (AvroRecordWriterProvider.java:27-73) via the pure-Python
-            # writer. ``line`` becomes a JSON size proxy: B1 thresholds
-            # then track serialized record size within a small constant
-            # factor of the avro bytes (documented deviation — the
-            # reference counts exact avro bytes; both bound file sizes).
-            from kafka_sink_azure_kusto_spark.functions.avro_io import avro_schema_for
-
-            avro_schema = avro_schema_for(df.schema["value"].dataType)
-        if "line" not in df.columns:
-            if avro_bytes_mode:
-                line = F.col("value")  # raw container bytes, untouched
-            elif avro_struct_mode or parquet_struct_mode:
-                # Size proxy AND the DLQ value for failed records —
-                # keep null fields so the DLQ payload is schema-faithful
-                # to the staged record (to_json drops nulls by default).
-                line = F.to_json(F.col("value"), {"ignoreNullFields": "false"})
-            elif value_type == "struct":
-                struct_df = df.select("value.*")
-                line = encode_for_format(
-                    df, fmt, cols=[f"value.{c}" for c in struct_df.columns]
-                )
-                if fmt == "multijson":
-                    line = F.to_json(F.col("value"))
-            else:
-                line = F.col("value").cast("string")
-            df = df.withColumn("line", line)
+        """SURVEY §3.2 as one pass: drop tombstones (F1) → route (F3) →
+        encode → persist → size the epoch and count unmapped records →
+        assign files (B1) → one grouped staging call → ingest with retry
+        → R4 dispatch and DLQ per failed mapping, in mapping order."""
+        cfg = self.config
+        df = with_route(drop_tombstones(batch_df), cfg.mappings)
+        routed = F.col("route_db").isNotNull()
         # F2 — empty serializations are skipped (JsonRecordWriterProvider.java:53-56).
-        df = df.filter(F.length("line") > 0)
-        # B1 — size-based file assignment on UNCOMPRESSED bytes (+1 newline,
-        # matching CountingOutputStream accounting, FileWriter.java:332-362).
-        # avro-bytes: threshold 1 ⇒ every record rolls its own file (E4/B3).
-        df = df.withColumn("serialized_size", F.length("line").cast("long") + F.lit(1))
-        threshold = 1 if per_record_roll else self.config.flush_size_bytes
-        df = with_file_assignment(df, threshold)
-        out_dir = os.path.join(
-            self.config.staging_dir, f"epoch={epoch_id}", m.db, m.table
+        # B1 — sizes are UNCOMPRESSED bytes (+1 newline, matching
+        # CountingOutputStream accounting, FileWriter.java:332-362).
+        df = (
+            df.withColumn("line", _encode_line(df))
+            .filter(~routed | (F.length("line") > 0))
+            .withColumn("serialized_size", F.length("line").cast("long") + F.lit(1))
         )
-        stage_cols = ["topic", "partition", "offset", "line", "file_seq", "file_offset"]
-        if avro_struct_mode or parquet_struct_mode:
-            stage_cols.append("value")  # typed structs for the container writer
-        props = self._props_for(m)
-        ingest_spec = None
-        if self._executor_side_ingest:
-            ingest_spec = {
-                "factory": self._backend_factory,
-                "token": f"{self._instance_token}|{self.config.ingest_url}",
-                "props": props,
-                "max_attempts": self.config.max_retry_attempts,
-                "backoff_ms": self.config.retry_backoff_time_ms,
-            }
-        manifest_df = (
-            df.select(*stage_cols)
-            .groupBy("topic", "partition", "file_seq")
-            .applyInPandas(
-                _stage_writer(
-                    out_dir,
-                    fmt,
-                    binary_mode=avro_bytes_mode,
-                    avro_schema=avro_schema,
-                    arrow_schema=arrow_schema,
-                    ingest=ingest_spec,
-                ),
-                schema=_MANIFEST_SCHEMA,
-            )
-        )
-        staged = [
-            StagedFile(**row.asDict()) for row in manifest_df.collect()
-        ]  # tiny: one row per rolled file
-        staged.sort(key=lambda s: (s.topic, s.partition, s.file_offset))
-        if not staged:
-            return  # lazy-init parity: no empty files (FileWriter.java:185-190)
-        if self._executor_side_ingest:
-            self._finish_executor_ingested(df, staged, m, avro_bytes_mode)
-            return
-        # Concurrent ingest with PER-FILE outcome tracking: successes count
-        # toward records_written even when a sibling file fails, and only
-        # the failed files' records ever reach the DLQ — a successfully
-        # delivered record must never reappear there as a duplicate.
-        from concurrent.futures import ThreadPoolExecutor
-
-        failed: list[StagedFile] = []
-        first_error: Optional[Exception] = None
-        workers = max(1, min(len(staged), self.config.ingest_threads))
+        value_type = df.schema["value"].dataType
+        keep = ["route_db", "route_table", "route_format", "topic", "partition", "offset",
+                "line", "serialized_size"]
+        if isinstance(value_type, StructType) and any(
+            m.ingest_format in _CONTAINER_FORMATS for m in cfg.mappings
+        ):
+            keep.append("value")  # typed structs for the container writers
+        enc = df.select(*keep).persist()
+        staged: list[Row] = []
         try:
+            stats = enc.agg(
+                F.count(F.when(routed, 1)).alias("routed"),
+                F.sum(F.when(routed, F.col("serialized_size"))).alias("bytes"),
+                F.count(F.when(~routed, 1)).alias("unrouted"),
+                F.min(F.when(~routed, F.col("topic"))).alias("unrouted_topic"),
+            ).first()
+            if stats["unrouted"]:
+                # F3 — an unmapped topic with no '*' wildcard is a hard
+                # error under FAIL, before anything is staged
+                # (KustoSinkTask.java:400-402); otherwise a DLQ outcome.
+                msg = (
+                    f"{stats['unrouted']} records of unmapped topics (e.g. "
+                    f"{stats['unrouted_topic']!r}) and no '*' wildcard configured"
+                )
+                if cfg.behavior_on_error is BehaviorOnError.FAIL:
+                    raise ConfigException(msg)
+                if cfg.behavior_on_error is BehaviorOnError.LOG:
+                    log.error("%s; sending them to the DLQ", msg)
+                self.metrics.incr("records_failed", stats["unrouted"])
+            if stats["routed"]:
+                staged = self._stage(enc, epoch_id, stats["bytes"], value_type)
+            self._dispatch_failures(enc, staged, self._ingest(staged), stats["unrouted"])
+        finally:
+            if not self._executor_side_ingest:
+                for s in staged:
+                    try:
+                        os.remove(s.path)  # B5 — delete local file after roll
+                    except OSError:
+                        pass
+            enc.unpersist()
+
+    def _stage(
+        self, enc: DataFrame, epoch_id: int, encoded_bytes: int, value_type
+    ) -> list[Row]:
+        """B1 file assignment over one (topic, partition) exchange sized by
+        bytes, then one grouped staging call for every route. Returns the
+        manifest in ingest order: mapping, topic, partition, file_offset."""
+        cfg = self.config
+        spark = enc.sparkSession
+        # AQE's advisory partition size, read from the session: staging
+        # tasks are sized by bytes (see the module docstring).
+        advisory = spark._jsparkSession.sessionState().conf().getConf(
+            spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+        )
+        n = max(1, math.ceil(encoded_bytes / advisory))
+        binary_values = isinstance(value_type, BinaryType)
+        route_format = F.col("route_format")
+        # B3 — flush.interval.ms == 0 rolls EVERY record into its own file
+        # (FileWriter.java:298); E4 — a pre-serialized Avro payload is a
+        # complete container file, so it rolls alone too
+        # (FileWriter.java:320-323). A record sized at the threshold fills
+        # its own file.
+        size = F.col("serialized_size")
+        threshold = F.lit(cfg.flush_size_bytes).cast("long")
+        if cfg.flush_interval_ms == 0:
+            size = threshold
+        elif binary_values:
+            size = F.when(route_format.isin(*_AVRO_FORMATS), threshold).otherwise(size)
+        files = with_file_assignment(
+            enc.filter(F.col("route_db").isNotNull())
+            .withColumn("serialized_size", size)
+            .repartition(n, "topic", "partition"),
+            cfg.flush_size_bytes,
+        )
+        cols = ["topic", "partition", "offset", "file_seq", "file_offset",
+                "route_db", "route_table", "route_format", "line"]
+        avro_schema = arrow_schema = None
+        if "value" in enc.columns:
+            # Container routes ship their structs and no line; text routes
+            # ship their line and no struct.
+            container = route_format.isin(*_CONTAINER_FORMATS)
+            cols[-1] = F.when(~container, F.col("line")).alias("line")
+            cols.append(F.when(container, F.col("value")).alias("value"))
+            formats = {m.ingest_format for m in cfg.mappings}
+            if formats & set(_AVRO_FORMATS):
+                from kafka_sink_azure_kusto_spark.functions.avro_io import avro_schema_for
+
+                avro_schema = avro_schema_for(value_type)
+            if formats & set(_COLUMNAR_FORMATS):
+                from pyspark.sql.pandas.types import to_arrow_schema
+
+                arrow_schema = to_arrow_schema(value_type)
+        ingest = None
+        if self._executor_side_ingest:
+            ingest = {
+                "factory": self._backend_factory,
+                "token": f"{self._instance_token}|{cfg.ingest_url}",
+                "props": {m.topic: self._props_for(m) for m in cfg.mappings},
+                "max_attempts": cfg.max_retry_attempts,
+                "backoff_ms": cfg.retry_backoff_time_ms,
+            }
+        writer = _epoch_writer(
+            os.path.join(cfg.staging_dir, f"epoch={epoch_id}"),
+            binary_values, avro_schema, arrow_schema, ingest,
+        )
+        manifest = (
+            files.select(*cols)
+            .groupBy("topic", "partition", "file_seq")
+            .applyInPandas(writer, schema=_MANIFEST_SCHEMA)
+            .collect()  # tiny: one row per rolled file
+        )
+        return sorted(
+            manifest,
+            key=lambda s: (self._mapping_index(s.topic), s.topic, s.partition, s.file_offset),
+        )
+
+    def _ingest(self, staged: list[Row]) -> list[tuple[Row, object]]:
+        """Ingest every staged file; returns ``(file, error)`` pairs, the
+        error None on success. Executor-side ingest already ran in the
+        staging tasks, so only its manifest outcome is counted. Driver
+        mode uses one bounded pool for all mappings. Outcomes are per
+        file: only failed files' records reach the DLQ, so a delivered
+        record never reappears there as a duplicate."""
+        outcomes: list[tuple[Row, object]] = []
+        if self._executor_side_ingest:
+            for s in staged:
+                ok = s.status == "Succeeded"
+                self.metrics.incr("ingestion_attempts", s.attempts)
+                self.metrics.incr("ingestion_successes" if ok else "ingestion_failures")
+                outcomes.append((s, None if ok else s.error))
+        elif staged:
+            from concurrent.futures import ThreadPoolExecutor
+
+            props = [self._props_for(m) for m in self.config.mappings]
+            workers = max(1, min(len(staged), self.config.ingest_threads))
             with ThreadPoolExecutor(
                 max_workers=workers, thread_name_prefix="kusto-ingest"
             ) as pool:
-                futures = [(pool.submit(self._ingest_with_retry, s, props), s) for s in staged]
+                futures = [
+                    (pool.submit(self._ingest_with_retry, s, props[self._mapping_index(s.topic)]), s)
+                    for s in staged
+                ]
                 for fut, s in futures:
                     try:
                         fut.result()
-                        self.metrics.incr("records_written", s.records)
+                        outcomes.append((s, None))
                     except Exception as e:  # noqa: BLE001 — R4 dispatch below
-                        self.metrics.incr("records_failed", s.records)
-                        failed.append(s)
-                        if first_error is None:
-                            first_error = e
-            if first_error is not None:
-                if self.config.behavior_on_error is BehaviorOnError.FAIL:
-                    raise first_error
-                if self.config.behavior_on_error is BehaviorOnError.LOG:
-                    log.error(
-                        "ingestion failed for %d/%d staged files of %s.%s: %s",
-                        len(failed), len(staged), m.db, m.table, first_error,
-                    )
-                self._send_to_dlq(df, failed, m, binary_values=avro_bytes_mode)
-        finally:
-            for s in staged:
-                try:
-                    os.remove(s.path)  # B5 — delete local file after roll
-                except OSError:
-                    pass
+                        outcomes.append((s, e))
+        for s, error in outcomes:
+            self.metrics.incr("records_written" if error is None else "records_failed", s.records)
+        return outcomes
 
-    def _finish_executor_ingested(
-        self,
-        df: DataFrame,
-        staged: list[StagedFile],
-        m: TopicToTableMapping,
-        binary_values: bool,
-    ) -> None:
-        """Aggregate executor-side-ingest outcomes: per-file metrics from
-        the manifest, then the same R4 behavior dispatch and per-record
-        DLQ as driver mode (files were already retried, ingested and
-        deleted where they were written)."""
-        failed = [s for s in staged if s.status != "Succeeded"]
-        for s in staged:
-            self.metrics.incr("ingestion_attempts", s.attempts)
-            if s.status == "Succeeded":
-                self.metrics.incr("ingestion_successes")
-                self.metrics.incr("records_written", s.records)
-            else:
-                self.metrics.incr("ingestion_failures")
-                self.metrics.incr("records_failed", s.records)
-        if not failed:
-            return
-        first_error = RuntimeError(
-            f"executor-side ingestion failed for {len(failed)}/{len(staged)} "
-            f"files of {m.db}.{m.table}; first: {failed[0].error}"
-        )
-        if self.config.behavior_on_error is BehaviorOnError.FAIL:
-            raise first_error
-        if self.config.behavior_on_error is BehaviorOnError.LOG:
-            log.error("%s", first_error)
-        self._send_to_dlq(df, failed, m, binary_values=binary_values)
-
-    def _ingest_with_retry(self, s: StagedFile, props: IngestionProperties) -> None:
-        """R2 constant backoff + R3 permanent classification around K1/K2."""
-        from kafka_sink_azure_kusto_spark.streaming.backends import classify_ingest_error
-
-        classify = getattr(self.backend, "classify", classify_ingest_error)
-
-        def attempt():
-            result = self.backend.ingest_file(s.path, props)
-            if not result.accepted:
-                raise RuntimeError(f"ingestion final status {result.status}")
-            return result
-
+    def _ingest_with_retry(self, s: Row, props: IngestionProperties) -> None:
         try:
-            retry_with_backoff(
-                attempt,
-                max_attempts=self.config.max_retry_attempts,
-                backoff_ms=self.config.retry_backoff_time_ms,
-                is_permanent=classify,
-                on_attempt=lambda _: self.metrics.incr("ingestion_attempts"),
+            _ingest_file(
+                self.backend, s.path, props,
+                self.config.max_retry_attempts, self.config.retry_backoff_time_ms,
+                getattr(self.backend, "classify", classify_ingest_error),
+                lambda _: self.metrics.incr("ingestion_attempts"),
             )
             self.metrics.incr("ingestion_successes")
         except Exception:
             self.metrics.incr("ingestion_failures")
             raise
 
-    def _send_to_dlq(
+    def _dispatch_failures(
         self,
-        df: DataFrame,
-        failed: Iterable[StagedFile],
-        m: TopicToTableMapping,
-        binary_values: bool = False,
+        enc: DataFrame,
+        staged: list[Row],
+        outcomes: list[tuple[Row, object]],
+        unrouted: int,
     ) -> None:
-        """K3 — one DLQ record per failed record, each key carrying the
-        record's OWN kafka coordinates (TopicPartitionWriter.java:210-233
-        formats them per sinkRecord, not per rolled file).
-
-        Records come from the batch DataFrame filtered to the failed
-        files' (topic, partition, file_offset) groups — never from
-        re-reading staged gzip on the driver — so per-record offsets
-        survive file rolling, binary Avro payloads never pass through a
-        text decode (a corrupt staged file can't escalate a LOG/IGNORE
-        batch into a query failure), and only failed-file records are
-        collected (bounded by the failure volume, not the batch)."""
-        file_key = F.concat_ws(
-            "\x1f",
-            F.col("topic"),
-            F.col("partition").cast("string"),
-            F.col("file_offset").cast("string"),
-        )
-        wanted = [f"{s.topic}\x1f{s.partition}\x1f{s.file_offset}" for s in failed]
-        filtered = df.filter(file_key.isin(wanted))
-        key_col = F.concat(
-            F.lit(
-                "Failed to write record to KustoDB with the following "
-                "kafka coordinates, topic="
-            ),
-            F.col("topic"),
-            F.lit(", partition="),
-            F.col("partition").cast("string"),
-            F.lit(", offset="),
-            F.col("offset").cast("string"),
-            F.lit("."),
-        )
-        if self.config.dlq_executor_side and (
-            self.config.dlq_enabled or self._dlq_partition_producer_factory
-        ):
-            # Scale path: produce from the executors (one producer per
-            # partition task) — DLQ cost scales with the cluster and the
-            # failure tail never crosses the driver. Bytes are identical
-            # to the driver path below; only the production locus moves.
-            from kafka_sink_azure_kusto_spark.streaming.dlq import (
-                executor_partition_sender,
-            )
-
-            # A custom producer factory (e.g. file-based) supplies its own
-            # destination; only then is a missing dlq topic acceptable —
-            # give it a deterministic pseudo-topic instead of None.
-            topic = self.config.dlq_topic_name or f"dlq.{m.db}.{m.table}"
-            out = filtered.select(key_col.alias("key"), F.col("line").alias("value"))
-            sent = df.sparkSession.sparkContext.accumulator(0)
-            out.foreachPartition(
-                executor_partition_sender(
-                    topic,
-                    self.config.dlq_producer_props(),
-                    self._dlq_partition_producer_factory,
-                    counter=sent,
+        """R4 — behavior.on.error per failed mapping, in mapping order:
+        FAIL raises the first failed mapping's first error; LOG logs it;
+        LOG and IGNORE send the failed files' records to the DLQ, then the
+        unmapped topics' records."""
+        by_mapping: dict[int, list] = {}
+        for s, e in outcomes:
+            by_mapping.setdefault(self._mapping_index(s.topic), []).append((s, e))
+        groups = []
+        for i, m in enumerate(self.config.mappings):
+            mine = by_mapping.get(i, [])
+            failed = [s for s, e in mine if e is not None]
+            if not failed:
+                continue
+            error = next(e for _, e in mine if e is not None)
+            if isinstance(error, str):  # executor-side outcome
+                error = RuntimeError(
+                    f"executor-side ingestion failed for {len(failed)}/{len(mine)} "
+                    f"files of {m.db}.{m.table}; first: {error}"
                 )
-            )
-            # one evaluation of the failure frame; the accumulator counts
-            # records handed to producers (post-flush), not candidates
-            self.metrics.incr("dlq_records_sent", sent.value)
-            return
-        if self._dlq_writer is None:
-            # Fallback file DLQ with no custom writer: still written from
-            # the EXECUTORS (one JSONL per task under staging/_dlq) — a
-            # whole-mapping failure on a big batch must not materialize
-            # every failed record on the driver.
+            if self.config.behavior_on_error is BehaviorOnError.FAIL:
+                raise error
+            if self.config.behavior_on_error is BehaviorOnError.LOG:
+                log.error(
+                    "ingestion failed for %d/%d staged files of %s.%s: %s",
+                    len(failed), len(mine), m.db, m.table, error,
+                )
+            groups.append((f"{m.db}.{m.table}", _failed_records(failed, staged),
+                           m.ingest_format in _AVRO_FORMATS))
+        if unrouted:
+            groups.append(("unmapped", F.col("route_db").isNull(), True))
+        for name, cond, avro in groups:
+            self._send_to_dlq(enc.filter(cond), name, avro)
+
+    def _send_to_dlq(self, failed: DataFrame, name: str, avro: bool) -> None:
+        """K3 — one DLQ record per failed record, each key carrying the
+        record's OWN kafka coordinates (TopicPartitionWriter.java:210-233).
+
+        ``failed`` is the persisted epoch frame filtered to one failed
+        mapping's files (``name`` is its ``db.table``) or to the unmapped
+        topics — never the source or staged gzip re-read on the driver —
+        so per-record offsets survive file rolling and binary Avro
+        payloads never pass through a text decode."""
+        out = failed.select(
+            "topic", "partition", "offset",
+            F.concat(
+                F.lit(
+                    "Failed to write record to KustoDB with the following "
+                    "kafka coordinates, topic="
+                ),
+                F.col("topic"),
+                F.lit(", partition="),
+                F.col("partition").cast("string"),
+                F.lit(", offset="),
+                F.col("offset").cast("string"),
+                F.lit("."),
+            ).alias("key"),
+            F.col("line").alias("value"),
+        )
+        executor_side = self.config.dlq_executor_side and (
+            self.config.dlq_enabled or self._dlq_partition_producer_factory
+        )
+        if executor_side or self._dlq_writer is None:
+            # Produce from the EXECUTORS, one producer per partition task:
+            # DLQ cost scales with the cluster and the failure tail never
+            # crosses the driver. Bytes are identical to the driver path
+            # below. With no writer at all, the fallback file DLQ writes
+            # one JSONL per task under staging/_dlq.
             import functools
 
             from kafka_sink_azure_kusto_spark.streaming.dlq import (
@@ -645,39 +646,32 @@ class KustoSparkSink:
                 executor_partition_sender,
             )
 
-            dlq_dir = os.path.join(self.config.staging_dir, "_dlq")
-            out = filtered.select(key_col.alias("key"), F.col("line").alias("value"))
-            sent = df.sparkSession.sparkContext.accumulator(0)
-            out.foreachPartition(
-                executor_partition_sender(
-                    f"dlq.{m.db}.{m.table}",
-                    {},
-                    functools.partial(FileDlqProducer, directory=dlq_dir),
-                    counter=sent,
+            if executor_side:
+                # A custom producer factory (e.g. file-based) supplies its
+                # own destination; only then is a missing dlq topic
+                # acceptable — give it a deterministic name.
+                topic = self.config.dlq_topic_name or f"dlq.{name}"
+                props = self.config.dlq_producer_props()
+                factory = self._dlq_partition_producer_factory
+            else:
+                topic, props = f"dlq.{name}", {}
+                factory = functools.partial(
+                    FileDlqProducer, directory=os.path.join(self.config.staging_dir, "_dlq")
                 )
-            )
+            sent = failed.sparkSession.sparkContext.accumulator(0)
+            out.foreachPartition(executor_partition_sender(topic, props, factory, counter=sent))
+            # one evaluation of the failure frame; the accumulator counts
+            # records handed to producers (post-flush), not candidates
             self.metrics.incr("dlq_records_sent", sent.value)
             return
-        # Custom driver-side writer seam (tests, bespoke sinks): bounded
-        # collect of the failure tail only.
-        rows = (
-            filtered
-            .select("topic", "partition", "offset", "line")
-            .orderBy("topic", "partition", "offset")
-            .collect()
-        )
-        records = [
-            {
-                "key": f"Failed to write record to KustoDB with the following kafka coordinates, "
-                f"topic={r['topic']}, partition={r['partition']}, offset={r['offset']}.",
-                "value": bytes(r["line"]) if binary_values else str(r["line"]),
-            }
-            for r in rows
-        ]
-        if not records:
-            return
-        self._dlq_writer(records)
-        self.metrics.incr("dlq_records_sent", len(records))
+        # Custom driver-side writer seam (tests, bespoke sinks): a bounded
+        # collect of the failure tail, sorted here — it is already on the
+        # driver, so a distributed sort would only add jobs.
+        rows = sorted(out.collect(), key=lambda r: (r["topic"], r["partition"], r["offset"]))
+        records = [{"key": r["key"], "value": _dlq_value(r["value"], avro)} for r in rows]
+        if records:
+            self._dlq_writer(records)
+            self.metrics.incr("dlq_records_sent", len(records))
 
     # --------------------------------------------------------- control plane
     def attach(
@@ -712,8 +706,6 @@ class KustoSparkSink:
         warmed sink is indistinguishable from a cold one to callers.
         Runs before writeStream.start(), overlapping source
         initialization."""
-        from pyspark.sql import functions as F
-
         tiny = spark.range(64).select(
             F.col("id").cast("string").alias("key"),
             F.to_json(F.struct(F.col("id"))).alias("value"),

@@ -132,12 +132,13 @@ def test_dlq_keys_carry_per_record_offsets(spark, tmp_path):
     sink = KustoSparkSink(cfg, backend, dlq_writer=dlq.extend)
     sink.process_batch(_records_df(spark, n=5), epoch_id=0)  # one rolled file, 5 records
     keys = [d["key"] for d in dlq]
-    assert len(keys) == 5
+    assert len(keys) == 6  # the mapping's 5 records, then the unmapped one
     for i in range(5):
         assert (
             f"topic=topic1, partition=0, offset={i}." in keys[i]
         ), keys[i]  # byte-identical to the dlq_key_format oracle's shape
-    assert [json.loads(d["value"])["hello"] for d in dlq] == list(range(5))
+    assert [json.loads(d["value"])["hello"] for d in dlq[:5]] == list(range(5))
+    assert keys[5].endswith("topic=other, partition=0, offset=0.")
 
 
 def test_partial_failure_only_failed_files_reach_dlq(spark, tmp_path):
@@ -234,7 +235,10 @@ def test_flush_interval_zero_rolls_per_record(spark, tmp_path):
     # rolls its own staged file, for ALL formats — not just avro-bytes.
     cfg = _cfg(
         tmp_path,
-        mappings=[TopicToTableMapping(topic="topic1", db="db1", table="t", format="json")],
+        mappings=[
+            TopicToTableMapping(topic="topic1", db="db1", table="t", format="json"),
+            TopicToTableMapping(topic="*", db="dbW", table="tableW", format="json"),
+        ],
         flush_interval_ms=0,
         trigger_interval_ms=100,
     )
@@ -278,3 +282,160 @@ def test_struct_value_encodes_ndjson(spark, tmp_path):
     sink.process_batch(df, epoch_id=0)
     rows = [json.loads(r) for r in backend.table_rows("db1", "t")]
     assert rows == [{"s": "a", "i": 1}, {"s": "b", "i": 2}]
+
+
+# --------------------------------------------------- unmapped topics (F3)
+
+
+def _exact_only_cfg(tmp_path, behavior):
+    return _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic="topic1", db="db1", table="t", format="json")],
+        behavior_on_error=behavior,
+    )
+
+
+def test_unmapped_topic_fail_raises_before_staging(spark, tmp_path):
+    # KustoSinkTask.java:400-402: no exact mapping and no '*' wildcard is
+    # a hard error; the epoch raises before anything is staged or ingested.
+    from kafka_sink_azure_kusto_spark.config import ConfigException
+
+    backend = LocalEmulatorBackend(str(tmp_path / "kusto"))
+    sink = KustoSparkSink(_exact_only_cfg(tmp_path, BehaviorOnError.FAIL), backend)
+    with pytest.raises(ConfigException, match="'other'"):
+        sink.process_batch(_records_df(spark, n=3), epoch_id=0)
+    assert backend.ingest_log() == []
+    assert not (tmp_path / "staging").exists()
+    assert sink.metrics.snapshot()["RecordsWritten"] == 0
+
+
+@pytest.mark.parametrize("behavior", [BehaviorOnError.LOG, BehaviorOnError.IGNORE])
+def test_unmapped_topic_goes_to_dlq(spark, tmp_path, behavior):
+    # LOG / IGNORE: an unmapped record is never dropped silently — it
+    # reaches the DLQ with its own coordinates and counts as failed.
+    backend = LocalEmulatorBackend(str(tmp_path / "kusto"))
+    dlq: list[dict] = []
+    sink = KustoSparkSink(_exact_only_cfg(tmp_path, behavior), backend, dlq_writer=dlq.extend)
+    sink.process_batch(_records_df(spark, n=3), epoch_id=0)
+    assert len(backend.table_rows("db1", "t")) == 3
+    assert [d["key"] for d in dlq] == [
+        "Failed to write record to KustoDB with the following kafka "
+        "coordinates, topic=other, partition=0, offset=0."
+    ]
+    assert json.loads(dlq[0]["value"]) == {"w": 0}
+    m = sink.metrics.snapshot()
+    assert (m["RecordsWritten"], m["RecordsFailed"], m["DlqRecordsSent"]) == (3, 1, 1)
+
+
+def test_wildcard_catches_every_topic_without_exact_mapping(spark, tmp_path):
+    rows = [(f"k{i}", json.dumps({"i": i}), f"topic{i % 4}", i % 2, i) for i in range(12)]
+    df = spark.createDataFrame(
+        rows, "key string, value string, topic string, partition long, offset long"
+    )
+    backend = LocalEmulatorBackend(str(tmp_path / "kusto"))
+    dlq: list[dict] = []
+    sink = KustoSparkSink(_cfg(tmp_path, behavior_on_error=BehaviorOnError.LOG), backend,
+                          dlq_writer=dlq.extend)
+    sink.process_batch(df, epoch_id=0)
+    assert len(backend.table_rows("db1", "table1")) == 3  # topic1 only
+    wild = sorted(json.loads(r)["i"] for r in backend.table_rows("dbW", "tableW"))
+    assert wild == [i for i in range(12) if i % 4 != 1]
+    assert dlq == []
+    assert sink.metrics.snapshot()["RecordsFailed"] == 0
+
+
+# ------------------------------------------------------ one pass per epoch
+
+
+def _struct_records(spark, topics, n=64):
+    return spark.createDataFrame(
+        [(f"k{i}", (i, f"n{i}", i * 0.5), topics[i % len(topics)], i % 4, i) for i in range(n)],
+        "key string, value struct<id:long,name:string,x:double>, topic string, "
+        "partition long, offset long",
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jobs_per_epoch_do_not_grow_with_mapping_count(spark, tmp_path):
+    topics = ["ta", "tb", "tc", "td"]
+    df = _struct_records(spark, topics)
+    wildcard = _cfg(tmp_path / "w", mappings=[
+        TopicToTableMapping(topic="*", db="db", table="all", format="json")
+    ])
+    exact = _cfg(tmp_path / "x", mappings=[
+        TopicToTableMapping(topic=t, db="db", table=f"tbl_{t}", format=f)
+        for t, f in zip(topics, ["json", "csv", "avro", "parquet"])
+    ])
+    counts = []
+    for name, cfg in (("wildcard", wildcard), ("exact", exact)):
+        backend = LocalEmulatorBackend(str(tmp_path / name / "kusto"))
+        sink = KustoSparkSink(cfg, backend)
+        counts.append(_jobs_in_group(spark, f"sink-{name}-{tmp_path.name}",
+                                     lambda: sink.process_batch(df, epoch_id=0)))
+        assert sum(e["records"] for e in backend.ingest_log()) == 64
+    assert counts[0] == counts[1], counts
+
+
+def _stage_recording_tasks(spark, tmp_path, name):
+    """Run one executor-side-ingest epoch; return the distinct (stage,
+    partition) staging tasks and the staged files' bytes by name."""
+    import os
+    import shutil
+
+    root, rec = str(tmp_path / name / "kusto"), str(tmp_path / name / "rec")
+    os.makedirs(rec)
+
+    class Recording(LocalEmulatorBackend):
+        def ingest_file(self, path, props):
+            from pyspark import TaskContext
+
+            tc = TaskContext.get()
+            open(os.path.join(rec, f"task-{tc.stageId()}-{tc.partitionId()}"), "w").close()
+            shutil.copy(path, os.path.join(rec, f"file-{props.table}-{os.path.basename(path)}"))
+            return super().ingest_file(path, props)
+
+    rows = [(f"k{i}", json.dumps({"i": i, "pad": "p" * 40}), f"topic{i % 2}", i % 8, i)
+            for i in range(400)]
+    df = spark.createDataFrame(
+        rows, "key string, value string, topic string, partition long, offset long"
+    )
+    cfg = _cfg(tmp_path / name, flush_size_bytes=1000)
+    sink = KustoSparkSink(cfg, LocalEmulatorBackend(root), executor_side_ingest=True,
+                          backend_factory=lambda: Recording(root))
+    sink.process_batch(df, epoch_id=0)
+    assert sink.metrics.snapshot()["RecordsWritten"] == 400
+    names = os.listdir(rec)
+    files = {}
+    for n in names:
+        if n.startswith("file-"):
+            with open(os.path.join(rec, n), "rb") as f:
+                files[n] = f.read()
+    return {n for n in names if n.startswith("task-")}, files
+
+
+def test_small_batch_stages_in_one_task(spark, tmp_path):
+    tasks, files = _stage_recording_tasks(spark, tmp_path, "small")
+    assert len(tasks) == 1
+    assert len(files) > 8  # many rolled files, all from the one task
+
+
+def test_staging_tasks_follow_advisory_partition_size(spark, tmp_path):
+    _, one_task_files = _stage_recording_tasks(spark, tmp_path, "default")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4096")
+    try:
+        tasks, files = _stage_recording_tasks(spark, tmp_path, "lowered")
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    assert len(tasks) > 1
+    assert files == one_task_files  # byte-identical staged files
