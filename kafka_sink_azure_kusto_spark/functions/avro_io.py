@@ -658,121 +658,20 @@ def _avro_nbytes(typ) -> int:
     return {"boolean": 1, "double": 8, "float": 4}.get(typ, 10)
 
 
-def _avro_field_hex(v, p, typ):
-    """Hex string of the value-head slice at cursor ``p`` — projected
-    as its OWN column so the (codegen-heavy) substr+hex runs once per
-    field, not once per extracted byte (janino 64 KB guard, r8: the
-    per-element hex(substr(...)) duplication was what kept the fused
-    avro walk over the method limit even in its own stage)."""
-    from pyspark.sql import functions as F
-
-    return F.hex(v.substr(p.cast("int"), F.lit(_avro_nbytes(typ))))
-
-
-def _avro_field_bytes(hx, typ):
-    """The value-head bytes as array<long> from the pre-projected hex
-    column ``hx`` (NULL past the frame end) — each element is a cheap
-    conv(substring(attr)) over the shared slice."""
-    from pyspark.sql import functions as F
-
-    return F.array(
-        *[
-            F.conv(F.substring(hx, 2 * i + 1, 2), 16, 10).cast("long")
-            for i in range(_avro_nbytes(typ))
-        ]
-    )
-
-
-def _avro_field_step(v, p, bts, typ):
-    """Decode ONE avro primitive at 1-indexed cursor ``p`` over its
-    pre-projected byte array ``bts`` → struct ``(val <spark type>,
-    np long)``. Truncation yields NULLs; a NULL ``np`` starves every
-    later field (graceful abort, DLQ semantics)."""
-    from pyspark.sql import functions as F
-
-    from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
-        _ieee_double,
-        _ieee_float,
-    )
-
-    def b(i):  # byte i (0-based from cursor) — cheap attr ref
-        return F.get(bts, i)
-
-    def or_all(cols):
-        acc = cols[0]
-        for c in cols[1:]:
-            acc = acc.bitwiseOR(c)
-        return acc
-
-    if typ == "boolean":
-        return F.struct(
-            F.when(b(0).isNotNull(), b(0) == 1).alias("val"),
-            F.when(b(0).isNotNull(), p + 1).cast("long").alias("np"),
-        )
-    if typ == "double":
-        bits = or_all([F.shiftleft(b(i), 8 * i) for i in range(8)])
-        return F.struct(
-            _ieee_double(bits).alias("val"),
-            F.when(bits.isNotNull(), p + 8).cast("long").alias("np"),
-        )
-    if typ == "float":
-        bits = or_all([F.shiftleft(b(i), 8 * i) for i in range(4)])
-        return F.struct(
-            _ieee_float(bits).cast("float").alias("val"),
-            F.when(bits.isNotNull(), p + 4).cast("long").alias("np"),
-        )
-
-    # zigzag varint (int/long value, or string/bytes length)
-    vval = b(0) % 128
-    vlen = F.when(b(0) < 128, 1)
-    cont = b(0) >= 128
-    for i in range(1, 10):
-        vval = vval.bitwiseOR(
-            F.when(cont, F.shiftleft(b(i) % 128, 7 * i)).otherwise(F.lit(0))
-        )
-        vlen = vlen.when(cont & (b(i) < 128), i + 1)
-        if i < 9:
-            cont = cont & (b(i) >= 128)
-    zz = F.shiftrightunsigned(vval, 1).bitwiseXOR(-(vval.bitwiseAND(F.lit(1))))
-    if typ in ("long", "int"):
-        return F.struct(
-            F.when(vlen.isNotNull(), zz).alias("val"),
-            F.when(vlen.isNotNull(), p + vlen).cast("long").alias("np"),
-        )
-    # string / bytes: zigzag length then the payload slice. The slice
-    # must FIT the body (dstart + zz - 1 <= length): substr silently
-    # returns a short slice for an over-length declaration, which would
-    # decode a truncated body to a non-NULL prefix instead of NULLing
-    # the field and starving the walk (the decode_records contract).
-    # The length feeding substr is CLAMPED to [-1, len+1] before the
-    # int cast: a mutated varint can zigzag-decode far outside int32
-    # range, and under ANSI mode the bare cast THROWS — a poisoned
-    # record would kill the job instead of NULLing (found by the r9
-    # mutated-body property test; the clamp never changes a value the
-    # `fits` guard allows through).
-    dstart = p + vlen
-    fits = vlen.isNotNull() & (zz >= 0) & (dstart + zz - 1 <= F.length(v))
-    zz_clamped = F.greatest(
-        F.lit(-1).cast("long"),
-        F.least(zz, F.length(v).cast("long") + 1),
-    )
-    sval = v.substr(dstart.cast("int"), zz_clamped.cast("int"))
-    val = sval.cast("string") if typ == "string" else sval
-    return F.struct(
-        F.when(fits, val).alias("val"),
-        F.when(fits, dstart + zz).cast("long").alias("np"),
-    )
-
-
 def _avro_field_hex_sql(v: str, p: str, typ) -> str:
-    """SQL text of :func:`_avro_field_hex` over column name ``v`` and
-    cursor fragment ``p`` (the zero-py4j construction path — see the
-    SQL-twin block in protobuf_io; same rationale, same gates)."""
+    """Hex string of the value-head slice of column ``v`` at cursor
+    fragment ``p`` — projected as its OWN column so the (codegen-heavy)
+    substr+hex runs once per field, not once per extracted byte
+    (janino 64 KB guard: the per-element hex(substr(...)) duplication
+    kept the fused avro walk over the method limit even in its own
+    stage)."""
     return f"hex(substr({v}, CAST({p} AS INT), {_avro_nbytes(typ)}))"
 
 
 def _avro_field_bytes_sql(hx: str, typ) -> str:
-    """SQL text of :func:`_avro_field_bytes` over hex column ``hx``."""
+    """The value-head bytes as array<long> from the pre-projected hex
+    column ``hx`` (NULL past the frame end) — each element is a cheap
+    conv(substring(attr)) over the shared slice."""
     elems = ", ".join(
         f"CAST(conv(substring({hx}, {2 * i + 1}, 2), 16, 10) AS BIGINT)"
         for i in range(_avro_nbytes(typ))
@@ -781,8 +680,11 @@ def _avro_field_bytes_sql(hx: str, typ) -> str:
 
 
 def _avro_field_step_sql(v: str, p: str, bts: str, typ) -> str:
-    """SQL text of :func:`_avro_field_step` over column names ``v`` /
-    ``bts`` and cursor fragment ``p``."""
+    """Decode ONE avro primitive of body column ``v`` at 1-indexed
+    cursor fragment ``p`` over its pre-projected byte-array column
+    ``bts`` → struct ``(val <spark type>, np long)``. Truncation yields
+    NULLs; a NULL ``np`` starves every later field (graceful abort, DLQ
+    semantics)."""
     from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
         _ieee_double_sql,
         _ieee_float_sql,
@@ -840,7 +742,17 @@ def _avro_field_step_sql(v: str, p: str, bts: str, typ) -> str:
             f"'np', CAST(CASE WHEN (({vlen}) IS NOT NULL) "
             f"THEN (({p}) + ({vlen})) END AS BIGINT))"
         )
-    # string / bytes — same fit guard + ANSI clamp as the Column twin
+    # string / bytes: zigzag length then the payload slice. The slice
+    # must FIT the body (dstart + zz - 1 <= length): substr silently
+    # returns a short slice for an over-length declaration, which would
+    # decode a truncated body to a non-NULL prefix instead of NULLing
+    # the field and starving the walk (the decode_records contract).
+    # The length feeding substr is CLAMPED to [-1, len+1] before the
+    # int cast: a mutated varint can zigzag-decode far outside int32
+    # range, and under ANSI mode the bare cast THROWS — a poisoned
+    # record would kill the job instead of NULLing (found by the r9
+    # mutated-body property test; the clamp never changes a value the
+    # `fits` guard allows through).
     dstart = f"(({p}) + ({vlen}))"
     fits = (
         f"(((({vlen}) IS NOT NULL) AND ({zz} >= 0)) "
@@ -884,8 +796,8 @@ def attach_avro_codegen_decode(
     body = F.col(body_col) if isinstance(body_col, str) else body_col
     bname = f"{pre}_body"
     df = df.withColumn(bname, body)
-    # SQL-text construction path (one F.expr per projected column) —
-    # see the SQL-twin block in protobuf_io for the rationale/gates
+    # built as SQL text, one F.expr per projected column (see the
+    # SQL-text construction block in protobuf_io)
     step_of = {}
     byte_cols = []
     prev = None
@@ -913,9 +825,10 @@ def attach_avro_codegen_decode(
     fields = []
     for sf in schema.fields:
         step = step_of.get(sf.name)
+        name = _pb.sql_string(sf.name)
         dt = sf.dataType.simpleString()
         if step is None:
-            fields.append(f"'{sf.name}', CAST(NULL AS {dt})")
+            fields.append(f"{name}, CAST(NULL AS {dt})")
         else:
             # try_cast, not cast: a malformed varint can decode a value
             # outside the declared Spark type's range (e.g. a 5-byte
@@ -923,7 +836,7 @@ def attach_avro_codegen_decode(
             # bare cast would throw and kill the job — out-of-range
             # decodes to NULL instead (DLQ semantics; found by the r9
             # mutated-body property test).
-            fields.append(f"'{sf.name}', try_cast({step}.val AS {dt})")
+            fields.append(f"{name}, try_cast({step}.val AS {dt})")
     df = df.withColumn(
         out_col,
         F.expr(

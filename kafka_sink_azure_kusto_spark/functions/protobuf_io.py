@@ -272,7 +272,7 @@ def decode_message(data: bytes, field_schema: dict) -> dict:
 # Whole-stage-codegen protobuf decode for flat scalar messages — the
 # jar-less path that keeps the converter boundary free of Python
 # (VERDICT r6 #2). Same construction discipline as
-# wire_format.message_index_struct: a BOUNDED unrolled walk where every
+# wire_format.message_index_struct_sql: a BOUNDED unrolled walk where every
 # dynamic-length quantity is resolved by a CaseWhen over bytes sliced
 # out of one shared hex() region, and every step is PROJECTED ONCE as a
 # named column by the caller so field references never re-inline the
@@ -352,186 +352,48 @@ def codegen_decodable(field_schema: dict) -> bool:
     )
 
 
-def _codegen_step_hex(v, p):
-    """Hex string of the 11-byte window at 1-indexed body cursor ``p``
-    (tag byte + the longest positionally-parsed value head: 10 varint
-    bytes; fixed64 needs 8, a 2-byte length varint 2) — projected as
-    its OWN column so the substr+hex code is generated once per step,
-    not once per extracted byte (janino 64 KB guard, r8)."""
-    from pyspark.sql import functions as F
-
-    return F.hex(v.substr(p.cast("int"), F.lit(11)))
-
-
-def _codegen_step_bytes(hx):
-    """The step window bytes as array<long> from the pre-projected hex
-    column ``hx`` (NULL past the frame end) — each element a cheap
-    conv(substring(attr)) over the shared slice."""
-    from pyspark.sql import functions as F
-
-    return F.array(
-        *[
-            F.conv(F.substring(hx, 2 * i + 1, 2), 16, 10).cast("long")
-            for i in range(0, 11)
-        ]
-    )
-
-
-def _codegen_step_scan(bts, p, need_f64=True, need_f32=True, need_len=True):
-    """Positional value scan over the pre-projected byte array ``bts``
-    at cursor ``p`` → struct ``(vv long, vl int[, f64 long][, f32
-    long][, dl long, ds long])``: varint value/length, little-endian
-    fixed64/32 bit patterns, and the length-delimited payload
-    length/start. The fixed/length members are emitted only when the
-    declared schema uses their wire types (``need_*``) — dead scan
-    members are not free, they bloat every fused processNext().
-    Projected as its OWN column per step — the step struct then touches
-    only cheap attr refs, keeping every generated consume method far
-    under janino's 64 KB (whole-stage codegen cannot split a single
-    operator's expression tree, so the splitting must happen in the
-    PLAN, one small projection per concern)."""
-    from pyspark.sql import functions as F
-
-    def b(i):  # byte i (0 = tag byte), NULL past frame end — cheap attr ref
-        return F.get(bts, i)
-
-    # varint: include each 7-bit group while every earlier byte had its
-    # continuation bit set — branch-free OR over disjoint bit ranges
-    # (wraps exactly for 10-byte two's-complement int64, no addition →
-    # no ANSI overflow)
-    vval = b(1) % 128
-    vlen = F.when(b(1) < 128, 1)
-    cont = b(1) >= 128
-    for i in range(2, 11):
-        vval = vval.bitwiseOR(
-            F.when(cont, F.shiftleft(b(i) % 128, 7 * (i - 1))).otherwise(F.lit(0))
-        )
-        vlen = vlen.when(cont & (b(i) < 128), i)
-        if i < 10:
-            cont = cont & (b(i) >= 128)
-
-    def or_all(cols):
-        acc = cols[0]
-        for c in cols[1:]:
-            acc = acc.bitwiseOR(c)
-        return acc
-
-    members = [vval.cast("long").alias("vv"), vlen.cast("int").alias("vl")]
-    if need_f64:
-        f64 = or_all([F.shiftleft(b(i), 8 * (i - 1)) for i in range(1, 9)])
-        members.append(f64.cast("long").alias("f64"))
-    if need_f32:
-        f32 = or_all([F.shiftleft(b(i), 8 * (i - 1)) for i in range(1, 5)])
-        members.append(f32.cast("long").alias("f32"))
-    if need_len:
-        llen1 = b(1) < 128
-        dlen = F.when(llen1, b(1)).when(
-            b(2) < 128, (b(1) % 128).bitwiseOR(F.shiftleft(b(2), 7))
-        )
-        dstart = F.when(llen1, p + 2).otherwise(p + 3)
-        members.append(dlen.cast("long").alias("dl"))
-        members.append(dstart.cast("long").alias("ds"))
-    return F.struct(*members)
-
-
-def _codegen_step(v, p, bts, scan, need_f64=True, need_f32=True, need_len=True):
-    """One bounded walk step at 1-indexed body cursor ``p`` over the
-    pre-projected byte array ``bts`` and value scan ``scan`` → struct
-    ``(fld int, wt int, ival long[, sval binary], np long)``.
-
-    ``ival`` carries the raw varint value (wt 0) or the little-endian
-    fixed64/fixed32 bit pattern (wt 1/5); ``sval`` the length-delimited
-    slice (wt 2, emitted only when the schema has string/bytes fields);
-    ``np`` the next cursor. A frame end, multi-byte tag, >10-byte
-    varint, >2-byte length varint, a deprecated group wire type, or a
-    wire type the schema never uses yields an all-NULL struct — NULL
-    ``np`` starves every later step, so the walk aborts without
-    exceptions (DLQ semantics, never a job kill). Aborting on
-    schema-unused wire types is sound: a message whose tail this walk
-    skips could only have yielded values for unknown fields or
-    duplicate occurrences this schema does not need... except later
-    known fields — those decode NULL, the same conservative direction
-    as the bounded index parser."""
-    from pyspark.sql import functions as F
-
-    tag = F.get(bts, 0)
-    fld = F.shiftright(tag, 3).cast("int")
-    wt = (tag % 8).cast("int")
-    vlen = scan.getField("vl")
-
-    tag_ok = tag.isNotNull() & (tag < 128)
-    wt0_ok = (wt == 0) & vlen.isNotNull()
-    ok = tag_ok & wt0_ok
-    ival = F.when(wt0_ok, scan.getField("vv"))
-    np = F.when(wt0_ok, p + 1 + vlen)
-    if need_f64:
-        ok = ok | (tag_ok & (wt == 1))
-        ival = ival.when(wt == 1, scan.getField("f64"))
-        np = np.when(wt == 1, p + 9)
-    if need_f32:
-        ok = ok | (tag_ok & (wt == 5))
-        ival = ival.when(wt == 5, scan.getField("f32"))
-        np = np.when(wt == 5, p + 5)
-    wt2_ok = None
-    if need_len:
-        dlen = scan.getField("dl")
-        dstart = scan.getField("ds")
-        # The declared slice must fit the body: substr silently returns a
-        # SHORT slice for an over-length declaration, which would decode a
-        # truncated body to a non-NULL prefix — diverging from
-        # decode_message's ProtoDecodeError→NULL-payload contract. An
-        # over-length declaration NULLs the step, starving the walk.
-        wt2_ok = (
-            (wt == 2)
-            & dlen.isNotNull()
-            & (dstart + dlen - 1 <= F.length(v))
-        )
-        ok = ok | (tag_ok & wt2_ok)
-        np = np.when(wt2_ok, dstart + dlen)
-    members = [
-        F.when(ok, fld).alias("fld"),
-        F.when(ok, wt).alias("wt"),
-        F.when(ok, ival).cast("long").alias("ival"),
-    ]
-    if need_len:
-        members.append(
-            F.when(ok & wt2_ok, v.substr(dstart.cast("int"), dlen.cast("int")))
-            .cast("binary")
-            .alias("sval")
-        )
-    members.append(F.when(ok, np).cast("long").alias("np"))
-    return F.struct(*members)
-
-
 # ---------------------------------------------------------------------------
-# SQL-text twins of the walk-step builders.
+# SQL-text construction.
 #
-# Why they exist (r15, guide §7.3 "very large expression trees"): every
-# Column operation in classic PySpark costs several py4j round-trips
-# (reflection getattr + call), and the bounded walk builds hundreds of
-# operations per step — profiling registry_wire_decode attributed ~5 s
-# of its 7 s warm wall to DRIVER-SIDE plan construction (46k py4j calls
-# for one build; message_index_struct alone was 11k calls / 1.4 s).
-# Assembling the same expression as ONE SQL string in pure Python and
-# parsing it with a single F.expr() call removes all but one round-trip
-# per projected column. The text mirrors the Column builders
-# operation-for-operation (same operator tree after parsing — CASE WHEN
-# for when-chains, named_struct for aliased structs, left-associative
-# AND/OR/| chains), so semantics, codegen size discipline, and plan
-# shape are unchanged; the differential property suites
-# (test_wire_property / test_protobuf / test_avro_property) and the
-# DuckDB oracle gate the equivalence.
+# Every decode expression (walk steps, IEEE rebuilds, varint encode, and
+# wire_format's / avro_io's frame and field walks) is assembled as ONE
+# SQL string in pure Python and parsed with a single F.expr() per
+# projected column. Each Column operation in classic PySpark costs
+# several py4j round-trips, and the bounded walk builds hundreds of
+# operations per step: building registry_wire_decode from Column
+# operations took about 46k py4j calls, as SQL text it takes about 2.3k.
+# Names that come from callers (column names, output field names) go
+# into the text through quote_ident / sql_string.
 # ---------------------------------------------------------------------------
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled) — safe for hyphens, spaces, quotes and reserved words, and
+    also accepted by ``F.col``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(text: str) -> str:
+    """``text`` as a single-quoted SQL string literal (backslashes and
+    quotes escaped)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _codegen_step_hex_sql(v: str, p: str) -> str:
-    """SQL text of :func:`_codegen_step_hex` over column name ``v`` and
-    cursor fragment ``p``."""
+    """Hex string of the 11-byte window of column ``v`` at 1-indexed
+    body cursor fragment ``p`` (tag byte + the longest positionally-
+    parsed value head: 10 varint bytes; fixed64 needs 8, a 2-byte
+    length varint 2) — projected as its OWN column so the substr+hex
+    code is generated once per step, not once per extracted byte
+    (janino 64 KB guard)."""
     return f"hex(substr({v}, CAST({p} AS INT), 11))"
 
 
 def _codegen_step_bytes_sql(hx: str) -> str:
-    """SQL text of :func:`_codegen_step_bytes` over column name ``hx``."""
+    """The step window bytes as array<long> from the pre-projected hex
+    column ``hx`` (NULL past the frame end) — each element a cheap
+    conv(substring(attr)) over the shared slice."""
     elems = ", ".join(
         f"CAST(conv(substring({hx}, {2 * i + 1}, 2), 16, 10) AS BIGINT)"
         for i in range(0, 11)
@@ -542,8 +404,23 @@ def _codegen_step_bytes_sql(hx: str) -> str:
 def _codegen_step_scan_sql(
     bts: str, p: str, need_f64=True, need_f32=True, need_len=True
 ) -> str:
-    """SQL text of :func:`_codegen_step_scan` over byte-array column
-    name ``bts`` and cursor fragment ``p``."""
+    """Positional value scan over the pre-projected byte-array column
+    ``bts`` at cursor fragment ``p`` → struct ``(vv long, vl int[, f64
+    long][, f32 long][, dl long, ds long])``: varint value/length,
+    little-endian fixed64/32 bit patterns, and the length-delimited
+    payload length/start. The fixed/length members are emitted only
+    when the declared schema uses their wire types (``need_*``) — dead
+    scan members are not free, they bloat every fused processNext().
+    Projected as its OWN column per step — the step struct then touches
+    only cheap attr refs, keeping every generated consume method far
+    under janino's 64 KB (whole-stage codegen cannot split a single
+    operator's expression tree, so the splitting must happen in the
+    PLAN, one small projection per concern).
+
+    The varint includes each 7-bit group while every earlier byte had
+    its continuation bit set — branch-free OR over disjoint bit ranges
+    (wraps exactly for 10-byte two's-complement int64; no addition, so
+    no ANSI overflow)."""
 
     def b(i: int) -> str:
         return f"get({bts}, {i})"
@@ -593,8 +470,31 @@ def _codegen_step_sql(
     v: str, p: str, bts: str, scan: str,
     need_f64=True, need_f32=True, need_len=True,
 ) -> str:
-    """SQL text of :func:`_codegen_step` over column names ``v`` /
-    ``bts`` / ``scan`` and cursor fragment ``p``."""
+    """One bounded walk step of body column ``v`` at 1-indexed cursor
+    fragment ``p``, over the pre-projected byte-array column ``bts``
+    and value scan ``scan`` → struct ``(fld int, wt int, ival long[,
+    sval binary], np long)``.
+
+    ``ival`` carries the raw varint value (wt 0) or the little-endian
+    fixed64/fixed32 bit pattern (wt 1/5); ``sval`` the length-delimited
+    slice (wt 2, emitted only when the schema has string/bytes fields);
+    ``np`` the next cursor. A frame end, multi-byte tag, >10-byte
+    varint, >2-byte length varint, a deprecated group wire type, or a
+    wire type the schema never uses yields an all-NULL struct — NULL
+    ``np`` starves every later step, so the walk aborts without
+    exceptions (DLQ semantics, never a job kill). Aborting on
+    schema-unused wire types is sound: a message whose tail this walk
+    skips could only have yielded values for unknown fields or
+    duplicate occurrences this schema does not need... except later
+    known fields — those decode NULL, the same conservative direction
+    as the bounded index parser.
+
+    The declared length-delimited slice must fit the body: substr
+    silently returns a SHORT slice for an over-length declaration,
+    which would decode a truncated body to a non-NULL prefix —
+    diverging from decode_message's ProtoDecodeError→NULL-payload
+    contract. An over-length declaration NULLs the step, starving the
+    walk."""
     tag = f"get({bts}, 0)"
     fld = f"CAST(shiftright({tag}, 3) AS INT)"
     wt = f"CAST(({tag} % 8) AS INT)"
@@ -642,8 +542,8 @@ def _codegen_step_sql(
 
 
 def _ieee_double_sql(bits: str) -> str:
-    """SQL text of :func:`_ieee_double` over bit-pattern fragment
-    ``bits``."""
+    """Exact IEEE-754 binary64 from its bit pattern (a long fragment
+    ``bits``)."""
     e = f"(shiftrightunsigned({bits}, 52) & 2047)"
     m = f"({bits} & {(1 << 52) - 1})"
     sign = f"(CASE WHEN ({bits} < 0) THEN -1.0D ELSE 1.0D END)"
@@ -658,8 +558,8 @@ def _ieee_double_sql(bits: str) -> str:
 
 
 def _ieee_float_sql(bits: str) -> str:
-    """SQL text of :func:`_ieee_float` over bit-pattern fragment
-    ``bits``."""
+    """Exact IEEE-754 binary32, as a double, from its bit pattern (the
+    low 32 bits of fragment ``bits``)."""
     e = f"(shiftrightunsigned({bits}, 23) & 255)"
     m = f"({bits} & {(1 << 23) - 1})"
     sign = f"(CASE WHEN (({bits} & {1 << 31}) != 0) THEN -1.0D ELSE 1.0D END)"
@@ -670,54 +570,6 @@ def _ieee_float_sql(bits: str) -> str:
         f"WHEN ({e} = 0) THEN (({sign} * CAST({m} AS DOUBLE)) * {2.0 ** -149!r}D) "
         f"ELSE (({sign} * CAST(({m} | {1 << 23}) AS DOUBLE)) "
         f"* power(2.0D, CAST(({e} - 150) AS DOUBLE))) END"
-    )
-
-
-def _ieee_double(bits):
-    """Exact IEEE-754 binary64 from its bit pattern (a long column)."""
-    from pyspark.sql import functions as F
-
-    e = F.shiftrightunsigned(bits, 52).bitwiseAND(F.lit(0x7FF))
-    m = bits.bitwiseAND(F.lit((1 << 52) - 1))
-    sign = F.when(bits < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    return (
-        F.when(
-            e == 0x7FF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(
-                F.lit(float("nan"))
-            ),
-        )
-        .when(e == 0, sign * m.cast("double") * F.lit(2.0 ** -1074))
-        .otherwise(
-            sign
-            * m.bitwiseOR(F.lit(1 << 52)).cast("double")
-            * F.pow(F.lit(2.0), (e - 1075).cast("double"))
-        )
-    )
-
-
-def _ieee_float(bits):
-    """Exact IEEE-754 binary32 from its bit pattern (low 32 bits)."""
-    from pyspark.sql import functions as F
-
-    e = F.shiftrightunsigned(bits, 23).bitwiseAND(F.lit(0xFF))
-    m = bits.bitwiseAND(F.lit((1 << 23) - 1))
-    sign = F.when(bits.bitwiseAND(F.lit(1 << 31)) != 0, F.lit(-1.0)).otherwise(
-        F.lit(1.0)
-    )
-    return (
-        F.when(
-            e == 0xFF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(
-                F.lit(float("nan"))
-            ),
-        )
-        .when(e == 0, sign * m.cast("double") * F.lit(2.0 ** -149))
-        .otherwise(
-            sign
-            * m.bitwiseOR(F.lit(1 << 23)).cast("double")
-            * F.pow(F.lit(2.0), (e - 150).cast("double"))
-        )
     )
 
 
@@ -749,7 +601,7 @@ def attach_codegen_decode(
     The walk is unrolled ``n_steps`` times (default: one step per
     declared field + 2 slack for interleaved unknown fields — a body
     with more fields than steps simply leaves the tail undecoded, the
-    bounded-parser contract shared with message_index_struct). Each
+    bounded-parser contract shared with message_index_struct_sql). Each
     step is projected as its own column so the generated code stays
     linear in n_steps. Last occurrence wins on duplicate fields.
     Wrong-wire-type semantics are PER-FIELD and deliberately more
@@ -777,11 +629,8 @@ def attach_codegen_decode(
     pre = f"_pbcg_{_uuid.uuid4().hex[:8]}"
     bname = f"{pre}_body"
     df = df.withColumn(bname, body)
-    # the walk/assembly expressions are assembled as SQL TEXT and parsed
-    # with one F.expr per projected column — the Column builders above
-    # stay as the readable reference, the _sql twins are what runs (the
-    # driver-side py4j construction cost dominated this decode's wall;
-    # see the SQL-twin block)
+    # built as SQL text, one F.expr per projected column (see the
+    # SQL-text construction block)
     names = []
     for k in range(n_steps):
         p = "CAST(1 AS BIGINT)" if k == 0 else f"{names[-1]}.np"
@@ -811,39 +660,47 @@ def attach_codegen_decode(
             df = codegen_stage_split(df)
 
     df = codegen_stage_split(df)  # field assembly gets its own span
-    fields = []
+    # Each field's last-wins raw value is projected as its own column and
+    # converted ONCE in the struct below: converting inside every step
+    # arm inlines the IEEE rebuild n_steps times per field, which blows
+    # janino's 64 KB method limit from 8 doubles on.
     by_num = {int(num): spec for num, spec in field_schema.items()}
-    for f in schema.fields:
+    raw = {}
+    fields = []
+    for j, f in enumerate(schema.fields):
         spec = next(
             ((num, typ) for num, (nm, typ) in by_num.items() if nm == f.name),
             None,
         )
         dt = f.dataType.simpleString()
         if spec is None:
-            fields.append(f"'{f.name}', CAST(NULL AS {dt})")
+            fields.append(f"{sql_string(f.name)}, CAST(NULL AS {dt})")
             continue
         num, typ = spec
         wt_want = _WIRE_TYPE_OF[typ]
-        arms = []
-        for name in reversed(names):  # later steps first: last wins
-            hit = f"(({name}.fld = {num}) AND ({name}.wt = {wt_want}))"
-            ival = f"{name}.ival"
-            if typ == "int64":
-                val = ival
-            elif typ == "sint64":
-                val = f"(shiftrightunsigned({ival}, 1) ^ -({ival} & 1))"
-            elif typ == "bool":
-                val = f"({ival} != 0)"
-            elif typ == "string":
-                val = f"CAST({name}.sval AS STRING)"
-            elif typ == "bytes":
-                val = f"{name}.sval"
-            elif typ == "double":
-                val = _ieee_double_sql(ival)
-            else:  # float
-                val = _ieee_float_sql(ival)
-            arms.append(f"CASE WHEN {hit} THEN {val} END")
-        fields.append(f"'{f.name}', CAST(coalesce({', '.join(arms)}) AS {dt})")
+        member = "sval" if typ in ("string", "bytes") else "ival"
+        arms = ", ".join(
+            f"CASE WHEN (({name}.fld = {num}) AND ({name}.wt = {wt_want})) "
+            f"THEN {name}.{member} END"
+            for name in reversed(names)  # later steps first: last wins
+        )
+        r = f"{pre}_r{j}"
+        raw[r] = F.expr(f"coalesce({arms})")
+        if typ == "sint64":
+            val = f"(shiftrightunsigned({r}, 1) ^ -({r} & 1))"
+        elif typ == "bool":
+            val = f"({r} != 0)"
+        elif typ == "string":
+            val = f"CAST({r} AS STRING)"
+        elif typ == "double":
+            val = _ieee_double_sql(r)
+        elif typ == "float":
+            val = _ieee_float_sql(r)
+        else:  # int64, bytes
+            val = r
+        fields.append(f"{sql_string(f.name)}, CAST({val} AS {dt})")
+    if raw:
+        df = codegen_stage_split(df.withColumns(raw))
     payload = (
         f"CASE WHEN {bname} IS NOT NULL "
         f"THEN named_struct({', '.join(fields)}) END"
@@ -854,12 +711,21 @@ def attach_codegen_decode(
     ] + [
         f"{pre}_v{k}" for k in range(n_steps)
     ]
-    return df.drop(bname, *names, *aux_cols)
+    return df.drop(bname, *names, *aux_cols, *raw)
 
 
 def varint_encode_sql(x: str, max_bytes: int = 5) -> str:
-    """SQL text of :func:`varint_encode_expr` over fragment ``x`` —
-    the zero-py4j construction path (see the SQL-twin block above)."""
+    """Varint ENCODE of a non-negative long fragment ``x`` (≤
+    ``max_bytes`` base-128 groups, i.e. values < 2^(7·max_bytes)) →
+    binary. The fixture-synthesis counterpart of the codegen decoder:
+    lets registry fixtures frame protobuf/avro bodies with zero Python
+    in the plan (the same role unhex/lpad/hex play for the wire header
+    in wire_frame_split). Values outside the bound yield NULL — a
+    fixture generator bug should surface as missing rows, not silent
+    truncation. The ``x < 0`` arm matters: for negatives ``x < 128``
+    holds, ``%`` yields a negative remainder, and lpad(hex(...))
+    truncates the 16-digit two's-complement hex — a corrupt 1-byte
+    frame instead of NULL."""
     xc = f"CAST(({x}) AS BIGINT)"
 
     def byte_hex(b: str) -> str:
@@ -882,58 +748,8 @@ def varint_encode_sql(x: str, max_bytes: int = 5) -> str:
 
 
 def zigzag_encode_sql(x: str) -> str:
-    """SQL text of :func:`zigzag_encode_expr` over fragment ``x``."""
+    """Zigzag mapping of a long fragment ``x`` (the avro int/long and
+    protobuf sint encoding): (x << 1) XOR (x >> 63) — all bitwise,
+    exact for the full signed range."""
     c = f"CAST(({x}) AS BIGINT)"
     return f"(shiftleft({c}, 1) ^ shiftright({c}, 63))"
-
-
-def varint_encode_expr(x, max_bytes: int = 5):
-    """Builtin-expression varint ENCODE of a non-negative long column
-    (≤ ``max_bytes`` base-128 groups, i.e. values < 2^(7·max_bytes)) →
-    binary. The fixture-synthesis counterpart of the codegen decoder:
-    lets registry fixtures frame protobuf/avro bodies with zero Python
-    in the plan (the same role unhex/lpad/hex play for the wire header
-    in wire_frame_split). Values outside the bound yield NULL — a
-    fixture generator bug should surface as missing rows, not silent
-    truncation.
-
-    Accepts a Column, or a SQL fragment string (the cheap path: the
-    whole chain is assembled as text and parsed with one F.expr call —
-    see the SQL-twin block above)."""
-    from pyspark.sql import functions as F
-
-    if isinstance(x, str):
-        return F.expr(varint_encode_sql(x, max_bytes))
-
-    def byte_hex(b):  # two-hex-digit string of a byte value column
-        return F.lpad(F.hex(b.cast("long")), 2, "0")
-
-    def group(i):  # 7-bit group i
-        return F.shiftrightunsigned(x.cast("long"), 7 * i) % 128
-
-    # the x >= 0 guard matters: for negatives `x < 128` is true, `%`
-    # yields a negative remainder, and lpad(hex(...)) truncates the
-    # 16-digit two's-complement hex — a corrupt 1-byte frame instead of
-    # the documented NULL
-    xc = x.cast("long")
-    chain = F.when(xc < 0, F.lit(None).cast("string")).when(
-        xc < 128, byte_hex(group(0))
-    )
-    for n in range(2, max_bytes + 1):
-        parts = [byte_hex(group(i) + 128) for i in range(n - 1)]
-        parts.append(byte_hex(group(n - 1)))
-        chain = chain.when(xc < (1 << (7 * n)), F.concat(*parts))
-    return F.unhex(chain)
-
-
-def zigzag_encode_expr(x):
-    """Builtin-expression zigzag mapping of a long column (the avro
-    int/long and protobuf sint encoding): (x << 1) XOR (x >> 63) —
-    all bitwise, exact for the full signed range. Accepts a Column or
-    a SQL fragment string (see varint_encode_expr)."""
-    from pyspark.sql import functions as F
-
-    if isinstance(x, str):
-        return F.expr(zigzag_encode_sql(x))
-    c = x.cast("long")
-    return F.shiftleft(c, 1).bitwiseXOR(F.shiftright(c, 63))

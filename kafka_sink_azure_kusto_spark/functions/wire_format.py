@@ -47,11 +47,13 @@ from pyspark.sql.types import StructType
 
 MAGIC_BYTE = 0x00
 
-# the zero-cost whole-stage-codegen boundary (no-op coalesce) — see the
-# canonical definition + rationale in protobuf_io.codegen_stage_split;
-# re-exported here because the wire decode chain is its main consumer
+# the zero-cost whole-stage-codegen boundary (no-op coalesce) and the
+# SQL identifier quoting — canonical definitions + rationale in
+# protobuf_io; codegen_stage_split is re-exported here because the wire
+# decode chain is its main consumer
 from kafka_sink_azure_kusto_spark.functions.protobuf_io import (  # noqa: E402
     codegen_stage_split,
+    quote_ident,
 )
 
 #: status values emitted by decode_wire_frames
@@ -104,29 +106,9 @@ def encode_wire_frame(
     return bytes([magic]) + struct.pack(">I", schema_id) + prefix + body
 
 
-def _byte_at(v: Column, pos: int) -> Column:
-    """Unsigned byte value at 1-indexed ``pos`` (NULL past the end)."""
-    return F.when(
-        F.length(v) >= pos, F.conv(F.hex(F.substring(v, pos, 1)), 16, 10).cast("int")
-    )
-
-
-def wire_magic(v: Column) -> Column:
-    """First frame byte as int (NULL for empty payloads)."""
-    return _byte_at(v, 1)
-
-
-def wire_schema_id(v: Column) -> Column:
-    """Big-endian uint32 schema id from bytes 2-5 (NULL when the frame
-    is shorter than the 5-byte header). hex() of the 4-byte slice IS the
-    big-endian representation; conv() parses it exactly."""
-    return F.when(
-        F.length(v) >= 5, F.conv(F.hex(F.substring(v, 2, 4)), 16, 10).cast("long")
-    )
-
-
 def wire_magic_sql(v: str) -> str:
-    """SQL text of :func:`wire_magic` over column name ``v``."""
+    """First frame byte of column ``v`` as int (NULL for empty
+    payloads)."""
     return (
         f"CASE WHEN (length({v}) >= 1) "
         f"THEN CAST(conv(hex(substring({v}, 1, 1)), 16, 10) AS INT) END"
@@ -134,7 +116,10 @@ def wire_magic_sql(v: str) -> str:
 
 
 def wire_schema_id_sql(v: str) -> str:
-    """SQL text of :func:`wire_schema_id` over column name ``v``."""
+    """Big-endian uint32 schema id from bytes 2-5 of column ``v`` (NULL
+    when the frame is shorter than the 5-byte header). hex() of the
+    4-byte slice IS the big-endian representation; conv() parses it
+    exactly."""
     return (
         f"CASE WHEN (length({v}) >= 5) "
         f"THEN CAST(conv(hex(substring({v}, 2, 4)), 16, 10) AS BIGINT) END"
@@ -147,10 +132,10 @@ def wire_body(v: Column) -> Column:
     return v.substr(F.lit(6), F.greatest(F.length(v) - F.lit(5), F.lit(0)))
 
 
-def message_index_struct(v: Column) -> Column:
-    """Parse the Confluent protobuf message-index list at frame offset 5
-    with pure codegen expressions → one struct column
-    ``(s: string, idx: array<int>, p: int)``.
+def message_index_struct_sql(v: str) -> str:
+    """Parse the Confluent protobuf message-index list of column ``v``
+    at frame offset 5 → one struct ``(s: string, idx: array<int>, p:
+    int)``.
 
     ``s``: 'ok' | 'truncated' (no/short index bytes) | 'unsupported'
     (multi-byte varint or count > MAX_MESSAGE_INDEXES — bounded parser,
@@ -165,7 +150,8 @@ def message_index_struct(v: Column) -> Column:
     thing real schemas do, and such frames surface as a DLQ status.
 
     Codegen size: the whole parse is ONE CaseWhen over bytes sliced out
-    of a single shared hex() of the ≤9-byte prefix region, and callers
+    of one hex() of the ≤9-byte prefix region (repeated per byte in
+    the text, as a Column tree would inline it), and callers
     (decode_wire_frames) project the struct ONCE as a named column —
     referencing the fields does not re-inline the chain (CollapseProject
     refuses to duplicate non-cheap aliases), which keeps the generated
@@ -173,52 +159,6 @@ def message_index_struct(v: Column) -> Column:
     3-chains × per-handler-reference layout blew that limit and dropped
     the whole stage to interpreted execution.
     """
-    blen = F.length(v)
-    # hex of count byte + up to MAX entries — one shared slice
-    hexpre = F.hex(F.substring(v, 6, 1 + MAX_MESSAGE_INDEXES))
-
-    def b(i: int) -> Column:  # prefix byte i (0 = count byte)
-        return F.conv(F.substring(hexpre, 2 * i + 1, 2), 16, 10).cast("int")
-
-    null_lst = F.lit(None).cast("array<int>")
-    null_pos = F.lit(None).cast("int")
-
-    def branch(status: str, lst: Column, pos: Column) -> Column:
-        return F.struct(
-            F.lit(status).alias("s"), lst.alias("idx"), pos.alias("p")
-        )
-
-    b0 = b(0)
-    chain = F.when(blen < 6, branch("truncated", null_lst, null_pos))
-    # fast path: single byte 0x00 ⇒ indexes [0], body at 7
-    chain = chain.when(b0 == 0, branch("ok", F.array(F.lit(0)), F.lit(7)))
-    for c in range(1, MAX_MESSAGE_INDEXES + 1):
-        is_count = b0 == 2 * c
-        entries = [b(i) for i in range(1, c + 1)]
-        ok = is_count & (blen >= 6 + c)
-        for e in entries:
-            ok = ok & (e < 128) & (e % 2 == 0)
-        chain = chain.when(
-            ok,
-            branch(
-                "ok",
-                F.array(*[F.shiftright(e, 1) for e in entries]),
-                F.lit(7 + c),
-            ),
-        )
-        # right count byte but frame ends before the entries
-        chain = chain.when(is_count & (blen < 6 + c), branch("truncated", null_lst, null_pos))
-    return chain.otherwise(branch("unsupported", null_lst, null_pos))
-
-
-def message_index_struct_sql(v: str) -> str:
-    """SQL text of :func:`message_index_struct` over column name ``v``
-    — the zero-py4j construction path (the Column builder's ~11k py4j
-    round-trips were ~1.4 s of driver time per plan build; see the
-    SQL-twin block in protobuf_io for the pattern and its gates). The
-    text mirrors the Column version branch-for-branch; the shared
-    ``hexpre`` slice is textually inlined per byte exactly as the
-    Column tree inlines its subexpression."""
     blen = f"length({v})"
     hexpre = f"hex(substring({v}, 6, {1 + MAX_MESSAGE_INDEXES}))"
 
@@ -261,12 +201,11 @@ def _with_frame_meta(df: DataFrame, handlers: dict, value_col: str):
     Python. Returns (df, any_indexed_protobuf)."""
     if not handlers:
         raise ValueError("wire frame decoding requires at least one handler")
-    # SQL-text construction path (see the SQL-twin block in protobuf_io):
-    # the status chains mirror the previous Column chains branch-for-
-    # branch — `NOT (id IN (...))` keeps isin()'s three-valued NULL
-    # semantics (NULL id falls through to 'ok' exactly as before, and
-    # is only NULL when the frame is < 5 bytes, caught first).
-    v = value_col
+    # built as SQL text (see the SQL-text construction block in
+    # protobuf_io). `NOT (id IN (...))` is three-valued: a NULL id falls
+    # through to 'ok', and the id is only NULL when the frame is < 5
+    # bytes, which the first arm catches.
+    v = quote_ident(value_col)
     known_ids = ", ".join(str(int(i)) for i in handlers)
     base_status = (
         f"CASE WHEN (length({v}) < 5) THEN '{STATUS_TRUNCATED}' "
@@ -283,7 +222,7 @@ def _with_frame_meta(df: DataFrame, handlers: dict, value_col: str):
     # the id is kept on every frame long enough to carry one (≥ 5 bytes)
     # regardless of status — DLQ triage needs the routing info. The index
     # struct is PROJECTED ONCE so downstream field references don't
-    # re-inline its CaseWhen (codegen 64 KB guard, see message_index_struct).
+    # re-inline its CaseWhen (codegen 64 KB guard, see message_index_struct_sql).
     out = df.withColumns(
         {
             "wire_schema_id": F.expr(wire_schema_id_sql(v)),
@@ -352,7 +291,7 @@ def wire_frame_audit(
     while body decode may drop to an Arrow UDF (jar-less protobuf/avro).
     Splitting the stages keeps the audit path on the fast plan and lets
     benchmarks grade parse/route and decode independently."""
-    v = F.col(value_col)
+    v = F.col(quote_ident(value_col))
     blen = F.length(v)
     out, any_indexed = _with_frame_meta(df, handlers, value_col)
     ok = F.col("wire_status") == STATUS_OK
@@ -413,7 +352,7 @@ def decode_wire_frames(
     falls back to the repo's spec-exact pure-Python Avro codec
     (Arrow-batched) when it is not. Everything is narrow — no shuffle.
     """
-    v = F.col(value_col)
+    v = F.col(quote_ident(value_col))
     body = wire_body(v)
     blen = F.length(v)
     out, any_indexed_protobuf = _with_frame_meta(df, handlers, value_col)

@@ -819,8 +819,7 @@ def registry_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the whole frame synthesis is assembled as SQL text and parsed
     # with ONE F.expr — the py4j-free construction path (see the
-    # SQL-twin block in protobuf_io); the text mirrors the previous
-    # Column chain branch-for-branch
+    # SQL-text construction block in protobuf_io)
     jbody = (
         "CAST(concat('{\"eid\":', CAST(event_id AS STRING), "
         "',\"uid\":', CAST(user_id AS STRING), '}') AS BINARY)"

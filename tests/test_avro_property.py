@@ -70,7 +70,7 @@ def test_container_roundtrip_any_batch(recs, block_records):
 # cited avro_io's over-length guard alongside protobuf_io's).
 #
 # Referee: `_avro_walk_model`, a pure-Python rendition of
-# `_avro_field_step`'s documented semantics (sequential schema-order
+# `_avro_field_step_sql`'s documented semantics (sequential schema-order
 # walk; truncation/negative-length/over-length/11-byte-varint NULL the
 # field and starve every later one), sharing no code with either
 # decoder. Where the walk completes, the decoded values additionally

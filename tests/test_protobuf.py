@@ -401,32 +401,59 @@ def test_codegen_decode_matches_python_codec(spark):
                 )
 
 
-def test_ieee_reconstruction_bit_exact(spark):
-    """The arithmetic IEEE-754 rebuild must be BIT-exact (not just
-    close): pattern-space sweep over sign/exponent/mantissa corners,
-    compared to struct.unpack."""
-    import struct as _struct
-
-    from pyspark.sql import functions as F
-
-    from kafka_sink_azure_kusto_spark.functions.protobuf_io import _ieee_double
-
-    bit_patterns = []
+def _double_patterns():
+    out = []
     for sign in (0, 1):
         for e in (0, 1, 2, 1022, 1023, 1024, 2045, 2046, 2047):
             for m in (0, 1, 0x8000000000000, 0xFFFFFFFFFFFFF, 0x5DEECE66D):
-                bit_patterns.append((sign << 63) | (e << 52) | m)
-    rows = [(p - (1 << 64) if p >= (1 << 63) else p,) for p in bit_patterns]
-    df = spark.createDataFrame(rows, "bits long")
-    got = [r[0] for r in df.select(_ieee_double(F.col("bits"))).collect()]
-    import math
+                out.append((sign << 63) | (e << 52) | m)
+    return out
 
-    for p, g in zip(bit_patterns, got):
-        expect = _struct.unpack("<d", p.to_bytes(8, "little"))[0]
+
+def _float_patterns():
+    out = []
+    for sign in (0, 1):
+        for e in (0, 1, 2, 126, 127, 128, 253, 254, 255):
+            for m in (0, 1, 0x400000, 0x7FFFFF, 0x2EECE6):
+                out.append((sign << 31) | (e << 23) | m)
+    return out
+
+
+@pytest.mark.parametrize(
+    "width, builder, patterns",
+    [
+        (8, "_ieee_double_sql", _double_patterns()),
+        (4, "_ieee_float_sql", _float_patterns()),
+    ],
+    ids=["double", "float"],
+)
+def test_ieee_reconstruction_bit_exact(spark, width, builder, patterns):
+    """The arithmetic IEEE-754 rebuild must be BIT-exact (not just
+    close): pattern-space sweep over sign/exponent/mantissa corners,
+    compared to struct.unpack."""
+    import math
+    import struct as _struct
+
+    from kafka_sink_azure_kusto_spark.functions import protobuf_io
+
+    fmt = "<d" if width == 8 else "<f"
+    sign_bit = 1 << (8 * width - 1)
+    # fixed64 patterns arrive as signed longs, fixed32 as their low 32 bits
+    rows = [
+        (p - (1 << 64) if width == 8 and p >= sign_bit else p,)
+        for p in patterns
+    ]
+    df = spark.createDataFrame(rows, "bits long")
+    rebuild = F.expr(getattr(protobuf_io, builder)("bits"))
+    if width == 4:
+        rebuild = rebuild.cast("float")
+    got = [r[0] for r in df.select(rebuild).collect()]
+    for p, g in zip(patterns, got):
+        expect = _struct.unpack(fmt, p.to_bytes(width, "little"))[0]
         if math.isnan(expect):
             assert math.isnan(g), hex(p)
         else:
-            assert _struct.pack("<d", g) == _struct.pack("<d", expect), (
+            assert _struct.pack(fmt, g) == _struct.pack(fmt, expect), (
                 hex(p), g, expect
             )
 
@@ -470,22 +497,20 @@ def test_codegen_decode_nulls_overlength_slice(spark):
     assert rows[2]["payload"]["i"] == 42  # per-field leniency, documented
 
 
-def test_varint_encode_expr_negative_yields_null(spark):
+def test_varint_encode_sql_negative_yields_null(spark):
     """ADVICE r7 #2: negative inputs must fall through to NULL as the
     docstring promises — not a corrupt 1-byte frame from truncated
     two's-complement hex."""
     from pyspark.sql import functions as F
 
     from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
-        varint_encode_expr,
+        varint_encode_sql,
     )
 
     df = spark.createDataFrame(
         [(-1,), (-5,), (0,), (127,), (128,), (2**34,), (2**35,)], "x long"
     )
-    got = df.select(
-        varint_encode_expr(F.col("x")).alias("v")
-    ).collect()
+    got = df.select(F.expr(varint_encode_sql("x")).alias("v")).collect()
     assert got[0]["v"] is None and got[1]["v"] is None
     assert bytes(got[2]["v"]) == b"\x00"
     assert bytes(got[3]["v"]) == b"\x7f"

@@ -103,7 +103,7 @@ def test_audit_matches_reference_parser_on_arbitrary_frames(spark, frames):
 #
 # The referee is `_codegen_walk_model`, a pure-Python rendition of the
 # DOCUMENTED bounded-walk rules (attach_codegen_decode's docstring +
-# _codegen_step's starve conditions), sharing no code with either
+# _codegen_step_sql's starve conditions), sharing no code with either
 # decoder. Assertions, per frame:
 #   1. codegen output == model output, field by field (strong check);
 #   2. where BOTH paths are fully defined (decode_message succeeds and
