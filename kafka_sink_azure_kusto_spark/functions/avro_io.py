@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
+
 _MAGIC = b"Obj\x01"
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
@@ -825,7 +827,7 @@ def attach_avro_codegen_decode(
     fields = []
     for sf in schema.fields:
         step = step_of.get(sf.name)
-        name = _pb.sql_string(sf.name)
+        name = sql_string(sf.name)
         dt = sf.dataType.simpleString()
         if step is None:
             fields.append(f"{name}, CAST(NULL AS {dt})")

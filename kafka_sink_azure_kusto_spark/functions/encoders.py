@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from kafka_sink_azure_kusto_spark.functions.sql_text import quote_ident, sql_string
+
 
 def decode_payload(
     df: DataFrame,
@@ -253,6 +255,16 @@ def encode_ndjson(df: DataFrame, cols: Optional[Sequence[str]] = None) -> Column
     return F.to_json(struct)
 
 
+def csv_line_sql(cols: Sequence[str], sep: str = ",") -> str:
+    """SQL text of one CSV line over ``cols`` in the given order. A dot
+    in a name selects a nested field, as in ``F.col``; every part is
+    quoted, so any other character is safe."""
+    casts = [
+        "CAST(" + ".".join(quote_ident(p) for p in c.split(".")) + " AS STRING)" for c in cols
+    ]
+    return f"concat_ws({', '.join([sql_string(sep), *casts])})"
+
+
 def encode_csv_line(
     df: DataFrame,
     cols: Optional[Sequence[str]] = None,
@@ -265,7 +277,7 @@ def encode_csv_line(
     names = list(cols) if cols else list(df.columns)
     if alphabetical:
         names = sorted(names)
-    return F.concat_ws(sep, *[F.col(c).cast("string") for c in names])
+    return F.expr(csv_line_sql(names, sep))
 
 
 def pack_all(df: DataFrame, exclude: Sequence[str] = ()) -> Column:

@@ -24,6 +24,8 @@ from __future__ import annotations
 import struct
 from typing import Iterator, Optional, Sequence, Union
 
+from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
+
 _MASK64 = (1 << 64) - 1
 
 
@@ -363,21 +365,8 @@ def codegen_decodable(field_schema: dict) -> bool:
 # operations per step: building registry_wire_decode from Column
 # operations took about 46k py4j calls, as SQL text it takes about 2.3k.
 # Names that come from callers (column names, output field names) go
-# into the text through quote_ident / sql_string.
+# into the text through functions.sql_text.quote_ident / sql_string.
 # ---------------------------------------------------------------------------
-
-
-def quote_ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier (embedded backticks
-    doubled) — safe for hyphens, spaces, quotes and reserved words, and
-    also accepted by ``F.col``."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def sql_string(text: str) -> str:
-    """``text`` as a single-quoted SQL string literal (backslashes and
-    quotes escaped)."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _codegen_step_hex_sql(v: str, p: str) -> str:

@@ -22,13 +22,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.config import TopicToTableMapping
+from kafka_sink_azure_kusto_spark.functions.sql_text import quote_ident, sql_string
+
+
+def _sql_literal(value) -> str:
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    return sql_string(value)
 
 
 def with_route(
     df: DataFrame,
     mappings: Sequence[TopicToTableMapping],
     topic_col: str = "topic",
-    on_unmapped: str = "error_column",
 ) -> DataFrame:
     """F3 — append ``route_db``, ``route_table``, ``route_format``,
     ``route_mapping``, ``route_streaming`` columns resolved from the
@@ -39,35 +47,33 @@ def with_route(
     the reference's NotFoundException, or null ⇒ DLQ).
 
     Implementation: the config is compiled into a single CASE expression
-    (no join at all — zero shuffle, fully codegen'd, pushdown-friendly).
-    For O(10³)+ mappings a broadcast join would win; config sizes in the
-    reference are O(10), so CASE keeps the plan narrow.
+    per route column (no join at all — zero shuffle, fully codegen'd,
+    pushdown-friendly), built as SQL text so its construction costs one
+    parse per column whatever the mapping count. For O(10³)+ mappings a
+    broadcast join would win; config sizes in the reference are O(10),
+    so CASE keeps the plan narrow.
     """
     exact = {m.topic: m for m in mappings if not m.is_wildcard}
     wildcard: Optional[TopicToTableMapping] = next(
         (m for m in mappings if m.is_wildcard), None
     )
+    topic = quote_ident(topic_col)
 
-    def resolve(attr):
-        col = F.lit(None).cast("string")
-        if wildcard is not None:
-            v = attr(wildcard)
-            col = F.lit(v)
-        expr = col
-        for topic, m in exact.items():
-            expr = F.when(F.col(topic_col) == F.lit(topic), F.lit(attr(m))).otherwise(
-                expr
-            )
-        return expr
-
-    out = (
-        df.withColumn("route_db", resolve(lambda m: m.db))
-        .withColumn("route_table", resolve(lambda m: m.table))
-        .withColumn("route_format", resolve(lambda m: m.ingest_format))
-        .withColumn("route_mapping", resolve(lambda m: m.mapping))
-        .withColumn(
-            "route_streaming",
-            resolve(lambda m: m.streaming).cast("boolean"),
+    def resolve(attr) -> str:
+        default = "CAST(NULL AS STRING)" if wildcard is None else _sql_literal(attr(wildcard))
+        if not exact:
+            return default
+        whens = " ".join(
+            f"WHEN {sql_string(t)} THEN {_sql_literal(attr(m))}" for t, m in exact.items()
         )
+        return f"CASE {topic} {whens} ELSE {default} END"
+
+    return df.withColumns(
+        {
+            "route_db": F.expr(resolve(lambda m: m.db)),
+            "route_table": F.expr(resolve(lambda m: m.table)),
+            "route_format": F.expr(resolve(lambda m: m.ingest_format)),
+            "route_mapping": F.expr(resolve(lambda m: m.mapping)),
+            "route_streaming": F.expr(f"CAST({resolve(lambda m: m.streaming)} AS BOOLEAN)"),
+        }
     )
-    return out

@@ -47,14 +47,11 @@ from pyspark.sql.types import StructType
 
 MAGIC_BYTE = 0x00
 
-# the zero-cost whole-stage-codegen boundary (no-op coalesce) and the
-# SQL identifier quoting — canonical definitions + rationale in
-# protobuf_io; codegen_stage_split is re-exported here because the wire
-# decode chain is its main consumer
-from kafka_sink_azure_kusto_spark.functions.protobuf_io import (  # noqa: E402
-    codegen_stage_split,
-    quote_ident,
-)
+# the zero-cost whole-stage-codegen boundary (no-op coalesce) —
+# canonical definition + rationale in protobuf_io; re-exported here
+# because the wire decode chain is its main consumer
+from kafka_sink_azure_kusto_spark.functions.protobuf_io import codegen_stage_split  # noqa: E402
+from kafka_sink_azure_kusto_spark.functions.sql_text import quote_ident  # noqa: E402
 
 #: status values emitted by decode_wire_frames
 STATUS_OK = "ok"

@@ -16,7 +16,7 @@ Scale notes:
   aggregate over it sizes the epoch and counts unmapped records.
 - The only exchange is keyed on (topic, partition), the natural Kafka
   parallelism unit. File assignment and the grouped staging call
-  (``applyInPandas`` over (topic, partition, file_seq), all routes at
+  (``applyInArrow`` over (topic, partition, file_seq), all routes at
   once) both reuse it: each Kafka partition's records land in rolled
   files exactly like one TopicPartitionWriter, and groups are bounded by
   flush_size_bytes so no group can OOM an executor.
@@ -34,7 +34,7 @@ Scale notes:
   slow file does not serialize the epoch behind its retry loop.
 
 Staging-directory requirement (multi-node clusters): in the default
-driver-ingest mode, files are WRITTEN by executors (``applyInPandas``)
+driver-ingest mode, files are WRITTEN by executors (``applyInArrow``)
 and READ/deleted by the driver-side ingest loop, so
 ``config.staging_dir`` MUST be shared storage (NFS / DBFS /
 fuse-mounted object store) on a real cluster; executor-local paths only
@@ -57,7 +57,8 @@ import math
 import os
 from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructType
@@ -68,9 +69,10 @@ from kafka_sink_azure_kusto_spark.config import (
     KustoSinkConfig,
     TopicToTableMapping,
 )
-from kafka_sink_azure_kusto_spark.functions.encoders import encode_csv_line
+from kafka_sink_azure_kusto_spark.functions.encoders import csv_line_sql
 from kafka_sink_azure_kusto_spark.functions.filters import drop_tombstones
 from kafka_sink_azure_kusto_spark.functions.routing import with_route
+from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
 from kafka_sink_azure_kusto_spark.operators.batching import with_file_assignment
 from kafka_sink_azure_kusto_spark.streaming.backends import (
     IngestBackend,
@@ -97,7 +99,7 @@ _MANIFEST_SCHEMA = (
 
 # Per-Python-worker backend cache for executor-side ingest: one client
 # per (worker process, cache token) instead of one per rolled file —
-# applyInPandas reuses worker processes across groups and batches.
+# applyInArrow reuses worker processes across groups and batches.
 _EXECUTOR_BACKENDS: dict = {}
 
 
@@ -145,21 +147,20 @@ def _encode_line(df: DataFrame) -> Column:
         return F.col("value")
     if not isinstance(value_type, StructType):
         return F.col("value").cast("string")
-    fmt = F.col("route_format")
-    cols = [f"value.{c}" for c in value_type.fieldNames()]
+    cols = sorted(f"value.{c}" for c in value_type.fieldNames())  # E3 field order
+    containers = ", ".join(map(sql_string, _CONTAINER_FORMATS))
+    csv, tsv = csv_line_sql(cols), csv_line_sql(cols, sep="\t")
     # Container formats stage the struct itself; their line is a size
     # proxy (B1 then tracks the container size within a small constant
     # factor — documented deviation, the reference counts exact avro
     # bytes) AND the DLQ value, so it keeps null fields to stay
     # schema-faithful (to_json drops nulls by default).
-    return (
-        F.when(
-            fmt.isin(*_CONTAINER_FORMATS),
-            F.to_json(F.col("value"), {"ignoreNullFields": "false"}),
-        )
-        .when(fmt == "csv", encode_csv_line(df, cols))
-        .when(fmt == "tsv", encode_csv_line(df, cols, sep="\t"))
-        .otherwise(F.to_json(F.col("value")))
+    return F.expr(
+        f"CASE WHEN route_format IN ({containers}) "
+        "THEN to_json(value, map('ignoreNullFields', 'false')) "
+        f"WHEN route_format = 'csv' THEN {csv} "
+        f"WHEN route_format = 'tsv' THEN {tsv} "
+        "ELSE to_json(value) END"
     )
 
 
@@ -181,14 +182,15 @@ def _failed_records(failed: list[Row], staged: list[Row]) -> Column:
         else:
             ranges.append([s.topic, s.partition, s.file_offset, s.last_offset])
             prev = key
-    terms = [
-        (F.col("topic") == t) & (F.col("partition") == p) & F.col("offset").between(lo, hi)
+    # One SQL string, one parse: Spark's parser builds a long OR chain as
+    # a balanced tree, so the expression stays shallow.
+    terms = " OR ".join(
+        f"(`topic` = {sql_string(t)} AND `partition` = {int(p)} "
+        f"AND `offset` BETWEEN {int(lo)} AND {int(hi)})"
         for t, p, lo, hi in ranges
-    ]
-    while len(terms) > 1:  # a balanced OR keeps the expression tree shallow
-        terms = [terms[i] | terms[i + 1] if i + 1 < len(terms) else terms[i]
-                 for i in range(0, len(terms), 2)]
-    return F.col("topic").isin(sorted({s.topic for s in failed})) & terms[0]
+    )
+    topics = ", ".join(map(sql_string, sorted({s.topic for s in failed})))
+    return F.expr(f"`topic` IN ({topics}) AND ({terms})")
 
 
 def _dlq_value(line, avro: bool):
@@ -205,7 +207,7 @@ def _epoch_writer(
     arrow_schema,
     ingest: Optional[dict],
 ):
-    """Build the applyInPandas group writer of one epoch: one rolled file
+    """Build the applyInArrow group writer of one epoch: one rolled file
     per (topic, partition, file_seq) group in its route's format under
     ``staging_root/db/table``, named per B4 (TopicPartitionWriter.java:
     235-242), owner-only perms like FileWriter.openFile (:93-154).
@@ -216,7 +218,9 @@ def _epoch_writer(
     (AvroRecordWriterProvider.java:27-73); parquet/orc with struct values
     is one pyarrow file (extension; Kusto ingests both natively, but
     rejects a .gz wrapper around them — text and Avro keep the
-    reference's .gz); anything else is ``line`` newline-terminated.
+    reference's .gz, at GZIPOutputStream's default level 6,
+    FileWriter.java:146-153); anything else is ``line``
+    newline-terminated.
 
     ``ingest`` (executor-side-ingest mode) carries ``{"factory", "token",
     "props", "max_attempts", "backoff_ms"}``, ``props`` keyed by topic: the group ingests its OWN file right
@@ -225,9 +229,11 @@ def _epoch_writer(
     import gzip
     import io
 
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset")
-        head = pdf.iloc[0]
+    def write_group(table: pa.Table) -> pa.Table:
+        table = table.take(pc.sort_indices(table, [("offset", "ascending")]))
+        head = table.select(
+            ["topic", "partition", "file_offset", "route_format", "route_db", "route_table"]
+        ).slice(0, 1).to_pylist()[0]
         topic, partition = str(head["topic"]), int(head["partition"])
         file_offset, fmt = int(head["file_offset"]), str(head["route_format"])
         avro = fmt in _AVRO_FORMATS
@@ -240,29 +246,29 @@ def _epoch_writer(
         if avro and avro_schema is not None:
             from kafka_sink_azure_kusto_spark.functions.avro_io import write_container
 
-            write_container((dict(v) for v in pdf["value"]), avro_schema, bio)
+            write_container(table.column("value").to_pylist(), avro_schema, bio)
         elif columnar:
-            import pyarrow as pa
-
             if fmt == "orc":
                 import pyarrow.orc as writer
             else:
                 import pyarrow.parquet as writer
 
-            table = pa.Table.from_pylist([dict(v) for v in pdf["value"]], schema=arrow_schema)
-            writer.write_table(table, bio)
-        elif binary_values:
-            sep = b"" if avro else b"\n"
-            bio.write(b"".join(bytes(b) + sep for b in pdf["line"]))
+            values = table.column("value").combine_chunks()
+            writer.write_table(pa.Table.from_struct_array(values).cast(arrow_schema), bio)
         else:
-            bio.write(("\n".join(pdf["line"].astype(str)) + "\n").encode("utf-8"))
+            # Text lines are UTF-8 and binary lines raw bytes: both join as
+            # bytes, each line followed by the separator.
+            sep = b"" if binary_values and avro else b"\n"
+            lines = pc.cast(table.column("line"), pa.large_binary()).combine_chunks()
+            one = pa.LargeListArray.from_arrays(pa.array([0, len(lines)], pa.int64()), lines)
+            bio.write(pc.binary_join(one, pa.scalar(sep, pa.large_binary()))[0].as_py() + sep)
         body = bio.getvalue()
         with open(path, "wb") as raw:
             os.fchmod(raw.fileno(), 0o600)
             if columnar:
                 raw.write(body)
             else:
-                with gzip.GzipFile(fileobj=raw, mode="wb", mtime=0) as gz:
+                with gzip.GzipFile(fileobj=raw, mode="wb", compresslevel=6, mtime=0) as gz:
                     gz.write(body)
         status, error, attempts = "Staged", "", [0]
         if ingest is not None:
@@ -281,12 +287,11 @@ def _epoch_writer(
                 os.remove(path)  # B5 — co-located cleanup, success or not
             except OSError:
                 pass
-        row = dict(
-            path=path, topic=topic, partition=partition, file_offset=file_offset,
-            last_offset=int(pdf["offset"].iloc[-1]), records=len(pdf), raw_bytes=len(body),
-            status=status, error=error, attempts=attempts[0],
-        )
-        return pd.DataFrame([row])
+        return pa.table(dict(
+            path=[path], topic=[topic], partition=[partition], file_offset=[file_offset],
+            last_offset=[table.column("offset")[-1].as_py()], records=[table.num_rows],
+            raw_bytes=[len(body)], status=[status], error=[error], attempts=[attempts[0]],
+        ))
 
     return write_group
 
@@ -508,7 +513,7 @@ class KustoSparkSink:
         manifest = (
             files.select(*cols)
             .groupBy("topic", "partition", "file_seq")
-            .applyInPandas(writer, schema=_MANIFEST_SCHEMA)
+            .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
             .collect()  # tiny: one row per rolled file
         )
         return sorted(
@@ -614,21 +619,12 @@ class KustoSparkSink:
         topics — never the source or staged gzip re-read on the driver —
         so per-record offsets survive file rolling and binary Avro
         payloads never pass through a text decode."""
-        out = failed.select(
-            "topic", "partition", "offset",
-            F.concat(
-                F.lit(
-                    "Failed to write record to KustoDB with the following "
-                    "kafka coordinates, topic="
-                ),
-                F.col("topic"),
-                F.lit(", partition="),
-                F.col("partition").cast("string"),
-                F.lit(", offset="),
-                F.col("offset").cast("string"),
-                F.lit("."),
-            ).alias("key"),
-            F.col("line").alias("value"),
+        out = failed.selectExpr(
+            "`topic`", "`partition`", "`offset`",
+            "concat('Failed to write record to KustoDB with the following kafka "
+            "coordinates, topic=', `topic`, ', partition=', CAST(`partition` AS STRING), "
+            "', offset=', CAST(`offset` AS STRING), '.') AS `key`",
+            "`line` AS `value`",
         )
         executor_side = self.config.dlq_executor_side and (
             self.config.dlq_enabled or self._dlq_partition_producer_factory

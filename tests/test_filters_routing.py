@@ -1,6 +1,7 @@
 """F1–F4 transform tests (modeled on KustoSinkTaskTest routing tests and
 the tombstone interleave in KustoSinkIT.java:396-398)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.config import TopicToTableMapping
@@ -9,6 +10,7 @@ from kafka_sink_azure_kusto_spark.functions.filters import (
     drop_tombstones,
 )
 from kafka_sink_azure_kusto_spark.functions.routing import with_route
+from kafka_sink_azure_kusto_spark.functions.sql_text import quote_ident
 
 
 def _records(spark):
@@ -64,3 +66,50 @@ def test_routing_plan_is_narrow(spark):
     df = with_route(_records(spark), MAPPINGS)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def _unvalidated(topic, db="db", table="t", **kw):
+    """A mapping carrying ``db``/``table`` values the config would reject:
+    with_route must quote any value, not rely on config validation."""
+    m = TopicToTableMapping(topic=topic, db="db", table="t", **kw)
+    object.__setattr__(m, "db", db)
+    object.__setattr__(m, "table", table)
+    return m
+
+
+HOSTILE_ROUTES = {
+    "quoted_topic": ([_unvalidated("o'clock", table="quoted")], "topic"),
+    "backslash_db": ([_unvalidated("topic1", db="d\\b")], "topic"),
+    "backtick_table": ([_unvalidated("topic2", table="ta`ble")], "topic"),
+    "hyphen_topic_col": ([_unvalidated("topic1"), _unvalidated("topic3")], "my-topic"),
+    "mapping_none": (
+        [_unvalidated("topic1", mapping="M1", streaming=True), _unvalidated("topic2")],
+        "topic",
+    ),
+    "wildcard_and_exact": (
+        [_unvalidated("topic1", format="csv"), _unvalidated("*", db="dbW", table="w"),
+         _unvalidated("o'clock", table="q", format="avro")],
+        "topic",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HOSTILE_ROUTES))
+def test_routing_sql_text_quotes_hostile_values(spark, case):
+    mappings, topic_col = HOSTILE_ROUTES[case]
+    topics = ["topic1", "topic2", "topic3", "o'clock", "`x`", "a\\b"]
+    df = spark.createDataFrame(
+        [(f"k{i}", t) for i, t in enumerate(topics)], f"key string, {quote_ident(topic_col)} string"
+    )
+    got = {
+        r.key: (r.route_db, r.route_table, r.route_format, r.route_mapping, r.route_streaming)
+        for r in with_route(df, mappings, topic_col=topic_col).collect()
+    }
+    # Reference F3 lookup: exact topic, else '*', else null routes.
+    by_topic = {m.topic: m for m in mappings}
+    for i, t in enumerate(topics):
+        m = by_topic.get(t, by_topic.get("*"))
+        want = (None,) * 5 if m is None else (
+            m.db, m.table, m.ingest_format, m.mapping, m.streaming
+        )
+        assert got[f"k{i}"] == want, (t, got[f"k{i}"])

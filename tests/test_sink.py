@@ -439,3 +439,235 @@ def test_staging_tasks_follow_advisory_partition_size(spark, tmp_path):
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     assert len(tasks) > 1
     assert files == one_task_files  # byte-identical staged files
+
+
+# ---------------------------------- per-epoch expressions are SQL text
+
+
+def _py4j_commands(monkeypatch, fn):
+    """Number of py4j commands the driver sends while ``fn`` runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return real(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return sent[0]
+
+
+def test_route_construction_cost_does_not_grow_with_mappings(spark, monkeypatch):
+    from kafka_sink_azure_kusto_spark.functions.routing import with_route
+
+    df = spark.createDataFrame([("t0", 0)], "topic string, offset long")
+
+    def build(n):
+        mappings = [TopicToTableMapping(topic=f"t{i}", db="db", table=f"tbl{i}")
+                    for i in range(n)]
+        return lambda: with_route(df, mappings)
+
+    build(2)()  # first use loads the expression classes
+    counts = [_py4j_commands(monkeypatch, build(n)) for n in (2, 64)]
+    assert counts[0] > 0
+    assert counts[0] == counts[1], counts
+
+
+def test_failed_records_construction_cost_does_not_grow_with_ranges(spark, monkeypatch):
+    from pyspark.sql import Row
+
+    from kafka_sink_azure_kusto_spark.streaming.sink import _failed_records
+
+    def build(n):
+        # every other file fails, so each failed file is its own range
+        staged = [Row(topic="t", partition=p, file_offset=2 * i, last_offset=2 * i + 1)
+                  for p in range(2) for i in range(n)]
+        failed = [s for i, s in enumerate(staged) if i % 2 == 0]
+        return lambda: _failed_records(failed, staged)
+
+    build(1)()
+    counts = [_py4j_commands(monkeypatch, build(n)) for n in (2, 400)]
+    assert counts[0] > 0
+    assert counts[0] == counts[1], counts
+
+
+def test_dlq_of_a_quoted_topic_holds_exactly_its_failed_records(spark, tmp_path):
+    class FailTable(LocalEmulatorBackend):
+        def ingest_file(self, path, props):
+            if props.table == "bad":
+                from kafka_sink_azure_kusto_spark.streaming.backends import (
+                    PermanentIngestError,
+                )
+
+                raise PermanentIngestError("boom")
+            return super().ingest_file(path, props)
+
+    topics = ["o'clock", "plain"]
+    rows = [(f"k{i}", "x" * 53, topics[i % 2], i % 3, i) for i in range(60)]
+    df = spark.createDataFrame(
+        rows, "key string, value string, topic string, partition long, offset long"
+    )
+    cfg = _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic="o'clock", db="db", table="bad", format="csv"),
+                  TopicToTableMapping(topic="plain", db="db", table="good", format="csv")],
+        flush_size_bytes=100,  # 2 records per file: several offset ranges
+        behavior_on_error=BehaviorOnError.IGNORE,
+    )
+    dlq: list[dict] = []
+    sink = KustoSparkSink(cfg, FailTable(str(tmp_path / "kusto")), dlq_writer=dlq.extend)
+    sink.process_batch(df, epoch_id=0)
+    want = sorted(
+        f"topic=o'clock, partition={p}, offset={o}." for _, _, t, p, o in rows if t == "o'clock"
+    )
+    assert sorted(d["key"].split("coordinates, ")[1] for d in dlq) == want
+    assert len(sink.backend.table_rows("db", "good")) == 30
+
+
+# ------------------------------------------ staged files round-trip (Arrow)
+
+
+_RICH_VALUE = (
+    "struct<l:long, s:string, d:double, b:boolean, ts:timestamp, dt:date, "
+    "dec:decimal(10,2), arr:array<long>, m:map<string,long>, n:struct<x:long,y:string>>"
+)
+_RICH_FORMATS = {"tj": "json", "tc": "csv", "ta": "avro", "tp": "parquet"}
+
+
+def _rich_records(spark):
+    import datetime as dt
+    from decimal import Decimal
+
+    topics = sorted(_RICH_FORMATS)
+    rows = []
+    for i in range(96):
+        null = i % 5 == 2
+        value = (
+            i,
+            None if null else f"s{i},'\"é",
+            None if i % 7 == 3 else i * 0.25,
+            None if null else i % 2 == 0,
+            None if i % 6 == 1 else dt.datetime(2024, 1, 1, 12) + dt.timedelta(seconds=37 * i),
+            None if null else dt.date(2024, 2, 1) + dt.timedelta(days=i),
+            None if i % 4 == 3 else Decimal(i * 101) / 100,
+            None if null else [i, None, -i] if i % 3 else [],
+            None if null else {"a": i, "b": None},
+            None if i % 8 == 5 else (i * 3, None if null else f"y{i}"),
+        )
+        rows.append((f"k{i}", value, topics[i % 4], (i // 4) % 2, i))
+    rows.reverse()  # the writer, not the input order, must order each file
+    return spark.createDataFrame(
+        rows, f"key string, value {_RICH_VALUE}, topic string, partition long, offset long"
+    )
+
+
+def _gzip_deflate_level6(data: bytes) -> bool:
+    """True when ``data`` is one gzip member whose deflate stream is
+    exactly zlib's level-6 output (and the header's XFL says neither
+    level 9 nor level 1)."""
+    import gzip
+    import zlib
+
+    assert data[:3] == b"\x1f\x8b\x08"
+    flags, xfl, start = data[3], data[8], 10
+    if flags & 0x08:  # FNAME, zero-terminated
+        start = data.index(b"\x00", start) + 1
+    body = gzip.decompress(data)
+    c = zlib.compressobj(6, zlib.DEFLATED, -zlib.MAX_WBITS, zlib.DEF_MEM_LEVEL, 0)
+    return xfl == 0 and data[start:-8] == c.compress(body) + c.flush()
+
+
+def _normalized(value: dict) -> dict:
+    """One record as plain values: aware UTC timestamps, maps as dicts."""
+    import datetime as dt
+
+    out = dict(value)
+    if isinstance(out["ts"], dt.datetime) and out["ts"].tzinfo is None:
+        out["ts"] = out["ts"].replace(tzinfo=dt.timezone.utc)  # avro: UTC micros
+    if out["ts"] is not None:
+        out["ts"] = out["ts"].astimezone(dt.timezone.utc)
+    if out["m"] is not None:
+        out["m"] = dict(out["m"])
+    if out["n"] is not None:
+        out["n"] = dict(out["n"])
+    return out
+
+
+def test_staged_files_round_trip_every_format(spark, tmp_path):
+    import gzip
+    import io
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    from kafka_sink_azure_kusto_spark.functions.avro_io import read_container
+    from kafka_sink_azure_kusto_spark.streaming.backends import IngestResult
+
+    class Capture:
+        def __init__(self):
+            self.files = {}
+
+        def ingest_file(self, path, props):
+            with open(path, "rb") as f:
+                self.files[os.path.basename(path)] = f.read()
+            return IngestResult(status="Succeeded", source_id="capture")
+
+        def validate(self, props):
+            return None
+
+    df = _rich_records(spark)
+    cfg = _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic=t, db="db", table=f"tbl_{t}", format=f)
+                  for t, f in _RICH_FORMATS.items()],
+        flush_size_bytes=400,
+    )
+    backend = Capture()
+    KustoSparkSink(cfg, backend).process_batch(df, epoch_id=0)
+
+    # Expected records per (topic, partition) in offset order; text lines
+    # from the Column-builder form of each encoding.
+    fields = sorted(f"value.{c}" for c in df.schema["value"].dataType.fieldNames())
+    expected: dict = {}
+    for r in df.orderBy("offset").select(
+        "topic", "partition", "offset", "value",
+        F.to_json("value").alias("json"),
+        F.concat_ws(",", *[F.col(c).cast("string") for c in fields]).alias("csv"),
+    ).toArrow().to_pylist():
+        fmt = _RICH_FORMATS[r["topic"]]
+        rec = r[fmt] if fmt in ("json", "csv") else _normalized(r["value"])
+        expected.setdefault((r["topic"], r["partition"]), []).append((r["offset"], rec))
+
+    staged: dict = {}
+    for name, data in backend.files.items():
+        topic, partition, file_offset, fmt, gz = re.fullmatch(
+            r"kafka_(t\w)_(\d+)_(\d+)\.(\w+)(\.gz)?", name
+        ).groups()
+        assert fmt == {"json": "multijson"}.get(_RICH_FORMATS[topic], _RICH_FORMATS[topic])
+        assert bool(gz) == (fmt != "parquet")
+        if gz:
+            assert _gzip_deflate_level6(data), name
+            data = gzip.decompress(data)
+        if fmt == "avro":
+            records = [_normalized(r) for r in read_container(data)[1]]
+        elif fmt == "parquet":
+            records = [_normalized(r) for r in pq.read_table(io.BytesIO(data)).to_pylist()]
+        else:
+            assert data.endswith(b"\n")
+            records = data[:-1].decode("utf-8").split("\n")
+        staged.setdefault((topic, int(partition)), []).append((int(file_offset), records))
+
+    assert sorted(staged) == sorted(expected)
+    assert all(len(files) > 2 for files in staged.values())  # each partition rolled
+    for key, files in staged.items():
+        want, at = expected[key], 0
+        for file_offset, records in sorted(files):
+            assert file_offset == want[at][0]  # B4: named by its first offset
+            assert records == [rec for _, rec in want[at:at + len(records)]]
+            at += len(records)
+        assert at == len(want)

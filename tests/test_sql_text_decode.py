@@ -35,6 +35,7 @@ from kafka_sink_azure_kusto_spark.functions.wire_format import (
     encode_wire_frame,
     wire_frame_audit,
 )
+from kafka_sink_azure_kusto_spark.functions.sql_text import quote_ident, sql_string
 
 HOSTILE_NAMES = ["my-value", "my value", "my`value", "o'clock", "select"]
 
@@ -46,6 +47,13 @@ _PB_HANDLERS = {
 _AB_SCHEMA = StructType(
     [StructField("a", LongType()), StructField("b", StringType())]
 )
+
+
+@pytest.mark.parametrize("name", HOSTILE_NAMES + ["back\\slash", "tab\there", "\\'"])
+def test_quoting_helpers_round_trip(spark, name):
+    df = spark.createDataFrame([(1,)], StructType([StructField(name, LongType())]))
+    row = df.selectExpr(f"{sql_string(name)} AS text", f"{quote_ident(name)} + 1 AS n").first()
+    assert (row.text, row.n) == (name, 2)
 
 
 def _frames(spark, value_col):
