@@ -6,17 +6,28 @@ the file rolls when **uncompressed** bytes exceed ``flush.size.bytes``
 ``kafka_{topic}_{partition}_{offset}.{format}.gz`` where offset is the
 first offset contained (TopicPartitionWriter.java:235-242).
 
-Spark-first: inside a micro-batch the same assignment is a running sum
-of serialized record sizes per (topic, partition) ordered by offset —
-a window aggregation, fully JVM-side. The shuffle it implies is keyed
-on (topic, partition), i.e. the natural Kafka parallelism unit, so at
-scale each task owns whole partitions exactly like the reference's
-TopicPartitionWriter. Time-triggered flush (B2) needs no code at all:
-the micro-batch trigger interval IS the flush interval.
+Inside a micro-batch the same assignment is a function of the running
+sum of serialized record sizes per (topic, partition) in offset order.
+It has two forms that agree record for record:
+
+- ``with_file_assignment`` — a window aggregation, fully JVM-side; the
+  registry's ``file_assignment`` query runs it.
+- ``roll_batches`` — the same rule as one streamed pass over a Kafka
+  partition's Arrow batches, holding only the open file; the sink's
+  staging writer runs it after one exchange keyed on (topic, partition)
+  and one sort by offset, so each task owns whole partitions exactly
+  like the reference's TopicPartitionWriter.
+
+Time-triggered flush (B2) needs no code at all: the micro-batch trigger
+interval IS the flush interval.
 """
 
 from __future__ import annotations
 
+from typing import Iterable, Iterator
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -29,7 +40,9 @@ def with_file_assignment(
     partition_col: str = "partition",
     offset_col: str = "offset",
 ) -> DataFrame:
-    """B1 — assign each record to a rolled file within its micro-batch.
+    """B1 — assign each record to a rolled file within its micro-batch,
+    as window columns. ``roll_batches`` is the streamed Arrow form of the
+    same rule; the sink stages through it.
 
     Adds:
     - ``file_seq``     — 0-based file index within (topic, partition);
@@ -65,6 +78,43 @@ def with_file_assignment(
     df = df.withColumn("file_seq", (prev_cum / F.lit(flush_size_bytes)).cast("bigint"))
     w_file = Window.partitionBy(topic_col, partition_col, "file_seq")
     return df.withColumn("file_offset", F.min(offset_col).over(w_file))
+
+
+def roll_batches(
+    batches: Iterable[pa.RecordBatch],
+    flush_size_bytes: int,
+    size_col: str = "serialized_size",
+) -> Iterator[tuple[int, pa.Table]]:
+    """B1 over a stream — ``with_file_assignment``'s bucket rule on the
+    Arrow batches of ONE (topic, partition), already in offset order.
+
+    Yields ``(file_seq, records)`` per rolled file, in file order: record
+    i goes to file ``floor(bytes before i / flush_size_bytes)``, the bytes
+    counted across batch boundaries, so file boundaries do not depend on
+    how the records were batched. Only the open file's slices are held; a
+    file is yielded as soon as a record falls in a later bucket, and the
+    last one at the end of the stream. Its first offset is the B4
+    ``file_offset``."""
+    total, seq, parts = 0, None, []
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        sizes = batch.column(size_col)
+        cum = pc.cumulative_sum(sizes)
+        runs = pc.run_end_encode(
+            pc.divide(pc.add(pc.subtract(cum, sizes), total), flush_size_bytes)
+        )
+        start = 0
+        for end, s in zip(runs.run_ends.to_pylist(), runs.values.to_pylist()):
+            if s != seq and parts:
+                yield seq, pa.Table.from_batches(parts)
+                parts = []
+            seq = s
+            parts.append(batch.slice(start, end - start))
+            start = end
+        total += cum[-1].as_py()
+    if parts:
+        yield seq, pa.Table.from_batches(parts)
 
 
 def staged_file_name(

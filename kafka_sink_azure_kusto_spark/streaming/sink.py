@@ -12,14 +12,17 @@ Scale notes:
 - One pass per epoch, whatever the mapping count: every record is
   routed once (the compiled CASE of ``functions.routing.with_route``)
   and encoded once, JVM-side (one ``line`` CASE on the route's format).
-  The encoded frame is persisted, so the source is read once; one
-  aggregate over it sizes the epoch and counts unmapped records.
+  The encoded frame is persisted before the F2 empty-line filter, so no
+  filter below the cache re-runs the encoder, and the source is read
+  once; one aggregate over it sizes the epoch and counts unmapped
+  records.
 - The only exchange is keyed on (topic, partition), the natural Kafka
-  parallelism unit. File assignment and the grouped staging call
-  (``applyInArrow`` over (topic, partition, file_seq), all routes at
-  once) both reuse it: each Kafka partition's records land in rolled
-  files exactly like one TopicPartitionWriter, and groups are bounded by
-  flush_size_bytes so no group can OOM an executor.
+  parallelism unit, followed by one sort by offset. The staging call is
+  one streamed ``applyInArrow`` per Kafka partition, all routes at once:
+  it rolls files as its Arrow batches arrive
+  (``operators.batching.roll_batches``), exactly like one
+  TopicPartitionWriter appending in offset order, and holds one batch
+  plus the open file, so no partition can OOM an executor.
 - Staging tasks are sized by bytes, not by cores: the exchange gets
   ceil(encoded bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
   partitions — AQE's own rule with ``parallelismFirst`` off. Every Python
@@ -43,8 +46,8 @@ at ingest time, which ``classify_ingest_error`` treats as PERMANENT (no
 retry-budget burn) precisely to make this misconfiguration fail fast.
 
 ``executor_side_ingest=True`` removes that requirement entirely — each
-staging group ingests its own rolled file on the executor that wrote it
-(retry + permanent classification included), the file never leaves
+staging task ingests its own rolled files on the executor that wrote them
+(retry + permanent classification included), a file never leaves
 local disk, and ingest parallelism equals staging parallelism. This is
 the 1000-executor mode; the driver only aggregates the per-file outcome
 manifest (metrics, behavior.on.error, DLQ).
@@ -55,12 +58,15 @@ from __future__ import annotations
 import logging
 import math
 import os
-from typing import Optional
+# Iterator must be a module global: applyInArrow resolves the staging
+# writer's string annotations here to pick its streamed iterator form.
+from typing import Iterator, Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import BinaryType, StructType
 
 from kafka_sink_azure_kusto_spark.config import (
@@ -73,7 +79,7 @@ from kafka_sink_azure_kusto_spark.functions.encoders import csv_line_sql
 from kafka_sink_azure_kusto_spark.functions.filters import drop_tombstones
 from kafka_sink_azure_kusto_spark.functions.routing import with_route
 from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
-from kafka_sink_azure_kusto_spark.operators.batching import with_file_assignment
+from kafka_sink_azure_kusto_spark.operators.batching import roll_batches
 from kafka_sink_azure_kusto_spark.streaming.backends import (
     IngestBackend,
     IngestionProperties,
@@ -91,10 +97,12 @@ _CONTAINER_FORMATS = (*_AVRO_FORMATS, *_COLUMNAR_FORMATS)
 
 # One row per rolled file (the staged-file manifest); status, error and
 # attempts carry the executor-side ingest outcome (driver mode: "Staged").
-_MANIFEST_SCHEMA = (
-    "path string, topic string, partition long, file_offset long, last_offset long, "
-    "records long, raw_bytes long, status string, error string, attempts long"
-)
+_MANIFEST_SCHEMA = pa.schema([
+    ("path", pa.string()), ("topic", pa.string()), ("partition", pa.int64()),
+    ("file_offset", pa.int64()), ("last_offset", pa.int64()), ("records", pa.int64()),
+    ("raw_bytes", pa.int64()), ("status", pa.string()), ("error", pa.string()),
+    ("attempts", pa.int64()),
+])
 
 
 # Per-Python-worker backend cache for executor-side ingest: one client
@@ -202,19 +210,24 @@ def _dlq_value(line, avro: bool):
 
 def _epoch_writer(
     staging_root: str,
+    flush_size_bytes: int,
     binary_values: bool,
     avro_schema: Optional[dict],
     arrow_schema,
     ingest: Optional[dict],
 ):
-    """Build the applyInArrow group writer of one epoch: one rolled file
-    per (topic, partition, file_seq) group in its route's format under
-    ``staging_root/db/table``, named per B4 (TopicPartitionWriter.java:
-    235-242), owner-only perms like FileWriter.openFile (:93-154).
+    """Build the applyInArrow writer of one epoch. It is called once per
+    (topic, partition) with that partition's Arrow batches in offset
+    order and rolls them into files as they stream in (B1,
+    ``roll_batches``), holding one batch plus the open file. Each file
+    is written in its route's format under ``staging_root/db/table``,
+    named per B4 (TopicPartitionWriter.java:235-242), with owner-only
+    perms like FileWriter.openFile (:93-154). The partition's manifest,
+    one row per file, is yielded at the end.
 
     Avro with binary values is the E4 passthrough, one complete container
     per message (ByteRecordWriterProvider.java:21-39); avro with struct
-    values is E2, ONE container of the group's structs
+    values is E2, ONE container of the file's structs
     (AvroRecordWriterProvider.java:27-73); parquet/orc with struct values
     is one pyarrow file (extension; Kusto ingests both natively, but
     rejects a .gz wrapper around them — text and Avro keep the
@@ -223,19 +236,19 @@ def _epoch_writer(
     newline-terminated.
 
     ``ingest`` (executor-side-ingest mode) carries ``{"factory", "token",
-    "props", "max_attempts", "backoff_ms"}``, ``props`` keyed by topic: the group ingests its OWN file right
-    after writing it and reports the outcome in its manifest row instead
-    of raising, so one poisoned group can't kill its siblings' stage."""
+    "props", "max_attempts", "backoff_ms"}``, ``props`` keyed by topic:
+    each file is ingested right after it is written and the outcome is
+    reported in its manifest row instead of raised, so one poisoned file
+    can't kill its siblings' stage."""
     import gzip
     import io
 
-    def write_group(table: pa.Table) -> pa.Table:
-        table = table.take(pc.sort_indices(table, [("offset", "ascending")]))
+    def write_file(table: pa.Table) -> dict:
         head = table.select(
-            ["topic", "partition", "file_offset", "route_format", "route_db", "route_table"]
+            ["topic", "partition", "offset", "route_format", "route_db", "route_table"]
         ).slice(0, 1).to_pylist()[0]
         topic, partition = str(head["topic"]), int(head["partition"])
-        file_offset, fmt = int(head["file_offset"]), str(head["route_format"])
+        file_offset, fmt = int(head["offset"]), str(head["route_format"])
         avro = fmt in _AVRO_FORMATS
         columnar = fmt in _COLUMNAR_FORMATS and arrow_schema is not None
         ext = f".{fmt}" if columnar else f".{fmt}.gz"
@@ -287,13 +300,17 @@ def _epoch_writer(
                 os.remove(path)  # B5 — co-located cleanup, success or not
             except OSError:
                 pass
-        return pa.table(dict(
-            path=[path], topic=[topic], partition=[partition], file_offset=[file_offset],
-            last_offset=[table.column("offset")[-1].as_py()], records=[table.num_rows],
-            raw_bytes=[len(body)], status=[status], error=[error], attempts=[attempts[0]],
-        ))
+        return dict(
+            path=path, topic=topic, partition=partition, file_offset=file_offset,
+            last_offset=table.column("offset")[-1].as_py(), records=table.num_rows,
+            raw_bytes=len(body), status=status, error=error, attempts=attempts[0],
+        )
 
-    return write_group
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        files = [write_file(table) for _, table in roll_batches(batches, flush_size_bytes)]
+        yield pa.RecordBatch.from_pylist(files, schema=_MANIFEST_SCHEMA)
+
+    return write_partition
 
 
 class _WarmupNullBackend:
@@ -328,7 +345,7 @@ class KustoSparkSink:
         self.backend = backend
         self.metrics = metrics or SinkMetrics()
         # Executor-side ingest (the 1000-executor mode): each staging
-        # group ingests its own rolled file where it wrote it — no shared
+        # task ingests its own rolled files where it wrote them — no shared
         # staging_dir, ingest parallelism = staging parallelism, and the
         # driver only sees the per-file outcome manifest.
         # ``backend_factory`` must be a picklable zero-arg callable
@@ -358,6 +375,7 @@ class KustoSparkSink:
         # picklable callable(props) -> producer, shipped to foreachPartition
         # tasks. None ⇒ kafka-python's default factory on the executors.
         self._dlq_partition_producer_factory = dlq_partition_producer_factory
+        self._mapping_indexes = {m.topic: i for i, m in enumerate(config.mappings)}
         if config.validate_tables:
             # V1–V4 startup probes, errors aggregated across mappings then
             # thrown once (validateTableMappings, KustoSinkTask.java:342-375).
@@ -385,25 +403,22 @@ class KustoSparkSink:
 
     def _mapping_index(self, topic: str) -> int:
         """F3 on the driver for a manifest row: exact topic, else ``*``."""
-        indexes = {m.topic: i for i, m in enumerate(self.config.mappings)}
-        return indexes.get(topic, indexes.get("*"))
+        return self._mapping_indexes.get(topic, self._mapping_indexes.get("*"))
 
     # ------------------------------------------------------- the data plane
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """SURVEY §3.2 as one pass: drop tombstones (F1) → route (F3) →
-        encode → persist → size the epoch and count unmapped records →
-        assign files (B1) → one grouped staging call → ingest with retry
-        → R4 dispatch and DLQ per failed mapping, in mapping order."""
+        encode → persist → drop empty lines → size the epoch and count
+        unmapped records → one grouped staging call that rolls files (B1)
+        → ingest with retry → R4 dispatch and DLQ per failed mapping, in
+        mapping order."""
         cfg = self.config
         df = with_route(drop_tombstones(batch_df), cfg.mappings)
         routed = F.col("route_db").isNotNull()
-        # F2 — empty serializations are skipped (JsonRecordWriterProvider.java:53-56).
         # B1 — sizes are UNCOMPRESSED bytes (+1 newline, matching
         # CountingOutputStream accounting, FileWriter.java:332-362).
-        df = (
-            df.withColumn("line", _encode_line(df))
-            .filter(~routed | (F.length("line") > 0))
-            .withColumn("serialized_size", F.length("line").cast("long") + F.lit(1))
+        df = df.withColumn("line", _encode_line(df)).withColumn(
+            "serialized_size", F.length("line").cast("long") + F.lit(1)
         )
         value_type = df.schema["value"].dataType
         keep = ["route_db", "route_table", "route_format", "topic", "partition", "offset",
@@ -412,7 +427,11 @@ class KustoSparkSink:
             m.ingest_format in _CONTAINER_FORMATS for m in cfg.mappings
         ):
             keep.append("value")  # typed structs for the container writers
-        enc = df.select(*keep).persist()
+        cached = df.select(*keep).persist()
+        # F2 — empty serializations are skipped (JsonRecordWriterProvider.java:53-56).
+        # Filtered over the persisted frame, so Catalyst cannot push a
+        # copy of the encoder below the cache: each record encodes once.
+        enc = cached.filter(~routed | (F.col("serialized_size") > 1))
         staged: list[Row] = []
         try:
             stats = enc.agg(
@@ -444,14 +463,15 @@ class KustoSparkSink:
                         os.remove(s.path)  # B5 — delete local file after roll
                     except OSError:
                         pass
-            enc.unpersist()
+            cached.unpersist()
 
     def _stage(
         self, enc: DataFrame, epoch_id: int, encoded_bytes: int, value_type
     ) -> list[Row]:
-        """B1 file assignment over one (topic, partition) exchange sized by
-        bytes, then one grouped staging call for every route. Returns the
-        manifest in ingest order: mapping, topic, partition, file_offset."""
+        """One (topic, partition) exchange sized by bytes, one sort by
+        offset, then one streamed staging call per Kafka partition for
+        every route, which rolls its files (B1). Returns the manifest in
+        ingest order: mapping, topic, partition, file_offset."""
         cfg = self.config
         spark = enc.sparkSession
         # AQE's advisory partition size, read from the session: staging
@@ -473,13 +493,13 @@ class KustoSparkSink:
             size = threshold
         elif binary_values:
             size = F.when(route_format.isin(*_AVRO_FORMATS), threshold).otherwise(size)
-        files = with_file_assignment(
+        partitions = (
             enc.filter(F.col("route_db").isNotNull())
             .withColumn("serialized_size", size)
-            .repartition(n, "topic", "partition"),
-            cfg.flush_size_bytes,
+            .repartition(n, "topic", "partition")
+            .sortWithinPartitions("topic", "partition", "offset")
         )
-        cols = ["topic", "partition", "offset", "file_seq", "file_offset",
+        cols = ["topic", "partition", "offset", "serialized_size",
                 "route_db", "route_table", "route_format", "line"]
         avro_schema = arrow_schema = None
         if "value" in enc.columns:
@@ -507,13 +527,13 @@ class KustoSparkSink:
                 "backoff_ms": cfg.retry_backoff_time_ms,
             }
         writer = _epoch_writer(
-            os.path.join(cfg.staging_dir, f"epoch={epoch_id}"),
+            os.path.join(cfg.staging_dir, f"epoch={epoch_id}"), cfg.flush_size_bytes,
             binary_values, avro_schema, arrow_schema, ingest,
         )
         manifest = (
-            files.select(*cols)
-            .groupBy("topic", "partition", "file_seq")
-            .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
+            partitions.select(*cols)
+            .groupBy("topic", "partition")
+            .applyInArrow(writer, schema=from_arrow_schema(_MANIFEST_SCHEMA))
             .collect()  # tiny: one row per rolled file
         )
         return sorted(

@@ -3,9 +3,13 @@
 FileWriterTest.java:107-135) and the staged-file naming convention
 (TopicPartitionWriterTest.java:142-171)."""
 
+import pyarrow as pa
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.operators.batching import (
+    roll_batches,
     staged_file_name,
     with_file_assignment,
 )
@@ -69,3 +73,50 @@ def test_staged_file_name_convention(spark):
     names = {r.name for r in named.collect()}
     assert "kafka_t_0_0.json.gz" in names
     assert "kafka_t_0_2.json.gz" in names
+
+
+@st.composite
+def _partitions(draw):
+    """(threshold, partitions): each partition a list of (offset, size)
+    in offset order, sizes around the threshold (at it, above it: rolls
+    per record), plus the cut points that split it into Arrow batches."""
+    threshold = draw(st.sampled_from([100, 101, 250]))
+    size = st.one_of(st.integers(1, threshold - 1), st.just(threshold),
+                     st.integers(threshold + 1, 3 * threshold))
+    parts = []
+    for _ in range(draw(st.integers(1, 3))):
+        sizes = draw(st.lists(size, min_size=1, max_size=40))
+        gaps = draw(st.lists(st.integers(1, 3), min_size=len(sizes), max_size=len(sizes)))
+        offsets = [sum(gaps[: i + 1]) for i in range(len(sizes))]
+        cuts = sorted(draw(st.sets(st.integers(1, len(sizes)), max_size=6)))
+        parts.append((list(zip(offsets, sizes)), cuts))
+    return threshold, parts
+
+
+@settings(max_examples=25, deadline=None)
+@given(case=_partitions())
+def test_roll_batches_matches_window_assignment(spark, case):
+    # The streamed Arrow form and the window form are one rule: same
+    # (file_seq, file_offset) for every record, however the records are
+    # split into batches.
+    threshold, parts = case
+    rows = [("t", p, o, s) for p, (records, _) in enumerate(parts) for o, s in records]
+    df = spark.createDataFrame(
+        rows[::-1], "topic string, partition long, offset long, serialized_size long"
+    )
+    want = {(r.partition, r.offset): (r.file_seq, r.file_offset)
+            for r in with_file_assignment(df, threshold).collect()}
+    got = {}
+    for p, (records, cuts) in enumerate(parts):
+        table = pa.table({"offset": pa.array([o for o, _ in records], pa.int64()),
+                          "serialized_size": pa.array([s for _, s in records], pa.int64())})
+        bounds = [0, *cuts, len(records)]
+        batches = [b for lo, hi in zip(bounds, bounds[1:])
+                   for b in table.slice(lo, hi - lo).to_batches()]
+        seqs = []
+        for seq, file in roll_batches(batches, threshold):
+            seqs.append(seq)
+            offsets = file.column("offset").to_pylist()
+            got.update({(p, o): (seq, offsets[0]) for o in offsets})
+        assert seqs == sorted(set(seqs))  # each file yielded once, in order
+    assert got == want

@@ -445,14 +445,21 @@ def test_staging_tasks_follow_advisory_partition_size(spark, tmp_path):
 
 
 def _py4j_commands(monkeypatch, fn):
-    """Number of py4j commands the driver sends while ``fn`` runs."""
+    """Number of py4j commands the calling thread sends while ``fn`` runs.
+    Commands of other threads are not counted: py4j's finalizer thread
+    sends one delete per garbage-collected Java reference whenever it
+    wakes, which is unrelated to ``fn``."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     sent = [0]
     real = ClientServerConnection.send_command
+    caller = threading.get_ident()
 
     def counting(self, command, *args, **kwargs):
-        sent[0] += 1
+        if threading.get_ident() == caller:
+            sent[0] += 1
         return real(self, command, *args, **kwargs)
 
     with monkeypatch.context() as m:
@@ -538,7 +545,7 @@ _RICH_VALUE = (
 _RICH_FORMATS = {"tj": "json", "tc": "csv", "ta": "avro", "tp": "parquet"}
 
 
-def _rich_records(spark):
+def _rich_rows():
     import datetime as dt
     from decimal import Decimal
 
@@ -559,9 +566,23 @@ def _rich_records(spark):
             None if i % 8 == 5 else (i * 3, None if null else f"y{i}"),
         )
         rows.append((f"k{i}", value, topics[i % 4], (i // 4) % 2, i))
-    rows.reverse()  # the writer, not the input order, must order each file
-    return spark.createDataFrame(
-        rows, f"key string, value {_RICH_VALUE}, topic string, partition long, offset long"
+    return rows
+
+
+_RICH_SCHEMA = f"key string, value {_RICH_VALUE}, topic string, partition long, offset long"
+
+
+def _rich_records(spark):
+    rows = _rich_rows()[::-1]  # the writer, not the input order, must order each file
+    return spark.createDataFrame(rows, _RICH_SCHEMA)
+
+
+def _rich_cfg(tmp_path):
+    return _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic=t, db="db", table=f"tbl_{t}", format=f)
+                  for t, f in _RICH_FORMATS.items()],
+        flush_size_bytes=400,
     )
 
 
@@ -597,38 +618,36 @@ def _normalized(value: dict) -> dict:
     return out
 
 
-def test_staged_files_round_trip_every_format(spark, tmp_path):
+class _Capture:
+    """Backend that keeps every staged file's bytes by file name."""
+
+    def __init__(self):
+        self.files = {}
+
+    def ingest_file(self, path, props):
+        import os
+
+        from kafka_sink_azure_kusto_spark.streaming.backends import IngestResult
+
+        with open(path, "rb") as f:
+            self.files[os.path.basename(path)] = f.read()
+        return IngestResult(status="Succeeded", source_id="capture")
+
+    def validate(self, props):
+        return None
+
+
+def _assert_staged_in_offset_order(df, files: dict) -> None:
+    """Every record of ``df`` is staged exactly once, each (topic,
+    partition)'s files named by their first offset and holding its
+    records in offset order, in every format."""
     import gzip
     import io
-    import os
     import re
 
     import pyarrow.parquet as pq
 
     from kafka_sink_azure_kusto_spark.functions.avro_io import read_container
-    from kafka_sink_azure_kusto_spark.streaming.backends import IngestResult
-
-    class Capture:
-        def __init__(self):
-            self.files = {}
-
-        def ingest_file(self, path, props):
-            with open(path, "rb") as f:
-                self.files[os.path.basename(path)] = f.read()
-            return IngestResult(status="Succeeded", source_id="capture")
-
-        def validate(self, props):
-            return None
-
-    df = _rich_records(spark)
-    cfg = _cfg(
-        tmp_path,
-        mappings=[TopicToTableMapping(topic=t, db="db", table=f"tbl_{t}", format=f)
-                  for t, f in _RICH_FORMATS.items()],
-        flush_size_bytes=400,
-    )
-    backend = Capture()
-    KustoSparkSink(cfg, backend).process_batch(df, epoch_id=0)
 
     # Expected records per (topic, partition) in offset order; text lines
     # from the Column-builder form of each encoding.
@@ -644,7 +663,7 @@ def test_staged_files_round_trip_every_format(spark, tmp_path):
         expected.setdefault((r["topic"], r["partition"]), []).append((r["offset"], rec))
 
     staged: dict = {}
-    for name, data in backend.files.items():
+    for name, data in files.items():
         topic, partition, file_offset, fmt, gz = re.fullmatch(
             r"kafka_(t\w)_(\d+)_(\d+)\.(\w+)(\.gz)?", name
         ).groups()
@@ -663,11 +682,146 @@ def test_staged_files_round_trip_every_format(spark, tmp_path):
         staged.setdefault((topic, int(partition)), []).append((int(file_offset), records))
 
     assert sorted(staged) == sorted(expected)
-    assert all(len(files) > 2 for files in staged.values())  # each partition rolled
-    for key, files in staged.items():
+    assert all(len(rolled) > 2 for rolled in staged.values())  # each partition rolled
+    for key, rolled in staged.items():
         want, at = expected[key], 0
-        for file_offset, records in sorted(files):
+        for file_offset, records in sorted(rolled):
             assert file_offset == want[at][0]  # B4: named by its first offset
             assert records == [rec for _, rec in want[at:at + len(records)]]
             at += len(records)
         assert at == len(want)
+
+
+def test_staged_files_round_trip_every_format(spark, tmp_path):
+    df = _rich_records(spark)
+    backend = _Capture()
+    KustoSparkSink(_rich_cfg(tmp_path), backend).process_batch(df, epoch_id=0)
+    _assert_staged_in_offset_order(df, backend.files)
+
+
+def test_staged_files_do_not_depend_on_arrow_batch_size(spark, tmp_path):
+    # Each (topic, partition) arrives over 3 input splits with interleaved
+    # offsets. At 7 records per Arrow batch each partition's 12 records
+    # reach the writer in two batches, and some file spans both: the roll
+    # must carry its byte count across the batch boundary.
+    rows = sorted(_rich_rows(), key=lambda r: (r[4] % 3, -r[4]))
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), _RICH_SCHEMA)
+    assert df.rdd.getNumPartitions() == 3
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    staged = {}
+    for records_per_batch in ("7", None):
+        backend = _Capture()
+        saved = spark.conf.get(key, None)
+        if records_per_batch:
+            spark.conf.set(key, records_per_batch)
+        try:
+            sink = KustoSparkSink(_rich_cfg(tmp_path / str(records_per_batch)), backend)
+            sink.process_batch(df, epoch_id=0)
+        finally:
+            if saved is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, saved)
+        staged[records_per_batch] = backend.files
+    assert staged["7"] == staged[None]  # byte-identical
+    _assert_staged_in_offset_order(df, staged["7"])
+    offsets: dict = {}  # per (topic, partition), in offset order
+    for _, _, t, p, o in sorted(rows, key=lambda r: r[4]):
+        offsets.setdefault((t, p), []).append(o)
+    starts = {(t, int(p), int(o)) for t, p, o in
+              (name.split(".")[0].split("_")[1:] for name in staged["7"])}
+    # the 8th record opens the second batch; a file spans the boundary
+    # when that record does not open a file
+    assert any((t, p, o[7]) not in starts for (t, p), o in offsets.items())
+
+
+def test_empty_line_inside_a_failed_file_is_neither_staged_nor_sent_to_dlq(spark, tmp_path):
+    # F2 drops the empty record (offset 3) after the encoded frame is
+    # persisted; it sits inside the failing file [2, 4], whose other
+    # records reach the DLQ once each.
+    import gzip
+
+    from kafka_sink_azure_kusto_spark.streaming.backends import PermanentIngestError
+
+    class FailSecondFile(LocalEmulatorBackend):
+        failed_body = None
+
+        def ingest_file(self, path, props):
+            if path.endswith("kafka_topic1_0_2.csv.gz"):
+                with gzip.open(path) as f:
+                    self.failed_body = f.read()
+                raise PermanentIngestError("boom")
+            return super().ingest_file(path, props)
+
+    rows = [(f"k{i}", "" if i == 3 else f"{i}" * 53, "topic1", 0, i) for i in range(6)]
+    df = spark.createDataFrame(
+        rows, "key string, value string, topic string, partition long, offset long"
+    )
+    cfg = _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic="topic1", db="db1", table="t", format="csv")],
+        flush_size_bytes=100,  # 54-byte lines: files [0, 1], [2, 4], [5]
+        behavior_on_error=BehaviorOnError.LOG,
+    )
+    dlq: list[dict] = []
+    backend = FailSecondFile(str(tmp_path / "kusto"))
+    sink = KustoSparkSink(cfg, backend, dlq_writer=dlq.extend)
+    sink.process_batch(df, epoch_id=0)
+    assert backend.failed_body == b"2" * 53 + b"\n" + b"4" * 53 + b"\n"
+    assert sorted(backend.table_rows("db1", "t")) == ["0" * 53, "1" * 53, "5" * 53]
+    assert sorted(d["key"].split("offset=")[1] for d in dlq) == ["2.", "4."]
+    assert sorted(d["value"] for d in dlq) == ["2" * 53, "4" * 53]
+    m = sink.metrics.snapshot()
+    assert (m["RecordsWritten"], m["RecordsFailed"], m["DlqRecordsSent"]) == (3, 2, 2)
+
+
+# ------------------------------------------------- staging plan guards
+
+
+def _plans_at(spark, monkeypatch, method, fn):
+    """Physical plans of the frames ``method`` is called on while ``fn``
+    runs, each taken before the call executes it."""
+    cls = type(spark.range(1))
+    real = getattr(cls, method)
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, method, spy)
+        fn()
+    return plans
+
+
+def _every_format_epoch(spark, tmp_path):
+    topics = ["ta", "tb", "tc", "td"]
+    cfg = _cfg(tmp_path, mappings=[
+        TopicToTableMapping(topic=t, db="db", table=f"tbl_{t}", format=f)
+        for t, f in zip(topics, ["json", "csv", "avro", "parquet"])
+    ])
+    sink = KustoSparkSink(cfg, LocalEmulatorBackend(str(tmp_path / "kusto")))
+    return lambda: sink.process_batch(_struct_records(spark, topics), epoch_id=0)
+
+
+def test_staging_plan_sorts_once_and_has_no_window(spark, tmp_path, monkeypatch):
+    import re
+
+    plans = _plans_at(spark, monkeypatch, "collect", _every_format_epoch(spark, tmp_path))
+    staging = [p for p in plans if "FlatMapGroupsInArrow" in p]
+    assert len(staging) == 1, plans
+    plan = staging[0]
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert not re.search(r"\bWindow \[", plan), plan
+    assert re.search(r"FlatMapGroupsInArrow \[topic#\d+, partition#\d+L\],", plan), plan
+
+
+def test_no_filter_below_the_cache_reruns_the_encoder(spark, tmp_path, monkeypatch):
+    plans = _plans_at(spark, monkeypatch, "persist", _every_format_epoch(spark, tmp_path))
+    assert len(plans) == 1, plans
+    encoder = ("to_json", "StructsToJson", "concat_ws")
+    assert all(e in plans[0] for e in encoder[1:])  # the cache holds the encoded lines
+    filters = [line for line in plans[0].splitlines() if "Filter " in line]
+    assert filters, plans[0]  # the tombstone filter
+    assert not [f for f in filters if any(e in f for e in encoder)], filters
