@@ -1306,7 +1306,6 @@ def _sink_throughput(
                 cfg,
                 LocalEmulatorBackend(kdir),
                 backend_factory=lambda: LocalEmulatorBackend(kdir),
-                executor_side_ingest=True,
             )
         else:
             sink = KustoSparkSink(cfg, LocalEmulatorBackend(kdir))

@@ -330,13 +330,6 @@ class KustoSinkConfig:
     # sasl.mechanism, ssl.*, …) the reference forwards to its dedicated
     # KafkaProducer (KustoSinkConfig.getDlqProps, :465-472).
     dlq_props: dict = field(default_factory=dict)
-    # Executor-side DLQ production (our scale extension; default keeps
-    # the reference's driver/task-local single-producer shape): failed
-    # records are produced from foreachPartition on the executors, so
-    # DLQ throughput scales with the cluster instead of collecting the
-    # failure tail to the driver. Worth enabling when failure volume can
-    # approach batch volume (poisoned topics, schema breaks).
-    dlq_executor_side: bool = False
 
     # Streaming job knobs (Spark-side equivalents of Connect worker config).
     checkpoint_location: Optional[str] = None
@@ -446,8 +439,9 @@ class KustoSinkConfig:
         KustoSinkConfig.getDlqProps (KustoSinkConfig.java:465-472): the
         prefix-stripped ``misc.deadletterqueue.*`` pass-through plus
         bootstrap.servers and byte-array serializers. Serializer entries
-        keep the reference's class names for config parity; the Python
-        ``KafkaDlqWriter`` translates them to client kwargs."""
+        keep the reference's class names for config parity; the
+        kafka-python producer factory (``streaming.dlq``) drops them, as it
+        sends raw bytes already."""
         props = dict(self.dlq_props)
         props["bootstrap.servers"] = self.dlq_bootstrap_servers
         props["key.serializer"] = (
@@ -504,7 +498,6 @@ class KustoSinkConfig:
             "behavior.on.error",
             "misc.deadletterqueue.bootstrap.servers",
             "misc.deadletterqueue.topic.name",
-            "misc.deadletterqueue.executor.side.enable",
             "kusto.validation.table.enable",
             "kusto.validation.trusted.endpoints.extra",
             "aad.auth.strategy",
@@ -551,12 +544,7 @@ class KustoSinkConfig:
         _dlq_owned = {
             "misc.deadletterqueue.bootstrap.servers",
             "misc.deadletterqueue.topic.name",
-            "misc.deadletterqueue.executor.side.enable",
         }
-        if "misc.deadletterqueue.executor.side.enable" in p:
-            kwargs["dlq_executor_side"] = as_bool(
-                p["misc.deadletterqueue.executor.side.enable"]
-            )
         dlq_props = {
             k[len(_dlq_prefix):]: v
             for k, v in p.items()

@@ -16,6 +16,7 @@ offset = dense per-(topic, partition) sequence ordered by event_id.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Optional
 
@@ -74,30 +75,43 @@ def _workdir(prefix: str) -> str:
     return d
 
 
-def clear_gate_memos() -> None:
-    """Reset every per-process gate-substrate memo (the PQ stream
-    loop, the exact and nn-descent hierarchical layer builds, the
-    nprobe code store, the vocab stream loop). The memos exist so ONE
-    sweep / driver-gate pass builds each shared substrate once
-    (VERDICT r12 #5); benchmark timing loops must clear them before
-    every timed run so a recorded wall is always the query's
-    STANDALONE cost — without this, min-of-N recorded the ~0.1 s
-    cached re-read for gates whose real loop costs ~10 s, silently
-    deflating the headline total (r13 bench-honesty fix)."""
-    from kafka_sink_azure_kusto_spark.plans import (
-        registry_r12,
-        registry_r13,
-        registry_r14,
-    )
+# Per-process gate-substrate cache, keyed by (substrate name, key):
+# the PQ stream loop, the exact and nn-descent hierarchical layer
+# builds, the nprobe and serving code stores, the vocab stream loop.
+# It exists so ONE sweep / driver-gate pass builds each substrate that
+# several gates share once (VERDICT r12 #5). The cached DataFrames scan
+# parquet in atexit-cleaned workdirs, so reuse within the process is safe.
+_SUBSTRATES: dict[tuple[str, tuple], object] = {}
 
-    registry_r12._PQ_LOOP_MEMO.clear()
-    registry_r12._HL_LAYER_MEMO.clear()
-    registry_r13._HB_MEMO.clear()
-    registry_r13._NP_MEMO.clear()
-    registry_r13._VB_MEMO.clear()
-    registry_r14._SV_MEMO.clear()
-    registry_r14._SV_BASE_MEMO.clear()
-    registry_r14._RS_MEMO.clear()
+
+def substrate(name: str, key: tuple, build: Callable[[], object]):
+    """The cached substrate ``name`` for ``key``, built by ``build()``
+    on first use. Unlocked: a key's concurrent first uses each build it
+    and the last is kept."""
+    if (name, key) not in _SUBSTRATES:
+        _SUBSTRATES[(name, key)] = build()
+    return _SUBSTRATES[(name, key)]
+
+
+def memo_substrate(fn):
+    """Cache a substrate builder ``fn(spark, sf_dir)`` per (application,
+    sf_dir) in the shared substrate cache."""
+
+    @functools.wraps(fn)
+    def cached(spark: SparkSession, sf_dir: str):
+        key = (spark.sparkContext.applicationId, sf_dir)
+        return substrate(f"{fn.__module__}.{fn.__qualname__}", key, lambda: fn(spark, sf_dir))
+
+    return cached
+
+
+def clear_gate_memos() -> None:
+    """Empty the gate-substrate cache. Benchmark timing loops must
+    clear it before every timed run so a recorded wall is always the
+    query's STANDALONE cost — without this, min-of-N recorded the
+    ~0.1 s cached re-read for gates whose real loop costs ~10 s,
+    silently deflating the headline total (r13 bench-honesty fix)."""
+    _SUBSTRATES.clear()
 
 
 def _drain_stream(q, timeout_s: int) -> None:

@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from kafka_sink_azure_kusto_spark.plans.registry import (
     _drain_stream,
     _workdir,
+    memo_substrate,
     register,
+    substrate,
 )
 from kafka_sink_azure_kusto_spark.functions.parallelism import (
     run_concurrently,
@@ -128,36 +130,14 @@ _PQ_STREAM_ORACLE = f"""
 """
 
 
-# Per-process memo for the round's gate substrate (ADVICE r12 #3 /
-# VERDICT r12 #5): the PQ stream loop feeds TWO gates
-# (streaming_pq_index_maintenance + streaming_pq_drift_audit) and the
-# hierarchical layer substrate feeds two more — without memoization a
-# sweep/bench/driver pass pays the full seed+2-epoch loop (or the
-# exact-kNN layer build) twice per round for identical outputs. Keyed
-# by (applicationId, sf_dir); the returned DataFrames scan parquet in
-# an atexit-cleaned workdir, so reuse within the process is safe.
-_PQ_LOOP_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@memo_substrate
 def _run_pq_stream_loop(
-    spark: SparkSession, sf_dir: str, stats: dict | None = None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Engine of both PQ streaming queries: runs the live loop and
-    returns (final probe, drift audit). ``stats`` (tests) records the
-    per-epoch upsert stats. Memoized per (application, sf_dir) — a
-    ``stats`` caller bypasses the memo (tests want a fresh loop) but
-    still refreshes it."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if stats is None and memo_key in _PQ_LOOP_MEMO:
-        return _PQ_LOOP_MEMO[memo_key]
-    result = _run_pq_stream_loop_uncached(spark, sf_dir, stats)
-    _PQ_LOOP_MEMO[memo_key] = result
-    return result
-
-
-def _run_pq_stream_loop_uncached(
-    spark: SparkSession, sf_dir: str, stats: dict | None = None
-) -> tuple[DataFrame, DataFrame]:
+    returns (final probe, drift audit). The loop feeds TWO gates
+    (streaming_pq_index_maintenance + streaming_pq_drift_audit), so it
+    is a cached substrate per (application, sf_dir)."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
     from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
         _stage_chunks,
@@ -280,8 +260,6 @@ def _run_pq_stream_loop_uncached(
         ).write.mode("overwrite").parquet(
             os.path.join(probes_dir, f"epoch={ep}")
         )
-        if stats is not None:
-            stats[ep] = {k: v for k, v in st.items()}
 
     stream = (
         spark.readStream.schema("vec_id long, v array<double>, seq int")
@@ -512,18 +490,14 @@ def _hl_base_sql(final_state: bool = False,
 """
 
 
-# (applicationId, sf_dir) → (edges0, layers): the exact-kNN layer
-# substrate is identical for the two build-once hierarchical gates and
-# costs ~10 s/scale to build — memoized per process (VERDICT r12 #5),
-# with every edge frame localCheckpointed so reuse is a narrow scan.
-_HL_LAYER_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _hl_layers(dbl, memo_key: tuple[str, str] | None = None):
-    """Spark-side layer construction mirroring ``_hl_base_sql``.
-    ``memo_key`` (set by the registry gates, which all derive ``dbl``
-    from the SAME `_hl_corpus` transform) enables the per-process
-    substrate memo; direct/test callers with bespoke corpora omit it."""
+    """Spark-side layer construction mirroring ``_hl_base_sql``, as
+    (edges0, layers). ``memo_key`` — (applicationId, sf_dir), set by the
+    registry gates, which all derive ``dbl`` from the SAME `_hl_corpus`
+    transform — caches it as a substrate: it is identical for the
+    build-once hierarchical gates and costs ~10 s/scale to build, and
+    every edge frame is localCheckpointed so reuse is a narrow scan.
+    Direct/test callers with bespoke corpora omit it."""
     from kafka_sink_azure_kusto_spark.functions.similarity import (
         knn_graph_build_exact,
     )
@@ -532,8 +506,8 @@ def _hl_layers(dbl, memo_key: tuple[str, str] | None = None):
         run_concurrently,
     )
 
-    if memo_key is not None and memo_key in _HL_LAYER_MEMO:
-        return _HL_LAYER_MEMO[memo_key]
+    if memo_key is not None:
+        return substrate("hl_layers", memo_key, lambda: _hl_layers(dbl))
     e2 = dbl.filter(F.col("vec_id") % _HL_S2 == 0)
     e1 = dbl.filter(F.col("vec_id") % _HL_S1 == 0)
     # the three exact layer builds are independent all-pairs jobs —
@@ -550,15 +524,12 @@ def _hl_layers(dbl, memo_key: tuple[str, str] | None = None):
         when_nested="parallel",
     )
     mk = lambda df: df.select(F.col("vec_id").alias("nid"))  # noqa: E731
-    result = (edges0, [
+    return (edges0, [
         {"members": mk(e2), "edges": edges2,
          "rounds": _HL_R1, "beam": _HL_B1, "carry": _HL_CARRY2},
         {"members": mk(e1), "edges": edges1,
          "rounds": _HL_R1, "beam": _HL_B1, "carry": _HL_CARRY1},
     ])
-    if memo_key is not None:
-        _HL_LAYER_MEMO[memo_key] = result
-    return result
 
 
 def _hl_corpus(spark: SparkSession, sf_dir: str):

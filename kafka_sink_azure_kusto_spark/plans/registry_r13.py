@@ -45,6 +45,7 @@ from kafka_sink_azure_kusto_spark.functions.sampling import (
 from kafka_sink_azure_kusto_spark.plans.registry import (
     _drain_stream,
     _workdir,
+    memo_substrate,
     register,
 )
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
@@ -150,9 +151,7 @@ _NP_SEARCH_ORACLE = f"""
 """
 
 
-_NP_MEMO: dict = {}
-
-
+@memo_substrate
 def _np_store(spark: SparkSession, sf_dir: str):
     """Shared fixture for the two nprobe gates: cell-partitioned code
     store written to parquet and READ BACK (the store-side serving
@@ -160,9 +159,6 @@ def _np_store(spark: SparkSession, sf_dir: str):
     frozen codebook, full-precision queries. Memoized per process."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _NP_MEMO:
-        return _NP_MEMO[key]
     emb = load_table(spark, sf_dir, "embeddings")
     dbl = emb.select(
         "vec_id", "label",
@@ -199,8 +195,7 @@ def _np_store(spark: SparkSession, sf_dir: str):
         lambda: dbl.filter(F.col("vec_id") < _NP_NQ).localCheckpoint(),
     )
     codes = spark.read.parquet(store)
-    _NP_MEMO[key] = (dbl, cb, codes, cents, queries)
-    return _NP_MEMO[key]
+    return dbl, cb, codes, cents, queries
 
 
 @register("ivfpq_nprobe_search", _NP_SEARCH_ORACLE)
@@ -544,27 +539,21 @@ def _hb_nnd_search_ctes() -> str:
 """
 
 
-_HB_MEMO: dict = {}
-
-
+@memo_substrate
 def _hb_substrate(spark: SparkSession, sf_dir: str):
     """nn-descent-built layer substrate, memoized per process (shared
     by the build gate and the recall audit, same policy as the exact
-    substrate's _HL_LAYER_MEMO)."""
+    substrate of `_hl_layers`)."""
     from kafka_sink_azure_kusto_spark.functions.similarity import (
         hierarchical_layers_nn_descent,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _HB_MEMO:
-        return _HB_MEMO[key]
     dbl, queries = _hl_corpus(spark, sf_dir)
     edges0, layers = hierarchical_layers_nn_descent(
         dbl, _HB_SPECS, id_col="vec_id", vec_col="v",
         bands=2, bucket_cap=_HB_CAP,
     )
-    _HB_MEMO[key] = (dbl, queries, edges0, layers)
-    return _HB_MEMO[key]
+    return dbl, queries, edges0, layers
 
 
 @register(
@@ -916,9 +905,7 @@ def _vb_audit_oracle() -> str:
     return f"WITH {corpora},\n    " + ",\n    ".join(ctes) + "\n    " + rows
 
 
-_VB_MEMO: dict = {}
-
-
+@memo_substrate
 def _run_vocab_stream_loop(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, str]:
@@ -930,10 +917,6 @@ def _run_vocab_stream_loop(
     from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
         _stage_chunks,
     )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VB_MEMO:
-        return _VB_MEMO[key]
 
     work = _workdir("stream_vocab_")
     store = os.path.join(work, "store")
@@ -1139,8 +1122,7 @@ def _run_vocab_stream_loop(
             arm_row("final_retrained_vocab", oov_stats(hist_words, lp_new))
         )
     )
-    _VB_MEMO[key] = (top, audit, retrained_dir)
-    return _VB_MEMO[key]
+    return top, audit, retrained_dir
 
 
 @register("streaming_vocab_maintenance", _VB_GATE_ORACLE)

@@ -33,6 +33,7 @@ from kafka_sink_azure_kusto_spark.functions.parallelism import (
 )
 from kafka_sink_azure_kusto_spark.plans.registry import (
     _workdir,
+    memo_substrate,
     register,
 )
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
@@ -162,10 +163,7 @@ _SV_PIPELINE_ORACLE = f"""
 """
 
 
-_SV_MEMO: dict = {}
-_SV_BASE_MEMO: dict = {}
-
-
+@memo_substrate
 def _sv_base(spark: SparkSession, sf_dir: str):
     """Shared serving BASE, memoized per process: boosted corpus, 6-dp
     cell centroids, full-precision queries. Split out of `_sv_store`
@@ -174,9 +172,6 @@ def _sv_base(spark: SparkSession, sf_dir: str):
     the centroids and queries."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SV_BASE_MEMO:
-        return _SV_BASE_MEMO[key]
     dbl, _ = _hl_corpus(spark, sf_dir)
     # the centroid build and the query checkpoint are independent —
     # overlap them (guide §2.6); "parallel" when nested under
@@ -189,22 +184,19 @@ def _sv_base(spark: SparkSession, sf_dir: str):
         lambda: dbl.filter(F.col("vec_id") < _SV_NQ).localCheckpoint(),
         when_nested="parallel",
     )
-    _SV_BASE_MEMO[key] = (dbl, cents, queries)
-    return _SV_BASE_MEMO[key]
+    return dbl, cents, queries
 
 
+@memo_substrate
 def _sv_store(spark: SparkSession, sf_dir: str):
     """Serving substrate, memoized per process (shared by the pipeline
-    gate and the recall audit, same policy as _NP_MEMO): the serving
+    gate and the recall audit, same policy as _np_store): the serving
     base above + the TRAINED codebook (pq_train, {_PT_ITERS} Lloyd
     iterations, {_PT_ROUND}-dp-quantized updates — the pq_codebook_train
     recipe) and the cell-partitioned code store written to parquet and
     READ BACK (cell pruning happens at the scan)."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SV_MEMO:
-        return _SV_MEMO[key]
     dbl, _ = _hl_corpus(spark, sf_dir)
     store = os.path.join(_workdir("sv_codes_"), "codes")
 
@@ -234,8 +226,7 @@ def _sv_store(spark: SparkSession, sf_dir: str):
         lambda: _sv_base(spark, sf_dir),
     )
     codes = spark.read.parquet(store)
-    _SV_MEMO[key] = (dbl, cb, codes, cents, queries)
-    return _SV_MEMO[key]
+    return dbl, cb, codes, cents, queries
 
 
 @register("ivfpq_serving_pipeline", _SV_PIPELINE_ORACLE)
@@ -591,18 +582,13 @@ def vocab_store_incremental_encode(
 
 _RS_BUDGETS = (10, 32, 96)   # gain-audit arms (subset of _SV_BUDGETS)
 
-_RS_MEMO: dict = {}
-
-
+@memo_substrate
 def _rs_store(spark: SparkSession, sf_dir: str):
     """Residual serving substrate (memoized): residual corpus against
     the 6-dp cell centroids, pq_train on RESIDUALS, cell-partitioned
     residual code store written + read back."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RS_MEMO:
-        return _RS_MEMO[key]
     # r15: only the BASE (corpus, centroids, queries) is needed — the
     # plain code store this used to build via _sv_store is never read
     # by the residual pipelines
@@ -624,8 +610,7 @@ def _rs_store(spark: SparkSession, sf_dir: str):
         .parquet(store)
     )
     codes = spark.read.parquet(store)
-    _RS_MEMO[key] = (dbl, cb, codes, cents, queries)
-    return _RS_MEMO[key]
+    return dbl, cb, codes, cents, queries
 
 
 def _rs_base_sql() -> str:

@@ -86,8 +86,8 @@ def classify_ingest_error(exc: BaseException) -> bool:
         # KustoSparkSink docstring). Fail fast instead of burning the
         # whole retry budget. Trade-off: shared stores with read-after-
         # write lag can transiently 404 — deployments on such storage
-        # should use executor_side_ingest (write+ingest co-located, no
-        # cross-node visibility window at all).
+        # should pass the sink a backend_factory (executor-side ingest:
+        # write+ingest co-located, no cross-node visibility window at all).
         return True
     perm = getattr(exc, "is_permanent", None)
     if callable(perm):

@@ -1,4 +1,4 @@
-"""Miscellaneous dead-letter-queue writers (SURVEY §2.5 K3).
+"""Miscellaneous dead-letter-queue producers (SURVEY §2.5 K3).
 
 The reference ships failed records to a Kafka topic through a dedicated
 byte-array producer built from the ``misc.deadletterqueue.*`` property
@@ -6,19 +6,15 @@ set (KustoSinkTask.java:442-458; props KustoSinkConfig.java:437-472) and
 sends one record per failed sink record with the error-coordinates key
 (TopicPartitionWriter.java:210-233).
 
-Spark rendition: the sink hands ``list[dict]`` batches of
-``{"key": str, "value": str|bytes}`` to a pluggable ``dlq_writer``
-callable. ``KafkaDlqWriter`` is the production implementation — a thin
-shim over a Kafka producer. The producer itself is injectable
-(``producer_factory``) so tests assert the exact key/value bytes without
-a broker; the default factory uses kafka-python when present and raises
-a clear gate error otherwise (no Kafka client ships in this
-environment — same policy as the SDK-gated Kusto backends).
-
-Driver-side by design: DLQ records are the bounded failure tail of a
-batch (the sink collects only failed files' records), so a single
-producer on the driver mirrors the reference's one-producer-per-task
-model without per-executor connection churn.
+Spark rendition: the failure tail already sits in a distributed frame,
+so DLQ records are produced from the executors
+(``executor_partition_sender`` under ``foreachPartition``), one producer
+per partition task. The producer is injectable (a picklable
+``callable(props) -> producer``) so tests assert the exact key/value
+bytes without a broker; the default factory uses kafka-python when
+present and raises a clear gate error otherwise (kafka-python is an
+optional dependency — same policy as the SDK-gated Kusto backends).
+``FileDlqProducer`` is the producer when no DLQ is configured.
 """
 
 from __future__ import annotations
@@ -37,8 +33,8 @@ def _default_producer_factory(props: dict):
         from kafka import KafkaProducer  # type: ignore[import-not-found]
     except ImportError as e:
         raise NotImplementedError(
-            "KafkaDlqWriter requires the kafka-python package (not installed "
-            "in this environment); inject producer_factory or use the "
+            "the Kafka DLQ requires the kafka-python package, which is not "
+            "installed; inject dlq_partition_producer_factory or use the "
             "default file DLQ"
         ) from e
     # kafka-python accepts only ITS OWN kwarg vocabulary — a blanket
@@ -90,52 +86,6 @@ def _default_producer_factory(props: dict):
     return KafkaProducer(**kwargs)
 
 
-class KafkaDlqWriter:
-    """``dlq_writer`` callable shipping failed records to the configured
-    DLQ topic as raw bytes (ByteArraySerializer parity)."""
-
-    def __init__(
-        self,
-        topic: str,
-        producer_props: dict,
-        producer_factory: Optional[Callable[[dict], object]] = None,
-    ):
-        self.topic = topic
-        self.producer_props = producer_props
-        self._factory = producer_factory or _default_producer_factory
-        self._producer = None  # lazy — only built on first failure batch
-
-    @classmethod
-    def from_config(cls, config, producer_factory=None) -> "KafkaDlqWriter":
-        if not config.dlq_enabled:
-            raise ValueError("DLQ is not configured (misc.deadletterqueue.*)")
-        return cls(
-            topic=config.dlq_topic_name,
-            producer_props=config.dlq_producer_props(),
-            producer_factory=producer_factory,
-        )
-
-    def __call__(self, records: list[dict]) -> None:
-        if self._producer is None:
-            self._producer = self._factory(self.producer_props)
-        for r in records:
-            key = r["key"].encode("utf-8") if isinstance(r["key"], str) else bytes(r["key"])
-            value = r["value"]
-            value = value.encode("utf-8") if isinstance(value, str) else bytes(value)
-            self._producer.send(self.topic, key=key, value=value)
-        # Reference sends async with an error callback; a flush per batch
-        # bounds in-flight records at micro-batch granularity.
-        self._producer.flush()
-
-    def close(self) -> None:
-        if self._producer is not None:
-            try:
-                self._producer.close()
-            except Exception:  # noqa: BLE001 — close is best-effort
-                log.warning("DLQ producer close failed", exc_info=True)
-            self._producer = None
-
-
 def _to_bytes(v) -> bytes:
     return v.encode("utf-8") if isinstance(v, str) else bytes(v)
 
@@ -145,7 +95,7 @@ class FileDlqProducer:
     is reachable (or configured): records buffer per task and land as a
     uniquely-named base64 JSONL file under ``directory`` on flush —
     point it at shared storage in a real cluster. Base64 keeps binary
-    Avro values lossless in JSONL. Also serves as the byte-parity test
+    Avro values lossless in JSONL. Also serves as the byte-capture test
     seam for the Kafka path (same send/flush/close surface).
 
     Use via ``functools.partial(FileDlqProducer, directory=...)`` as the
@@ -196,9 +146,9 @@ def executor_partition_sender(
 
     Each task builds ONE producer for its partition, streams its rows,
     flushes, and closes — so DLQ throughput scales with the cluster and
-    no failure tail is ever collected to the driver. Record bytes are
-    identical to the driver path's ``KafkaDlqWriter`` (same key format,
-    same raw-bytes values); only the production locus differs.
+    no failure tail is ever collected to the driver. Keys and values
+    are sent as raw bytes (ByteArraySerializer parity): str as UTF-8,
+    bytes verbatim.
 
     ``counter`` is an optional Spark accumulator incremented only AFTER
     a partition's records have been handed to the producer and flushed,

@@ -29,15 +29,16 @@ Scale notes:
   staging task holds a worker process of about 130 MB, so a small epoch
   stages in one task and a large one scales out.
 - Only the tiny per-file manifest is collected to the driver; record
-  data never is (the custom DLQ writer's failure tail is the bounded
-  exception). The DLQ reads the persisted frame, narrowed to the failed
-  topics and offset ranges, never the source.
+  data never is (an injected ``dlq_writer``'s failure tail is the
+  bounded exception). DLQ records are produced from the executors; the
+  DLQ reads the persisted frame, narrowed to the failed topics and
+  offset ranges, never the source.
 - Every mapping's staged files ingest through one bounded thread pool
   (``config.ingest_threads``): ingest RPCs are I/O-bound HTTP, so one
   slow file does not serialize the epoch behind its retry loop.
 
-Staging-directory requirement (multi-node clusters): in the default
-driver-ingest mode, files are WRITTEN by executors (``applyInArrow``)
+Staging-directory requirement (multi-node clusters): without a
+``backend_factory``, files are WRITTEN by executors (``applyInArrow``)
 and READ/deleted by the driver-side ingest loop, so
 ``config.staging_dir`` MUST be shared storage (NFS / DBFS /
 fuse-mounted object store) on a real cluster; executor-local paths only
@@ -45,7 +46,7 @@ work in local mode. A non-shared path surfaces as ``FileNotFoundError``
 at ingest time, which ``classify_ingest_error`` treats as PERMANENT (no
 retry-budget burn) precisely to make this misconfiguration fail fast.
 
-``executor_side_ingest=True`` removes that requirement entirely — each
+Passing ``backend_factory`` removes that requirement entirely — each
 staging task ingests its own rolled files on the executor that wrote them
 (retry + permanent classification included), a file never leaves
 local disk, and ingest parallelism equals staging parallelism. This is
@@ -338,22 +339,19 @@ class KustoSparkSink:
         metrics: Optional[SinkMetrics] = None,
         dlq_writer=None,
         backend_factory=None,
-        executor_side_ingest: bool = False,
         dlq_partition_producer_factory=None,
     ):
         self.config = config
         self.backend = backend
         self.metrics = metrics or SinkMetrics()
-        # Executor-side ingest (the 1000-executor mode): each staging
-        # task ingests its own rolled files where it wrote them — no shared
-        # staging_dir, ingest parallelism = staging parallelism, and the
-        # driver only sees the per-file outcome manifest.
-        # ``backend_factory`` must be a picklable zero-arg callable
-        # building the backend ON the executor (clients don't pickle).
-        if executor_side_ingest and backend_factory is None:
-            raise ValueError("executor_side_ingest=True requires backend_factory")
+        # A ``backend_factory`` selects executor-side ingest (the
+        # 1000-executor mode): each staging task ingests its own rolled
+        # files where it wrote them — no shared staging_dir, ingest
+        # parallelism = staging parallelism, and the driver only sees the
+        # per-file outcome manifest. It must be a picklable zero-arg
+        # callable building the backend ON the executor (clients don't
+        # pickle). Without one, the driver ingests through ``backend``.
         self._backend_factory = backend_factory
-        self._executor_side_ingest = executor_side_ingest
         # Sink-instance nonce: scopes the executor-side backend cache so
         # a reused Python worker never serves this sink with a client
         # built by a DIFFERENT sink's factory (same cluster URL ≠ same
@@ -361,19 +359,14 @@ class KustoSparkSink:
         import uuid as _uuid
 
         self._instance_token = _uuid.uuid4().hex
-        # K3 — dlq_writer: callable(list[dict]) shipping failed records.
-        # Resolution order: explicit injection > Kafka DLQ when
-        # misc.deadletterqueue.* is configured (KustoSinkTask.java:442-458,
-        # producer built lazily on first failure) > NDJSON file fallback
-        # under staging.
-        if dlq_writer is None and config.dlq_enabled:
-            from kafka_sink_azure_kusto_spark.streaming.dlq import KafkaDlqWriter
-
-            dlq_writer = KafkaDlqWriter.from_config(config)
+        # K3 — an injected dlq_writer, callable(list[dict]), receives the
+        # failed records on the driver (the test and bespoke-sink seam).
+        # Otherwise the executors produce them through
+        # dlq_partition_producer_factory, a picklable callable(props) ->
+        # producer shipped to foreachPartition tasks; None ⇒ kafka-python's
+        # default factory when misc.deadletterqueue.* is configured
+        # (KustoSinkTask.java:442-458), else the JSONL file DLQ under staging.
         self._dlq_writer = dlq_writer
-        # Executor-side DLQ produce seam (config.dlq_executor_side):
-        # picklable callable(props) -> producer, shipped to foreachPartition
-        # tasks. None ⇒ kafka-python's default factory on the executors.
         self._dlq_partition_producer_factory = dlq_partition_producer_factory
         self._mapping_indexes = {m.topic: i for i, m in enumerate(config.mappings)}
         if config.validate_tables:
@@ -457,7 +450,7 @@ class KustoSparkSink:
                 staged = self._stage(enc, epoch_id, stats["bytes"], value_type)
             self._dispatch_failures(enc, staged, self._ingest(staged), stats["unrouted"])
         finally:
-            if not self._executor_side_ingest:
+            if self._backend_factory is None:
                 for s in staged:
                     try:
                         os.remove(s.path)  # B5 — delete local file after roll
@@ -518,7 +511,7 @@ class KustoSparkSink:
 
                 arrow_schema = to_arrow_schema(value_type)
         ingest = None
-        if self._executor_side_ingest:
+        if self._backend_factory is not None:
             ingest = {
                 "factory": self._backend_factory,
                 "token": f"{self._instance_token}|{cfg.ingest_url}",
@@ -549,7 +542,7 @@ class KustoSparkSink:
         file: only failed files' records reach the DLQ, so a delivered
         record never reappears there as a duplicate."""
         outcomes: list[tuple[Row, object]] = []
-        if self._executor_side_ingest:
+        if self._backend_factory is not None:
             for s in staged:
                 ok = s.status == "Succeeded"
                 self.metrics.incr("ingestion_attempts", s.attempts)
@@ -646,48 +639,42 @@ class KustoSparkSink:
             "', offset=', CAST(`offset` AS STRING), '.') AS `key`",
             "`line` AS `value`",
         )
-        executor_side = self.config.dlq_executor_side and (
-            self.config.dlq_enabled or self._dlq_partition_producer_factory
-        )
-        if executor_side or self._dlq_writer is None:
-            # Produce from the EXECUTORS, one producer per partition task:
-            # DLQ cost scales with the cluster and the failure tail never
-            # crosses the driver. Bytes are identical to the driver path
-            # below. With no writer at all, the fallback file DLQ writes
-            # one JSONL per task under staging/_dlq.
-            import functools
-
-            from kafka_sink_azure_kusto_spark.streaming.dlq import (
-                FileDlqProducer,
-                executor_partition_sender,
-            )
-
-            if executor_side:
-                # A custom producer factory (e.g. file-based) supplies its
-                # own destination; only then is a missing dlq topic
-                # acceptable — give it a deterministic name.
-                topic = self.config.dlq_topic_name or f"dlq.{name}"
-                props = self.config.dlq_producer_props()
-                factory = self._dlq_partition_producer_factory
-            else:
-                topic, props = f"dlq.{name}", {}
-                factory = functools.partial(
-                    FileDlqProducer, directory=os.path.join(self.config.staging_dir, "_dlq")
-                )
-            sent = failed.sparkSession.sparkContext.accumulator(0)
-            out.foreachPartition(executor_partition_sender(topic, props, factory, counter=sent))
-            # one evaluation of the failure frame; the accumulator counts
-            # records handed to producers (post-flush), not candidates
-            self.metrics.incr("dlq_records_sent", sent.value)
+        if self._dlq_writer is not None:
+            # Injected driver-side writer (tests, bespoke sinks): a bounded
+            # collect of the failure tail, sorted here — it is already on
+            # the driver, so a distributed sort would only add jobs.
+            rows = sorted(out.collect(), key=lambda r: (r["topic"], r["partition"], r["offset"]))
+            records = [{"key": r["key"], "value": _dlq_value(r["value"], avro)} for r in rows]
+            if records:
+                self._dlq_writer(records)
+                self.metrics.incr("dlq_records_sent", len(records))
             return
-        # Custom driver-side writer seam (tests, bespoke sinks): a bounded
-        # collect of the failure tail, sorted here — it is already on the
-        # driver, so a distributed sort would only add jobs.
-        rows = sorted(out.collect(), key=lambda r: (r["topic"], r["partition"], r["offset"]))
-        records = [{"key": r["key"], "value": _dlq_value(r["value"], avro)} for r in rows]
-        if records:
-            self._dlq_writer(records)
-            self.metrics.incr("dlq_records_sent", len(records))
+        # Produce from the EXECUTORS, one producer per partition task: DLQ
+        # cost scales with the cluster and the failure tail never crosses
+        # the driver. The producer is the injected factory, else the
+        # configured Kafka DLQ's, else one JSONL file per task under
+        # staging/_dlq; with no DLQ topic configured, the name is derived.
+        import functools
+
+        from kafka_sink_azure_kusto_spark.streaming.dlq import (
+            FileDlqProducer,
+            executor_partition_sender,
+        )
+
+        cfg = self.config
+        factory = self._dlq_partition_producer_factory
+        if factory is None and not cfg.dlq_enabled:
+            factory = functools.partial(
+                FileDlqProducer, directory=os.path.join(cfg.staging_dir, "_dlq")
+            )
+        topic = cfg.dlq_topic_name or f"dlq.{name}"
+        sent = failed.sparkSession.sparkContext.accumulator(0)
+        out.foreachPartition(
+            executor_partition_sender(topic, cfg.dlq_producer_props(), factory, counter=sent)
+        )
+        # one evaluation of the failure frame; the accumulator counts
+        # records handed to producers (post-flush), not candidates
+        self.metrics.incr("dlq_records_sent", sent.value)
 
     # --------------------------------------------------------- control plane
     def attach(
@@ -737,19 +724,16 @@ class KustoSparkSink:
                 F.col("topic")
             ),
         )
-        saved = self.backend
-        saved_executor_side = self._executor_side_ingest
+        saved = self.backend, self._backend_factory
         try:
-            self.backend = _WarmupNullBackend()
             # Executor-side ingest ships self._backend_factory to the
             # workers and never consults self.backend — so the warmup
-            # MUST force the driver-side path, or the 64 synthetic
-            # records would land in the REAL destination table.
-            self._executor_side_ingest = False
+            # MUST clear it and ingest on the driver into the null backend,
+            # or the 64 synthetic records would land in the REAL table.
+            self.backend, self._backend_factory = _WarmupNullBackend(), None
             self.process_batch(tiny, epoch_id=-1)
         finally:
-            self.backend = saved
-            self._executor_side_ingest = saved_executor_side
+            self.backend, self._backend_factory = saved
             self.metrics.reset()
 
     @staticmethod

@@ -1,14 +1,21 @@
-"""Kafka DLQ writer tests (K3, TopicPartitionWriter.java:210-233 /
-KustoSinkTask.java:442-458) — property surface round-trip and byte-exact
-producer sends via an injected fake producer (no broker in CI)."""
+"""DLQ tests (K3, TopicPartitionWriter.java:210-233 /
+KustoSinkTask.java:442-458) — property surface round-trip, byte-exact
+producer sends via an in-process fake producer (no broker in CI), and
+which destination a sink's failed records reach."""
 
+import base64
+import functools
 import json
+import os
 
 import pytest
 
 from kafka_sink_azure_kusto_spark.config import KustoSinkConfig, TopicToTableMapping
 from kafka_sink_azure_kusto_spark.streaming.backends import LocalEmulatorBackend
-from kafka_sink_azure_kusto_spark.streaming.dlq import KafkaDlqWriter
+from kafka_sink_azure_kusto_spark.streaming.dlq import (
+    FileDlqProducer,
+    executor_partition_sender,
+)
 from kafka_sink_azure_kusto_spark.streaming.sink import KustoSparkSink
 
 
@@ -16,7 +23,7 @@ class FakeProducer:
     def __init__(self):
         self.sent: list[tuple[str, bytes, bytes]] = []
         self.flushes = 0
-        self.closed = False
+        self.closes = 0
 
     def send(self, topic, key=None, value=None):
         self.sent.append((topic, key, value))
@@ -25,7 +32,7 @@ class FakeProducer:
         self.flushes += 1
 
     def close(self):
-        self.closed = True
+        self.closes += 1
 
 
 CONNECT_PROPS = {
@@ -59,61 +66,79 @@ def test_dlq_props_roundtrip_from_connect_properties():
     assert not any(k.startswith("misc.deadletterqueue") for k in cfg.extra)
 
 
-def test_kafka_dlq_writer_sends_key_value_bytes():
+def test_executor_partition_sender_sends_key_value_bytes():
     fake = FakeProducer()
+    built = []
     cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
-    writer = KafkaDlqWriter.from_config(cfg, producer_factory=lambda props: fake)
-    writer(
-        [
-            {"key": "coords-0", "value": '{"a": 1}'},
-            {"key": "coords-1", "value": b"\x00binary\xff"},
-        ]
+    send = executor_partition_sender(
+        cfg.dlq_topic_name,
+        cfg.dlq_producer_props(),
+        lambda props: built.append(props) or fake,
+    )
+    send(
+        iter(
+            [
+                {"key": "coords-0", "value": '{"a": 1}'},
+                {"key": b"coords-1", "value": b"\x00binary\xff"},
+            ]
+        )
     )
     assert fake.sent == [
         ("dlq.topic", b"coords-0", b'{"a": 1}'),
         ("dlq.topic", b"coords-1", b"\x00binary\xff"),
     ]
+    assert built == [cfg.dlq_producer_props()]  # one producer per partition
     assert fake.flushes == 1
-    writer.close()
-    assert fake.closed
+    assert fake.closes == 1
 
 
-def test_kafka_dlq_writer_gates_without_client():
+def test_default_dlq_producer_gates_without_client():
     cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
-    writer = KafkaDlqWriter.from_config(cfg)  # default factory, no kafka-python
+    # default factory, no kafka-python
+    send = executor_partition_sender(cfg.dlq_topic_name, cfg.dlq_producer_props())
     with pytest.raises(NotImplementedError, match="kafka-python"):
-        writer([{"key": "k", "value": "v"}])
+        send(iter([{"key": "k", "value": "v"}]))
+
+
+def _read_file_dlq(directory) -> list[tuple[str, bytes, bytes]]:
+    """(topic, key, value) of every record FileDlqProducer wrote, by offset."""
+    records = []
+    for name in os.listdir(directory):
+        with open(os.path.join(directory, name)) as f:
+            for line in f:
+                r = json.loads(line)
+                records.append(
+                    (r["topic"], base64.b64decode(r["key"]), base64.b64decode(r["value"]))
+                )
+    return sorted(records, key=lambda r: int(r[1].split(b"offset=")[1].rstrip(b".")))
+
+
+def _capture_factory(directory):
+    return functools.partial(FileDlqProducer, directory=str(directory))
 
 
 def test_sink_wires_kafka_dlq_from_config(spark, tmp_path):
     # End-to-end: DLQ-configured sink + failing backend ⇒ failed records
-    # land on the fake Kafka producer with per-record coordinate keys.
-    fake = FakeProducer()
+    # reach the executor producer with the configured topic and
+    # per-record coordinate keys.
     cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
     cfg.staging_dir = str(tmp_path / "staging")
     backend = LocalEmulatorBackend(str(tmp_path / "kusto"), permanent_fail=True)
-    sink = KustoSparkSink(cfg, backend)
-    sink._dlq_writer = KafkaDlqWriter.from_config(cfg, producer_factory=lambda p: fake)
+    sink = KustoSparkSink(
+        cfg, backend, dlq_partition_producer_factory=_capture_factory(tmp_path / "capture")
+    )
     rows = [(f"k{i}", json.dumps({"n": i}), "t1", 0, i) for i in range(3)]
     df = spark.createDataFrame(
         rows, "key string, value string, topic string, partition long, offset long"
     )
     sink.process_batch(df, epoch_id=0)  # behavior=log ⇒ no raise
-    assert len(fake.sent) == 3
-    for i, (topic, key, value) in enumerate(fake.sent):
+    sent = _read_file_dlq(tmp_path / "capture")
+    assert len(sent) == 3
+    for i, (topic, key, value) in enumerate(sent):
         assert topic == "dlq.topic"
         assert f"topic=t1, partition=0, offset={i}.".encode() in key
         assert json.loads(value) == {"n": i}
     assert sink.metrics.snapshot()["DlqRecordsSent"] == 3
-
-
-def test_dlq_writer_requires_dlq_config():
-    cfg = KustoSinkConfig(
-        ingest_url="https://c.kusto.windows.net",
-        mappings=[TopicToTableMapping(topic="t", db="d", table="t2")],
-    )
-    with pytest.raises(ValueError, match="not configured"):
-        KafkaDlqWriter.from_config(cfg)
 
 
 def test_producer_factory_coerces_bool_and_acks(monkeypatch):
@@ -154,10 +179,7 @@ def test_producer_factory_coerces_bool_and_acks(monkeypatch):
     assert captured["acks"] == "all"
 
 
-# ------------------------------------------------------- executor-side DLQ
-
-
-from kafka_sink_azure_kusto_spark.streaming.dlq import FileDlqProducer
+# ------------------------------------------------------- sink DLQ routes
 
 
 def _failed_batch_df(spark):
@@ -168,82 +190,100 @@ def _failed_batch_df(spark):
 
 
 def test_executor_side_dlq_bytes_match_driver_path(spark, tmp_path):
-    import base64
-    import functools
-    import os
-
-    # --- driver path (reference shape) ---
-    fake = FakeProducer()
+    # --- driver path: the injected dlq_writer seam ---
+    written: list[dict] = []
     cfg_d = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
     cfg_d.staging_dir = str(tmp_path / "staging_d")
     sink_d = KustoSparkSink(
-        cfg_d, LocalEmulatorBackend(str(tmp_path / "kusto_d"), permanent_fail=True)
+        cfg_d,
+        LocalEmulatorBackend(str(tmp_path / "kusto_d"), permanent_fail=True),
+        dlq_writer=written.extend,
     )
-    sink_d._dlq_writer = KafkaDlqWriter.from_config(cfg_d, producer_factory=lambda p: fake)
     sink_d.process_batch(_failed_batch_df(spark), epoch_id=0)
-    driver_records = {(k, v) for _, k, v in fake.sent}
+    driver_records = {(r["key"].encode("utf-8"), r["value"].encode("utf-8")) for r in written}
     assert len(driver_records) == 6
 
-    # --- executor path (scale shape) ---
-    capture = tmp_path / "capture"
-    capture.mkdir()
-    props = dict(CONNECT_PROPS)
-    props["misc.deadletterqueue.executor.side.enable"] = "true"
-    cfg_e = KustoSinkConfig.from_connect_properties(props)
-    assert cfg_e.dlq_executor_side
+    # --- executor path: the producer's bytes ---
+    cfg_e = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
     cfg_e.staging_dir = str(tmp_path / "staging_e")
     sink_e = KustoSparkSink(
         cfg_e,
         LocalEmulatorBackend(str(tmp_path / "kusto_e"), permanent_fail=True),
-        dlq_partition_producer_factory=functools.partial(
-            FileDlqProducer, directory=str(capture)
-        ),
+        dlq_partition_producer_factory=_capture_factory(tmp_path / "capture"),
     )
     sink_e.process_batch(_failed_batch_df(spark), epoch_id=0)
-
-    executor_records = set()
-    topics = set()
-    for name in os.listdir(capture):
-        with open(capture / name) as f:
-            for line in f:
-                r = json.loads(line)
-                topics.add(r["topic"])
-                executor_records.add(
-                    (base64.b64decode(r["key"]), base64.b64decode(r["value"]))
-                )
-    assert topics == {"dlq.topic"}
-    assert executor_records == driver_records  # byte-identical per record
+    sent = _read_file_dlq(tmp_path / "capture")
+    assert {t for t, _, _ in sent} == {"dlq.topic"}
+    assert {(k, v) for _, k, v in sent} == driver_records  # byte-identical per record
     assert sink_e.metrics.snapshot()["DlqRecordsSent"] == 6
 
 
-def test_fallback_file_dlq_writes_from_executors(spark, tmp_path):
-    # No custom writer, no executor flag, no Kafka DLQ config: the
-    # fallback must still land failed records as JSONL under
-    # staging/_dlq WITHOUT collecting the failure tail to the driver,
-    # and dlq_records_sent must count delivered records.
-    import base64
-    import os
-
-    cfg = KustoSinkConfig(
+def _log_cfg(tmp_path):
+    return KustoSinkConfig(
         ingest_url="https://ingest-c.kusto.windows.net",
         mappings=[TopicToTableMapping(topic="t1", db="db", table="tb", format="json")],
         staging_dir=str(tmp_path / "staging"),
         behavior_on_error="LOG",
     )
+
+
+def test_injected_producer_factory_without_dlq_config_gets_every_record(spark, tmp_path):
+    # No Kafka DLQ configured: an injected executor producer factory is
+    # still the destination — the file fallback must not replace it.
+    sink = KustoSparkSink(
+        _log_cfg(tmp_path),
+        LocalEmulatorBackend(str(tmp_path / "kusto"), permanent_fail=True),
+        dlq_partition_producer_factory=_capture_factory(tmp_path / "capture"),
+    )
+    sink.process_batch(_failed_batch_df(spark), epoch_id=0)
+    sent = _read_file_dlq(tmp_path / "capture")
+    assert [json.loads(v)["n"] for _, _, v in sent] == list(range(6))
+    assert {t for t, _, _ in sent} == {"dlq.db.tb"}
+    assert not (tmp_path / "staging" / "_dlq").exists()
+    assert sink.metrics.snapshot()["DlqRecordsSent"] == 6
+
+
+def test_injected_dlq_writer_wins_over_configured_kafka_dlq(spark, tmp_path):
+    written: list[dict] = []
+    cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
+    cfg.staging_dir = str(tmp_path / "staging")
+    sink = KustoSparkSink(
+        cfg,
+        LocalEmulatorBackend(str(tmp_path / "kusto"), permanent_fail=True),
+        dlq_writer=written.extend,
+    )
+    sink.process_batch(_failed_batch_df(spark), epoch_id=0)
+    assert [json.loads(r["value"])["n"] for r in written] == list(range(6))
+    assert all("topic=t1, partition=0" in r["key"] for r in written)
+    assert not (tmp_path / "staging" / "_dlq").exists()
+    assert sink.metrics.snapshot()["DlqRecordsSent"] == 6
+
+
+def test_configured_kafka_dlq_without_factory_uses_kafka_producer(spark, tmp_path):
+    # A Kafka DLQ configured with no injected factory or writer must go
+    # to the kafka-python producer (gated here: the package is absent,
+    # so the epoch fails loudly), never silently to staging/_dlq.
+    cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
+    cfg.staging_dir = str(tmp_path / "staging")
     sink = KustoSparkSink(
         cfg, LocalEmulatorBackend(str(tmp_path / "kusto"), permanent_fail=True)
     )
+    with pytest.raises(Exception, match="requires the kafka-python package"):
+        sink.process_batch(_failed_batch_df(spark), epoch_id=0)
+    assert not (tmp_path / "staging" / "_dlq").exists()
+
+
+def test_fallback_file_dlq_writes_from_executors(spark, tmp_path):
+    # No custom writer, no producer factory, no Kafka DLQ config: the
+    # fallback must still land failed records as JSONL under
+    # staging/_dlq WITHOUT collecting the failure tail to the driver,
+    # and dlq_records_sent must count delivered records.
+    sink = KustoSparkSink(
+        _log_cfg(tmp_path), LocalEmulatorBackend(str(tmp_path / "kusto"), permanent_fail=True)
+    )
     sink.process_batch(_failed_batch_df(spark), epoch_id=0)
 
-    dlq_dir = tmp_path / "staging" / "_dlq"
-    records = []
-    for name in os.listdir(dlq_dir):
-        with open(dlq_dir / name) as f:
-            for line in f:
-                r = json.loads(line)
-                records.append(
-                    (r["topic"], base64.b64decode(r["key"]), base64.b64decode(r["value"]))
-                )
+    records = _read_file_dlq(tmp_path / "staging" / "_dlq")
     assert len(records) == 6
     assert {t for t, _, _ in records} == {"dlq.db.tb"}
     values = {json.loads(v)["n"] for _, _, v in records}
@@ -257,15 +297,11 @@ def test_executor_dlq_metric_counts_sent_records(spark, tmp_path):
     # The executor path evaluates the failure frame ONCE and counts via
     # accumulator — a partition whose producer dies before flush must
     # not be counted as sent.
-    import functools
-
     class ExplodingFileProducer(FileDlqProducer):
         def flush(self):
             raise RuntimeError("broker gone")
 
-    props = dict(CONNECT_PROPS)
-    props["misc.deadletterqueue.executor.side.enable"] = "true"
-    cfg = KustoSinkConfig.from_connect_properties(props)
+    cfg = KustoSinkConfig.from_connect_properties(CONNECT_PROPS)
     cfg.staging_dir = str(tmp_path / "staging")
     sink = KustoSparkSink(
         cfg,

@@ -38,15 +38,6 @@ def _records_df(spark, n=10):
     )
 
 
-def test_executor_ingest_requires_factory(tmp_path):
-    with pytest.raises(ValueError, match="backend_factory"):
-        KustoSparkSink(
-            _cfg(tmp_path),
-            LocalEmulatorBackend(str(tmp_path / "k")),
-            executor_side_ingest=True,
-        )
-
-
 def test_executor_ingest_parity_with_driver_mode(spark, tmp_path):
     root = str(tmp_path / "kusto")
     backend = LocalEmulatorBackend(root)
@@ -54,7 +45,6 @@ def test_executor_ingest_parity_with_driver_mode(spark, tmp_path):
         _cfg(tmp_path),
         backend,
         backend_factory=lambda: LocalEmulatorBackend(root),
-        executor_side_ingest=True,
     )
     sink.process_batch(_records_df(spark, n=10), epoch_id=0)
     rows = backend.table_rows("db1", "t1")
@@ -98,7 +88,6 @@ def test_executor_ingest_retry_and_failure_isolation(spark, tmp_path):
         backend,
         dlq_writer=dlq.extend,
         backend_factory=lambda: SelectiveFail(root),
-        executor_side_ingest=True,
     )
     sink.process_batch(_records_df(spark, n=3), epoch_id=0)  # must NOT raise
     assert backend.table_rows("dbW", "tW") == ['{"w": 1}']  # sibling unharmed
@@ -123,17 +112,17 @@ def test_executor_ingest_fail_mode_raises(spark, tmp_path):
         _cfg(tmp_path, behavior_on_error=BehaviorOnError.FAIL),
         LocalEmulatorBackend(root),
         backend_factory=lambda: AlwaysFail(root),
-        executor_side_ingest=True,
     )
     with pytest.raises(RuntimeError, match="executor-side ingestion failed"):
         sink.process_batch(_records_df(spark, n=2), epoch_id=0)
 
 
 def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
-    # warmup_on_attach + executor_side_ingest: the 64 synthetic warmup
+    # warmup_on_attach + executor-side ingest: the 64 synthetic warmup
     # records must NOT reach the real backend through the executor-side
-    # backend_factory path — the warmup forces the driver-side path with
-    # the null backend (advice r10: executor mode ignores self.backend).
+    # backend_factory path — the warmup clears the factory and ingests
+    # on the driver into the null backend (executor mode ignores
+    # self.backend).
     from kafka_sink_azure_kusto_spark.sources.replay import (
         replay_stream,
         stage_replay_dir,
@@ -143,6 +132,10 @@ def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
     records = _records_df(spark, n=10)
     stage_replay_dir(records, str(tmp_path / "replay"), chunks=2)
     backend = LocalEmulatorBackend(root)
+
+    def factory():
+        return LocalEmulatorBackend(root)
+
     sink = KustoSparkSink(
         _cfg(
             tmp_path,
@@ -150,8 +143,7 @@ def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
             warmup_on_attach=True,
         ),
         backend,
-        backend_factory=lambda: LocalEmulatorBackend(root),
-        executor_side_ingest=True,
+        backend_factory=factory,
     )
     q = sink.attach(
         replay_stream(spark, str(tmp_path / "replay")),
@@ -168,5 +160,5 @@ def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
     assert len(backend.ingest_log()) == len(
         {e["file"] for e in backend.ingest_log()}
     )
-    # executor-ingest mode stays enabled after warmup
-    assert sink._executor_side_ingest is True
+    # the warmup restores the factory: executor-side ingest stays on
+    assert sink._backend_factory is factory

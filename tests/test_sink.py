@@ -411,7 +411,7 @@ def _stage_recording_tasks(spark, tmp_path, name):
         rows, "key string, value string, topic string, partition long, offset long"
     )
     cfg = _cfg(tmp_path / name, flush_size_bytes=1000)
-    sink = KustoSparkSink(cfg, LocalEmulatorBackend(root), executor_side_ingest=True,
+    sink = KustoSparkSink(cfg, LocalEmulatorBackend(root),
                           backend_factory=lambda: Recording(root))
     sink.process_batch(df, epoch_id=0)
     assert sink.metrics.snapshot()["RecordsWritten"] == 400

@@ -272,7 +272,7 @@ def sink_ingest_compare(spark, n: int = 200_000):
     At 100 TB the driver-side bounded-pool ingest loop is the sink's
     only centralized stage — this measures both modes on the same
     synthetic record stream (8 topics × 16 partitions) and records
-    records/s so PERF.md can say WHEN to flip executor_side_ingest."""
+    records/s so PERF.md can say WHEN to pass a backend_factory."""
     import shutil
     import tempfile
     import time as _t
@@ -321,7 +321,6 @@ def sink_ingest_compare(spark, n: int = 200_000):
                     cfg,
                     backend,
                     backend_factory=lambda root=root: LocalEmulatorBackend(root),
-                    executor_side_ingest=True,
                 )
             else:
                 sink = KustoSparkSink(cfg, backend)
