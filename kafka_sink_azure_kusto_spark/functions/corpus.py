@@ -451,7 +451,7 @@ def bpe_encode(
         pairs.append(F.lit(int(tid)))
     vmap = F.create_map(*pairs) if pairs else F.create_map()
     ids = F.transform(
-        toks, lambda t: F.coalesce(vmap.getItem(t), F.lit(int(unk_id)))
+        toks, lambda t: F.coalesce(vmap[t], F.lit(int(unk_id)))
     )
     return df.select(
         F.col(id_col),

@@ -23,18 +23,7 @@ cannot change any of their values.
 
 from __future__ import annotations
 
-import threading
-from collections.abc import Callable
-from typing import Any, TypeVar
-
 from pyspark.sql import DataFrame
-
-_T = TypeVar("_T")
-
-# thread-local marker: set while a run_concurrently worker thunk is
-# executing, so nested calls can detect they are already inside a
-# worker and degrade to sequential execution (see the nesting guard)
-_IN_WORKER = threading.local()
 
 
 def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -51,72 +40,3 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
     if n >= t:
         return df
     return df.repartition(t)
-
-
-def run_concurrently(
-    *thunks: Callable[[], _T],
-    max_workers: int | None = None,
-    when_nested: str = "sequential",
-) -> list[Any]:
-    """Materialize INDEPENDENT driver-side work items concurrently and
-    return their results in ``thunks`` order (spark_optimization_guide
-    §2.6 "overlap independent jobs"): Spark's scheduler happily runs
-    several jobs at once inside one application — actions are only
-    sequential because driver code calls them sequentially.
-
-    The engine's index builders and audits are chains of BOUNDED
-    materialization barriers (localCheckpoint of a layer's edges, a
-    store's parquet write, an audit arm's integer counts).  Run
-    sequentially, each barrier leaves the cluster idle during its
-    scheduling latency and stage tail; measured on the r14-opt box,
-    the hierarchical recall audit spent 23 s of a 35 s wall in 25
-    back-to-back localCheckpoint jobs.  Submitting independent
-    barriers from a small thread pool lets the next job's tasks
-    back-fill executors freed by the current job's tail — the same
-    win at cluster scale, where the tail is longer.
-
-    Result-invariance: each thunk builds and materializes its OWN
-    DataFrames from deterministic plans; concurrent scheduling cannot
-    change any computed value.  Exceptions propagate loudly (first
-    failing thunk, in order).  Each worker is wrapped with
-    ``pyspark.inheritable_thread_target`` so JVM thread-local state
-    (job group/description) is inherited and cleaned up under the
-    pinned-thread mode that PySpark uses by default.
-    """
-    if not thunks:  # ThreadPoolExecutor(max_workers=0) raises (ADVICE r14)
-        return []
-    if len(thunks) == 1 or (
-        when_nested == "sequential" and getattr(_IN_WORKER, "active", False)
-    ):
-        # NESTING GUARD (ADVICE r14 #3): by default a run_concurrently
-        # reached from inside another run_concurrently worker runs its
-        # thunks SEQUENTIALLY, so total in-flight jobs stay bounded by
-        # the top-level fan-out. The hazard is real: the maintenance
-        # kernels' internal job folds, nested under 3 concurrent
-        # per-layer upsert chains, measured pathological multi-second
-        # scheduler stalls at local[32] (r15: 91 s outliers on a loop
-        # whose quiet wall is ~18 s) and multiply peak localCheckpoint
-        # storage. The few orchestration sites whose nested fan-out is
-        # bounded and r14-measured-good (audit arms → layer builds)
-        # pass when_nested="parallel" explicitly.
-        return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        from pyspark import inheritable_thread_target as _itt
-    except ImportError:  # pragma: no cover - very old pyspark
-        def _itt(f):
-            return f
-
-    def _mark(t: Callable[[], _T]) -> Callable[[], _T]:
-        def inner():
-            _IN_WORKER.active = True
-            try:
-                return t()
-            finally:
-                _IN_WORKER.active = False
-        return inner
-
-    with ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as pool:
-        futures = [pool.submit(_itt(_mark(t))) for t in thunks]
-        return [f.result() for f in futures]

@@ -1358,14 +1358,8 @@ def ivf_index_upsert(
     )
     # affected cells as a collected literal list (VERDICT r14 #2): one
     # bounded collect replaces the pre-write checkpoint (a list cannot
-    # be invalidated by the rewrite), keep prunes with a plain isin()
-    # filter instead of a broadcast join, and the store write overlaps
-    # the kept-cells collect (both read the checkpointed rewrite —
-    # guide §2.6). Values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
+    # be invalidated by the rewrite), and keep prunes with a plain isin()
+    # filter instead of a broadcast join. Values unchanged.
     affected = sorted(
         r["cell"]
         for r in batch.select("cell")
@@ -1380,12 +1374,10 @@ def ivf_index_upsert(
     )
     live = batch.filter(F.col("v").isNotNull()).select("vec_id", "v", "cell")
     rewrite = keep.unionByName(live).localCheckpoint()
-    _, kept_rows = run_concurrently(
-        lambda: rewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(idx_dir),
-        lambda: rewrite.select("cell").distinct().collect(),  # ≤ |affected|
-    )
+    rewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("cell").parquet(idx_dir)
+    kept_rows = rewrite.select("cell").distinct().collect()  # ≤ |affected|
     kept = {r["cell"] for r in kept_rows}
     emptied = [c for c in affected if c not in kept]
     for c in emptied:
@@ -1517,13 +1509,7 @@ def knn_graph_upsert(
     # plain store read. The read-after-write barrier stays.)
     # per-epoch job folding (VERDICT r14 #2): affected blocks as one
     # bounded collect + literal isin() (replaces the checkpoint + the
-    # broadcast join + the final anti-join collect); the store write
-    # overlaps the kept-blocks collect (both read the checkpointed
-    # vrewrite — guide §2.6). Values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
+    # broadcast join + the final anti-join collect). Values unchanged.
     vec_affected = sorted(
         r["block"]
         for r in batch.select("block").distinct().collect()  # ≤ n_blocks
@@ -1535,12 +1521,10 @@ def knn_graph_upsert(
         .select("vec_id", "v", "block")
     )
     vrewrite = vkeep.unionByName(live.select("vec_id", "v", "block")).localCheckpoint()
-    _, vkept_rows = run_concurrently(
-        lambda: vrewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("block").parquet(vec_dir),
-        lambda: vrewrite.select("block").distinct().collect(),  # ≤ n_blocks
-    )
+    vrewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("block").parquet(vec_dir)
+    vkept_rows = vrewrite.select("block").distinct().collect()  # ≤ n_blocks
     vkept = {r["block"] for r in vkept_rows}
     for blk in vec_affected:
         if blk not in vkept:
@@ -1593,21 +1577,9 @@ def knn_graph_upsert(
         .join(corpus.select(F.col("vec_id").alias("src")), "src", "left_semi")
         .localCheckpoint()
     )
-    # the frontier count and the affected-blocks collect are
-    # independent reads of the checkpointed frontier/batch — overlap
-    # them (guide §2.6); the cap check still happens BEFORE anything
-    # broadcasts the frontier (the recompute plan executes at the
-    # grewrite checkpoint below)
-    n_frontier, affected_rows = run_concurrently(
-        frontier.count,
-        lambda: frontier.unionByName(
-            batch_ids.withColumnRenamed("vec_id", "src")
-        )
-        .select((F.col("src") % n_blocks).cast("int").alias("block"))
-        .distinct()
-        .collect(),  # bounded: ≤ n_blocks
-    )
-    affected = sorted(r["block"] for r in affected_rows)
+    # the cap check happens BEFORE anything broadcasts the frontier
+    # (the recompute plan executes at the grewrite checkpoint below)
+    n_frontier = frontier.count()
     if max_broadcast_frontier is not None and n_frontier > max_broadcast_frontier:
         raise ValueError(
             f"knn_graph_upsert: frontier {n_frontier} exceeds "
@@ -1615,6 +1587,15 @@ def knn_graph_upsert(
             f"batch into smaller micro-batches, or raise the cap if the "
             f"corpus side can absorb the broadcast nested loop."
         )
+    affected = sorted(
+        r["block"]
+        for r in frontier.unionByName(
+            batch_ids.withColumnRenamed("vec_id", "src")
+        )
+        .select((F.col("src") % n_blocks).cast("int").alias("block"))
+        .distinct()
+        .collect()  # bounded: ≤ n_blocks
+    )
 
     # ---- 3. exact recompute of the frontier rows only. Norms are
     # computed ONCE per corpus row / once per broadcast frontier row,
@@ -1650,8 +1631,8 @@ def knn_graph_upsert(
     )
 
     # ---- 4. rewrite only the affected adjacency partitions (the
-    # affected list was collected above, overlapped with the frontier
-    # count; isin() prunes the scan statically)
+    # affected list was collected above; isin() prunes the scan
+    # statically)
     drop = frontier.unionByName(
         batch_ids.withColumnRenamed("vec_id", "src")
     ).distinct()
@@ -1663,12 +1644,10 @@ def knn_graph_upsert(
     grewrite = gkeep.unionByName(
         recomputed.select("src", "dst", "score", "block")
     ).localCheckpoint()
-    _, gkept_rows = run_concurrently(
-        lambda: grewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("block").parquet(graph_dir),
-        lambda: grewrite.select("block").distinct().collect(),  # ≤ n_blocks
-    )
+    grewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("block").parquet(graph_dir)
+    gkept_rows = grewrite.select("block").distinct().collect()  # ≤ n_blocks
     gkept = {r["block"] for r in gkept_rows}
     emptied = [blk for blk in affected if blk not in gkept]
     for blk in emptied:
@@ -1809,28 +1788,19 @@ def graph_search_topk(
     # (bounded candidate sets joined to vectors), and skipping the
     # per-round localCheckpoint barriers measured 6.9 → ~2 s warm at
     # sf0.1 (barrier jobs dominated, not compute).
-    # The query-cap guard count is folded into the same slot (VERDICT
-    # r14 #5): it used to be one extra sequential job per search call;
-    # the count and the edge checkpoint are independent, and the
-    # ValueError still fires before anything broadcasts the query side
-    # (the search plan only executes at the caller's action).
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    if max_broadcast_queries is not None:
-        probe, und = run_concurrently(
-            lambda: queries.limit(max_broadcast_queries + 1).count(),
-            lambda: undirected_edges(edges).localCheckpoint(),
+    # The query-cap ValueError fires before anything broadcasts the
+    # query side (the search plan only executes at the caller's action).
+    if (
+        max_broadcast_queries is not None
+        and queries.limit(max_broadcast_queries + 1).count()
+        > max_broadcast_queries
+    ):
+        raise ValueError(
+            f"graph_search_topk: query side exceeds "
+            f"max_broadcast_queries={max_broadcast_queries}; chunk the "
+            f"queries and union, or pass max_broadcast_queries=None."
         )
-        if probe > max_broadcast_queries:
-            raise ValueError(
-                f"graph_search_topk: query side exceeds "
-                f"max_broadcast_queries={max_broadcast_queries}; chunk the "
-                f"queries and union, or pass max_broadcast_queries=None."
-            )
-    else:
-        und = undirected_edges(edges).localCheckpoint()
+    und = undirected_edges(edges).localCheckpoint()
     vecs = corpus.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("v")
     ).withColumn("vn", l2_norm(F.col("v")))
@@ -2084,13 +2054,7 @@ def mih_code_upsert(
     # per-epoch job folding (VERDICT r14 #2): one per-block count
     # aggregate replaces the affected-blocks checkpoint AND the two
     # final counts; keep prunes with a literal isin() instead of a
-    # broadcast join; the store write overlaps the kept-blocks collect
-    # (both read the checkpointed rewrite). Guide §2.6; 7 sequential
-    # jobs → 4 slots, values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
+    # broadcast join. Values unchanged.
     block_counts = latest.groupBy("block").agg(
         F.count(F.lit(1)).alias("n")
     ).collect()  # bounded: ≤ n_blocks rows
@@ -2109,12 +2073,10 @@ def mih_code_upsert(
         latest.filter(F.col("v").isNotNull()), "v"
     ).select("vec_id", "v", "w0", "w1", "block")
     rewrite = (adds if keep is None else keep.unionByName(adds)).localCheckpoint()
-    _, kept_rows = run_concurrently(
-        lambda: rewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("block").parquet(code_dir),
-        lambda: rewrite.select("block").distinct().collect(),  # ≤ n_blocks
-    )
+    rewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("block").parquet(code_dir)
+    kept_rows = rewrite.select("block").distinct().collect()  # ≤ n_blocks
     kept_blocks = {r["block"] for r in kept_rows}
     emptied = [b for b in affected if b not in kept_blocks]
     for blk in emptied:
@@ -2182,30 +2144,22 @@ def pq_code_upsert(
         .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
         .localCheckpoint()
     )
-    # per-epoch job folding (VERDICT r14 #2): the 8 sequential barrier
-    # jobs of the r14 shape collapse into 4 slots — (a) one per-block
-    # count aggregate replaces the separate affected-blocks collect AND
-    # the final latest.count(); (b) that collect overlaps the adds
-    # checkpoint (both read only the checkpointed latest); (c) the
-    # drift collect overlaps the rewrite checkpoint; (d) the store
-    # write overlaps the kept-blocks collect (both read the
-    # checkpointed rewrite). Guide §2.6; every folded pair is
-    # independent by construction, values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    block_counts, adds = run_concurrently(
-        lambda: latest.groupBy("block")
+    # per-epoch job folding (VERDICT r14 #2): one per-block count
+    # aggregate replaces the separate affected-blocks collect AND the
+    # final latest.count(). Values unchanged.
+    block_counts = (
+        latest.groupBy("block")
         .agg(F.count(F.lit(1)).alias("n"))
-        .collect(),  # bounded: ≤ n_blocks rows
-        lambda: pq_encode(
+        .collect()  # bounded: ≤ n_blocks rows
+    )
+    adds = (
+        pq_encode(
             latest.filter(F.col("v").isNotNull()),
             codebook, num_subspaces, sub_len, id_col="vec_id", vec_col="v",
         )
         .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
         .select("vec_id", "m", "code", "qerr", "block")
-        .localCheckpoint(),
+        .localCheckpoint()
     )
     # affected blocks as a literal list — a plain isin() filter costs
     # one partition-pruned scan instead of a checkpoint + broadcast
@@ -2221,23 +2175,19 @@ def pq_code_upsert(
         )
     else:
         keep = None  # first run only — the store has never been written
-    drift_rows, rewrite = run_concurrently(
-        lambda: adds.groupBy("m")
+    drift_rows = (
+        adds.groupBy("m")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("qerr").alias("sq"))
-        .collect(),  # bounded: ≤ num_subspaces rows
-        lambda: (
-            adds if keep is None else keep.unionByName(adds)
-        ).localCheckpoint(),
+        .collect()  # bounded: ≤ num_subspaces rows
     )
+    rewrite = (adds if keep is None else keep.unionByName(adds)).localCheckpoint()
     drift = [
         (int(r["m"]), int(r["n"]), float(r["sq"])) for r in drift_rows
     ]
-    _, kept_rows = run_concurrently(
-        lambda: rewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("block").parquet(code_dir),
-        lambda: rewrite.select("block").distinct().collect(),  # ≤ n_blocks
-    )
+    rewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("block").parquet(code_dir)
+    kept_rows = rewrite.select("block").distinct().collect()  # ≤ n_blocks
     kept_blocks = {r["block"] for r in kept_rows}
     emptied = [b for b in affected if b not in kept_blocks]
     for blk in emptied:
@@ -2427,45 +2377,32 @@ def ivfpq_code_upsert(
     )
     # per-epoch job folding (VERDICT r14 #2): one per-cell count
     # aggregate replaces the claimed-cells collect AND the final
-    # latest.count(); it overlaps the cell-move lookup AND the adds
-    # checkpoint (all three read only the checkpointed latest / the
-    # store's thin (vec_id, cell) projection); the drift collect
-    # overlaps the rewrite checkpoint; the store write overlaps the
-    # kept-cells collect. Guide §2.6; 9 sequential jobs → 4 slots,
-    # values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
+    # latest.count(). Values unchanged.
     live = latest.filter(F.col("v").isNotNull())
     store_exists = _store_exists(spark, idx_dir)
     idx = spark.read.parquet(idx_dir) if store_exists else None
-
-    def _current_cells() -> set:
-        # cell-move lookup: (vec_id, cell) only — cell is the partition
-        # column and vec_id one thin column, a pruned metadata-ish scan
-        # with the ≤|batch| id set broadcast
-        if idx is None:
-            return set()
-        return {
-            r["cell"]
-            for r in idx.select("vec_id", "cell")
-            .join(F.broadcast(latest.select("vec_id").distinct()), "vec_id")
-            .select("cell")
-            .distinct()
-            .collect()  # bounded: ≤ |batch| cells
-        }
-
-    cell_counts, current, adds = run_concurrently(
-        lambda: latest.groupBy("cell")
+    cell_counts = (
+        latest.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
-        .collect(),  # bounded: ≤ |batch| cells
-        _current_cells,
-        lambda: pq_encode(live, codebook, num_subspaces, sub_len,
-                          id_col="vec_id", vec_col="v")
+        .collect()  # bounded: ≤ |batch| cells
+    )
+    # cell-move lookup: (vec_id, cell) only — cell is the partition
+    # column and vec_id one thin column, a pruned metadata-ish scan
+    # with the ≤|batch| id set broadcast
+    current = set() if idx is None else {
+        r["cell"]
+        for r in idx.select("vec_id", "cell")
+        .join(F.broadcast(latest.select("vec_id").distinct()), "vec_id")
+        .select("cell")
+        .distinct()
+        .collect()  # bounded: ≤ |batch| cells
+    }
+    adds = (
+        pq_encode(live, codebook, num_subspaces, sub_len,
+                  id_col="vec_id", vec_col="v")
         .join(F.broadcast(live.select("vec_id", "cell")), "vec_id")
         .select("vec_id", "m", "code", "qerr", "cell")
-        .localCheckpoint(),
+        .localCheckpoint()
     )
     claimed = {r["cell"] for r in cell_counts}
     batch_rows = sum(int(r["n"]) for r in cell_counts)
@@ -2477,23 +2414,19 @@ def ivfpq_code_upsert(
         if idx is not None
         else None  # first run only — the store has never been written
     )
-    drift_rows, rewrite = run_concurrently(
-        lambda: adds.groupBy("m")
+    drift_rows = (
+        adds.groupBy("m")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("qerr").alias("sq"))
-        .collect(),  # bounded: ≤ num_subspaces rows
-        lambda: (
-            adds if keep is None else keep.unionByName(adds)
-        ).localCheckpoint(),
+        .collect()  # bounded: ≤ num_subspaces rows
     )
+    rewrite = (adds if keep is None else keep.unionByName(adds)).localCheckpoint()
     drift = [
         (int(r["m"]), int(r["n"]), float(r["sq"])) for r in drift_rows
     ]
-    _, kept_rows = run_concurrently(
-        lambda: rewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(idx_dir),
-        lambda: rewrite.select("cell").distinct().collect(),  # ≤ |affected|
-    )
+    rewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("cell").parquet(idx_dir)
+    kept_rows = rewrite.select("cell").distinct().collect()  # ≤ |affected|
     kept = {r["cell"] for r in kept_rows}
     emptied = [c for c in affected if c not in kept]
     for c in emptied:
@@ -2551,10 +2484,6 @@ def hierarchical_layers_nn_descent(
     The construction trades exactness for scalability —
     ``hierarchical_build_recall_audit`` grades the loss as exact
     integers against the exact-built layers at equal descent budget."""
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     vecs = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
 
     def _build_layer(spec: dict) -> tuple[dict, DataFrame, DataFrame]:
@@ -2581,17 +2510,7 @@ def hierarchical_layers_nn_descent(
         edges = refined.select("src", "dst").localCheckpoint()
         return (spec, members, edges)
 
-    # layers are INDEPENDENT builds over disjoint plan trees — their
-    # rounds of materialization barriers overlap on the thread pool
-    # (guide §2.6); each layer's round chain stays sequential inside
-    # its thunk, so every computed edge list is bit-identical to the
-    # sequential build
-    built: list[tuple[dict, DataFrame, DataFrame]] = run_concurrently(
-        *[lambda s=spec: _build_layer(s) for spec in layer_specs],
-        # orchestration-level nesting (e.g. under an audit's arm fork)
-        # measured good in r14 — keep the layers concurrent even there
-        when_nested="parallel",
-    )
+    built = [_build_layer(spec) for spec in layer_specs]
     edges0 = built[0][2]
     upper = [
         {

@@ -412,21 +412,14 @@ def word_count_upsert(
     )
     # per-epoch job folding (VERDICT r14 #2): one per-block count
     # aggregate replaces the affected-blocks collect AND the final
-    # latest.count(), and it overlaps the new-rows checkpoint (both
-    # read only the checkpointed latest); the deltas checkpoint
-    # overlaps the rewrite checkpoint (independent consumers of the
-    # checkpointed new_rows + the pre-overwrite store); the store
-    # write overlaps the kept-blocks collect. Guide §2.6; 8 sequential
-    # jobs → 4 slots, values unchanged.
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    block_counts, new_rows = run_concurrently(
-        lambda: latest.groupBy("block")
+    # latest.count()
+    block_counts = (
+        latest.groupBy("block")
         .agg(F.count(F.lit(1)).alias("n"))
-        .collect(),  # bounded ≤ n_blocks rows
-        lambda: latest.filter(F.col("text").isNotNull())
+        .collect()  # bounded ≤ n_blocks rows
+    )
+    new_rows = (
+        latest.filter(F.col("text").isNotNull())
         .select(
             "doc_id", "block",
             F.explode(F.split("text", " ")).alias("word"),
@@ -434,7 +427,7 @@ def word_count_upsert(
         .filter(F.col("word") != "")
         .groupBy("doc_id", "block", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(),
+        .localCheckpoint()
     )
     affected = sorted(int(r["block"]) for r in block_counts)
     batch_docs = sum(int(r["n"]) for r in block_counts)
@@ -457,30 +450,24 @@ def word_count_upsert(
         if old_rows is not None
         else spark.createDataFrame([], "word string, delta long")
     )
-    deltas, rewrite = run_concurrently(
-        # BOTH checkpoints run BEFORE the overwrite below invalidates
-        # the store lineage; they are independent consumers of the
-        # checkpointed new_rows + the pre-overwrite store scan
-        lambda: new_rows.select("word", F.col("cnt").alias("delta"))
+    # BOTH checkpoints run BEFORE the overwrite below invalidates the
+    # store lineage
+    deltas = (
+        new_rows.select("word", F.col("cnt").alias("delta"))
         .unionByName(neg)
         .groupBy("word")
         .agg(F.sum("delta").cast("long").alias("delta"))
         .filter(F.col("delta") != 0)
-        .localCheckpoint(),
-        lambda: (
-            new_rows.select("doc_id", "word", "cnt", "block")
-            if keep is None
-            else keep.unionByName(
-                new_rows.select("doc_id", "word", "cnt", "block")
-            )
-        ).localCheckpoint(),
+        .localCheckpoint()
     )
-    _, kept_rows = run_concurrently(
-        lambda: rewrite.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("block").parquet(store_dir),
-        lambda: rewrite.select("block").distinct().collect(),  # ≤ n_blocks
-    )
+    new_store_rows = new_rows.select("doc_id", "word", "cnt", "block")
+    rewrite = (
+        new_store_rows if keep is None else keep.unionByName(new_store_rows)
+    ).localCheckpoint()
+    rewrite.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("block").parquet(store_dir)
+    kept_rows = rewrite.select("block").distinct().collect()  # ≤ n_blocks
     kept_blocks = {r["block"] for r in kept_rows}
     emptied = [blk for blk in affected if blk not in kept_blocks]
     for blk in emptied:

@@ -86,8 +86,7 @@ _SUBSTRATES: dict[tuple[str, tuple], object] = {}
 
 def substrate(name: str, key: tuple, build: Callable[[], object]):
     """The cached substrate ``name`` for ``key``, built by ``build()``
-    on first use. Unlocked: a key's concurrent first uses each build it
-    and the last is kept."""
+    on first use."""
     if (name, key) not in _SUBSTRATES:
         _SUBSTRATES[(name, key)] = build()
     return _SUBSTRATES[(name, key)]

@@ -253,10 +253,6 @@ def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         multiprobe_cells,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % _GS_QMOD == 0)
 
@@ -302,9 +298,7 @@ def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # ground truth, graph-search arm, and IVF-multiprobe arm are
-    # independent materializations — overlap them (guide §2.6)
-    gt, gvis, icand = run_concurrently(_gt_arm, _graph_arm, _ivf_arm)
+    gt, gvis, icand = _gt_arm(), _graph_arm(), _ivf_arm()
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     gw = Window.partitionBy("qid").orderBy(
         F.col("score").desc(), F.col("nid").asc()
@@ -442,10 +436,6 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _gt_arm() -> DataFrame:
@@ -518,10 +508,8 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # the brute-force GT and the fused LSH seed round are independent
-    # heavy arms — materialize them concurrently (guide §2.6, VERDICT
-    # r14 #4); the final grading join is cheap and stays lazy
-    gt, seeds = run_concurrently(_gt_arm, _seed_arm)
+    # the final grading join is cheap and stays lazy
+    gt, seeds = _gt_arm(), _seed_arm()
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     hits = (
         seeds.join(gt, ["src", "dst"], "left_semi")
@@ -614,10 +602,6 @@ def _run_ivf_stream_loop(
         "label",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     idx_dir = os.path.join(work, "idx")
     plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
     b0 = (
@@ -637,28 +621,21 @@ def _run_ivf_stream_loop(
         .withColumn("seq", F.lit(1))
     )
     replay = os.path.join(work, "replay")
-
-    def _stage_replay() -> None:
-        # to_json omits NULL fields, so tombstones travel as
-        # {vec_id,label,seq}
-        chunks = [
-            [
-                r[0]
-                for r in b.select(
-                    F.to_json(F.struct("vec_id", "label", "v", "seq"))
-                ).collect()
-            ]
-            for b in (b0, b1)
+    dbl.filter(F.col("vec_id") % 3 == 0).select(
+        "vec_id", "v", F.col("label").alias("cell")
+    ).write.partitionBy("cell").parquet(idx_dir)
+    # to_json omits NULL fields, so tombstones travel as
+    # {vec_id,label,seq}
+    chunks = [
+        [
+            r[0]
+            for r in b.select(
+                F.to_json(F.struct("vec_id", "label", "v", "seq"))
+            ).collect()
         ]
-        _stage_chunks(chunks, replay)
-
-    # seed index write ∥ replay staging: independent (guide §2.6)
-    run_concurrently(
-        lambda: dbl.filter(F.col("vec_id") % 3 == 0).select(
-            "vec_id", "v", F.col("label").alias("cell")
-        ).write.partitionBy("cell").parquet(idx_dir),
-        _stage_replay,
-    )
+        for b in (b0, b1)
+    ]
+    _stage_chunks(chunks, replay)
     probes_dir = os.path.join(work, "probes")
 
     def cell_files() -> dict:
@@ -1035,25 +1012,17 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_pairs,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 2 == 0
     )
-    # exact-Jaccard ground truth and the banded LSH arm are independent
-    # heavy chains — materialize them concurrently (guide §2.6,
-    # VERDICT r14 #6); the four count aggregates stay lazy
-    gt, found = run_concurrently(
-        lambda: ngram_jaccard_pairs(
-            docs, k=3, threshold=_LSH_AUD_T
-        ).select("left_id", "right_id").localCheckpoint(),
-        lambda: minhash_lsh_pairs(
-            docs, num_hashes=16, num_bands=4, k=3,
-            jaccard_threshold=_LSH_AUD_T,
-        ).select("left_id", "right_id").localCheckpoint(),
-    )
+    # the four count aggregates stay lazy
+    gt = ngram_jaccard_pairs(
+        docs, k=3, threshold=_LSH_AUD_T
+    ).select("left_id", "right_id").localCheckpoint()
+    found = minhash_lsh_pairs(
+        docs, num_hashes=16, num_bands=4, k=3,
+        jaccard_threshold=_LSH_AUD_T,
+    ).select("left_id", "right_id").localCheckpoint()
     nt = gt.agg(F.count(F.lit(1)).alias("n_true"))
     nf = found.agg(F.count(F.lit(1)).alias("n_found"))
     nh = gt.join(found, ["left_id", "right_id"], "left_semi").agg(
@@ -1612,40 +1581,31 @@ def streaming_dsir_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     _stage_chunks(chunks, replay)
     reg = os.path.join(work, "registers")
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     def update_registers(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
         # one featurization per batch (bounded by |batch|), shared by
         # all three register writes instead of re-tokenizing per write
         feats = dsir_features(batch_df, "text", "doc_id").localCheckpoint()
-        # the three register writes are independent (disjoint outputs,
-        # same checkpointed features) — overlap them (guide §2.6)
-        run_concurrently(
-            # per-doc bucket multiplicities (doc-disjoint across batches)
-            lambda: feats.groupBy("doc_id", "bucket").agg(
-                F.count(F.lit(1)).cast("long").alias("n")
-            ).write.mode("overwrite").parquet(
-                os.path.join(reg, f"docfeats/epoch={ep}")
-            ),
-            # raw-side bucket registers (≤256 rows per epoch)
-            lambda: feats.groupBy("bucket").agg(
-                F.count(F.lit(1)).cast("long").alias("r_part")
-            ).write.mode("overwrite").parquet(
-                os.path.join(reg, f"raw/epoch={ep}")
-            ),
-            # target-side registers: featurization is per-doc, so the
-            # doc_id filter commutes through it — derive from the SAME
-            # checkpointed features instead of re-tokenizing the
-            # filtered batch (the second tokenization pass per epoch)
-            lambda: feats.filter(F.col("doc_id") % 25 == 0)
-            .groupBy("bucket").agg(
-                F.count(F.lit(1)).cast("long").alias("t_part")
-            ).write.mode("overwrite").parquet(
-                os.path.join(reg, f"tgt/epoch={ep}")
-            ),
+        # per-doc bucket multiplicities (doc-disjoint across batches)
+        feats.groupBy("doc_id", "bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
+        ).write.mode("overwrite").parquet(
+            os.path.join(reg, f"docfeats/epoch={ep}")
+        )
+        # raw-side bucket registers (≤256 rows per epoch)
+        feats.groupBy("bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("r_part")
+        ).write.mode("overwrite").parquet(
+            os.path.join(reg, f"raw/epoch={ep}")
+        )
+        # target-side registers: featurization is per-doc, so the
+        # doc_id filter commutes through it — derive from the SAME
+        # checkpointed features instead of re-tokenizing the
+        # filtered batch (the second tokenization pass per epoch)
+        feats.filter(F.col("doc_id") % 25 == 0).groupBy("bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("t_part")
+        ).write.mode("overwrite").parquet(
+            os.path.join(reg, f"tgt/epoch={ep}")
         )
         # all three writes are materialized; drop the checkpoint blocks
         # so a long-running stream doesn't accumulate one per epoch

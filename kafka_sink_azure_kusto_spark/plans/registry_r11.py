@@ -133,25 +133,15 @@ def _run_knn_graph_stream_loop(
     )
     vec_dir = os.path.join(work, "vecs")
     graph_dir = os.path.join(work, "graph")
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    # checkpoint the seed ONCE before forking (VERDICT r14 #1): the r14
-    # overlap had both thunks scan the same LAZY filter concurrently,
-    # so the cheap store write contended with the all-pairs graph
-    # build for the same scan instead of sharing a materialized frame
+    # checkpoint the seed once: the store write and the graph build
+    # both read it
     seed = dbl.filter(F.col("vec_id") % 3 == 0).localCheckpoint()
-    # seed vector store and seed exact graph are independent writes —
-    # overlap them (guide §2.6); on-disk state unchanged
-    run_concurrently(
-        lambda: seed.withColumn(
-            "block", (F.col("vec_id") % _KG_BLOCKS).cast("int")
-        ).write.partitionBy("block").parquet(vec_dir),
-        lambda: knn_graph_build_exact(
-            seed, k=_KG_K, vec_col="v", n_blocks=_KG_BLOCKS
-        ).write.partitionBy("block").parquet(graph_dir),
-    )
+    seed.withColumn(
+        "block", (F.col("vec_id") % _KG_BLOCKS).cast("int")
+    ).write.partitionBy("block").parquet(vec_dir)
+    knn_graph_build_exact(
+        seed, k=_KG_K, vec_col="v", n_blocks=_KG_BLOCKS
+    ).write.partitionBy("block").parquet(graph_dir)
 
     plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
     b0 = (
@@ -411,26 +401,18 @@ def graph_entry_strategy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE CAST(0.0 AS DOUBLE) END)"
         ).alias("v"),
     )
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     queries = dbl.filter(F.col("vec_id") % _ES_QMOD == _ES_QOFF)
     # entry budget ~10 regardless of corpus size (both engines derive
-    # the stride from the same COUNT); substrate, ground truth, and
-    # count are independent materializations — overlap them (guide
-    # §2.6), values unchanged
-    (n_dbl, edges, gt) = run_concurrently(
-        lambda: dbl.count(),
-        lambda: knn_graph_build_exact(
-            dbl, k=_ES_GK, vec_col="v", n_blocks=_KG_BLOCKS
-        ).select("src", "dst").localCheckpoint(),
-        lambda: brute_force_topk(
-            dbl, queries, k=_ES_K, vec_col="v", query_vec_col="v"
-        ).select(
-            F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
-        ).localCheckpoint(),
-    )
+    # the stride from the same COUNT)
+    n_dbl = dbl.count()
+    edges = knn_graph_build_exact(
+        dbl, k=_ES_GK, vec_col="v", n_blocks=_KG_BLOCKS
+    ).select("src", "dst").localCheckpoint()
+    gt = brute_force_topk(
+        dbl, queries, k=_ES_K, vec_col="v", query_vec_col="v"
+    ).select(
+        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
+    ).localCheckpoint()
     stride = max(1, n_dbl // 10)
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
 
@@ -474,11 +456,8 @@ def graph_entry_strategy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_col="label", vec_col="v", query_vec_col="v",
         centroid_round=6,  # both engines rank against 6-dp centroids
     )
-    # the two searched arms are independent barrier chains — overlap
-    stride_row, cent_row = run_concurrently(
-        lambda: arm("entry_stride", None),
-        lambda: arm("entry_centroid", cent_entries),
-    )
+    stride_row = arm("entry_stride", None)
+    cent_row = arm("entry_centroid", cent_entries)
     return stride_row.unionByName(cent_row)
 
 

@@ -1814,18 +1814,10 @@ def similarity_mih_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # the two corpora's arms are independent (each pays an eager
-    # sign-bit-code checkpoint + the query-cap guard inside
-    # binary_hamming_topk / brute_force_topk) — build them concurrently
-    # (guide §2.6, VERDICT r14 #6); the union stays lazy
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    arm_iso, arm_clu = run_concurrently(
-        lambda: arm("isotropic", iso), lambda: arm("clustered", clu)
-    )
-    return arm_iso.unionByName(arm_clu)
+    # each arm pays an eager sign-bit-code checkpoint + the query-cap
+    # guard inside binary_hamming_topk / brute_force_topk; the union
+    # stays lazy
+    return arm("isotropic", iso).unionByName(arm("clustered", clu))
 
 
 # ---------------------------------------------------------------------
@@ -1889,10 +1881,6 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     code_dir = os.path.join(work, "codes")
     seed = dbl.filter(F.col("vec_id") % 3 == 0)
     plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
@@ -1913,28 +1901,21 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         .withColumn("seq", F.lit(1))
     )
     replay = os.path.join(work, "replay")
-
-    def _stage_replay() -> None:
-        chunks = [
-            [
-                r[0]
-                for r in b.select(
-                    F.to_json(F.struct("vec_id", "v", "seq"))
-                ).collect()
-            ]
-            for b in (b0, b1)
+    sign_bit_words(seed, "v").withColumn(
+        "block", (F.col("vec_id") % 8).cast("int")
+    ).select("vec_id", "v", "w0", "w1", "block").write.partitionBy(
+        "block"
+    ).parquet(code_dir)
+    chunks = [
+        [
+            r[0]
+            for r in b.select(
+                F.to_json(F.struct("vec_id", "v", "seq"))
+            ).collect()
         ]
-        _stage_chunks(chunks, replay)
-
-    # seed code-store write ∥ replay staging: independent (guide §2.6)
-    run_concurrently(
-        lambda: sign_bit_words(seed, "v").withColumn(
-            "block", (F.col("vec_id") % 8).cast("int")
-        ).select("vec_id", "v", "w0", "w1", "block").write.partitionBy(
-            "block"
-        ).parquet(code_dir),
-        _stage_replay,
-    )
+        for b in (b0, b1)
+    ]
+    _stage_chunks(chunks, replay)
     probes_dir = os.path.join(work, "probes")
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:

@@ -37,9 +37,6 @@ from kafka_sink_azure_kusto_spark.plans.registry import (
     register,
     substrate,
 )
-from kafka_sink_azure_kusto_spark.functions.parallelism import (
-    run_concurrently,
-)
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------
@@ -200,36 +197,25 @@ def _run_pq_stream_loop(
         .withColumn("seq", F.lit(1))
     )
     replay = os.path.join(work, "replay")
-
-    def _stage_replay() -> None:
-        # to_json omits NULL fields, so tombstones travel as
-        # {vec_id,seq}
-        chunks = [
-            [
-                r[0]
-                for r in b.select(
-                    F.to_json(F.struct("vec_id", "v", "seq"))
-                ).collect()
-            ]
-            for b in (b0, b1)
+    # seed store write and seed drift-register write, both off the
+    # checkpointed seed codes
+    seed_codes.write.partitionBy("block").parquet(code_dir)
+    seed_codes.groupBy("m").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("qerr").alias("sum_qerr"),
+    ).write.parquet(os.path.join(reg_dir, "seed"))
+    # to_json omits NULL fields, so tombstones travel as
+    # {vec_id,seq}
+    chunks = [
+        [
+            r[0]
+            for r in b.select(
+                F.to_json(F.struct("vec_id", "v", "seq"))
+            ).collect()
         ]
-        _stage_chunks(chunks, replay)
-
-    # seed store write, seed drift-register write (both off the
-    # checkpointed seed codes) and the replay staging collects are
-    # independent — overlap them (guide §2.6); on-disk state unchanged
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    run_concurrently(
-        lambda: seed_codes.write.partitionBy("block").parquet(code_dir),
-        lambda: seed_codes.groupBy("m").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("qerr").alias("sum_qerr"),
-        ).write.parquet(os.path.join(reg_dir, "seed")),
-        _stage_replay,
-    )
+        for b in (b0, b1)
+    ]
+    _stage_chunks(chunks, replay)
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
@@ -502,27 +488,19 @@ def _hl_layers(dbl, memo_key: tuple[str, str] | None = None):
         knn_graph_build_exact,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     if memo_key is not None:
         return substrate("hl_layers", memo_key, lambda: _hl_layers(dbl))
     e2 = dbl.filter(F.col("vec_id") % _HL_S2 == 0)
     e1 = dbl.filter(F.col("vec_id") % _HL_S1 == 0)
-    # the three exact layer builds are independent all-pairs jobs —
-    # materialize them concurrently (guide §2.6); values unchanged
-    edges2, edges1, edges0 = run_concurrently(
-        lambda: knn_graph_build_exact(e2, k=_HL_GK1, vec_col="v")
-        .select("src", "dst").localCheckpoint(),
-        lambda: knn_graph_build_exact(e1, k=_HL_GK1, vec_col="v")
-        .select("src", "dst").localCheckpoint(),
-        lambda: knn_graph_build_exact(dbl, k=_HL_GK0, vec_col="v")
-        .select("src", "dst").localCheckpoint(),
-        # orchestration-level nesting (called under an audit's arm
-        # fork) measured good in r14 — keep the builds concurrent
-        when_nested="parallel",
-    )
+    edges2 = knn_graph_build_exact(e2, k=_HL_GK1, vec_col="v").select(
+        "src", "dst"
+    ).localCheckpoint()
+    edges1 = knn_graph_build_exact(e1, k=_HL_GK1, vec_col="v").select(
+        "src", "dst"
+    ).localCheckpoint()
+    edges0 = knn_graph_build_exact(dbl, k=_HL_GK0, vec_col="v").select(
+        "src", "dst"
+    ).localCheckpoint()
     mk = lambda df: df.select(F.col("vec_id").alias("nid"))  # noqa: E731
     return (edges0, [
         {"members": mk(e2), "edges": edges2,
@@ -672,25 +650,16 @@ def graph_hierarchy_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         hierarchical_graph_search_topk,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     dbl, queries = _hl_corpus(spark, sf_dir)
-    # layer substrate, ground truth, and the corpus count are
-    # independent materializations — overlap them (guide §2.6)
-    (layer_sub, gt, n_dbl) = run_concurrently(
-        lambda: _hl_layers(
-            dbl, memo_key=(spark.sparkContext.applicationId, sf_dir)
-        ),
-        lambda: brute_force_topk(
-            dbl, queries, k=_HL_AK, vec_col="v", query_vec_col="v"
-        ).select(
-            F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
-        ).localCheckpoint(),
-        lambda: dbl.count(),
+    edges0, layers = _hl_layers(
+        dbl, memo_key=(spark.sparkContext.applicationId, sf_dir)
     )
-    edges0, layers = layer_sub
+    gt = brute_force_topk(
+        dbl, queries, k=_HL_AK, vec_col="v", query_vec_col="v"
+    ).select(
+        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
+    ).localCheckpoint()
+    n_dbl = dbl.count()
     stride = max(1, n_dbl // 10)
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
 
@@ -753,10 +722,7 @@ def graph_hierarchy_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(hier_cand)
         ).select("strategy", "n_candidates", "n_hits", "n_possible", "recall")
 
-    # the two search arms (each a chain of eager descent barriers +
-    # a graded checkpoint) are independent — overlap them
-    flat_row, hier_row = run_concurrently(_flat_arm, _hier_arm)
-    return flat_row.unionByName(hier_row)
+    return _flat_arm().unionByName(_hier_arm())
 
 
 # ---------------------------------------------------------------------
@@ -1073,22 +1039,6 @@ def streaming_ivfpq_index_maintenance(
 
     cb = spark.createDataFrame(cb_rows, cb_schema)
     seed = dbl.filter(F.col("vec_id") % 3 == 0)
-
-    def _write_seed_store() -> None:
-        (
-            S.pq_encode(seed, cb, _PQ_M, _PQ_SUB, vec_col="v")
-            .join(
-                F.broadcast(
-                    seed.select("vec_id", F.col("label").alias("cell"))
-                ),
-                "vec_id",
-            )
-            .select("vec_id", "m", "code", "qerr", "cell")
-            .localCheckpoint()
-            .write.partitionBy("cell")
-            .parquet(idx_dir)
-        )
-
     plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
     b0 = (
         dbl.filter(F.col("vec_id") % 3 == 1)
@@ -1113,11 +1063,19 @@ def streaming_ivfpq_index_maintenance(
         ]
         for b in (b0, b1)
     ]
-    replay = os.path.join(work, "replay")
-    # seed-store write ∥ replay staging: independent (guide §2.6)
-    run_concurrently(
-        _write_seed_store, lambda: _stage_chunks(chunks, replay)
+    (
+        S.pq_encode(seed, cb, _PQ_M, _PQ_SUB, vec_col="v")
+        .join(
+            F.broadcast(seed.select("vec_id", F.col("label").alias("cell"))),
+            "vec_id",
+        )
+        .select("vec_id", "m", "code", "qerr", "cell")
+        .localCheckpoint()
+        .write.partitionBy("cell")
+        .parquet(idx_dir)
     )
+    replay = os.path.join(work, "replay")
+    _stage_chunks(chunks, replay)
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
@@ -1227,10 +1185,6 @@ def streaming_hierarchical_graph_maintenance(
         ("l1", _HL_S1, _HL_GK1),
         ("l2", _HL_S2, _HL_GK1),
     ]
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
     seed = dbl.filter(F.col("vec_id") % 3 == 0)
     dirs = {
         name: (os.path.join(work, name, "vecs"),
@@ -1238,28 +1192,15 @@ def streaming_hierarchical_graph_maintenance(
         for name, _, _ in layers_spec
     }
 
-    def _seed_layer(name: str, stride: int, deg: int) -> None:
+    for name, stride, deg in layers_spec:
         vdir, gdir = dirs[name]
         members = seed.filter(F.col("vec_id") % stride == 0)
-        # the vector-store write and the exact-graph build+write are
-        # independent jobs over the same lazy member subset; nested
-        # under the 3-way layer fork below — the 3×2 fan-out measured
-        # good in r14, so keep it concurrent
-        run_concurrently(
-            lambda: members.withColumn(
-                "block", (F.col("vec_id") % n_blocks).cast("int")
-            ).write.partitionBy("block").parquet(vdir),
-            lambda: knn_graph_build_exact(
-                members, k=deg, vec_col="v", n_blocks=n_blocks
-            ).write.partitionBy("block").parquet(gdir),
-            when_nested="parallel",
-        )
-
-    # the three layer stores are independent — overlap their seed
-    # builds (guide §2.6); on-disk state is byte-equivalent
-    run_concurrently(
-        *[lambda sp=sp: _seed_layer(*sp) for sp in layers_spec]
-    )
+        members.withColumn(
+            "block", (F.col("vec_id") % n_blocks).cast("int")
+        ).write.partitionBy("block").parquet(vdir)
+        knn_graph_build_exact(
+            members, k=deg, vec_col="v", n_blocks=n_blocks
+        ).write.partitionBy("block").parquet(gdir)
 
     plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
     b0 = (
@@ -1284,19 +1225,14 @@ def streaming_hierarchical_graph_maintenance(
     _stage_chunks(chunks, replay)
 
     def upsert_layers(batch_df, epoch_id: int) -> None:
-        def one(name: str, stride: int, deg: int) -> None:
-            sub = batch_df.filter(F.col("vec_id") % stride == 0)
+        # each layer upserts its OWN pair of stores (disjoint dirs)
+        for name, stride, deg in layers_spec:
             vdir, gdir = dirs[name]
             knn_graph_upsert(
-                sub, gdir, vdir, k=deg, n_blocks=n_blocks,
+                batch_df.filter(F.col("vec_id") % stride == 0),
+                gdir, vdir, k=deg, n_blocks=n_blocks,
                 id_col="vec_id", vec_col="v", seq_col="seq",
             )
-
-        # each layer upserts its OWN pair of stores (disjoint dirs) —
-        # the per-batch frontier recomputes are independent job chains,
-        # so overlap them (guide §2.6); per-layer store state after the
-        # batch is identical to the sequential application
-        run_concurrently(*[lambda sp=sp: one(*sp) for sp in layers_spec])
 
     stream = (
         spark.readStream.schema("vec_id long, v array<double>, seq int")
@@ -1519,23 +1455,13 @@ def pq_retrain_improvement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))"),
         ).otherwise(F.col("v")),
     ).localCheckpoint()
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
+    stale_cb = pq_train(
+        dbl, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
+        vec_col="v", round_means=_PT_ROUND,
     )
-
-    # the stale and retrained trainings are independent iterate-collect
-    # chains (pq_train collects the tiny codebook per Lloyd iteration)
-    # — overlap them (guide §2.6); each follows its own deterministic
-    # trajectory, values unchanged
-    stale_cb, retr_cb = run_concurrently(
-        lambda: pq_train(
-            dbl, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
-            vec_col="v", round_means=_PT_ROUND,
-        ),
-        lambda: pq_train(
-            fs, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
-            vec_col="v", round_means=_PT_ROUND,
-        ),
+    retr_cb = pq_train(
+        fs, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
+        vec_col="v", round_means=_PT_ROUND,
     )
 
     def arm(cb, col):

@@ -36,9 +36,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.functions.parallelism import (
-    run_concurrently,
-)
 from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
@@ -173,27 +170,21 @@ def _np_store(spark: SparkSession, sf_dir: str):
     )
     store = os.path.join(_workdir("np_codes_"), "codes")
 
-    # store write, centroid build, and the query checkpoint are
-    # independent materializations — overlap them (guide §2.6)
-    _, cents, queries = run_concurrently(
-        lambda: (
-            S.pq_encode(dbl, cb, _PQ_M, _PQ_SUB, vec_col="v")
-            .join(
-                F.broadcast(
-                    dbl.select("vec_id", F.col("label").alias("cell"))
-                ),
-                "vec_id",
-            )
-            .select("vec_id", "m", "code", "cell")
-            .write.partitionBy("cell")
-            .parquet(store)
-        ),
-        lambda: S.cell_centroids(dbl, cell_col="label", vec_col="v").select(
-            "cell",
-            F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
-        ).localCheckpoint(),
-        lambda: dbl.filter(F.col("vec_id") < _NP_NQ).localCheckpoint(),
+    (
+        S.pq_encode(dbl, cb, _PQ_M, _PQ_SUB, vec_col="v")
+        .join(
+            F.broadcast(dbl.select("vec_id", F.col("label").alias("cell"))),
+            "vec_id",
+        )
+        .select("vec_id", "m", "code", "cell")
+        .write.partitionBy("cell")
+        .parquet(store)
     )
+    cents = S.cell_centroids(dbl, cell_col="label", vec_col="v").select(
+        "cell",
+        F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
+    ).localCheckpoint()
+    queries = dbl.filter(F.col("vec_id") < _NP_NQ).localCheckpoint()
     codes = spark.read.parquet(store)
     return dbl, cb, codes, cents, queries
 
@@ -330,17 +321,11 @@ def adc_nprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # ground truth and the three arms' probed-cell checkpoints are
-    # independent — overlap them (guide §2.6)
-    gt, *qcells_by_arm = run_concurrently(
-        _gt_arm,
-        *[
-            lambda np_=np_: S.multiprobe_cells(
-                qdf, cents, np_
-            ).localCheckpoint()
-            for np_ in _NP_ARMS
-        ],
-    )
+    gt = _gt_arm()
+    qcells_by_arm = [
+        S.multiprobe_cells(qdf, cents, np_).localCheckpoint()
+        for np_ in _NP_ARMS
+    ]
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     cell_of = dbl.select("vec_id", F.col("label").alias("cell"))
     rows = None
@@ -682,31 +667,19 @@ def hierarchical_build_recall_audit(
         hierarchical_graph_search_topk,
     )
 
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    # the three substrate arms are independent materializations over
-    # the same lazy corpus transform — overlap them (guide §2.6): the
-    # nn-descent build, the exact all-pairs build, and the brute-force
-    # ground truth each end in their own localCheckpoint barriers, and
-    # sequential scheduling left the box idle through each one's tail.
-    # _hl_corpus is a pure lazy transform, so every arm derives the
-    # IDENTICAL corpus plan; computed values are unchanged.
+    # the nn-descent build, the exact all-pairs build, and the
+    # brute-force ground truth; _hl_corpus is a pure lazy transform, so
+    # all three derive the IDENTICAL corpus plan
     dbl0, queries0 = _hl_corpus(spark, sf_dir)
-    (dbl_sub, x_layers, gt) = run_concurrently(
-        lambda: _hb_substrate(spark, sf_dir),
-        lambda: _hl_layers(
-            dbl0, memo_key=(spark.sparkContext.applicationId, sf_dir)
-        ),
-        lambda: brute_force_topk(
-            dbl0, queries0, k=_HL_AK, vec_col="v", query_vec_col="v"
-        ).select(
-            F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
-        ).localCheckpoint(),
+    dbl, queries, edges0n, layersn = _hb_substrate(spark, sf_dir)
+    edges0x, layersx = _hl_layers(
+        dbl0, memo_key=(spark.sparkContext.applicationId, sf_dir)
     )
-    dbl, queries, edges0n, layersn = dbl_sub
-    edges0x, layersx = x_layers
+    gt = brute_force_topk(
+        dbl0, queries0, k=_HL_AK, vec_col="v", query_vec_col="v"
+    ).select(
+        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
+    ).localCheckpoint()
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
 
     def grade(name: str, edges0, layers) -> DataFrame:
@@ -746,13 +719,9 @@ def hierarchical_build_recall_audit(
             )
         )
 
-    # the two graded descents are independent (each localCheckpoints
-    # its own visited set) — overlap them too
-    g_exact, g_nnd = run_concurrently(
-        lambda: grade("exact_built", edges0x, layersx),
-        lambda: grade("nn_descent_built", edges0n, layersn),
+    return grade("exact_built", edges0x, layersx).unionByName(
+        grade("nn_descent_built", edges0n, layersn)
     )
-    return g_exact.unionByName(g_nnd)
 
 
 # =====================================================================
@@ -931,22 +900,20 @@ def _run_vocab_stream_loop(
     # the seed register write and the seed-vocabulary train both
     # consume the CHECKPOINTED deltas — derive the vocabulary from the
     # checkpoint directly (a (word string, delta long) parquet
-    # round-trip is exact, so values are unchanged) and overlap the
-    # two writes (guide §2.6) instead of write → read-back → train
+    # round-trip is exact, so values are unchanged) instead of
+    # write → read-back → train
     seedw = st["deltas"].select(
         "word",
         F.col("delta").alias("wcnt"),
         F.length("word").cast("int").alias("wlen"),
     )
-    run_concurrently(
-        lambda: st["deltas"].write.parquet(os.path.join(reg, "hist_seed")),
-        lambda: U.lp_table(
-            U.seed_substring_counts(
-                seedw.filter(F.col("wlen") <= _VB_MAXW), _VB_MAXP
-            ),
-            _VB_CAP,
-        ).write.parquet(vocab_dir),
-    )
+    st["deltas"].write.parquet(os.path.join(reg, "hist_seed"))
+    U.lp_table(
+        U.seed_substring_counts(
+            seedw.filter(F.col("wlen") <= _VB_MAXW), _VB_MAXP
+        ),
+        _VB_CAP,
+    ).write.parquet(vocab_dir)
 
     def oov_stats(words: DataFrame, lp: DataFrame) -> DataFrame:
         """(n_tokens, n_oov) of a word histogram under piece table
@@ -985,60 +952,41 @@ def _run_vocab_stream_loop(
         .withColumn("seq", F.lit(1))
     )
     replay = os.path.join(work, "replay")
-
-    def _stage_replay() -> None:
-        chunks = [
-            [
-                r[0]
-                for r in b.select(
-                    F.to_json(F.struct("doc_id", "text", "seq"))
-                ).collect()
-            ]
-            for b in (b0, b1)
+    # the seed coverage register reads the persisted seed vocab
+    oov_stats(seedw, lp_seed).write.parquet(os.path.join(reg, "oov_seed"))
+    chunks = [
+        [
+            r[0]
+            for r in b.select(
+                F.to_json(F.struct("doc_id", "text", "seq"))
+            ).collect()
         ]
-        _stage_chunks(chunks, replay)
-
-    # the seed coverage-register write (reads the persisted seed vocab)
-    # and the replay staging collects are independent — overlap them
-    # (guide §2.6); on-disk registers unchanged
-    run_concurrently(
-        lambda: oov_stats(seedw, lp_seed).write.parquet(
-            os.path.join(reg, "oov_seed")
-        ),
-        _stage_replay,
-    )
+        for b in (b0, b1)
+    ]
+    _stage_chunks(chunks, replay)
 
     def update_vocab(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
         mb = batch_df.sparkSession
-
-        def _upsert_store() -> None:
-            st = U.word_count_upsert(
-                batch_df, store, n_blocks=_VB_BLOCKS, seq_col="seq"
-            )
-            st["deltas"].write.mode("overwrite").parquet(
-                os.path.join(reg, f"hist_stream/epoch={ep}")
-            )
-
-        def _coverage_register() -> None:
-            # per-epoch coverage registers: the batch's LIVE text under
-            # the PERSISTED seed vocabulary (the serving store, not a
-            # recompute) — reads only the batch + the seed vocab store,
-            # so it shares no state with the doc-store upsert
-            w = Window.partitionBy("doc_id").orderBy(F.col("seq").desc())
-            live = (
-                batch_df.withColumn("_r", F.row_number().over(w))
-                .filter((F.col("_r") == 1) & F.col("text").isNotNull())
-                .drop("_r")
-            )
-            bw = U.word_counts(live)
-            oov_stats(bw, mb.read.parquet(vocab_dir)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(reg, f"oov_stream/epoch={ep}"))
-
-        # independent per-batch chains (disjoint inputs/outputs) —
-        # overlap them (guide §2.6)
-        run_concurrently(_upsert_store, _coverage_register)
+        st = U.word_count_upsert(
+            batch_df, store, n_blocks=_VB_BLOCKS, seq_col="seq"
+        )
+        st["deltas"].write.mode("overwrite").parquet(
+            os.path.join(reg, f"hist_stream/epoch={ep}")
+        )
+        # per-epoch coverage registers: the batch's LIVE text under
+        # the PERSISTED seed vocabulary (the serving store, not a
+        # recompute) — reads only the batch + the seed vocab store,
+        # so it shares no state with the doc-store upsert
+        w = Window.partitionBy("doc_id").orderBy(F.col("seq").desc())
+        live = (
+            batch_df.withColumn("_r", F.row_number().over(w))
+            .filter((F.col("_r") == 1) & F.col("text").isNotNull())
+            .drop("_r")
+        )
+        oov_stats(U.word_counts(live), mb.read.parquet(vocab_dir)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(reg, f"oov_stream/epoch={ep}"))
 
     stream = (
         spark.readStream.schema("doc_id long, text string, seq int")

@@ -28,9 +28,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.functions.parallelism import (
-    run_concurrently,
-)
 from kafka_sink_azure_kusto_spark.plans.registry import (
     _workdir,
     memo_substrate,
@@ -173,17 +170,11 @@ def _sv_base(spark: SparkSession, sf_dir: str):
     from kafka_sink_azure_kusto_spark.functions import similarity as S
 
     dbl, _ = _hl_corpus(spark, sf_dir)
-    # the centroid build and the query checkpoint are independent —
-    # overlap them (guide §2.6); "parallel" when nested under
-    # _sv_store's train ∥ base fork (bounded 1+2 fan-out)
-    cents, queries = run_concurrently(
-        lambda: S.cell_centroids(dbl, cell_col="label", vec_col="v").select(
-            "cell",
-            F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
-        ).localCheckpoint(),
-        lambda: dbl.filter(F.col("vec_id") < _SV_NQ).localCheckpoint(),
-        when_nested="parallel",
-    )
+    cents = S.cell_centroids(dbl, cell_col="label", vec_col="v").select(
+        "cell",
+        F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
+    ).localCheckpoint()
+    queries = dbl.filter(F.col("vec_id") < _SV_NQ).localCheckpoint()
     return dbl, cents, queries
 
 
@@ -199,32 +190,21 @@ def _sv_store(spark: SparkSession, sf_dir: str):
 
     dbl, _ = _hl_corpus(spark, sf_dir)
     store = os.path.join(_workdir("sv_codes_"), "codes")
-
-    def _train_and_write() -> DataFrame:
-        cb = S.pq_train(
-            dbl, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
-            vec_col="v", round_means=_PT_ROUND,
-        ).localCheckpoint()
-        (
-            S.pq_encode(dbl, cb, _PQ_M, _PQ_SUB, vec_col="v")
-            .join(
-                F.broadcast(
-                    dbl.select("vec_id", F.col("label").alias("cell"))
-                ),
-                "vec_id",
-            )
-            .select("vec_id", "m", "code", "cell")
-            .write.partitionBy("cell")
-            .parquet(store)
+    cb = S.pq_train(
+        dbl, _PQ_M, _PQ_SUB, num_codes=_PQ_CODES, iters=_PT_ITERS,
+        vec_col="v", round_means=_PT_ROUND,
+    ).localCheckpoint()
+    (
+        S.pq_encode(dbl, cb, _PQ_M, _PQ_SUB, vec_col="v")
+        .join(
+            F.broadcast(dbl.select("vec_id", F.col("label").alias("cell"))),
+            "vec_id",
         )
-        return cb
-
-    # the train→encode→write chain and the base build (centroids ∥
-    # queries) are independent — overlap them (guide §2.6)
-    cb, (_, cents, queries) = run_concurrently(
-        _train_and_write,
-        lambda: _sv_base(spark, sf_dir),
+        .select("vec_id", "m", "code", "cell")
+        .write.partitionBy("cell")
+        .parquet(store)
     )
+    _, cents, queries = _sv_base(spark, sf_dir)
     codes = spark.read.parquet(store)
     return dbl, cb, codes, cents, queries
 
@@ -361,28 +341,24 @@ def ivfpq_serving_recall_audit(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    # brute-force GT and the probed-cell checkpoint are independent —
-    # overlap them (guide §2.6)
-    gt, qcells = run_concurrently(
-        lambda: (
-            dbl.select("vec_id", F.col("v").alias("cv"))
-            .crossJoin(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("_d2", d2)
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("_d2").asc(), F.col("vec_id").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rnk") <= _SV_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .localCheckpoint()
-        ),
-        lambda: S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint(),
+    gt = (
+        dbl.select("vec_id", F.col("v").alias("cv"))
+        .crossJoin(F.broadcast(qdf))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("_d2", d2)
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("_d2").asc(), F.col("vec_id").asc()
+                )
+            ),
+        )
+        .filter(F.col("rnk") <= _SV_K)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .localCheckpoint()
     )
+    qcells = S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint()
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     cell_of = dbl.select(
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell")
@@ -803,25 +779,18 @@ def ivfpq_residual_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # brute-force GT, the probed-cell checkpoint, and the WHOLE
-    # residual substrate build are independent given _sv_store —
-    # overlap them (guide §2.6), then the two shortlist checkpoints
-    gt, qcells, (_, rcb, rcodes, _, _) = run_concurrently(
-        _gt_arm,
-        lambda: S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint(),
-        lambda: _rs_store(spark, sf_dir),
-    )
+    gt = _gt_arm()
+    qcells = S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint()
+    _, rcb, rcodes, _, _ = _rs_store(spark, sf_dir)
     tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-    plain_short, res_short = run_concurrently(
-        lambda: S.pq_adc_topk(
-            pcodes, queries, pcb, _PQ_M, _PQ_SUB, k=max(_RS_BUDGETS),
-            query_vec_col="v", codes_cell_col="cell", query_cells=qcells,
-        ).select("query_id", "neighbor_id", "rank").localCheckpoint(),
-        lambda: S.ivf_pq_residual_topk(
-            rcodes, queries, rcb, cents, _PQ_M, _PQ_SUB,
-            n_probe=_SV_PROBE, k=max(_RS_BUDGETS), query_vec_col="v",
-        ).select("query_id", "neighbor_id", "rank").localCheckpoint(),
-    )
+    plain_short = S.pq_adc_topk(
+        pcodes, queries, pcb, _PQ_M, _PQ_SUB, k=max(_RS_BUDGETS),
+        query_vec_col="v", codes_cell_col="cell", query_cells=qcells,
+    ).select("query_id", "neighbor_id", "rank").localCheckpoint()
+    res_short = S.ivf_pq_residual_topk(
+        rcodes, queries, rcb, cents, _PQ_M, _PQ_SUB,
+        n_probe=_SV_PROBE, k=max(_RS_BUDGETS), query_vec_col="v",
+    ).select("query_id", "neighbor_id", "rank").localCheckpoint()
     rows = None
     for enc, short in (("plain", plain_short), ("residual", res_short)):
         for b in _RS_BUDGETS:

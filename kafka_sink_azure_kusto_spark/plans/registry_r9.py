@@ -424,17 +424,8 @@ def bucketed_colocation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("okey"), "o_orderstatus"
     )
-    from kafka_sink_azure_kusto_spark.functions.parallelism import (
-        run_concurrently,
-    )
-
-    # the two bucketed writes are independent jobs over disjoint tables
-    # and directories — overlap them (guide §2.6) so the orders write
-    # back-fills the tail of the lineitem write
-    run_concurrently(
-        lambda: write_bucketed(li, "li_colo", "okey", num_buckets=8),
-        lambda: write_bucketed(orders, "o_colo", "okey", num_buckets=8),
-    )
+    write_bucketed(li, "li_colo", "okey", num_buckets=8)
+    write_bucketed(orders, "o_colo", "okey", num_buckets=8)
     joined = bucketed_join(spark, "li_colo", "o_colo", on="okey")
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_items"),

@@ -133,12 +133,16 @@ class LocalEmulatorBackend:
         self._lock = threading.Lock()
         # dedupe_replays upgrades at-least-once to effectively-once: the
         # staged file name (kafka_{topic}_{partition}_{offset}) is a
-        # deterministic replay key, so an ingest of an already-logged
+        # deterministic replay key, so an ingest of an already-ingested
         # file is acknowledged as Skipped instead of duplicated. The
         # real Kusto path gets the same property from ingest-by-tag
         # (ingestIfNotExists) — an improvement over the reference, which
         # accepts duplicates on rebalance (KustoSinkTask.java:422-424).
+        # The key is one marker file per name under the root, so every
+        # emulator over the same root (one per executor-side Python
+        # worker) sees the others' ingests.
         self._dedupe_replays = dedupe_replays
+        self._marker_dir = os.path.join(root, "_ingested")
         # Test hooks: fail the first N ingests transiently, or always
         # permanently — drives the R2/R3/R4 unit tests.
         self._fail_times = fail_times
@@ -149,6 +153,8 @@ class LocalEmulatorBackend:
         # kusto.validation.table.enable=true).
         self._strict = strict_validation
         os.makedirs(root, exist_ok=True)
+        if dedupe_replays:
+            os.makedirs(self._marker_dir, exist_ok=True)
 
     # -- emulated cluster state (the IT's it-table-setup.kql analog) --------
     def create_table(self, db: str, table: str, streaming_policy: bool = False) -> None:
@@ -204,12 +210,6 @@ class LocalEmulatorBackend:
             if self._fail_times > 0:
                 self._fail_times -= 1
                 raise TransientIngestError("emulated transient failure")
-        if self._dedupe_replays:
-            name = os.path.basename(path)
-            with self._lock:  # log is appended under the lock by pool threads
-                replayed = any(e["file"] == name for e in self.ingest_log())
-            if replayed:
-                return IngestResult(status="Skipped", source_id="replay")
         source_id = str(uuid.uuid4())
         table_dir = os.path.join(self.root, props.database, props.table)
         os.makedirs(table_dir, exist_ok=True)
@@ -242,16 +242,27 @@ class LocalEmulatorBackend:
                     n_records = pq.ParquetFile(_io.BytesIO(blob)).metadata.num_rows
             except Exception:  # noqa: BLE001 — opaque payload (E4 passthrough)
                 n_records = 1
-            with self._lock:
+        else:
+            lines = _read_staged_lines(path)
+            blob = ("\n".join(lines) + ("\n" if lines else "")).encode("utf-8")
+            n_records = len(lines)
+        with self._lock:
+            marker = None
+            if self._dedupe_replays:
+                # O_EXCL claims the name atomically, across processes too
+                marker = os.path.join(self._marker_dir, os.path.basename(path))
+                try:
+                    os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                except FileExistsError:
+                    return IngestResult(status="Skipped", source_id="replay")
+            try:
                 with open(out, "wb") as f:
                     f.write(blob)
                 self._append_log(path, props, n_records, source_id)
-            return IngestResult(status="Succeeded", source_id=source_id)
-        lines = _read_staged_lines(path)
-        with self._lock:
-            with open(out, "w", encoding="utf-8") as f:
-                f.write("\n".join(lines) + ("\n" if lines else ""))
-            self._append_log(path, props, len(lines), source_id)
+            except BaseException:
+                if marker is not None:  # a retry must not be skipped
+                    os.remove(marker)
+                raise
         return IngestResult(status="Succeeded", source_id=source_id)
 
     def _append_log(

@@ -1,6 +1,7 @@
 """Effectively-once upgrade (replay dedup at the backend) and K4
 deserialization-failure splitting."""
 
+import gzip
 import json
 
 from pyspark.sql import functions as F
@@ -8,6 +9,7 @@ from pyspark.sql import functions as F
 from kafka_sink_azure_kusto_spark.config import KustoSinkConfig, TopicToTableMapping
 from kafka_sink_azure_kusto_spark.functions.filters import split_decode_failures
 from kafka_sink_azure_kusto_spark.streaming import LocalEmulatorBackend, KustoSparkSink
+from kafka_sink_azure_kusto_spark.streaming.backends import IngestionProperties
 
 
 def test_replay_dedupe_gives_effectively_once(spark, tmp_path):
@@ -29,6 +31,22 @@ def test_replay_dedupe_gives_effectively_once(spark, tmp_path):
     assert len(backend.table_rows("db", "t")) == 6  # not 12
     statuses = [e for e in backend.ingest_log()]
     assert len(statuses) == 1  # second ingest skipped, not re-logged
+
+
+def test_replay_dedupe_spans_emulators_on_one_root(tmp_path):
+    # executor-side ingest builds one emulator per Python worker over a
+    # shared root: a replay must be skipped by whichever one sees it
+    staged = tmp_path / "kafka_t1_0_0.json.gz"
+    with gzip.open(staged, "wt", encoding="utf-8") as f:
+        f.write('{"i": 0}\n{"i": 1}\n')
+    props = IngestionProperties(database="db", table="t", format="json")
+    root = str(tmp_path / "kusto")
+    first = LocalEmulatorBackend(root, dedupe_replays=True)
+    second = LocalEmulatorBackend(root, dedupe_replays=True)
+    assert first.ingest_file(str(staged), props).status == "Succeeded"
+    assert second.ingest_file(str(staged), props).status == "Skipped"
+    assert len(second.table_rows("db", "t")) == 2
+    assert [e["file"] for e in second.ingest_log()] == [staged.name]
 
 
 def test_replay_dedupe_off_duplicates(spark, tmp_path):

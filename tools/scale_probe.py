@@ -7,10 +7,12 @@ Usage: python tools/scale_probe.py [--sizes 5000,20000,80000]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool lives in, not an installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -6,6 +6,7 @@ Not a test — a manual driver; run: python tools/verify_drive.py
 """
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -16,7 +17,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool lives in, not an installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_sink_azure_kusto_spark.config import KustoSinkConfig, TopicToTableMapping
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
