@@ -1244,25 +1244,12 @@ def _streaming_latency(spark, sf_dir: str) -> dict:
     }
 
 
-def _sink_throughput(
-    spark, sf_dir: str, warmup: bool = False, executor_side: bool = False
-) -> dict:
+def _sink_throughput(spark, sf_dir: str, executor_side: bool = False) -> dict:
     """Records/sec through the full sink data plane (encode → roll →
     stage → concurrent emulated ingest) on the events table — the
     connector-parity throughput number (the reference publishes none;
     BASELINE.md, so this self-ratchets round over round).
 
-    ``warmup``/``executor_side`` select the cold-start A/B arms
-    (VERDICT r11 #5): with ``warmup`` the sink's warmup batch (the
-    SAME ``_warmup`` method config.warmup_on_attach runs before
-    writeStream.start(); executor-safe path from commit 0c466a9) is
-    invoked EXPLICITLY before the measured first batch, and the arm is
-    recorded as ``explicit _warmup() call`` — this harness drives
-    ``process_batch`` directly (no attach(), no stream), so labeling
-    the arm ``warmup_on_attach`` would claim an attach-time overlap the
-    measurement never exercises (ADVICE r12 #4). In production the
-    flag-triggered run overlaps source initialization; its own wall
-    time is reported separately, not folded into cold.
     ``executor_side`` exercises the per-staging-group ingest path
     (backend built on the workers from a factory)."""
     import shutil
@@ -1295,10 +1282,6 @@ def _sink_throughput(
             ingest_url="https://ingest.example.kusto.windows.net",
             mappings=[pks.TopicToTableMapping(topic="*", db="db", table="t", format="json")],
             staging_dir=os.path.join(work, "staging"),
-            # attach() is never called here (process_batch is driven
-            # directly), so the config flag stays OFF — it would also
-            # double-warm if a later attach() were added (ADVICE r12 #4)
-            warmup_on_attach=False,
         )
         kdir = os.path.join(work, "kusto")
         if executor_side:
@@ -1309,11 +1292,6 @@ def _sink_throughput(
             )
         else:
             sink = KustoSparkSink(cfg, LocalEmulatorBackend(kdir))
-        warmup_sec = None
-        if warmup:
-            t0 = time.perf_counter()
-            sink._warmup(spark)
-            warmup_sec = round(time.perf_counter() - t0, 3)
         # Fresh-JVM methodology (VERDICT r8 #2): this section now runs
         # in its OWN subprocess JVM (see --section), so run 1 is a true
         # cold start (JVM + codegen) and runs 2-3 are steady state —
@@ -1336,12 +1314,7 @@ def _sink_throughput(
             "sec_steady": round(best, 3),
             "records_per_sec_cold": round(n / cold),
             "records_per_sec": round(n / best),
-            # honest arm label (ADVICE r12 #4): the measured path is an
-            # explicit _warmup() call before the first process_batch,
-            # NOT the attach-time flag (attach() is not exercised here)
-            "warmup": "explicit _warmup() call" if warmup else "none",
             "executor_side_ingest": executor_side,
-            "warmup_sec": warmup_sec,
             "timing": "fresh_jvm; run1=cold, steady=min_of_5",
         }
     finally:
@@ -1448,10 +1421,7 @@ def _section_main(section: str) -> int:
     if section == "sink":
         out = _sink_throughput(spark, sf_dir)
     elif section.startswith("sinkab:"):
-        _, w, side = section.split(":")
-        out = _sink_throughput(
-            spark, sf_dir, warmup=(w == "warm"), executor_side=(side == "exec")
-        )
+        out = _sink_throughput(spark, sf_dir, executor_side=section.endswith(":exec"))
     elif section == "latency":
         out = _streaming_latency(spark, sf_dir)
     elif section == "scale10x":
@@ -1579,14 +1549,10 @@ def main() -> int:
     # with spark.stop() + a load-settle guard; the stopped JVM's
     # resident heap and allocator state outlive the session.
     sink_tp = _fresh_jvm_section("sink")
-    # cold-start A/B (VERDICT r11 #5): warmup_on_attach × ingest side,
-    # each arm in its OWN fresh JVM so run 1 is a true cold start; the
-    # headline "sink" arm above stays warmup-off/driver-side for
-    # round-over-round continuity
-    sink_tp["cold_start_ab"] = {
-        arm: _fresh_jvm_section(f"sinkab:{arm}")
-        for arm in ("warm:driver", "nowarm:exec", "warm:exec")
-    }
+    # cold-start A/B (VERDICT r11 #5): executor-side ingest in its OWN
+    # fresh JVM so run 1 is a true cold start; the headline "sink" arm
+    # above is the driver-side arm
+    sink_tp["cold_start_ab"] = {"nowarm:exec": _fresh_jvm_section("sinkab:nowarm:exec")}
     latency = _fresh_jvm_section("latency")
 
     # Headline section in fresh-JVM SHARDS (VERDICT r9 #1): min-of-3

@@ -17,6 +17,28 @@ import json
 import sys
 
 
+def sdk_backend(kind: str, cfg):
+    """The azure-kusto-ingest backend for ``--backend queued|streaming``:
+    AAD application auth, and the proxy.host/proxy.port pair as an HTTP
+    proxy on every SDK client (KustoSinkTask.java:311-317)."""
+    from kafka_sink_azure_kusto_spark.streaming.backends import (
+        QueuedKustoBackend,
+        StreamingKustoBackend,
+    )
+
+    cls = QueuedKustoBackend if kind == "queued" else StreamingKustoBackend
+    return cls(
+        ingest_url=cfg.ingest_url,
+        query_url=cfg.query_url,
+        auth={
+            "app_id": cfg.auth_appid,
+            "app_key": cfg.auth_appkey,
+            "authority": cfg.auth_authority,
+        },
+        proxy_url=f"http://{cfg.proxy_host}:{cfg.proxy_port}" if cfg.proxy_host else None,
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="kafka_sink_azure_kusto_spark")
     ap.add_argument("--config", required=True, help="connector properties JSON file")
@@ -93,23 +115,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.backend == "emulator":
         backend = LocalEmulatorBackend(args.emulator_root)
     else:
-        auth = {
-            "app_id": cfg.auth_appid,
-            "app_key": cfg.auth_appkey,
-            "authority": cfg.auth_authority,
-        }
-        if args.backend == "queued":
-            from kafka_sink_azure_kusto_spark.streaming.backends import QueuedKustoBackend
-
-            backend = QueuedKustoBackend(
-                ingest_url=cfg.ingest_url, query_url=cfg.query_url, auth=auth
-            )
-        else:
-            from kafka_sink_azure_kusto_spark.streaming.backends import StreamingKustoBackend
-
-            backend = StreamingKustoBackend(
-                ingest_url=cfg.ingest_url, query_url=cfg.query_url, auth=auth
-            )
+        backend = sdk_backend(args.backend, cfg)
 
     sink = KustoSparkSink(cfg, backend)
     query = sink.attach(stream, available_now=args.available_now)

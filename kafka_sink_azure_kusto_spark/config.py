@@ -340,17 +340,6 @@ class KustoSinkConfig:
     # task — here a bounded pool over a batch's staged files).
     ingest_threads: int = 8
 
-    # Cold-path warmup (r10, PERF.md): drive a tiny synthesized batch
-    # through the full encode→roll→stage plan at attach() time, BEFORE
-    # the stream's first real batch, so JVM + whole-stage-codegen
-    # compilation is paid while the source is still initializing.
-    # Measured at sf0.1: first real batch 25.7k → 47k rec/s (the
-    # remaining gap to the 104k steady state is data-volume JIT
-    # warming, not plan compilation). Default off: in backfill /
-    # availableNow runs the source has data immediately and the warmup
-    # is pure added latency.
-    warmup_on_attach: bool = False
-
     # V1–V4 validation queries at startup (default off, KustoSinkConfig.java:327-336).
     validate_tables: bool = False
 
@@ -470,9 +459,6 @@ class KustoSinkConfig:
         raise ConfigException(
             f"no mapping for topic {topic!r} and no '*' wildcard configured"
         )
-
-    def has_streaming_mapping(self) -> bool:
-        return any(m.streaming for m in self.mappings)
 
     @classmethod
     def from_connect_properties(cls, props: dict) -> "KustoSinkConfig":

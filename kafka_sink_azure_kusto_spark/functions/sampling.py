@@ -29,13 +29,6 @@ from pyspark.sql import functions as F
 _HEX8_SPAN = 16**8
 
 
-# Portable hex-digit primitive shared with the SimHash implementation —
-# ONE definition so the cross-engine oracle contract can't drift.
-from kafka_sink_azure_kusto_spark.functions.dedup import (  # noqa: E402
-    _hex_digit_value,
-)
-
-
 def md5_hex8_long(key: Column, salt: str = "") -> Column:
     """Value of the first 8 md5 hex digits of ``key || salt`` as a long
     (uniform over [0, 2^32)) — the shared integer primitive under the

@@ -887,13 +887,6 @@ def rerank_topk(
     )
 
 
-def _hex_digit_value(c: Column) -> Column:
-    """Lowercase hex digit value via ascii() — dialect-portable (the SQL
-    oracle uses the identical CASE arithmetic)."""
-    a = F.ascii(c)
-    return F.when(a >= 97, a - 87).otherwise(a - 48)
-
-
 def hyperplane_component(p: int, d: Column) -> Column:
     """Deterministic pseudo-random hyperplane component in [-1, 1]:
     the first TWO hex digits of md5('p:d') as an integer in [0, 255],

@@ -325,7 +325,7 @@ class _KustoSdkBackendBase:
     query_url: Optional[str] = None
     auth: dict = field(default_factory=dict)
     # C4 — HTTP proxy for Kusto traffic (KustoSinkTask.java:311-317);
-    # passed to the Python SDK's client options at construction.
+    # set on every SDK client this backend builds (ingest and query).
     proxy_url: Optional[str] = None
     # V1–V4 seam: zero-arg callable building the ENGINE query client.
     # Tests inject a stub asserting the exact KQL; production defaults to
@@ -336,6 +336,11 @@ class _KustoSdkBackendBase:
         return None
 
     classify = staticmethod(classify_ingest_error)
+
+    def _proxied(self, client):
+        if self.proxy_url:
+            client.set_proxy(self.proxy_url)
+        return client
 
     # The four validation probes, verbatim from KustoSinkTask.java:46-50.
     FETCH_TABLE_COMMAND = "{table} | count"
@@ -378,7 +383,7 @@ class _KustoSdkBackendBase:
                     self.auth.get("app_key", ""),
                     self.auth.get("authority", ""),
                 )
-                client = KustoClient(kcsb)
+                client = self._proxied(KustoClient(kcsb))
             self._qclient = client
         return client
 
@@ -543,7 +548,7 @@ class QueuedKustoBackend(_KustoSdkBackendBase):
             self.auth.get("app_key", ""),
             self.auth.get("authority", ""),
         )
-        self._client = QueuedIngestClient(kcsb)
+        self._client = self._proxied(QueuedIngestClient(kcsb))
 
     # validate(): inherited V1–V4 KQL probes (_KustoSdkBackendBase)
 
@@ -612,7 +617,7 @@ class StreamingKustoBackend(_KustoSdkBackendBase):
             self.auth.get("app_key", ""),
             self.auth.get("authority", ""),
         )
-        self._client = ManagedStreamingIngestClient.from_engine_kcsb(kcsb)
+        self._client = self._proxied(ManagedStreamingIngestClient.from_engine_kcsb(kcsb))
 
     # validate(): inherited V1–V4 KQL probes (_KustoSdkBackendBase)
 

@@ -30,17 +30,6 @@ class SinkMetrics:
         with self._lock:
             setattr(self, name, getattr(self, name) + by)
 
-    def reset(self) -> None:
-        """Zero all six counters — used by the attach-time warmup so a
-        warmed sink reports the same metrics as a cold one."""
-        with self._lock:
-            self.records_written = 0
-            self.records_failed = 0
-            self.ingestion_attempts = 0
-            self.ingestion_successes = 0
-            self.ingestion_failures = 0
-            self.dlq_records_sent = 0
-
     def snapshot(self) -> dict[str, int]:
         """Same six names the MXBean exports (KustoSinkMetricsMXBean.java:6-19)."""
         with self._lock:

@@ -84,7 +84,6 @@ from kafka_sink_azure_kusto_spark.operators.batching import roll_batches
 from kafka_sink_azure_kusto_spark.streaming.backends import (
     IngestBackend,
     IngestionProperties,
-    IngestResult,
     classify_ingest_error,
 )
 from kafka_sink_azure_kusto_spark.streaming.metrics import SinkMetrics
@@ -312,18 +311,6 @@ def _epoch_writer(
         yield pa.RecordBatch.from_pylist(files, schema=_MANIFEST_SCHEMA)
 
     return write_partition
-
-
-class _WarmupNullBackend:
-    """Backend stand-in for the attach-time warmup batch: accepts every
-    staged file without recording anything, so the warmup leaves zero
-    trace in the real backend's tables/ingest log."""
-
-    def ingest_file(self, path: str, props: IngestionProperties):
-        return IngestResult(status="Succeeded", source_id="warmup")
-
-    def validate(self, props: IngestionProperties) -> None:
-        return None
 
 
 class KustoSparkSink:
@@ -688,8 +675,6 @@ class KustoSparkSink:
         trigger flushes whatever is buffered. ``available_now=True``
         drains the source then stops (backfill / test mode — the analog
         of the reference's drain-on-stop close path)."""
-        if self.config.warmup_on_attach:
-            self._warmup(stream_df.sparkSession)
         writer = stream_df.writeStream.queryName(query_name).foreachBatch(
             self.process_batch
         )
@@ -700,41 +685,6 @@ class KustoSparkSink:
         if self.config.checkpoint_location:
             writer = writer.option("checkpointLocation", self.config.checkpoint_location)
         return writer.start()
-
-    def _warmup(self, spark) -> None:
-        """Cold-path warmup (config.warmup_on_attach, PERF.md r10): a
-        tiny synthesized batch through the SAME encode→roll→stage→
-        ingest plan, staged under a throwaway epoch and scrubbed from
-        every observable (backend tables, ingest log, metrics) so a
-        warmed sink is indistinguishable from a cold one to callers.
-        Runs before writeStream.start(), overlapping source
-        initialization."""
-        tiny = spark.range(64).select(
-            F.col("id").cast("string").alias("key"),
-            F.to_json(F.struct(F.col("id"))).alias("value"),
-            F.lit(self.config.mappings[0].topic if self.config.mappings
-                  else "warmup").alias("topic"),
-            (F.col("id") % 4).cast("long").alias("partition"),
-            F.col("id").cast("long").alias("offset"),
-        )
-        # wildcard mappings replace '*' with a literal topic name
-        tiny = tiny.withColumn(
-            "topic",
-            F.when(F.col("topic") == "*", F.lit("warmup")).otherwise(
-                F.col("topic")
-            ),
-        )
-        saved = self.backend, self._backend_factory
-        try:
-            # Executor-side ingest ships self._backend_factory to the
-            # workers and never consults self.backend — so the warmup
-            # MUST clear it and ingest on the driver into the null backend,
-            # or the 64 synthetic records would land in the REAL table.
-            self.backend, self._backend_factory = _WarmupNullBackend(), None
-            self.process_batch(tiny, epoch_id=-1)
-        finally:
-            self.backend, self._backend_factory = saved
-            self.metrics.reset()
 
     @staticmethod
     def close(query, timeout_s: float = 60.0) -> None:

@@ -67,6 +67,62 @@ def test_replay_dedupe_off_duplicates(spark, tmp_path):
     assert len(backend.table_rows("db", "t")) == 6  # duplicates allowed
 
 
+def test_checkpoint_restart_ingests_only_new_chunks(spark, tmp_path):
+    # a restarted stream resumes from its checkpoint: the chunks the
+    # first run committed are not re-read, the chunks added since are
+    from kafka_sink_azure_kusto_spark.sources.replay import (
+        replay_stream,
+        stage_replay_dir,
+    )
+
+    schema = "key string, value string, topic string, partition long, offset long"
+
+    def records(lo, hi):
+        rows = [(f"k{i}", json.dumps({"i": i}), "t1", i % 2, i) for i in range(lo, hi)]
+        return spark.createDataFrame(rows, schema)
+
+    class Recording(LocalEmulatorBackend):
+        def __init__(self, root):
+            super().__init__(root, dedupe_replays=True)
+            self.calls = []
+
+        def ingest_file(self, path, props):
+            self.calls.append(path.rsplit("/", 1)[-1])
+            return super().ingest_file(path, props)
+
+    replay = str(tmp_path / "replay")
+    cfg = KustoSinkConfig(
+        ingest_url="https://x.kusto.windows.net",
+        mappings=[TopicToTableMapping(topic="t1", db="db", table="t", format="json")],
+        staging_dir=str(tmp_path / "staging"),
+        checkpoint_location=str(tmp_path / "ckpt"),
+    )
+
+    def run(name):
+        backend = Recording(str(tmp_path / "kusto"))
+        q = KustoSparkSink(cfg, backend).attach(
+            replay_stream(spark, replay), query_name=name, available_now=True
+        )
+        q.awaitTermination(120)
+        q.stop()
+        return backend
+
+    stage_replay_dir(records(0, 8), replay, chunks=2)
+    first = run("restart_1")
+    first_files = {e["file"] for e in first.ingest_log()}
+    assert sorted(first.calls) == sorted(first_files)
+
+    # new chunks land beside the committed ones (append keeps them)
+    records(8, 16).repartition(2).write.mode("append").json(replay)
+    second = run("restart_2")
+    assert second.calls and not set(second.calls) & first_files
+    new_entries = second.ingest_log()[len(first_files):]
+    assert sorted(e["file"] for e in new_entries) == sorted(second.calls)
+    assert sum(e["records"] for e in new_entries) == 8
+    rows = second.table_rows("db", "t")
+    assert sorted(rows) == sorted(json.dumps({"i": i}) for i in range(16))
+
+
 def test_split_decode_failures(spark):
     rows = [
         (0, '{"k": 1}'),

@@ -117,12 +117,9 @@ def test_executor_ingest_fail_mode_raises(spark, tmp_path):
         sink.process_batch(_records_df(spark, n=2), epoch_id=0)
 
 
-def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
-    # warmup_on_attach + executor-side ingest: the 64 synthetic warmup
-    # records must NOT reach the real backend through the executor-side
-    # backend_factory path — the warmup clears the factory and ingests
-    # on the driver into the null backend (executor mode ignores
-    # self.backend).
+def test_attach_with_executor_ingest_delivers_once(spark, tmp_path):
+    # attach() + executor-side ingest: the stream's batches reach the
+    # backend through backend_factory on the executors, each record once.
     from kafka_sink_azure_kusto_spark.sources.replay import (
         replay_stream,
         stage_replay_dir,
@@ -132,33 +129,22 @@ def test_warmup_with_executor_ingest_leaves_no_trace(spark, tmp_path):
     records = _records_df(spark, n=10)
     stage_replay_dir(records, str(tmp_path / "replay"), chunks=2)
     backend = LocalEmulatorBackend(root)
-
-    def factory():
-        return LocalEmulatorBackend(root)
-
     sink = KustoSparkSink(
-        _cfg(
-            tmp_path,
-            checkpoint_location=str(tmp_path / "ckpt"),
-            warmup_on_attach=True,
-        ),
+        _cfg(tmp_path, checkpoint_location=str(tmp_path / "ckpt")),
         backend,
-        backend_factory=factory,
+        backend_factory=lambda: LocalEmulatorBackend(root),
     )
     q = sink.attach(
         replay_stream(spark, str(tmp_path / "replay")),
-        query_name="warm_exec",
+        query_name="attach_exec",
         available_now=True,
     )
     q.awaitTermination(120)
     q.stop()
-    # only the 11 real records landed; zero warmup rows, zero warmup files
+    # the 10 topic1 records landed once each, the wildcard row too
     rows = backend.table_rows("db1", "t1")
-    assert len(rows) == 10
+    assert sorted(rows) == sorted(json.dumps({"n": i}) for i in range(10))
     assert backend.table_rows("dbW", "tW") == ['{"w": 1}']
-    assert all("epoch=-1" not in e["file"] for e in backend.ingest_log())
     assert len(backend.ingest_log()) == len(
         {e["file"] for e in backend.ingest_log()}
     )
-    # the warmup restores the factory: executor-side ingest stays on
-    assert sink._backend_factory is factory

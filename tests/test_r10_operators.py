@@ -353,64 +353,6 @@ def test_multimodal_curation_pipeline_decode_once_plan(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# r10: attach-time cold-path warmup (config.warmup_on_attach)
-
-
-def test_warmup_on_attach_leaves_no_trace(spark, sf_dir, tmp_path):
-    import time
-
-    from pyspark.sql import functions as F
-
-    import kafka_sink_azure_kusto_spark as pks
-    from kafka_sink_azure_kusto_spark.sources.replay import (
-        replay_stream,
-        stage_replay_dir,
-    )
-    from kafka_sink_azure_kusto_spark.sources.tables import load_table
-    from kafka_sink_azure_kusto_spark.streaming import (
-        KustoSparkSink,
-        LocalEmulatorBackend,
-    )
-
-    ev = load_table(spark, sf_dir, "events").limit(200)
-    records = ev.select(
-        F.col("event_id").cast("string").alias("key"),
-        F.to_json(F.struct("event_id", "user_id")).alias("value"),
-        F.lit("events").alias("topic"),
-        (F.col("event_id") % 2).cast("long").alias("partition"),
-        F.col("event_id").cast("long").alias("offset"),
-    )
-
-    def run(warmup: bool, tag: str):
-        work = tmp_path / tag
-        stage_replay_dir(records, str(work / "replay"), chunks=2)
-        cfg = pks.KustoSinkConfig(
-            ingest_url="https://ingest.example.kusto.windows.net",
-            mappings=[pks.TopicToTableMapping(
-                topic="*", db="db", table="t", format="json")],
-            staging_dir=str(work / "staging"),
-            checkpoint_location=str(work / "ckpt"),
-            trigger_interval_ms=200,
-            warmup_on_attach=warmup,
-        )
-        backend = LocalEmulatorBackend(str(work / "kusto"))
-        sink = KustoSparkSink(cfg, backend)
-        q = sink.attach(replay_stream(spark, str(work / "replay")),
-                        query_name=f"wq_{tag}", available_now=True)
-        q.awaitTermination(120)
-        q.stop()
-        return sorted(backend.table_rows("db", "t")), sink.metrics.snapshot(), backend
-
-    rows_w, m_w, be_w = run(True, "warm")
-    rows_c, m_c, _ = run(False, "cold")
-    # identical observable state: same ingested rows, same counters
-    assert rows_w == rows_c and len(rows_w) == 200
-    assert m_w == m_c
-    # the warmup's throwaway epoch never reached the real backend
-    assert all("warmup" not in e["file"] for e in be_w.ingest_log())
-
-
-# ---------------------------------------------------------------------
 # r10 third wave: hilbert key, interval-overlap join, streaming BM25
 
 

@@ -45,7 +45,19 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
         def __init__(self, status):
             self.status = status
 
-    class QueuedIngestClient:
+    class Client:
+        """set_proxy recorder shared by the fake SDK clients."""
+
+        proxy = None
+
+        def set_proxy(self, proxy_url):
+            self.proxy = proxy_url
+
+    class KustoClient(Client):
+        def __init__(self, kcsb):
+            self.kcsb = kcsb
+
+    class QueuedIngestClient(Client):
         def __init__(self, kcsb):
             self.kcsb = kcsb
 
@@ -53,7 +65,7 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
             calls.append(("queued", path, ingestion_properties))
             return Result("Queued")
 
-    class ManagedStreamingIngestClient:
+    class ManagedStreamingIngestClient(Client):
         def __init__(self, kcsb):
             self.kcsb = kcsb
 
@@ -66,6 +78,7 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
             return Result(streaming_status)
 
     data.KustoConnectionStringBuilder = KCSB
+    data.KustoClient = KustoClient
     ingest.QueuedIngestClient = QueuedIngestClient
     ingest.ManagedStreamingIngestClient = ManagedStreamingIngestClient
     ingest.IngestionProperties = SdkIngestionProperties
@@ -132,6 +145,30 @@ def test_streaming_backend_failed_status_is_retryable(monkeypatch, tmp_path):
     # (the hasStreamingSucceeded retry-continue, TopicPartitionWriter.java:107-116)
     with pytest.raises(TransientIngestError):
         b.ingest_file(str(f), PROPS)
+
+
+@pytest.mark.parametrize("kind", ["queued", "streaming"])
+def test_cli_proxy_reaches_ingest_and_query_clients(monkeypatch, kind):
+    # proxy.host/proxy.port (C4, KustoSinkTask.java:311-317) become an
+    # HTTP proxy on both SDK clients the CLI's backend builds
+    _install_fake_sdk(monkeypatch, [])
+    from kafka_sink_azure_kusto_spark.__main__ import sdk_backend
+    from kafka_sink_azure_kusto_spark.config import KustoSinkConfig
+
+    props = {
+        "kusto.ingestion.url": "https://ingest-c.kusto.windows.net",
+        "kusto.tables.topics.mapping": '[{"topic":"t","db":"d","table":"x","format":"json"}]',
+        "aad.auth.appid": "a",
+        "aad.auth.appkey": "k",
+        "aad.auth.authority": "t",
+    }
+    plain = sdk_backend(kind, KustoSinkConfig.from_connect_properties(props))
+    assert plain.proxy_url is None and plain._client.proxy is None
+    assert plain._query_client().proxy is None
+    props.update({"proxy.host": "proxy.corp", "proxy.port": "3128"})
+    b = sdk_backend(kind, KustoSinkConfig.from_connect_properties(props))
+    assert b._client.proxy == "http://proxy.corp:3128"
+    assert b._query_client().proxy == "http://proxy.corp:3128"
 
 
 @pytest.mark.parametrize(

@@ -3,6 +3,7 @@ fixed at 500 rows, so this synthesizes larger corpora deterministically
 and measures how the dedup/ANN operators scale. Results → PERF.md.
 
 Usage: python tools/scale_probe.py [--sizes 5000,20000,80000]
+Env:   SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata directory)
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def synth_docs(spark, base_docs, n_target: int):
@@ -358,7 +361,7 @@ def bloom_decontam_compare(spark, sizes=(5_000, 50_000)):
     from kafka_sink_azure_kusto_spark.functions import corpus as C
     from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
-    base = load_table(spark, "/root/testdata/sf0.1", "documents")
+    base = load_table(spark, SF_DIR, "documents")
     bench = base.filter(F.col("doc_id") % 25 == 0).cache()
     n_bench_ngrams = (
         bench.select(F.explode(C.shingles("text", 5)).alias("ng")).distinct().count()
@@ -474,7 +477,7 @@ def join_scale_compare(spark, reps=(1, 10)):
 
     from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
-    sf = "/root/testdata/sf0.1"
+    sf = SF_DIR
     li0 = load_table(spark, sf, "lineitem")
     o0 = load_table(spark, sf, "orders")
     supp = load_table(spark, sf, "supplier").select("s_suppkey", "s_nationkey")
@@ -596,7 +599,7 @@ def incremental_neardup_probe(spark, n_history: int = 50_000, n_batch: int = 2_0
     from kafka_sink_azure_kusto_spark.functions import dedup as D
     from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
-    base = load_table(spark, "/root/testdata/sf0.1", "documents")
+    base = load_table(spark, SF_DIR, "documents")
     all_docs = synth_docs(spark, base, n_history + n_batch).cache()
     all_docs.count()
     history = all_docs.filter(F.col("doc_id") % 26 != 0)
@@ -812,7 +815,7 @@ def main():
         sink_ingest_compare(spark, ingest_only)
         return
 
-    base = load_table(spark, "/root/testdata/sf0.1", "documents")
+    base = load_table(spark, SF_DIR, "documents")
     results: dict[str, dict[int, float]] = {}
     for n in sizes:
         docs = synth_docs(spark, base, n).cache()
