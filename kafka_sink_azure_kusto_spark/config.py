@@ -335,10 +335,6 @@ class KustoSinkConfig:
     checkpoint_location: Optional[str] = None
     staging_dir: str = "/tmp/kusto_sink_staging"
     trigger_interval_ms: Optional[int] = None  # None → derive from flush_interval_ms
-    # Concurrent ingest RPCs per micro-batch (ingest is I/O-bound HTTP;
-    # the reference gets the same concurrency from one thread per Connect
-    # task — here a bounded pool over a batch's staged files).
-    ingest_threads: int = 8
 
     # V1–V4 validation queries at startup (default off, KustoSinkConfig.java:327-336).
     validate_tables: bool = False
@@ -379,8 +375,6 @@ class KustoSinkConfig:
             raise ConfigException("errors.retry.backoff.time.ms must be > 0")
         if self.retry_max_time_ms < 0:
             raise ConfigException("errors.retry.max.time.ms must be ≥ 0")
-        if self.ingest_threads < 1:
-            raise ConfigException("ingest_threads must be ≥ 1")
         # DLQ both-or-neither (KustoSinkConfig.java:437-446).
         if (self.dlq_bootstrap_servers is None) != (self.dlq_topic_name is None):
             raise ConfigException(

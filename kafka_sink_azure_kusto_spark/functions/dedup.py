@@ -38,19 +38,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def duplicate_clusters(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-duplicate clusters: (fingerprint, canonical id, member count),
-    only clusters with >1 member."""
-    return (
-        df.withColumn("fp", fingerprint(text_col))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("members"))
-        .filter(F.col("members") > 1)
-    )
-
-
 # ------------------------------------------------------------------ shingles
 def shingles(col: str | Column, k: int = 3) -> Column:
     """k-token shingles (word n-grams) as an array<string>; empty-safe.
@@ -96,28 +83,6 @@ COMPACT_PERMS: list[tuple[int, int]] = [
 ]
 
 
-def minhash_signature(col: str | Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature as array<string>[num_hashes]: element h is
-    ``min(md5(h || ':' || shingle))`` over the document's shingle set.
-
-    md5-with-seed-prefix is a family of pseudo-random permutations of the
-    shingle universe under lexicographic string order — same construction
-    runs verbatim in the SQL oracle. 128-bit hex strings keep collision
-    probability negligible at 100 TB corpus sizes.
-
-    NOTE: this nested higher-order-function form is interpreted (not
-    codegen'd) — fine for ad-hoc use on single columns. The hot path
-    (``minhash_signatures_df``) uses explode + flat aggregates instead.
-    """
-    sh = shingles(col, k)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda h: F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(h.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str = "text",
@@ -130,8 +95,9 @@ def minhash_signatures_df(
     explode shingles to rows, evaluate the ``num_hashes`` md5 columns as
     flat whole-stage-codegen expressions, min-aggregate per doc (partial
     map-side combine ⇒ the shuffle carries one fixed-width row per doc,
-    regardless of document size). ~50× faster than the nested-lambda
-    form and the shape that survives a 100 TB corpus.
+    regardless of document size). ~50× faster than a nested
+    ``transform``/``array_min`` lambda form (which Spark interprets per
+    element) and the shape that survives a 100 TB corpus.
 
     ``compact=False`` (default): signature elements are full 32-char
     md5 HEX STRINGS (512 bytes at 16 hashes) — collision-free and the
@@ -386,77 +352,6 @@ def minhash_lsh_pairs_cross(
 
 
 # --------------------------------------------------------------------- SimHash
-def _hex_digit_value(c: Column) -> Column:
-    """Value of one lowercase hex digit via ascii() — identical in Spark
-    and DuckDB (no conv/instr dialect divergence)."""
-    a = F.ascii(c)
-    return F.when(a >= 97, a - 87).otherwise(a - 48)
-
-
-def simhash64(col: str | Column) -> Column:
-    """64-bit SimHash over whitespace tokens, as an array<int>[64] of bits
-    (bit i = 1 iff the weighted sum of token-hash bit i is positive).
-
-    Token bit source: md5 hex — bit i lives in hex digit i/4 (0-based),
-    at position (3 - i%4) MSB-first; extracted with pure arithmetic
-    (floor-div by a power of two, then mod 2) so the SQL oracle runs the
-    literally-same computation. Returning the bit array (not a packed
-    long) keeps both engines in exact integer math.
-    """
-    toks = tokens(col)
-    bits = F.sequence(F.lit(0), F.lit(63))
-
-    def bit_weight(i: Column):
-        def token_bit(t: Column) -> Column:
-            digit = F.substring(F.md5(t), (i / 4).cast("int") + 1, 1)
-            val = _hex_digit_value(digit)
-            return (
-                F.floor(val / F.pow(F.lit(2.0), (F.lit(3) - i % 4).cast("double")))
-                .cast("int")
-                % 2
-            )
-
-        return F.aggregate(toks, F.lit(0), lambda acc, t: acc + 2 * token_bit(t) - 1)
-
-    return F.transform(
-        bits, lambda i: F.when(bit_weight(i) > 0, 1).otherwise(0)
-    )
-
-
-def simhash_signatures_df(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, bits) per document — scale-path SimHash: explode tokens,
-    compute the 64 per-bit ±1 contributions as flat codegen'd columns,
-    sum-aggregate per doc (map-side combine ⇒ shuffle carries 64 longs
-    per doc). Same arithmetic as ``simhash64``/the SQL oracle."""
-    # Two conv() parses give the 64 token-hash bits as two 32-bit longs;
-    # bit i (MSB-first across the 16 hex digits, same layout as the
-    # per-digit arithmetic in simhash64 and the SQL oracle) is then a
-    # single shift+mod — vs 64×(substring + ascii CASE + double
-    # floor/pow) per token in the digit-at-a-time form. Values are
-    # identical: conv is an exact integer parse of the same digits.
-    toks = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t")
-    ).withColumn("h", F.md5("t"))
-    c0 = F.conv(F.substring("h", 1, 8), 16, 10).cast("long")
-    c1 = F.conv(F.substring("h", 9, 8), 16, 10).cast("long")
-    contribs = []
-    for i in range(64):
-        bit = F.shiftright(c0, 31 - i) % 2 if i < 32 else F.shiftright(c1, 63 - i) % 2
-        contribs.append(F.sum(2 * bit - 1).alias(f"w{i}"))
-    wide = toks.groupBy("id").agg(*contribs)
-    return wide.select(
-        "id",
-        F.array(
-            *[
-                F.when(F.col(f"w{i}") > 0, 1).otherwise(0)
-                for i in range(64)
-            ]
-        ).alias("bits"),
-    )
-
-
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -482,6 +377,9 @@ def simhash_pairs(
     measured 3.6 s → this form 1.3 s on the sf0.1 gate query, identical
     output (same oracle)."""
     block = 64 // num_blocks
+    # Two conv() parses give the 64 token-hash bits as two 32-bit longs;
+    # bit i (MSB-first across the 16 hex digits, the SQL oracle's layout)
+    # is then a single shift+mod per token.
     toks = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t")
     ).withColumn("h", F.md5("t"))

@@ -289,17 +289,3 @@ def pack_all(df: DataFrame, exclude: Sequence[str] = ()) -> Column:
     cols = [c for c in df.columns if c not in set(exclude)]
     return F.to_json(F.struct(*[F.col(c) for c in cols]))
 
-
-def encode_for_format(
-    df: DataFrame, fmt: str, cols: Optional[Sequence[str]] = None
-) -> Column:
-    """Dispatch E1/E3 by coalesced format; avro/bytes are handled at the
-    file-writer level (they are container formats, not line formats)."""
-    from kafka_sink_azure_kusto_spark.config import coalesce_format
-
-    f = coalesce_format(fmt)
-    if f == "multijson":
-        return encode_ndjson(df, cols)
-    if f in ("csv", "tsv"):
-        return encode_csv_line(df, cols, sep="\t" if f == "tsv" else ",")
-    raise ValueError(f"no line encoder for format {fmt!r}")

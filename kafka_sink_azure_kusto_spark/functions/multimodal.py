@@ -231,16 +231,6 @@ def decode_media(df: DataFrame) -> DataFrame:
     return df.mapInPandas(decode_media_batches, schema=DECODE_SCHEMA)
 
 
-def resize_stub(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Scale-metadata plumbing (kept for metadata-only callers). The
-    REAL pixel resize is ``resize_nearest`` / ``synth_resize_stats``
-    (r8 — integer nearest-neighbor gather through the real codec
-    path, gated as ``multimodal_resize``)."""
-    return df.withColumn(
-        "scale_x", F.col("width") / F.lit(float(target_w))
-    ).withColumn("scale_y", F.col("height") / F.lit(float(target_h)))
-
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -892,13 +882,12 @@ RESIZE_SCHEMA = StructType(
 
 
 def resize_nearest(m: DecodedMedia, target_w: int, target_h: int) -> np.ndarray:
-    """REAL nearest-neighbor resize over the decoded raster (retires
-    the r2 ``resize_stub``): output pixel (r, c) samples input pixel
-    (r·h_in // h_out, c·w_in // w_out) — all-integer index math, no
-    float kernels, so the result is bit-exact and closed-form
-    replayable by the oracle. Vectorized numpy fancy-indexing (two 1-D
-    index arrays, one gather); channels stay interleaved RGB
-    row-major, the same layout the codecs emit."""
+    """REAL nearest-neighbor resize over the decoded raster: output
+    pixel (r, c) samples input pixel (r·h_in // h_out, c·w_in // w_out)
+    — all-integer index math, no float kernels, so the result is
+    bit-exact and closed-form replayable by the oracle. Vectorized numpy
+    fancy-indexing (two 1-D index arrays, one gather); channels stay
+    interleaved RGB row-major, the same layout the codecs emit."""
     if m.width <= 0 or m.height <= 0:
         raise MediaDecodeError("resize needs a raster (image media)")
     s = np.asarray(m.samples, dtype=np.int64).reshape(m.height, m.width, 3)

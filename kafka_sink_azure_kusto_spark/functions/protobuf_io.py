@@ -337,11 +337,6 @@ def codegen_stage_split(df):
     paths, whose input carries no exploitable partitioning."""
     return df.coalesce(_NOOP_COALESCE)
 
-#: length-delimited bodies longer than 127 bytes need a multi-byte
-#: length varint — supported up to 2 bytes (≤ 16383), beyond is a
-#: schema the UDF path handles
-_MAX_LEN_BYTES = 2
-
 
 def codegen_decodable(field_schema: dict) -> bool:
     """True when the expression decoder can handle this schema: all

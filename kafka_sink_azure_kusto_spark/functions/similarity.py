@@ -887,18 +887,6 @@ def rerank_topk(
     )
 
 
-def hyperplane_component(p: int, d: Column) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-1, 1]:
-    the first TWO hex digits of md5('p:d') as an integer in [0, 255],
-    scaled — 256 levels is ample resolution for sign-of-projection, and
-    two digits keep the construction literally expressible in ANSI SQL
-    (the oracle uses per-digit ascii arithmetic; Spark parses the same
-    two digits with one exact ``conv`` — identical value)."""
-    h = F.md5(F.concat(F.lit(f"{p}:"), d.cast("string")))
-    val = F.conv(F.substring(h, 1, 2), 16, 10).cast("long")
-    return (val.cast("double") / F.lit(255.0)) * 2.0 - 1.0
-
-
 def hyperplane_lsh_buckets(
     df: DataFrame,
     num_planes: int = 8,
@@ -918,8 +906,10 @@ def hyperplane_lsh_buckets(
 
     Shape (r9 rework): the hyperplane components depend only on
     (plane, dim) — 512 doubles for an 8-plane 64-dim family — so they
-    are computed DRIVER-SIDE with hashlib (bit-identical arithmetic to
-    the md5/conv Column rendition) and baked in as LITERAL arrays. The
+    are computed DRIVER-SIDE with hashlib (the first two hex digits of
+    md5('p:d') as an integer in [0, 255], scaled to [-1, 1] — the same
+    derivation the SQL oracle spells with per-digit ascii arithmetic)
+    and baked in as LITERAL arrays. The
     whole bucketing is then a NARROW per-row projection: one
     zip_with/aggregate fold per plane, zero md5 calls at runtime, zero
     posexplode, zero exchange (the previous rendition md5-hashed

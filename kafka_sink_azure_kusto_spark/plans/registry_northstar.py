@@ -478,9 +478,6 @@ def dedup_store_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_MINHASH_PAIRS_SQL = None  # filled after dedup_minhash_lsh registers
-
-
 @register(
     "dedup_cc_clusters",
     None,  # oracle attached below (needs the minhash oracle text)
@@ -1046,7 +1043,7 @@ def _hv_sql(expr: str) -> str:
 
 def _comp_sql(p: int) -> str:
     """SQL list of the 64 hyperplane components for plane ``p`` — the
-    same md5 two-hex-digit derivation as similarity.hyperplane_component."""
+    same md5 two-hex-digit derivation as similarity.hyperplane_lsh_buckets."""
     h = f"md5('{p}:' || d)"
     return (
         f"list_transform(range(0, 64), d -> "
@@ -1880,8 +1877,7 @@ def similarity_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL nearest-neighbor image resize to 8×6 through the real
-    BMP/PPM codec path (r8 — retires the last multimodal stub,
-    ``resize_stub``): WAV rows filter out JVM-side before the Arrow
+    BMP/PPM codec path: WAV rows filter out JVM-side before the Arrow
     pass, one fused mapInPandas decodes + gathers (integer index math,
     no float kernels), and the gate hashes integer stats over the
     RESIZED raster with a position-weighted checksum — a transposed,

@@ -299,12 +299,11 @@ class LocalEmulatorBackend:
         ]
 
     def table_rows(self, db: str, table: str) -> list[str]:
-        table_dir = os.path.join(self.root, db, table)
+        """Text rows of the ingested part files (not the table's
+        ``_mapping_*``/``_streaming_policy`` markers)."""
         rows: list[str] = []
-        if not os.path.isdir(table_dir):
-            return rows
-        for name in sorted(os.listdir(table_dir)):
-            with open(os.path.join(table_dir, name), encoding="utf-8") as f:
+        for path in self.table_files(db, table):
+            with open(path, encoding="utf-8") as f:
                 rows.extend(line for line in f.read().splitlines() if line)
         return rows
 

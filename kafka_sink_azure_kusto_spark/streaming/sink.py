@@ -34,7 +34,7 @@ Scale notes:
   DLQ reads the persisted frame, narrowed to the failed topics and
   offset ranges, never the source.
 - Every mapping's staged files ingest through one bounded thread pool
-  (``config.ingest_threads``): ingest RPCs are I/O-bound HTTP, so one
+  (``_INGEST_THREADS``): ingest RPCs are I/O-bound HTTP, so one
   slow file does not serialize the epoch behind its retry loop.
 
 Staging-directory requirement (multi-node clusters): without a
@@ -94,6 +94,11 @@ log = logging.getLogger(__name__)
 _AVRO_FORMATS = ("avro", "apacheavro")
 _COLUMNAR_FORMATS = ("parquet", "orc")
 _CONTAINER_FORMATS = (*_AVRO_FORMATS, *_COLUMNAR_FORMATS)
+
+# Concurrent driver-side ingest RPCs per micro-batch (ingest is I/O-bound
+# HTTP; the reference gets the same concurrency from one thread per
+# Connect task — here a bounded pool over a batch's staged files).
+_INGEST_THREADS = 8
 
 # One row per rolled file (the staged-file manifest); status, error and
 # attempts carry the executor-side ingest outcome (driver mode: "Staged").
@@ -539,7 +544,7 @@ class KustoSparkSink:
             from concurrent.futures import ThreadPoolExecutor
 
             props = [self._props_for(m) for m in self.config.mappings]
-            workers = max(1, min(len(staged), self.config.ingest_threads))
+            workers = max(1, min(len(staged), _INGEST_THREADS))
             with ThreadPoolExecutor(
                 max_workers=workers, thread_name_prefix="kusto-ingest"
             ) as pool:

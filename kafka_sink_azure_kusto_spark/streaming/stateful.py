@@ -1,429 +1,19 @@
-"""Streaming-native operators built on Spark's event-time machinery
-(SURVEY §2.10: event-time handling comes from Spark itself, not the
-reference) — watermarked windows, streaming dedup, and a custom
-stateful operator via ``applyInPandasWithState``.
+"""The watermarked stream-stream interval join (SURVEY §2.10: event-time
+handling comes from Spark itself, not the reference).
 
-Scale notes: all of these keep state in Spark's state store, partitioned
-by the grouping key — state size is O(active keys), independent of
-stream length; watermarks bound retention so late data past the horizon
-is dropped deterministically.
+Windows, sessionization and watermark-bounded dedup need no wrapper: the
+registry's streaming queries call ``withWatermark``, ``F.window``,
+``F.session_window`` and ``dropDuplicatesWithinWatermark`` directly.
+
+Scale note: join state lives in Spark's state store and the watermarks
+on both sides bound its retention, so late rows past the horizon are
+dropped deterministically.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-
-def windowed_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window counts — the streaming form of the
-    batch ``event_time_windows`` query; late rows beyond the watermark
-    are dropped, windows finalize once the watermark passes."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            key_col,
-            "n",
-        )
-    )
-
-
-def session_windows(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming gap-based sessionization via ``F.session_window`` — the
-    streaming form of the batch ``events_sessionization`` query: a
-    session closes once the watermark passes its last event + gap."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame, key_cols: list[str], ts_col: str = "ts", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming exact dedup: first occurrence of each key within the
-    watermark horizon wins — duplicates carrying DIFFERENT event times
-    (e.g. producer retries re-stamped at send time) are dropped too,
-    which plain ``dropDuplicates(key + ts)`` would keep. State is evicted
-    once the watermark passes a key's first sighting + horizon (bounded
-    state — the required shape for an endless training-data ingest
-    stream)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-RATE_STATE_SCHEMA = StructType(
-    [StructField("count", LongType(), False), StructField("max_ts", TimestampType(), True)]
-)
-RATE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType(), False),
-        StructField("total", LongType(), False),
-        StructField("batch_rows", LongType(), False),
-    ]
-)
-
-
-def _rate_monitor(
-    key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState body: running per-key record counter with
-    a processing-time TTL — the streaming analog of the reference's
-    per-topic monotonic counters (M1), here as a first-class operator."""
-    (event_type,) = key
-    if state.hasTimedOut:
-        state.remove()
-        return
-    total = state.get[0] if state.exists else 0
-    batch_rows = 0
-    for pdf in pdfs:
-        batch_rows += len(pdf)
-    total += batch_rows
-    state.update((total, None))
-    state.setTimeoutDuration(3_600_000)  # 1h TTL — idle keys evicted
-    yield pd.DataFrame(
-        [{"event_type": event_type, "total": total, "batch_rows": batch_rows}]
-    )
-
-
-def rate_monitor(stream: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Custom stateful operator: per-key running totals with TTL eviction
-    via ``applyInPandasWithState`` (Arrow-batched, state-store backed)."""
-    return (
-        stream.groupBy(key_col)
-        .applyInPandasWithState(
-            _rate_monitor,
-            outputStructType=RATE_OUTPUT_SCHEMA,
-            stateStructType=RATE_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-# STATE-SCHEMA COMPATIBILITY: this schema grew from 1 field to 2
-# (last_event_ms added for the event-time mode). applyInPandasWithState
-# does NOT support state-schema evolution — restarting a streaming
-# near-dup query from a checkpoint written by the 1-field version will
-# fail (or misread state) at recovery. Resuming such a deployment
-# requires a FRESH checkpoint location (or versioning the query name,
-# e.g. 'near_dup_v2', which implies a new checkpoint anyway); the band
-# claims rebuild from the stream within one horizon.
-NEAR_DUP_STATE_SCHEMA = StructType(
-    [
-        StructField("canonical_id", LongType(), False),
-        # newest event time (ms) seen by the band — the event-time mode's
-        # expiry anchor; 0 in processing-time mode
-        StructField("last_event_ms", LongType(), True),
-    ]
-)
-NEAR_DUP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("band_id", LongType(), False),
-        StructField("canonical_id", LongType(), False),
-        StructField("is_new", StringType(), False),  # 'claim' | 'dup'
-    ]
-)
-
-
-def _make_near_dup_detector(event_time: bool, horizon_ms: int):
-    """Build the applyInPandasWithState body, keyed by
-    (band_id, band_hash): the first document to present a band claims
-    it; every later document presenting the same band is emitted as a
-    near-dup detection against the claimant. The group's chunks are
-    concatenated BEFORE the single (ts, doc_id) sort — a group spanning
-    several Arrow batches would otherwise elect whichever chunk arrived
-    first, and replay after checkpoint recovery could re-chunk and
-    elect a different canonical.
-
-    ``event_time=False``: processing-time TTL — state lives
-    ``horizon_ms`` of WALL CLOCK past the last sighting. Simple, but a
-    long stall (backfill, recovery) can evict a band while logically
-    in-horizon data is still queued; the next arrival then falsely
-    re-'claim's the band.
-
-    ``event_time=True``: the eviction clock is the WATERMARK — state is
-    kept until the watermark (max observed event time − delay) passes
-    the band's last event + horizon. Eviction is then a deterministic
-    function of the DATA: late duplicates inside the
-    watermark+horizon window still find the original canonical no
-    matter how slowly batches arrive."""
-
-    def detector(key, pdfs, state: GroupState):
-        band_id = int(key[0])
-        if state.hasTimedOut:
-            state.remove()
-            return
-        canonical = None
-        anchor_ms = 0
-        if state.exists:
-            canonical = int(state.get[0])
-            anchor_ms = int(state.get[1] or 0)
-            if event_time and state.getCurrentWatermarkMs() > anchor_ms + horizon_ms:
-                # Spark fires hasTimedOut only for keys WITHOUT new data
-                # in the batch; a key whose data arrives after its
-                # horizon must still see the state as expired, or the
-                # eviction clock silently depends on arrival timing.
-                canonical = None
-                anchor_ms = 0
-        out = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        rows = (
-            pd.concat(chunks).sort_values(["ts", "doc_id"]) if chunks else pd.DataFrame()
-        )
-        max_ts_ms = anchor_ms
-        for doc, ts in zip(rows.get("doc_id", []), rows.get("ts", [])):
-            doc = int(doc)
-            if event_time and ts is not None and ts == ts:  # not NaT
-                max_ts_ms = max(max_ts_ms, int(pd.Timestamp(ts).value // 1_000_000))
-            if canonical is None:
-                canonical = doc
-                out.append((doc, band_id, doc, "claim"))
-            elif doc != canonical:
-                out.append((doc, band_id, canonical, "dup"))
-        if canonical is None:  # zero rows and no prior claim — nothing to do
-            return
-        state.update((canonical, max_ts_ms))
-        if event_time:
-            # timeout must be beyond the current watermark; anchor on the
-            # later of (band's newest event, watermark) + horizon
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ts_ms, wm) + horizon_ms)
-        else:
-            state.setTimeoutDuration(horizon_ms)  # idle TTL bounds state
-        if out:
-            yield pd.DataFrame(
-                out, columns=["doc_id", "band_id", "canonical_id", "is_new"]
-            )
-
-    return detector
-
-
-#: processing-time instance (default streaming_near_dup path)
-_near_dup_detector = _make_near_dup_detector(event_time=False, horizon_ms=3_600_000)
-
-
-def streaming_near_dup(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    num_hashes: int = 16,
-    num_bands: int = 4,
-    k: int = 3,
-    timeout_mode: str = "processing",
-    watermark: str = "1 hour",
-    state_horizon_ms: int = 3_600_000,
-) -> DataFrame:
-    """Streaming MinHash-LSH near-duplicate detection — the ingest-time
-    form of ``functions.dedup.minhash_lsh_pairs``: as documents arrive,
-    each is fingerprinted (per-row signature — narrow, no shuffle, no
-    state) and its LSH bands claim state-store slots keyed by
-    (band_id, band_hash). A document colliding with an earlier claimant
-    on ANY band yields `dup` rows naming the canonical document;
-    downstream consumers drop or cluster them without re-scanning the
-    corpus.
-
-    Scale shape: the ONLY shuffle is the stateful groupBy on the
-    fixed-width band key; state is one long per live band slot,
-    TTL-evicted after 1 h idle — O(distinct bands within TTL),
-    independent of stream length. The per-row signature uses the
-    nested-HOF column form (interpreted, not codegen — acceptable here:
-    micro-batch volumes are bounded by the trigger, and the streaming
-    state API is the dominant cost).
-
-    ``timeout_mode``:
-      - ``"processing"`` (default): 1 h wall-clock idle TTL. Cheap, but
-        eviction depends on arrival timing — a band evicted during a
-        stall can be falsely re-claimed by a late duplicate.
-      - ``"event_time"``: ``withWatermark(ts_col, watermark)`` +
-        EventTimeTimeout — state is evicted only when the WATERMARK
-        passes the band's newest event + ``state_horizon_ms``, so
-        eviction is a deterministic function of the data and a late
-        duplicate inside the horizon still reports the original
-        canonical regardless of wall-clock arrival gaps.
-
-    Cites: near-dup semantics mirror the batch operator
-    (functions/dedup.py minhash_lsh_pairs); the reference connector has
-    no streaming-dedup surface (north-star addition).
-    """
-    from kafka_sink_azure_kusto_spark.functions.dedup import (
-        lsh_bands,
-        minhash_signature,
-        tokens,
-    )
-
-    if timeout_mode not in ("processing", "event_time"):
-        raise ValueError(f"timeout_mode must be processing|event_time, got {timeout_mode!r}")
-    rows_per_band = num_hashes // num_bands
-    assert num_bands * rows_per_band == num_hashes
-    src = (
-        stream.withWatermark(ts_col, watermark)
-        if timeout_mode == "event_time"
-        else stream
-    )
-    sig = minhash_signature(F.col(text_col), num_hashes=num_hashes, k=k)
-    banded = (
-        # Documents with < k tokens have NO shingles: their signature is
-        # all-null and concat_ws would band every one of them to
-        # md5('') — one giant false dup cluster. The batch path drops
-        # them structurally (explode of zero shingles); drop them here.
-        src.filter(F.size(tokens(F.col(text_col))) >= k)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(ts_col).alias("ts"),
-            F.explode(lsh_bands(sig, num_bands, rows_per_band)).alias("b"),
-        )
-        .select(
-            "doc_id",
-            "ts",
-            F.col("b.band_id").cast("long").alias("band_id"),
-            F.col("b.band_hash").alias("band_hash"),
-        )
-    )
-    if timeout_mode == "event_time":
-        detector = _make_near_dup_detector(event_time=True, horizon_ms=state_horizon_ms)
-        timeout = GroupStateTimeout.EventTimeTimeout
-    else:
-        detector = (
-            _near_dup_detector
-            if state_horizon_ms == 3_600_000
-            else _make_near_dup_detector(event_time=False, horizon_ms=state_horizon_ms)
-        )
-        timeout = GroupStateTimeout.ProcessingTimeTimeout
-    return banded.groupBy("band_id", "band_hash").applyInPandasWithState(
-        detector,
-        outputStructType=NEAR_DUP_OUTPUT_SCHEMA,
-        stateStructType=NEAR_DUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-RUNNING_FEATURES_STATE_SCHEMA = StructType(
-    [
-        StructField("count", LongType(), False),
-        StructField("sum_value", DoubleType(), False),
-        StructField("last_value", DoubleType(), True),
-        StructField("last_ts_us", LongType(), True),
-    ]
-)
-RUNNING_FEATURES_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("event_id", LongType(), False),
-        StructField("seq", LongType(), False),
-        StructField("run_mean", DoubleType(), False),
-        StructField("delta_prev", DoubleType(), True),
-        StructField("micros_since_prev", LongType(), True),
-    ]
-)
-
-
-def _running_features(key, pdfs, state: GroupState):
-    """applyInPandasWithState body: per-key running features emitted PER
-    EVENT — the streaming analog of operators/timeline.rolling_features
-    (running mean instead of a trailing frame: a bounded O(1) state
-    tuple instead of a deque, the streaming-native trade-off). Chunks
-    are concatenated before one (ts, event_id) sort so replay after
-    checkpoint recovery can't reorder a group that spanned Arrow
-    batches."""
-    (user_id,) = key
-    if state.hasTimedOut:
-        state.remove()
-        return
-    count, total, last_v, last_us = (
-        (int(state.get[0]), float(state.get[1]), state.get[2], state.get[3])
-        if state.exists
-        else (0, 0.0, None, None)
-    )
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks and count == 0:
-        return
-    rows = (
-        pd.concat(chunks).sort_values(["ts", "event_id"]) if chunks else pd.DataFrame()
-    )
-    out = []
-    for eid, ts, v in zip(
-        rows.get("event_id", []), rows.get("ts", []), rows.get("value", [])
-    ):
-        v = float(v)
-        count += 1
-        total += v
-        ts_us = int(pd.Timestamp(ts).value // 1_000)
-        out.append(
-            (
-                int(user_id),
-                int(eid),
-                count,
-                round(total / count, 6),
-                round(v - last_v, 6) if last_v is not None else None,
-                ts_us - last_us if last_us is not None else None,
-            )
-        )
-        last_v, last_us = v, ts_us
-    state.update((count, total, last_v, last_us))
-    state.setTimeoutDuration(3_600_000)
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "event_id",
-                "seq",
-                "run_mean",
-                "delta_prev",
-                "micros_since_prev",
-            ],
-        )
-
-
-def streaming_running_features(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-event running features over an endless keyed stream (seq,
-    running mean, delta vs previous, exact µs gap) with O(1) state per
-    key and TTL eviction — what the batch ``rolling_features`` becomes
-    when the corpus is a stream."""
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _running_features,
-        outputStructType=RUNNING_FEATURES_OUTPUT_SCHEMA,
-        stateStructType=RUNNING_FEATURES_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 def stream_stream_interval_join(

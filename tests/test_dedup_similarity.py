@@ -27,11 +27,6 @@ def test_dedup_exact(spark):
     assert out[3] == 1
 
 
-def test_duplicate_clusters(spark):
-    cl = D.duplicate_clusters(_docs(spark)).collect()
-    assert len(cl) == 1 and cl[0].canonical_id == 0 and cl[0].members == 2
-
-
 def test_shingles(spark):
     df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
     sh = df.select(D.shingles("text", 3).alias("sh")).collect()[0].sh
@@ -56,10 +51,10 @@ def test_minhash_exact_dup_signature_identical(spark):
 
 
 def test_simhash_near_dups_close(spark):
-    sigs = {r.id: r.bits for r in D.simhash_signatures_df(_docs(spark)).collect()}
-    ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
-    assert ham(sigs[0], sigs[1]) == 0  # identical docs
-    assert ham(sigs[0], sigs[2]) < ham(sigs[0], sigs[3])  # near < far
+    pairs = {(r.left_id, r.right_id): r.hamming for r in D.simhash_pairs(_docs(spark)).collect()}
+    assert pairs[(0, 1)] == 0  # identical docs
+    assert 0 < pairs[(0, 2)] == pairs[(1, 2)] <= 8  # near dup, within max_hamming
+    assert set(pairs) == {(0, 1), (0, 2), (1, 2)}  # unrelated docs never pair
 
 
 def test_ngram_jaccard_exact_values(spark):

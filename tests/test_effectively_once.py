@@ -103,7 +103,7 @@ def test_checkpoint_restart_ingests_only_new_chunks(spark, tmp_path):
         q = KustoSparkSink(cfg, backend).attach(
             replay_stream(spark, replay), query_name=name, available_now=True
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         q.stop()
         return backend
 

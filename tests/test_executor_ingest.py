@@ -139,7 +139,7 @@ def test_attach_with_executor_ingest_delivers_once(spark, tmp_path):
         query_name="attach_exec",
         available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     q.stop()
     # the 10 topic1 records landed once each, the wildcard row too
     rows = backend.table_rows("db1", "t1")

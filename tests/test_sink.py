@@ -4,6 +4,7 @@ Structured Streaming E2E through the replay source + LocalEmulatorBackend
 (the SURVEY §5 rebuild test plan, mirroring KustoSinkIT's round-trip)."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -142,17 +143,16 @@ def test_dlq_keys_carry_per_record_offsets(spark, tmp_path):
 
 
 def test_partial_failure_only_failed_files_reach_dlq(spark, tmp_path):
-    # Per-file outcome tracking: 3 rolled files, the first ingest fails
-    # permanently via a flaky wrapper — only that file's records may land
-    # in the DLQ; the other files' records count as written.
-    class FirstCallFails:
+    # Per-file outcome tracking: 3 rolled files, the one starting at
+    # offset 0 fails permanently via a flaky wrapper — only that file's
+    # records may land in the DLQ; the other files' records count as
+    # written.
+    class OffsetZeroFails:
         def __init__(self, inner):
             self.inner = inner
-            self.calls = 0
 
         def ingest_file(self, path, props):
-            self.calls += 1
-            if self.calls == 1:
+            if os.path.basename(path).startswith("kafka_topic1_0_0."):
                 from kafka_sink_azure_kusto_spark.streaming.backends import (
                     PermanentIngestError,
                 )
@@ -173,9 +173,8 @@ def test_partial_failure_only_failed_files_reach_dlq(spark, tmp_path):
         mappings=[TopicToTableMapping(topic="topic1", db="db1", table="t", format="csv")],
         flush_size_bytes=100,  # ⇒ 3 files × 2 records
         behavior_on_error=BehaviorOnError.LOG,
-        ingest_threads=1,  # deterministic: first submitted file fails
     )
-    backend = FirstCallFails(LocalEmulatorBackend(str(tmp_path / "kusto")))
+    backend = OffsetZeroFails(LocalEmulatorBackend(str(tmp_path / "kusto")))
     sink = KustoSparkSink(cfg, backend, dlq_writer=dlq.extend)
     sink.process_batch(df, epoch_id=0)
     m = sink.metrics.snapshot()

@@ -1,18 +1,13 @@
-"""Event-time / stateful streaming semantics: watermarked windows,
-late-data handling, streaming dedup, applyInPandasWithState."""
+"""Event-time streaming semantics of the watermarked stream-stream
+interval join: matches inside the interval, outer misses emitted after
+the watermark, and join state evicted as the watermark advances."""
 
 import json
 import os
 
-from pyspark.sql import functions as F
-
 from kafka_sink_azure_kusto_spark.streaming.stateful import (
-    rate_monitor,
-    streaming_dedup,
-    windowed_counts,
+    stream_stream_interval_join,
 )
-
-SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
 
 
 _MTIME = [1_700_000_000]
@@ -29,318 +24,7 @@ def _write_chunk(path: str, rows: list[dict]) -> None:
     os.utime(path, (_MTIME[0], _MTIME[0]))
 
 
-def _run_stream(spark, src_dir, transform, out_mode, chk):
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src_dir)
-    q = (
-        transform(stream)
-        .writeStream.format("memory")
-        .queryName(os.path.basename(chk))
-        .outputMode(out_mode)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.sql(f"select * from {os.path.basename(chk)}")
-
-
-def test_windowed_counts_with_late_data(spark, tmp_path):
-    src = str(tmp_path / "src")
-    # batch 0: events in the 10:00 window; batch 1 advances the watermark
-    # past it (15:00 - 30min = 14:30); batch 2 finalizes + emits the
-    # 10:00 window; batch 3 delivers a very late row AFTER finalization —
-    # it must be dropped, and the window must not be re-emitted.
-    # (Observed Spark subtlety: a late row landing in the SAME batch that
-    # finalizes its window still merges into state before eviction — the
-    # drop applies only once the window state is gone.)
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:05:00", "user_id": 1, "event_type": "click"},
-        {"event_id": 2, "ts": "2024-01-01 10:20:00", "user_id": 2, "event_type": "click"},
-    ])
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 3, "ts": "2024-01-01 15:00:00", "user_id": 3, "event_type": "click"},
-    ])
-    _write_chunk(f"{src}/c.json", [
-        {"event_id": 5, "ts": "2024-01-01 16:00:00", "user_id": 5, "event_type": "click"},
-    ])
-    _write_chunk(f"{src}/d.json", [  # late beyond the watermark → dropped
-        {"event_id": 4, "ts": "2024-01-01 10:10:00", "user_id": 4, "event_type": "click"},
-    ])
-    out = _run_stream(
-        spark, src, lambda s: windowed_counts(s), "append", str(tmp_path / "wm1")
-    )
-    rows = [(str(r.window_start), r.n) for r in out.collect()]
-    counts = dict(rows)
-    assert counts.get("2024-01-01 10:00:00") == 2  # late row NOT counted
-    assert len(rows) == len(counts)  # no window emitted twice
-    assert "2024-01-01 16:00:00" not in counts  # still open (append mode)
-
-
-def test_streaming_dedup_drops_replays(spark, tmp_path):
-    src = str(tmp_path / "src2")
-    row = {"event_id": 7, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "x"}
-    _write_chunk(f"{src}/a.json", [row,
-        {"event_id": 8, "ts": "2024-01-01 10:01:00", "user_id": 1, "event_type": "x"}])
-    _write_chunk(f"{src}/b.json", [row])  # exact replay in a later batch
-    out = _run_stream(
-        spark, src, lambda s: streaming_dedup(s, ["event_id"]), "append",
-        str(tmp_path / "dd1"),
-    )
-    ids = [r.event_id for r in out.collect()]
-    assert sorted(ids) == [7, 8]  # replayed 7 deduped across batches
-
-
-def test_streaming_dedup_drops_restamped_duplicates(spark, tmp_path):
-    # Producer-retry shape: same key arrives again with a DIFFERENT
-    # event time — dropDuplicatesWithinWatermark drops it; a (key, ts)
-    # dedup would not (ADVICE r1).
-    src = str(tmp_path / "src3")
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 7, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "x"}])
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 7, "ts": "2024-01-01 10:02:00", "user_id": 1, "event_type": "x"},
-        {"event_id": 9, "ts": "2024-01-01 10:03:00", "user_id": 2, "event_type": "x"}])
-    out = _run_stream(
-        spark, src, lambda s: streaming_dedup(s, ["event_id"]), "append",
-        str(tmp_path / "dd2"),
-    )
-    ids = [r.event_id for r in out.collect()]
-    assert sorted(ids) == [7, 9]  # restamped 7 deduped, first ts wins
-
-
-def test_session_windows_streaming(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import session_windows
-
-    src = str(tmp_path / "src_sess")
-    # user 1: two events 10 min apart (one session), then one 2 h later
-    # (new session); a far-future event closes the watermark.
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "x"},
-        {"event_id": 2, "ts": "2024-01-01 10:10:00", "user_id": 1, "event_type": "x"},
-        {"event_id": 3, "ts": "2024-01-01 12:10:00", "user_id": 1, "event_type": "x"},
-    ])
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 9, "ts": "2024-01-02 00:00:00", "user_id": 2, "event_type": "x"},
-    ])
-    _write_chunk(f"{src}/c.json", [
-        {"event_id": 10, "ts": "2024-01-02 09:00:00", "user_id": 2, "event_type": "x"},
-    ])
-    out = _run_stream(
-        spark, src, lambda s: session_windows(s), "append", str(tmp_path / "sw1")
-    )
-    sessions = {
-        (r.user_id, str(r.session_start)): r.n_events
-        for r in out.collect()
-    }
-    # user 1's sessions finalized: [10:00, 10:10+gap) with 2 events and
-    # [12:10, 12:40) with 1 event
-    assert sessions[(1, "2024-01-01 10:00:00")] == 2
-    assert sessions[(1, "2024-01-01 12:10:00")] == 1
-
-
-def test_rate_monitor_accumulates_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src3")
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": i, "ts": "2024-01-01 10:00:00", "user_id": i, "event_type": "click"}
-        for i in range(3)
-    ])
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 10 + i, "ts": "2024-01-01 10:05:00", "user_id": i, "event_type": "click"}
-        for i in range(2)
-    ])
-    out = _run_stream(
-        spark, src, lambda s: rate_monitor(s), "update", str(tmp_path / "rm1")
-    )
-    rows = sorted(out.collect(), key=lambda r: r.total)
-    # two emissions for 'click': 3 after batch 1, then 5 after batch 2
-    assert [(r.total, r.batch_rows) for r in rows] == [(3, 3), (5, 2)]
-    assert all(r.event_type == "click" for r in rows)
-
-
-def test_streaming_near_dup_detects_across_batches(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import streaming_near_dup
-
-    src = str(tmp_path / "nd_src")
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    # batch 0: two dissimilar docs claim their bands
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": base},
-        {"event_id": 2, "ts": "2024-01-01 10:00:01", "user_id": 2,
-         "event_type": "completely different words in this document entirely"},
-    ])
-    # batch 1: doc 3 = doc 1's text with one token changed at the END
-    # (prefix shingles identical -> shares >=1 band); doc 4 novel
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 3, "ts": "2024-01-01 10:05:00", "user_id": 3,
-         "event_type": base.rsplit(" ", 1)[0] + " tonight"},
-        {"event_id": 4, "ts": "2024-01-01 10:05:01", "user_id": 4,
-         "event_type": "yet another unrelated set of tokens right here"},
-    ])
-    # batch 2: an exact replay of doc 1 collides on EVERY band — state
-    # must have carried across micro-batches (maxFilesPerTrigger=1).
-    # Docs 6/7 are sub-k-token (no shingles): they must be dropped, not
-    # all-null-banded into one giant false dup cluster (md5('') bug).
-    _write_chunk(f"{src}/c.json", [
-        {"event_id": 5, "ts": "2024-01-01 10:10:00", "user_id": 5, "event_type": base},
-        {"event_id": 6, "ts": "2024-01-01 10:10:01", "user_id": 6,
-         "event_type": "hello world"},
-        {"event_id": 7, "ts": "2024-01-01 10:10:02", "user_id": 7,
-         "event_type": "buy milk"},
-    ])
-    out = _run_stream(
-        spark,
-        src,
-        lambda s: streaming_near_dup(
-            s.select(F.col("event_id").alias("doc_id"), "ts",
-                     F.col("event_type").alias("text"))),
-        "append",
-        str(tmp_path / "nd_chk"),
-    )
-    rows = out.collect()
-    claims = {r.doc_id for r in rows if r.is_new == "claim"}
-    dups = {(r.doc_id, r.canonical_id) for r in rows if r.is_new == "dup"}
-    # batch-0 docs claimed; the near-identical doc 3 was flagged against
-    # doc 1; the two novel docs were never flagged
-    assert {1, 2} <= claims
-    assert (3, 1) in dups
-    assert not any(d in (2, 4) for d, _ in dups)
-    d5 = [r for r in rows if r.doc_id == 5]
-    assert d5 and all(r.is_new == "dup" and r.canonical_id == 1 for r in d5)
-    assert len(d5) == 4  # all four bands collide
-    # shingle-less docs appear NOWHERE — neither claims nor dups
-    assert not any(r.doc_id in (6, 7) for r in rows)
-
-
-def test_streaming_near_dup_event_time_late_duplicate(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import streaming_near_dup
-
-    src = str(tmp_path / "ndet_src")
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    # batch 0: doc 1 claims its bands at 10:00
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": base},
-    ])
-    # batch 1: unrelated doc advances max event time to 10:30 -> with a
-    # 10-minute watermark delay the watermark moves to ~10:20; band
-    # state (horizon 1h past 10:00) is NOT evicted.
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 2, "ts": "2024-01-01 10:30:00", "user_id": 2,
-         "event_type": "completely different words in this document entirely"},
-    ])
-    # batch 2: a LATE exact duplicate of doc 1 stamped 10:05 (behind the
-    # ~10:20 watermark, inside the horizon). Event-time mode must still
-    # report the ORIGINAL canonical, not a false fresh claim.
-    _write_chunk(f"{src}/c.json", [
-        {"event_id": 9, "ts": "2024-01-01 10:05:00", "user_id": 9, "event_type": base},
-    ])
-    out = _run_stream(
-        spark,
-        src,
-        lambda s: streaming_near_dup(
-            s.select(F.col("event_id").alias("doc_id"), "ts",
-                     F.col("event_type").alias("text")),
-            timeout_mode="event_time",
-            watermark="10 minutes",
-            state_horizon_ms=3_600_000,
-        ),
-        "append",
-        str(tmp_path / "ndet_chk"),
-    )
-    rows = out.collect()
-    d9 = [r for r in rows if r.doc_id == 9]
-    assert d9, "late duplicate produced no output"
-    assert all(r.is_new == "dup" and r.canonical_id == 1 for r in d9)
-    assert len(d9) == 4  # exact dup collides on all four bands
-
-
-def test_streaming_near_dup_event_time_horizon_eviction(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import streaming_near_dup
-
-    src = str(tmp_path / "ndev_src")
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    # batch 0: doc 1 claims at 10:00 with a SHORT 5-minute horizon
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": base},
-    ])
-    # batch 1: advance the watermark far past 10:00 + 5min horizon
-    # (12:00 - 1min delay = 11:59) -> band state evicted by EVENT time
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 2, "ts": "2024-01-01 12:00:00", "user_id": 2,
-         "event_type": "completely different words in this document entirely"},
-    ])
-    # batch 2: duplicate arriving with a FRESH in-horizon timestamp gets
-    # a new claim (state was deterministically evicted, as configured)
-    _write_chunk(f"{src}/c.json", [
-        {"event_id": 9, "ts": "2024-01-01 12:01:00", "user_id": 9, "event_type": base},
-    ])
-    out = _run_stream(
-        spark,
-        src,
-        lambda s: streaming_near_dup(
-            s.select(F.col("event_id").alias("doc_id"), "ts",
-                     F.col("event_type").alias("text")),
-            timeout_mode="event_time",
-            watermark="1 minute",
-            state_horizon_ms=300_000,
-        ),
-        "append",
-        str(tmp_path / "ndev_chk"),
-    )
-    rows = out.collect()
-    d9 = [r for r in rows if r.doc_id == 9]
-    assert d9 and all(r.is_new == "claim" and r.canonical_id == 9 for r in d9)
-
-
-def test_streaming_running_features_per_event(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import (
-        streaming_running_features,
-    )
-
-    src = str(tmp_path / "rf_src")
-    _write_chunk(f"{src}/a.json", [
-        {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "value": 2.0},
-        {"event_id": 2, "ts": "2024-01-01 10:00:10", "user_id": 1, "value": 4.0},
-        {"event_id": 3, "ts": "2024-01-01 10:00:00", "user_id": 2, "value": 7.0},
-    ])
-    # second batch continues user 1 from checkpointed state
-    _write_chunk(f"{src}/b.json", [
-        {"event_id": 4, "ts": "2024-01-01 10:00:30", "user_id": 1, "value": 6.0},
-    ])
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    chk = str(tmp_path / "rf_chk")
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q = (
-        streaming_running_features(stream)
-        .writeStream.format("memory")
-        .queryName("rf_out")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    rows = {r["event_id"]: r for r in spark.sql("select * from rf_out").collect()}
-    assert rows[1]["seq"] == 1 and rows[1]["run_mean"] == 2.0
-    assert rows[1]["delta_prev"] is None and rows[1]["micros_since_prev"] is None
-    assert rows[2]["seq"] == 2 and rows[2]["run_mean"] == 3.0
-    assert rows[2]["delta_prev"] == 2.0
-    assert rows[2]["micros_since_prev"] == 10_000_000
-    # state carried across micro-batches: seq continues, mean = (2+4+6)/3
-    assert rows[4]["seq"] == 3 and rows[4]["run_mean"] == 4.0
-    assert rows[4]["delta_prev"] == 2.0 and rows[4]["micros_since_prev"] == 20_000_000
-    # independent key
-    assert rows[3]["seq"] == 1 and rows[3]["run_mean"] == 7.0
-
-
 def test_stream_stream_interval_join_attribution(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import (
-        stream_stream_interval_join,
-    )
-
     lsrc = str(tmp_path / "ssj_l")
     rsrc = str(tmp_path / "ssj_r")
     _write_chunk(f"{lsrc}/a.json", [
@@ -367,7 +51,7 @@ def test_stream_stream_interval_join_attribution(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     q.stop()
     rows = spark.sql("select * from ssj_out").collect()
     assert len(rows) == 1
@@ -375,10 +59,6 @@ def test_stream_stream_interval_join_attribution(spark, tmp_path):
 
 
 def test_stream_stream_left_outer_emits_miss_after_watermark(spark, tmp_path):
-    from kafka_sink_azure_kusto_spark.streaming.stateful import (
-        stream_stream_interval_join,
-    )
-
     lsrc = str(tmp_path / "ssjo_l")
     rsrc = str(tmp_path / "ssjo_r")
     # impression 1 converts; impression 2 never does
@@ -410,7 +90,7 @@ def test_stream_stream_left_outer_emits_miss_after_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     q.stop()
     rows = {r["l_event_id"]: r for r in spark.sql("select * from ssjo_out").collect()}
     assert rows[1]["r_event_id"] == 101          # converted impression
@@ -423,10 +103,6 @@ def test_stream_stream_join_state_evicts_with_watermark(spark, tmp_path):
     hours of event time flow through a 10-min-interval / 1-min-watermark
     join; by the final batch the state store must hold only the last
     horizon's rows, not the whole history."""
-    from kafka_sink_azure_kusto_spark.streaming.stateful import (
-        stream_stream_interval_join,
-    )
-
     lsrc = str(tmp_path / "ssje_l")
     rsrc = str(tmp_path / "ssje_r")
     rows_per_chunk = 50
@@ -455,7 +131,7 @@ def test_stream_stream_join_state_evicts_with_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     state_totals = [
         so["numRowsTotal"]
         for p in q.recentProgress

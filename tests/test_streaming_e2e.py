@@ -271,6 +271,20 @@ def test_validation_probes(tmp_path):
     assert "missing" in msg and "Nope" in msg  # errors aggregated (V1 + V2)
 
 
+def test_table_rows_skips_mapping_and_policy_markers(tmp_path):
+    # create_table/create_mapping write marker files into the table
+    # directory; only ingested part files hold rows.
+    from kafka_sink_azure_kusto_spark.streaming.backends import IngestionProperties
+
+    backend = LocalEmulatorBackend(str(tmp_path / "kusto"))
+    backend.create_table("db", "t", streaming_policy=True)
+    backend.create_mapping("db", "t", "m1", "JSON")
+    staged = tmp_path / "kafka_a_0_0.json"
+    staged.write_text('{"a":1}\n{"a":2}\n')
+    backend.ingest_file(str(staged), IngestionProperties("db", "t", "json", "m1"))
+    assert backend.table_rows("db", "t") == ['{"a":1}', '{"a":2}']
+
+
 def test_validation_off_by_default(tmp_path):
     backend = LocalEmulatorBackend(str(tmp_path / "kusto"), strict_validation=True)
     cfg = _cfg(

@@ -143,7 +143,7 @@ def test_wire_decode_in_structured_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     q.stop()
     out = {r.row_id: r for r in spark.sql("select * from wire_mem").collect()}
     assert out[0].wire_status == "ok" and out[0].a == 1 and out[0].b == "u"
