@@ -17,17 +17,13 @@ import json
 import sys
 
 
-def sdk_backend(kind: str, cfg):
-    """The azure-kusto-ingest backend for ``--backend queued|streaming``:
-    AAD application auth, and the proxy.host/proxy.port pair as an HTTP
+def sdk_backend(cfg):
+    """The azure-kusto-ingest backend for ``--backend kusto``: AAD
+    application auth, and the proxy.host/proxy.port pair as an HTTP
     proxy on every SDK client (KustoSinkTask.java:311-317)."""
-    from kafka_sink_azure_kusto_spark.streaming.backends import (
-        QueuedKustoBackend,
-        StreamingKustoBackend,
-    )
+    from kafka_sink_azure_kusto_spark.streaming.backends import KustoSdkBackend
 
-    cls = QueuedKustoBackend if kind == "queued" else StreamingKustoBackend
-    return cls(
+    return KustoSdkBackend(
         ingest_url=cfg.ingest_url,
         query_url=cfg.query_url,
         auth={
@@ -42,7 +38,7 @@ def sdk_backend(kind: str, cfg):
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="kafka_sink_azure_kusto_spark")
     ap.add_argument("--config", required=True, help="connector properties JSON file")
-    ap.add_argument("--backend", default="emulator", choices=["emulator", "queued", "streaming"])
+    ap.add_argument("--backend", default="emulator", choices=["emulator", "kusto"])
     ap.add_argument("--emulator-root", default="/tmp/kusto_emulator")
     ap.add_argument("--source", default="kafka", choices=["kafka", "replay"])
     ap.add_argument("--replay-dir", help="NDJSON dir for --source replay")
@@ -59,9 +55,9 @@ def main(argv: list[str] | None = None) -> int:
     cfg = KustoSinkConfig.from_connect_properties(props)
 
     # Fail fast BEFORE starting a JVM: empty-string credentials passed to
-    # the SDK backends would defer the failure to an opaque AAD error on
+    # the SDK backend would defer the failure to an opaque AAD error on
     # the first ingest.
-    if args.backend in ("queued", "streaming"):
+    if args.backend == "kusto":
         missing = [
             key
             for key, val in (
@@ -115,7 +111,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.backend == "emulator":
         backend = LocalEmulatorBackend(args.emulator_root)
     else:
-        backend = sdk_backend(args.backend, cfg)
+        backend = sdk_backend(cfg)
 
     sink = KustoSparkSink(cfg, backend)
     query = sink.attach(stream, available_now=args.available_now)

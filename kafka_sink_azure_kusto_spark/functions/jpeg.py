@@ -25,8 +25,8 @@ decoder (DC-only and single-AC blocks verified against an independent
 naive O(N⁴) IDCT), encode→decode round trips bound max pixel error at
 high quality, and every unsupported shape rejects loudly. The Spark
 integration is the SAME decode-once dispatch (`decode_media_bytes`)
-the other formats use — a JPEG blob in a binary column flows through
-`decode_media` / dHash / resize untouched.
+the other formats use — a JPEG blob flows through the multimodal
+operators' decode / dHash / resize kernels untouched.
 """
 
 from __future__ import annotations

@@ -6,28 +6,33 @@ frame-sample run as Arrow-batched pandas functions over ``mapInPandas``
 (one Python worker per partition, zero-copy Arrow transfer, bounded
 batch memory via spark.sql.execution.arrow.maxRecordsPerBatch).
 
-Decoding is REAL: ``functions/codecs.py`` implements BMP / PPM / WAV
-from their public specs (row padding, bottom-up order, BGR swap, RIFF
-chunk walk), and the decode operators emit statistics over the DECODED
-pixel/sample values. Fixture payloads are synthesized deterministically
-from ``doc_id`` (per-channel arithmetic series), so the DuckDB oracles
-recompute the expected content stats independently with
-``generate_series`` — a wrong stride / channel order / row direction in
-the decoder breaks the cross-engine hash. Formats needing external
-codec libs (JPEG/PNG/MP4) slot into the same dispatch with the
-identical Arrow batch shape.
+Decoding is REAL and dependency-free: ``functions/codecs.py``
+implements BMP / PPM / WAV / PNG from their public specs (row padding,
+bottom-up order, BGR swap, RIFF chunk walk, PNG filters and Adam7),
+``functions/jpeg.py`` baseline JPEG and ``functions/gif.py`` GIF, all
+behind one magic-byte dispatch (``decode_media_bytes``). The decode
+operators emit statistics over the DECODED pixel/sample values.
+Fixture payloads are synthesized deterministically from ``doc_id``
+(per-channel arithmetic series), so the DuckDB oracles recompute the
+expected content stats independently with ``generate_series`` — a
+wrong stride / channel order / row direction in the decoder breaks the
+cross-engine hash.
+
+Every fixture operator is one ``_map_media`` pass over the
+``(doc_id, mid)`` rows ``_media_rows`` selects: the runner synthesizes
+each payload, decodes it once and hands the decoded media to the
+operator's per-row kernel.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -100,36 +105,74 @@ def synth_media_payload(doc_id: int) -> bytes:
     return encode_ppm(w, h, rgb)
 
 
+def _media_rows(
+    df: DataFrame, id_col: str, media_id=None, kind: str | None = None
+) -> DataFrame:
+    """(doc_id, mid) rows for the Arrow pass: ``mid`` is the payload
+    identity (``media_id`` Column, default the doc id). ``kind="image"``
+    / ``"audio"`` keeps only that fixture kind (kind 2 = WAV under
+    ``synth_media_payload``'s rule) with a JVM-side filter BELOW the
+    Arrow pass — the cheap-filter-before-expensive-decode ordering."""
+    mid = media_id if media_id is not None else F.col(id_col)
+    rows = df.select(F.col(id_col).alias("doc_id"), mid.cast("long").alias("mid"))
+    if kind == "image":
+        return rows.filter(F.col("mid") % 3 != 2)
+    if kind == "audio":
+        return rows.filter(F.col("mid") % 3 == 2)
+    return rows
+
+
+def _map_media(
+    base: DataFrame,
+    schema: StructType,
+    rows: Callable[[tuple, bytes, DecodedMedia], Iterable[tuple]],
+    key: str = "mid",
+) -> DataFrame:
+    """The one Arrow pass behind every fixture media operator: per input
+    row, synthesize the payload of ``row.<key>``, decode it ONCE, and
+    emit ``rows(row, blob, decoded)`` — tuples in ``schema`` order.
+    Narrow (no shuffle); memory is bounded by the Arrow batch. In
+    production the blob comes straight off the parquet binary column and
+    the synthesis step disappears."""
+    cols = schema.fieldNames()
+    longs = [f.name for f in schema.fields if isinstance(f.dataType, LongType)]
+
+    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for row in pdf.itertuples(index=False):
+                blob = synth_media_payload(int(getattr(row, key)))
+                out.extend(rows(row, blob, decode_media_bytes(blob)))
+            frame = pd.DataFrame(out, columns=cols)
+            for c in longs:
+                frame[c] = frame[c].astype("int64")
+            yield frame
+
+    # one partition = one serial Python worker pass: widen a
+    # low-partition input so the Arrow decode batches parallelize
+    return ensure_min_parallelism(base).mapInPandas(body, schema=schema)
+
+
+def _signal_stats(s: np.ndarray) -> tuple[int, int, int]:
+    """(size, sum, checksum) of a decoded or transformed signal. The
+    checksum is position-weighted so sample ORDER (row direction,
+    channel interleave, stride handling, a transposed gather) is
+    asserted, not just the bag."""
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return int(s.size), int(s.sum()), int(np.dot(weights, s))
+
+
 def _decoded_stats(doc_id: int, n_bytes: int, m: DecodedMedia) -> tuple:
     s = m.samples
     if s.size == 0:
         # a structurally valid container with an empty raster/data chunk
         # must not escape as a bare ValueError from min()/max()
         raise MediaDecodeError(f"zero-sample media for doc_id={doc_id}")
-    # checksum is position-weighted so sample ORDER (row direction,
-    # channel interleave, stride handling) is asserted, not just the bag.
-    checksum = int(np.dot(np.arange(1, s.size + 1, dtype=np.int64), s))
+    n, total, checksum = _signal_stats(s)
     return (
         doc_id, m.media_type, n_bytes, m.width, m.height, m.sample_rate,
-        int(s.size), int(s.sum()), int(s.min()), int(s.max()), checksum,
+        n, total, int(s.min()), int(s.max()), checksum,
     )
-
-
-def decode_media_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id, blob) → DECODE_SCHEMA rows with stats
-    over the decoded samples."""
-    cols = [f.name for f in DECODE_SCHEMA.fields]
-    for pdf in it:
-        rows = [
-            _decoded_stats(int(doc_id), len(bytes(blob)),
-                           decode_media_bytes(bytes(blob)))
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"])
-        ]
-        out = pd.DataFrame(rows, columns=cols)
-        for c in cols:
-            if c != "media_type":
-                out[c] = out[c].astype("int64")
-        yield out
 
 
 def with_media_blob(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -140,95 +183,14 @@ def with_media_blob(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def with_synth_media_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Materialize a real BMP/PPM/WAV payload per row from the
-    deterministic fixture spec (``synth_media_payload``). Arrow-batched;
-    in production the blob comes straight off the parquet binary column
-    and this synthesis step disappears."""
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "blob": [synth_media_payload(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("blob", BinaryType(), False),
-        ]
-    )
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(synth, schema=schema)
-
-
 def synth_decode_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fused fixture path: synthesize + decode in ONE mapInPandas body
-    (one Python worker pass, one Arrow round trip) instead of chaining
-    ``with_synth_media_blob`` → ``decode_media`` (two). Byte-identical
-    output to the chained form; production data (real blobs off
-    parquet) uses ``decode_media`` directly and has a single pass
-    anyway."""
-    cols = [f.name for f in DECODE_SCHEMA.fields]
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                blob = synth_media_payload(doc)
-                rows.append(_decoded_stats(doc, len(blob), decode_media_bytes(blob)))
-            out = pd.DataFrame(rows, columns=cols)
-            for c in cols:
-                if c != "media_type":
-                    out[c] = out[c].astype("int64")
-            yield out
-
-    # one partition = one serial Python worker pass: widen a
-    # low-partition input so the Arrow decode batches parallelize
-    return ensure_min_parallelism(
-        df.select(F.col(id_col).alias("doc_id"))
-    ).mapInPandas(body, schema=DECODE_SCHEMA)
-
-
-def synth_feature_extract(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fused fixture path for feature extraction — see
-    ``synth_decode_media``."""
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"doc_id": [], "feat_idx": [], "feature": []}
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                feats = media_features(decode_media_bytes(synth_media_payload(doc)))
-                for i, v in enumerate(feats):
-                    rows["doc_id"].append(doc)
-                    rows["feat_idx"].append(i)
-                    rows["feature"].append(int(v))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "feat_idx": pd.Series(rows["feat_idx"], dtype="int64"),
-                    "feature": pd.Series(rows["feature"], dtype="int64"),
-                }
-            )
-
-    return ensure_min_parallelism(
-        df.select(F.col(id_col).alias("doc_id"))
-    ).mapInPandas(body, schema=FEATURE_SCHEMA)
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """Arrow-batched decode over the binary column: real BMP/PPM/WAV
-    parsing, stats over decoded pixel/sample values.
-
-    Scale: mapInPandas is narrow (no shuffle); each task streams its
-    partition through the Python worker in Arrow batches, so memory is
-    bounded by batch size, not partition size.
-    """
-    return df.mapInPandas(decode_media_batches, schema=DECODE_SCHEMA)
+    """Real BMP/PPM/PNG/WAV decode per fixture row in ONE Arrow pass:
+    DECODE_SCHEMA stats over the decoded pixel/sample values."""
+    return _map_media(
+        _media_rows(df, id_col),
+        DECODE_SCHEMA,
+        lambda row, blob, m: [_decoded_stats(int(row.doc_id), len(blob), m)],
+    )
 
 
 FEATURE_SCHEMA = StructType(
@@ -250,44 +212,31 @@ def media_features(m: DecodedMedia) -> list[int]:
     s = m.samples
     if s.size == 0:
         raise MediaDecodeError("zero-sample media")
+    n, total, checksum = _signal_stats(s)
     return [
-        int(s.size),
-        int(s.sum()),
+        n,
+        total,
         int(s.min()),
         int(s.max()),
-        int(np.dot(np.arange(1, s.size + 1, dtype=np.int64), s)),  # order-weighted
+        checksum,  # order-weighted
         int(np.dot(s, s)),  # energy
         int(s[0]),
         int(s[-1]),
     ]
 
 
-def feature_extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for feature extraction: blob → decode →
+def synth_feature_extract(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Feature extraction per fixture row in ONE Arrow pass: decode →
     ``N_FEATURES`` scalar features in long form (doc_id, feat_idx,
-    feature)."""
-    for pdf in it:
-        rows = {"doc_id": [], "feat_idx": [], "feature": []}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-            feats = media_features(decode_media_bytes(bytes(blob)))
-            for i, v in enumerate(feats):
-                rows["doc_id"].append(int(doc_id))
-                rows["feat_idx"].append(i)
-                rows["feature"].append(int(v))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "feat_idx": pd.Series(rows["feat_idx"], dtype="int64"),
-                "feature": pd.Series(rows["feature"], dtype="int64"),
-            }
-        )
-
-
-def feature_extract(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column — narrow
-    (no shuffle), memory bounded by the Arrow batch, output long-form so
-    downstream aggregation/indexing shuffles carry fixed-width rows."""
-    return df.mapInPandas(feature_extract_batches, schema=FEATURE_SCHEMA)
+    feature), so downstream aggregation/indexing shuffles carry
+    fixed-width rows."""
+    return _map_media(
+        _media_rows(df, id_col),
+        FEATURE_SCHEMA,
+        lambda row, blob, m: [
+            (row.doc_id, i, v) for i, v in enumerate(media_features(m))
+        ],
+    )
 
 
 def frame_sample(df: DataFrame, every_k: int = 5) -> DataFrame:
@@ -358,25 +307,11 @@ def media_dhash(df: DataFrame, id_col: str = "doc_id", media_id=None) -> DataFra
     query uses ``doc_id % 97`` so the fixture corpus contains genuine
     duplicate images); WAV rows (kind 2) are excluded — pHash over
     audio needs a spectral transform, out of scope."""
-    mid = media_id if media_id is not None else F.col(id_col)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), mid.cast("long").alias("mid")
-    ).filter(F.col("mid") % 3 != 2)
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes = [
-                dhash64(decode_media_bytes(synth_media_payload(int(m))))
-                for m in pdf["mid"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return ensure_min_parallelism(base).mapInPandas(body, schema=DHASH_SCHEMA)
+    return _map_media(
+        _media_rows(df, id_col, media_id, kind="image"),
+        DHASH_SCHEMA,
+        lambda row, blob, m: [(row.doc_id, dhash64(m))],
+    )
 
 
 DHASH_FEATURES_SCHEMA = StructType(
@@ -402,28 +337,15 @@ def media_dhash_and_features(
     32 B/row) output so the two consuming branches never replay the
     decode lineage. WAV rows (kind 2) are excluded like
     ``media_dhash``."""
-    mid = media_id if media_id is not None else F.col(id_col)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), mid.cast("long").alias("mid")
-    ).filter(F.col("mid") % 3 != 2)
 
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"doc_id": [], "dhash": [], "feat_idx": [], "feature": []}
-            for doc, m in zip(pdf["doc_id"], pdf["mid"]):
-                dm = decode_media_bytes(synth_media_payload(int(m)))
-                dh = dhash64(dm)
-                for i, v in enumerate(media_features(dm)):
-                    rows["doc_id"].append(int(doc))
-                    rows["dhash"].append(dh)
-                    rows["feat_idx"].append(i)
-                    rows["feature"].append(int(v))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def rows(row, blob, m):
+        dh = dhash64(m)
+        return [(row.doc_id, dh, i, v) for i, v in enumerate(media_features(m))]
 
-    return ensure_min_parallelism(base).mapInPandas(
-        body, schema=DHASH_FEATURES_SCHEMA
+    return _map_media(
+        _media_rows(df, id_col, media_id, kind="image"),
+        DHASH_FEATURES_SCHEMA,
+        rows,
     )
 
 
@@ -523,20 +445,19 @@ def video_frame_dhash(
     cheap row-multiplying step runs BEFORE any decode, so the expensive
     per-frame path only ever sees sampled frames), then ONE Arrow
     mapInPandas pass synthesizes + decodes each sampled frame through
-    the real BMP codec and dHashes it.
+    the real BMP/PNG codecs and dHashes it.
 
     Fixture spec (what the oracle replays closed-form): video identity
     ``mid`` (default: the doc id) has ``3 + mid % 6`` frames; sampled
     indexes are ``range(0, n_frames, every_k)``; frame image identity
-    ``fid = 3·(mid·64 + frame_idx)`` — always ≡ 0 mod 3, i.e. a BMP
-    payload under ``synth_media_payload``'s kind rule, with the spec's
-    per-fid dims and pixel series. In production the mapInPandas body
+    ``fid = 3·(mid·64 + frame_idx)`` — always ≡ 0 mod 3, i.e. an image
+    (BMP or PNG) payload under ``synth_media_payload``'s kind rule, with
+    the spec's per-fid dims and pixel series. In production the Arrow pass
     seeks the container to the sampled frame offsets instead (the
     sampling-before-decode shape is the point at 100 TB)."""
-    mid = (media_id if media_id is not None else F.col(id_col)).cast("long")
     n_frames = F.col("mid") % 6 + 3
     frames = (
-        df.select(F.col(id_col).alias("doc_id"), mid.alias("mid"))
+        _media_rows(df, id_col, media_id)
         .withColumn(
             "frame_idx",
             F.explode(
@@ -546,26 +467,12 @@ def video_frame_dhash(
         )
         .withColumn("fid", 3 * (F.col("mid") * 64 + F.col("frame_idx")))
     )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes = [
-                dhash64(decode_media_bytes(synth_media_payload(int(f))))
-                for f in pdf["fid"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "frame_idx": pdf["frame_idx"].astype("int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    # widen the (cheap) exploded frame rows so the per-frame decode
-    # Arrow pass runs on every core even for a one-file fixture input
-    return ensure_min_parallelism(
-        frames.select("doc_id", "frame_idx", "fid")
-    ).mapInPandas(body, schema=VIDEO_DHASH_SCHEMA)
+    return _map_media(
+        frames.select("doc_id", "frame_idx", "fid"),
+        VIDEO_DHASH_SCHEMA,
+        lambda row, blob, m: [(row.doc_id, row.frame_idx, dhash64(m))],
+        key="fid",
+    )
 
 
 def video_neardup_pairs(
@@ -705,25 +612,11 @@ def media_audio_fingerprint(
     decode path (Arrow-batched, zero shuffle) — the audio sibling of
     ``media_dhash`` (images); together they cover both fixture
     modalities. Non-audio rows (kind ≠ 2) are excluded."""
-    mid = media_id if media_id is not None else F.col(id_col)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), mid.cast("long").alias("mid")
-    ).filter(F.col("mid") % 3 == 2)
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fps = [
-                audio_fingerprint(decode_media_bytes(synth_media_payload(int(m))))
-                for m in pdf["mid"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "afp": pd.Series(fps, dtype="int64"),
-                }
-            )
-
-    return ensure_min_parallelism(base).mapInPandas(body, schema=AUDIO_FP_SCHEMA)
+    return _map_media(
+        _media_rows(df, id_col, media_id, kind="audio"),
+        AUDIO_FP_SCHEMA,
+        lambda row, blob, m: [(row.doc_id, audio_fingerprint(m))],
+    )
 
 
 def audio_neardup_pairs(
@@ -825,7 +718,7 @@ def clip_align_scores(
 ) -> DataFrame:
     """CLIP-score-style image-text ALIGNMENT filter (LAION-style pair
     curation): the decoded-media features (long form, from
-    ``feature_extract``) project into the text-embedding space via a
+    ``synth_feature_extract``) project into the text-embedding space via a
     fixed integer matrix (stand-in for the trained vision projection —
     swap ``_clip_proj`` for a broadcast weight table in production),
     and each document scores cosine(text_embedding, image_embedding);
@@ -908,31 +801,26 @@ def synth_resize_stats(
     mapInPandas synthesizes + decodes + resizes and emits integer
     stats over the RESIZED raster (position-weighted checksum asserts
     pixel ORDER, so a transposed/flipped gather breaks the oracle)."""
-    imgs = df.select(F.col(id_col).alias("doc_id")).filter(
-        F.col("doc_id") % 3 != 2
+    return _raster_stats(df, id_col, resize_nearest, target_w, target_h)
+
+
+def _raster_stats(
+    df: DataFrame,
+    id_col: str,
+    kernel: Callable[[DecodedMedia, int, int], np.ndarray],
+    out_w: int,
+    out_h: int,
+) -> DataFrame:
+    """RESIZE_SCHEMA rows of ``kernel(decoded, out_w, out_h)`` over the
+    fixture's images — the shared body of resize, bilinear resize and
+    center crop."""
+    return _map_media(
+        _media_rows(df, id_col, kind="image"),
+        RESIZE_SCHEMA,
+        lambda row, blob, m: [
+            (row.doc_id, out_w, out_h, *_signal_stats(kernel(m, out_w, out_h)))
+        ],
     )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                m = decode_media_bytes(synth_media_payload(doc))
-                r = resize_nearest(m, target_w, target_h)
-                checksum = int(
-                    np.dot(np.arange(1, r.size + 1, dtype=np.int64), r)
-                )
-                rows.append(
-                    (doc, target_w, target_h, int(r.size), int(r.sum()), checksum)
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            )
-            for c in out.columns:
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return ensure_min_parallelism(imgs).mapInPandas(body, schema=RESIZE_SCHEMA)
 
 
 RESAMPLE_SCHEMA = StructType(
@@ -970,32 +858,27 @@ def synth_audio_resample_stats(
     kinds filter JVM-side before the Arrow pass), one mapInPandas
     decodes + gathers, integer stats over the RESAMPLED signal with a
     position-weighted checksum (asserts sample order)."""
-    wavs = df.select(F.col(id_col).alias("doc_id")).filter(
-        F.col("doc_id") % 3 == 2
+    return _resample_stats(df, id_col, resample_nearest, target_rate, RESAMPLE_SCHEMA)
+
+
+def _resample_stats(
+    df: DataFrame,
+    id_col: str,
+    kernel: Callable[[DecodedMedia, int], np.ndarray],
+    target_rate: int,
+    schema: StructType,
+) -> DataFrame:
+    """(doc_id, rate_in, rate_out, size, sum, checksum) rows of
+    ``kernel(decoded, target_rate)`` over the fixture's WAV payloads —
+    the shared body of nearest and windowed-sinc resampling."""
+    return _map_media(
+        _media_rows(df, id_col, kind="audio"),
+        schema,
+        lambda row, blob, m: [
+            (row.doc_id, m.sample_rate, target_rate,
+             *_signal_stats(kernel(m, target_rate)))
+        ],
     )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                m = decode_media_bytes(synth_media_payload(doc))
-                r = resample_nearest(m, target_rate)
-                checksum = int(
-                    np.dot(np.arange(1, r.size + 1, dtype=np.int64), r)
-                )
-                rows.append(
-                    (doc, m.sample_rate, target_rate, int(r.size),
-                     int(r.sum()), checksum)
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in RESAMPLE_SCHEMA.fields]
-            )
-            for c in out.columns:
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return ensure_min_parallelism(wavs).mapInPandas(body, schema=RESAMPLE_SCHEMA)
 
 
 # ------------------------------------------- production kernels (r9)
@@ -1065,31 +948,7 @@ def synth_resize_bilinear_stats(
     ``synth_resize_stats`` (JVM-side kind filter BEFORE the Arrow
     pass, ONE mapInPandas decode+resize, position-weighted checksum
     asserting pixel order)."""
-    imgs = df.select(F.col(id_col).alias("doc_id")).filter(
-        F.col("doc_id") % 3 != 2
-    )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                m = decode_media_bytes(synth_media_payload(doc))
-                r = resize_bilinear(m, target_w, target_h)
-                checksum = int(
-                    np.dot(np.arange(1, r.size + 1, dtype=np.int64), r)
-                )
-                rows.append(
-                    (doc, target_w, target_h, int(r.size), int(r.sum()), checksum)
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            )
-            for c in out.columns:
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return ensure_min_parallelism(imgs).mapInPandas(body, schema=RESIZE_SCHEMA)
+    return _raster_stats(df, id_col, resize_bilinear, target_w, target_h)
 
 
 #: polyphase windowed-sinc geometry: 32 phases × 8 taps, Q12
@@ -1166,32 +1025,7 @@ def synth_audio_resample_sinc_stats(
     """Fused fixture path for windowed-sinc resampling — identical
     shape to ``synth_audio_resample_stats`` (JVM kind filter, one
     mapInPandas, position-weighted checksum over the Q12 output)."""
-    wavs = df.select(F.col(id_col).alias("doc_id")).filter(
-        F.col("doc_id") % 3 == 2
-    )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                m = decode_media_bytes(synth_media_payload(doc))
-                r = resample_sinc(m, target_rate)
-                checksum = int(
-                    np.dot(np.arange(1, r.size + 1, dtype=np.int64), r)
-                )
-                rows.append(
-                    (doc, m.sample_rate, target_rate, int(r.size),
-                     int(r.sum()), checksum)
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in SINC_SCHEMA.fields]
-            )
-            for c in out.columns:
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return ensure_min_parallelism(wavs).mapInPandas(body, schema=SINC_SCHEMA)
+    return _resample_stats(df, id_col, resample_sinc, target_rate, SINC_SCHEMA)
 
 
 def crop_center(m: DecodedMedia, crop_w: int, crop_h: int) -> np.ndarray:
@@ -1225,28 +1059,4 @@ def synth_crop_stats(
     Arrow pass, ONE mapInPandas decodes + crops + emits integer stats
     with a position-weighted checksum so a mis-centered, transposed or
     channel-swapped crop breaks the oracle)."""
-    imgs = df.select(F.col(id_col).alias("doc_id")).filter(
-        F.col("doc_id") % 3 != 2
-    )
-
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                doc = int(d)
-                m = decode_media_bytes(synth_media_payload(doc))
-                r = crop_center(m, crop_w, crop_h)
-                checksum = int(
-                    np.dot(np.arange(1, r.size + 1, dtype=np.int64), r)
-                )
-                rows.append(
-                    (doc, crop_w, crop_h, int(r.size), int(r.sum()), checksum)
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            )
-            for c in out.columns:
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return ensure_min_parallelism(imgs).mapInPandas(body, schema=RESIZE_SCHEMA)
+    return _raster_stats(df, id_col, crop_center, crop_w, crop_h)

@@ -1004,49 +1004,6 @@ def kmeans_lloyd_step(
     )
 
 
-def kmeans_train(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Full spherical k-means training: chain ``kmeans_lloyd_step``,
-    feeding each iteration's means back as the next iteration's seeds →
-    final (cell, centroid array<double>) codebook frame, broadcastable
-    into `assign_cells` / `multiprobe_cells` / `ivf_topk`.
-
-    Per iteration the long-form means are collected to the driver — the
-    codebook is k × dim values (a few KB), and materializing it
-    truncates the lineage so the plan doesn't grow by one corpus scan
-    per iteration (the same driver-roundtrip pattern as `pq_train` and
-    MLlib's own k-means). Total cost: ``iters`` corpus scans; all
-    shuffles fixed-width. Empty cells simply vanish (their seed
-    attracted nothing) — downstream probes see fewer cells, they don't
-    see NaN centroids.
-    """
-    spark = emb.sparkSession
-    step = kmeans_lloyd_step(emb, k=k, id_col=id_col, vec_col=vec_col)
-    for _ in range(iters - 1):
-        rows = step.collect()
-        by_cell: dict = {}
-        for row in rows:
-            by_cell.setdefault(row["cell"], []).append((row["dim"], row["mean_x"]))
-        seed_rows = [
-            (cell, [x for _, x in sorted(dims)]) for cell, dims in by_cell.items()
-        ]
-        seeds = spark.createDataFrame(seed_rows, ["cell", "centroid"])
-        step = kmeans_lloyd_step(
-            emb, k=k, id_col=id_col, vec_col=vec_col, seeds=seeds
-        )
-    final = step.collect()
-    by_cell = {}
-    for row in final:
-        by_cell.setdefault(row["cell"], []).append((row["dim"], row["mean_x"]))
-    out = [(cell, [x for _, x in sorted(dims)]) for cell, dims in by_cell.items()]
-    return spark.createDataFrame(out, ["cell", "centroid"])
-
-
 def lsh_topk_directed(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -2,9 +2,9 @@
 
 ``pagerank`` runs a fixed number of damped power-iteration steps over a
 weighted edge list, entirely as joins + aggregations — the companion to
-the pointer-doubling connected components in ``functions/dedup.py`` and
-the chained Lloyd steps in ``kmeans_train``: iterative algorithms in
-Spark are *plan composition*, not driver loops over collected data.
+the pointer-doubling connected components in ``functions/dedup.py``:
+iterative algorithms in Spark are *plan composition*, not driver loops
+over collected data.
 
 Per iteration: broadcast the current rank vector onto the (static,
 pre-normalized) transition edges, aggregate contributions by
@@ -53,7 +53,7 @@ def pagerank(
     and every ``checkpoint_interval`` iterations the O(nodes) rank
     vector is localCheckpoint'ed so the plan depth stays bounded for
     long power runs (rank state is materialized, never collected —
-    unlike ``kmeans_train``'s tiny codebook, a web-scale rank vector
+    unlike ``pq_train``'s tiny codebooks, a web-scale rank vector
     must not visit the driver).
     """
     if iterations < 1:

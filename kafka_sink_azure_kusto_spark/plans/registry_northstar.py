@@ -1356,9 +1356,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel/sample values. The oracle recomputes the stats from the value
     model alone — it never sees the bytes — so container parsing must be
     exactly right. Narrow Arrow mapInPandas end to end; no shuffle —
-    the fixture path fuses synthesis + decode into ONE mapInPandas pass
-    (one Python worker round trip instead of two; production real-blob
-    data runs decode_media alone)."""
+    synthesis + decode run in ONE mapInPandas pass."""
     docs = load_table(spark, sf_dir, "documents")
     return M.synth_decode_media(docs)
 

@@ -9,13 +9,14 @@ the sink stages gzipped files, a backend ships them.
   NDJSON/CSV gz file appends its rows to a local parquet-backed table
   and records an ingest-command log (the rebuild test plan's "Kusto
   emulator", SURVEY §5).
-- ``QueuedKustoBackend`` / ``StreamingKustoBackend`` — thin wrappers
-  over the public ``azure-kusto-ingest`` Python SDK (queued DM
-  ingestion K1; managed-streaming with queued fallback K2). The SDK is
-  not installed in this environment, so construction raises a clear
-  error unless the import succeeds; all logic that can be tested
-  without the SDK (property building, error classification) lives
-  outside the import guard.
+- ``KustoSdkBackend`` — thin wrapper over the public
+  ``azure-kusto-ingest`` Python SDK that picks the client per mapping:
+  queued DM ingestion (K1), or managed streaming with queued fallback
+  (K2) for a mapping with ``streaming`` set. The SDK is not installed
+  in this environment, so construction raises a clear error unless the
+  import succeeds; all logic that can be tested without the SDK
+  (property building, error classification) lives outside the import
+  guard.
 """
 
 from __future__ import annotations
@@ -315,10 +316,44 @@ class LocalEmulatorBackend:
             return [json.loads(line) for line in f if line.strip()]
 
 
+# K2 — streaming-status dispositions (hasStreamingSucceeded,
+# TopicPartitionWriter.java:150-176): Succeeded/Queued/Pending are
+# success; Skipped/PartiallySucceeded are FINAL-but-accepted (warned, not
+# retried, never DLQ'd); Failed is retryable.
+_STREAMING_OK = {"succeeded", "success", "queued", "pending"}
+_STREAMING_FINAL_WARN = {"skipped", "partiallysucceeded"}
+
+
+def streaming_status_accepted(status: str) -> bool:
+    """True ⇒ the streaming ingest result is final and accepted; False ⇒
+    Failed, which the caller retries (TopicPartitionWriter.java:110-116)."""
+    s = str(status).replace("_", "").replace(" ", "").lower()
+    if s in _STREAMING_OK:
+        return True
+    if s in _STREAMING_FINAL_WARN:
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "streaming ingestion finished with final status %s; not retried "
+            "and not sent to DLQ (reference parity)",
+            status,
+        )
+        return True
+    return False
+
+
 @dataclass
-class _KustoSdkBackendBase:
-    """Shared construction for the real backends (K1/K2). Kept separate so
-    error-classification logic is importable without the SDK."""
+class KustoSdkBackend:
+    """K1/K2 — ingestion through the public ``azure-kusto-ingest`` SDK,
+    client chosen per mapping like KustoSinkTask.java:404: a file whose
+    mapping sets ``streaming`` goes through a ``ManagedStreamingIngestClient``
+    on the ENGINE endpoint (engine-first with automatic queued fallback
+    inside the client), built on first use like the reference builds it
+    only when some mapping streams (KustoSinkTask.java:462-463); every
+    other file goes through the queued (DM) ``QueuedIngestClient``
+    (TopicPartitionWriter.java:106). A Failed streaming status raises
+    ``TransientIngestError`` so the sink's retry loop replays it — the
+    hasStreamingSucceeded retry continue (TopicPartitionWriter.java:107-116)."""
 
     ingest_url: str
     query_url: Optional[str] = None
@@ -331,15 +366,68 @@ class _KustoSdkBackendBase:
     # azure-kusto-data's KustoClient against the engine endpoint.
     query_client_factory: Optional[object] = None
 
-    def __post_init__(self) -> None:  # overridden by SDK-backed subclasses
-        return None
+    def __post_init__(self) -> None:
+        try:
+            from azure.kusto.ingest import QueuedIngestClient
+        except ImportError as e:
+            raise NotImplementedError(
+                "KustoSdkBackend requires the public azure-kusto-ingest "
+                "package (not installed in this environment); use "
+                "LocalEmulatorBackend for tests"
+            ) from e
+        self._client = self._proxied(QueuedIngestClient(self._kcsb(self.ingest_url)))
+        self._streaming = None
+        self._streaming_lock = threading.Lock()
 
-    classify = staticmethod(classify_ingest_error)
+    def _kcsb(self, url: str):
+        from azure.kusto.data import KustoConnectionStringBuilder
+
+        return KustoConnectionStringBuilder.with_aad_application_key_authentication(
+            url,
+            self.auth.get("app_id", ""),
+            self.auth.get("app_key", ""),
+            self.auth.get("authority", ""),
+        )
 
     def _proxied(self, client):
         if self.proxy_url:
             client.set_proxy(self.proxy_url)
         return client
+
+    def _streaming_client(self):
+        with self._streaming_lock:
+            if self._streaming is None:
+                from azure.kusto.ingest import ManagedStreamingIngestClient
+
+                self._streaming = self._proxied(
+                    ManagedStreamingIngestClient.from_engine_kcsb(
+                        self._kcsb(self.engine_url)
+                    )
+                )
+            return self._streaming
+
+    def ingest_file(self, path: str, props: IngestionProperties) -> IngestResult:
+        from azure.kusto.ingest import IngestionProperties as SdkProps
+
+        sdk_props = SdkProps(
+            database=props.database,
+            table=props.table,
+            data_format=props.format,
+            ingestion_mapping_reference=props.mapping_reference,
+        )
+        if props.streaming:
+            result = self._streaming_client().ingest_from_file(
+                path, ingestion_properties=sdk_props
+            )
+            status = getattr(result, "status", "Succeeded")
+            status_name = getattr(status, "name", None) or str(status)
+            if not streaming_status_accepted(status_name):
+                raise TransientIngestError(
+                    f"streaming ingestion returned Failed for {path}"
+                )
+        else:
+            self._client.ingest_from_file(path, ingestion_properties=sdk_props)
+        return IngestResult(status="Succeeded", source_id=str(uuid.uuid4()))
 
     # The four validation probes, verbatim from KustoSinkTask.java:46-50.
     FETCH_TABLE_COMMAND = "{table} | count"
@@ -366,23 +454,14 @@ class _KustoSdkBackendBase:
                 client = self.query_client_factory()
             else:
                 try:
-                    from azure.kusto.data import (
-                        KustoClient,
-                        KustoConnectionStringBuilder,
-                    )
+                    from azure.kusto.data import KustoClient
                 except ImportError as e:
                     raise NotImplementedError(
                         "table validation needs azure-kusto-data (not "
                         "installed); inject query_client_factory or disable "
                         "kusto.validation.table.enable"
                     ) from e
-                kcsb = KustoConnectionStringBuilder.with_aad_application_key_authentication(
-                    self.engine_url,
-                    self.auth.get("app_id", ""),
-                    self.auth.get("app_key", ""),
-                    self.auth.get("authority", ""),
-                )
-                client = self._proxied(KustoClient(kcsb))
+                client = self._proxied(KustoClient(self._kcsb(self.engine_url)))
             self._qclient = client
         return client
 
@@ -522,118 +601,3 @@ class _KustoSdkBackendBase:
 
         if errors:
             raise PermanentIngestError("; ".join(errors))
-
-
-class QueuedKustoBackend(_KustoSdkBackendBase):
-    """K1 — queued (DM) ingestion via azure-kusto-ingest
-    (TopicPartitionWriter.java:106; client KustoSinkTask.java:309-321)."""
-
-    def __post_init__(self) -> None:
-        try:
-            from azure.kusto.data import KustoConnectionStringBuilder  # noqa: F401
-            from azure.kusto.ingest import QueuedIngestClient  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "QueuedKustoBackend requires the public azure-kusto-ingest "
-                "package (not installed in this environment); use "
-                "LocalEmulatorBackend for tests"
-            ) from e
-        from azure.kusto.data import KustoConnectionStringBuilder
-        from azure.kusto.ingest import QueuedIngestClient
-
-        kcsb = KustoConnectionStringBuilder.with_aad_application_key_authentication(
-            self.ingest_url,
-            self.auth.get("app_id", ""),
-            self.auth.get("app_key", ""),
-            self.auth.get("authority", ""),
-        )
-        self._client = self._proxied(QueuedIngestClient(kcsb))
-
-    # validate(): inherited V1–V4 KQL probes (_KustoSdkBackendBase)
-
-    def ingest_file(self, path: str, props: IngestionProperties) -> IngestResult:
-        from azure.kusto.ingest import IngestionProperties as SdkProps
-
-        sdk_props = SdkProps(
-            database=props.database,
-            table=props.table,
-            data_format=props.format,
-            ingestion_mapping_reference=props.mapping_reference,
-        )
-        self._client.ingest_from_file(path, ingestion_properties=sdk_props)
-        return IngestResult(status="Succeeded", source_id=str(uuid.uuid4()))
-
-
-# K2 — streaming-status dispositions (hasStreamingSucceeded,
-# TopicPartitionWriter.java:150-176): Succeeded/Queued/Pending are
-# success; Skipped/PartiallySucceeded are FINAL-but-accepted (warned, not
-# retried, never DLQ'd); Failed is retryable.
-_STREAMING_OK = {"succeeded", "success", "queued", "pending"}
-_STREAMING_FINAL_WARN = {"skipped", "partiallysucceeded"}
-
-
-def streaming_status_accepted(status: str) -> bool:
-    """True ⇒ the streaming ingest result is final and accepted; False ⇒
-    Failed, which the caller retries (TopicPartitionWriter.java:110-116)."""
-    s = str(status).replace("_", "").replace(" ", "").lower()
-    if s in _STREAMING_OK:
-        return True
-    if s in _STREAMING_FINAL_WARN:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "streaming ingestion finished with final status %s; not retried "
-            "and not sent to DLQ (reference parity)",
-            status,
-        )
-        return True
-    return False
-
-
-class StreamingKustoBackend(_KustoSdkBackendBase):
-    """K2 — managed streaming ingestion via the public azure-kusto-ingest
-    ``ManagedStreamingIngestClient`` (engine-first with automatic queued
-    fallback inside the client; KustoSinkTask.java:322-328). Failed
-    streaming statuses raise ``TransientIngestError`` so the sink's retry
-    loop replays them — the Spark rendition of the hasStreamingSucceeded
-    retry continue (TopicPartitionWriter.java:107-116)."""
-
-    def __post_init__(self) -> None:
-        try:
-            from azure.kusto.data import KustoConnectionStringBuilder
-            from azure.kusto.ingest import ManagedStreamingIngestClient
-        except ImportError as e:
-            raise NotImplementedError(
-                "StreamingKustoBackend requires azure-kusto-ingest; use "
-                "LocalEmulatorBackend for tests"
-            ) from e
-        # Managed streaming talks to the ENGINE endpoint
-        # (KustoSinkTask.java:322-328 builds both clients from the pair
-        # of URLs).
-        kcsb = KustoConnectionStringBuilder.with_aad_application_key_authentication(
-            self.engine_url,
-            self.auth.get("app_id", ""),
-            self.auth.get("app_key", ""),
-            self.auth.get("authority", ""),
-        )
-        self._client = self._proxied(ManagedStreamingIngestClient.from_engine_kcsb(kcsb))
-
-    # validate(): inherited V1–V4 KQL probes (_KustoSdkBackendBase)
-
-    def ingest_file(self, path: str, props: IngestionProperties) -> IngestResult:
-        from azure.kusto.ingest import IngestionProperties as SdkProps
-
-        sdk_props = SdkProps(
-            database=props.database,
-            table=props.table,
-            data_format=props.format,
-            ingestion_mapping_reference=props.mapping_reference,
-        )
-        result = self._client.ingest_from_file(path, ingestion_properties=sdk_props)
-        status = getattr(result, "status", "Succeeded")
-        status_name = getattr(status, "name", None) or str(status)
-        if not streaming_status_accepted(status_name):
-            raise TransientIngestError(
-                f"streaming ingestion returned Failed for {path}"
-            )
-        return IngestResult(status="Succeeded", source_id=str(uuid.uuid4()))

@@ -18,10 +18,6 @@ log = logging.getLogger(__name__)
 T = TypeVar("T")
 
 
-class PermanentError(Exception):
-    """Marker: do not retry (R3)."""
-
-
 def retry_with_backoff(
     fn: Callable[[], T],
     max_attempts: int,
@@ -45,8 +41,6 @@ def retry_with_backoff(
             on_attempt(attempt)
         try:
             return fn()
-        except PermanentError:
-            raise
         except BaseException as e:  # noqa: BLE001 — classify then rethrow
             if is_permanent is not None and is_permanent(e):
                 log.error("permanent error on attempt %d, not retrying: %s", attempt, e)

@@ -567,7 +567,7 @@ class KustoSparkSink:
             _ingest_file(
                 self.backend, s.path, props,
                 self.config.max_retry_attempts, self.config.retry_backoff_time_ms,
-                getattr(self.backend, "classify", classify_ingest_error),
+                classify_ingest_error,
                 lambda _: self.metrics.incr("ingestion_attempts"),
             )
             self.metrics.incr("ingestion_successes")

@@ -641,17 +641,27 @@ def test_resample_sinc_table_and_dc_gain():
 
 
 def test_bilinear_and_sinc_plans_single_mapinpandas(spark):
-    """Both production kernels keep the decode-once single-Arrow-pass
-    plan: exactly 1 MapInPandas, JVM-side kind filter below it."""
-    from kafka_sink_azure_kusto_spark.functions.multimodal import (
-        synth_audio_resample_sinc_stats,
-        synth_resize_bilinear_stats,
-    )
+    """Every fixture media operator keeps the decode-once single-Arrow-
+    pass plan: exactly 1 MapInPandas, with the JVM-side kind filter
+    below it for the kind-filtered operators. A kind filter that keeps
+    nothing yields an empty frame with the operator's schema."""
+    from kafka_sink_azure_kusto_spark.functions import multimodal as M
 
     df = spark.range(0, 60).withColumnRenamed("id", "doc_id")
-    for fn in (synth_resize_bilinear_stats, synth_audio_resample_sinc_stats):
+    for fn, kind_filtered in [
+        (M.synth_decode_media, False), (M.synth_feature_extract, False),
+        (M.video_frame_dhash, False), (M.media_dhash, True),
+        (M.media_dhash_and_features, True), (M.media_audio_fingerprint, True),
+        (M.synth_resize_stats, True), (M.synth_resize_bilinear_stats, True),
+        (M.synth_crop_stats, True), (M.synth_audio_resample_stats, True),
+        (M.synth_audio_resample_sinc_stats, True),
+    ]:
         plan = fn(df)._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 1, plan
+        below = plan[plan.index("MapInPandas"):]
+        assert ("Filter" in below and "% 3" in below) == kind_filtered, plan
+    empty = M.synth_resize_stats(spark.range(0, 30).selectExpr("id * 3 + 2 AS doc_id"))
+    assert empty.schema == M.RESIZE_SCHEMA and empty.collect() == []
 
 
 def test_png_adam7_interlace_roundtrip():

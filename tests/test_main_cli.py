@@ -8,10 +8,11 @@ from kafka_sink_azure_kusto_spark.__main__ import main
 from kafka_sink_azure_kusto_spark.config import ConfigException
 
 
-def _write_cfg(tmp_path, extra=None):
+def _write_cfg(tmp_path, extra=None, streaming=False):
+    mapping = {"topic": "t", "db": "d", "table": "x", "format": "json", "streaming": streaming}
     props = {
         "kusto.ingestion.url": "https://ingest-c.kusto.windows.net",
-        "kusto.tables.topics.mapping": '[{"topic":"t","db":"d","table":"x","format":"json"}]',
+        "kusto.tables.topics.mapping": json.dumps([mapping]),
     }
     props.update(extra or {})
     p = tmp_path / "connector.json"
@@ -19,17 +20,18 @@ def _write_cfg(tmp_path, extra=None):
     return str(p)
 
 
-@pytest.mark.parametrize("backend", ["queued", "streaming"])
-def test_sdk_backends_require_auth_config(tmp_path, backend):
+@pytest.mark.parametrize("mode", ["queued", "streaming"])
+def test_sdk_backends_require_auth_config(tmp_path, mode):
     # ALL aad keys unset: config-level validation passes (auth is optional
-    # for the emulator backend), but the SDK backends must not silently
-    # receive empty-string credentials — fail fast naming every key.
-    cfg = _write_cfg(tmp_path)
+    # for the emulator backend), but the SDK backend must not silently
+    # receive empty-string credentials, whichever client the mapping
+    # selects — fail fast naming every key.
+    cfg = _write_cfg(tmp_path, streaming=mode == "streaming")
     with pytest.raises(
         ConfigException,
         match="aad.auth.appid, aad.auth.appkey, aad.auth.authority",
     ):
-        main(["--config", cfg, "--backend", backend, "--source", "replay",
+        main(["--config", cfg, "--backend", "kusto", "--source", "replay",
               "--replay-dir", str(tmp_path)])
 
 

@@ -754,27 +754,3 @@ def test_new_operators_tolerate_empty_input(spark):
     assert calendar_fill(empty_events).count() == 0
     assert series_zscores(empty_events).count() == 0
     assert retention_cohorts(empty_events).count() == 0
-
-
-def test_kmeans_train_separates_clusters(spark):
-    from kafka_sink_azure_kusto_spark.functions.similarity import (
-        assign_cells,
-        kmeans_train,
-    )
-
-    # two tight direction clusters; seeds (smallest ids) start one per
-    # cluster after the first step regardless of initial assignment
-    rows = []
-    for i in range(20):
-        rows.append((i, [1.0, 0.05 * (i % 3)]))          # near +x
-    for i in range(20, 40):
-        rows.append((i, [0.05 * (i % 3), 1.0]))          # near +y
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    codebook = kmeans_train(emb, k=2, iters=3)
-    cents = {r["cell"]: r["centroid"] for r in codebook.collect()}
-    assert len(cents) == 2
-    assigned = assign_cells(emb, codebook)
-    cells = {r["vec_id"]: r["cell"] for r in assigned.collect()}
-    xs = {cells[i] for i in range(20)}
-    ys = {cells[i] for i in range(20, 40)}
-    assert len(xs) == 1 and len(ys) == 1 and xs != ys  # clean separation

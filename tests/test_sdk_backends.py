@@ -1,9 +1,11 @@
-"""Exercise the azure-kusto-ingest-backed backends (K1/K2) against a
+"""Exercise the azure-kusto-ingest-backed backend (K1/K2) against a
 stub SDK injected into sys.modules — the bodies are otherwise dead code
 in CI since the SDK isn't installed. Asserts the ingest properties the
-reference builds (KustoSinkTask.java:145-184) and the managed-streaming
-status dispositions (TopicPartitionWriter.java:150-176)."""
+reference builds (KustoSinkTask.java:145-184), the per-mapping client
+choice (KustoSinkTask.java:404) and the managed-streaming status
+dispositions (TopicPartitionWriter.java:150-176)."""
 
+import dataclasses
 import sys
 import types
 
@@ -46,29 +48,25 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
             self.status = status
 
     class Client:
-        """set_proxy recorder shared by the fake SDK clients."""
+        """kcsb and set_proxy recorder shared by the fake SDK clients."""
 
         proxy = None
+
+        def __init__(self, kcsb):
+            self.kcsb = kcsb
 
         def set_proxy(self, proxy_url):
             self.proxy = proxy_url
 
     class KustoClient(Client):
-        def __init__(self, kcsb):
-            self.kcsb = kcsb
+        pass
 
     class QueuedIngestClient(Client):
-        def __init__(self, kcsb):
-            self.kcsb = kcsb
-
         def ingest_from_file(self, path, ingestion_properties):
             calls.append(("queued", path, ingestion_properties))
             return Result("Queued")
 
     class ManagedStreamingIngestClient(Client):
-        def __init__(self, kcsb):
-            self.kcsb = kcsb
-
         @classmethod
         def from_engine_kcsb(cls, kcsb):
             return cls(kcsb)
@@ -94,16 +92,20 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
 PROPS = IngestionProperties(
     database="db1", table="tbl", format="multijson", mapping_reference="Mapping"
 )
+STREAMED = dataclasses.replace(PROPS, streaming=True)
+
+
+def _sdk_backend(monkeypatch, calls, streaming_status="Succeeded", **kw):
+    _install_fake_sdk(monkeypatch, calls, streaming_status)
+    from kafka_sink_azure_kusto_spark.streaming.backends import KustoSdkBackend
+
+    return KustoSdkBackend(ingest_url="https://ingest-c.kusto.windows.net", **kw)
 
 
 def test_queued_backend_builds_sdk_properties(monkeypatch, tmp_path):
     calls = []
-    _install_fake_sdk(monkeypatch, calls)
-    from kafka_sink_azure_kusto_spark.streaming.backends import QueuedKustoBackend
-
-    b = QueuedKustoBackend(
-        ingest_url="https://ingest-c.kusto.windows.net",
-        auth={"app_id": "a", "app_key": "k", "authority": "t"},
+    b = _sdk_backend(
+        monkeypatch, calls, auth={"app_id": "a", "app_key": "k", "authority": "t"}
     )
     f = tmp_path / "x.multijson.gz"
     f.write_bytes(b"x")
@@ -117,43 +119,54 @@ def test_queued_backend_builds_sdk_properties(monkeypatch, tmp_path):
     assert sdk_props.data_format == "multijson"
     assert sdk_props.ingestion_mapping_reference == "Mapping"
     assert b._client.kcsb.url == "https://ingest-c.kusto.windows.net"
+    # no streaming mapping seen ⇒ no streaming client built
+    assert b._streaming is None
 
 
 def test_streaming_backend_engine_url_and_success(monkeypatch, tmp_path):
     calls = []
-    _install_fake_sdk(monkeypatch, calls)
-    from kafka_sink_azure_kusto_spark.streaming.backends import StreamingKustoBackend
-
-    b = StreamingKustoBackend(ingest_url="https://ingest-c.kusto.windows.net")
+    b = _sdk_backend(monkeypatch, calls)
+    f = tmp_path / "x.multijson.gz"
+    f.write_bytes(b"x")
+    assert b.ingest_file(str(f), STREAMED).accepted
+    assert calls[0][0] == "streaming"
     # engine endpoint derived by stripping the DM prefix
-    assert b._client.kcsb.url == "https://c.kusto.windows.net"
+    assert b._streaming_client().kcsb.url == "https://c.kusto.windows.net"
+
+
+def test_backend_picks_client_per_mapping(monkeypatch, tmp_path):
+    # KustoSinkTask.java:404 — one backend, the client chosen by each
+    # file's mapping: a plain mapping queues, a streaming one streams
+    calls = []
+    b = _sdk_backend(monkeypatch, calls)
     f = tmp_path / "x.multijson.gz"
     f.write_bytes(b"x")
     assert b.ingest_file(str(f), PROPS).accepted
-    assert calls[0][0] == "streaming"
+    assert b.ingest_file(str(f), STREAMED).accepted
+    assert [kind for kind, _, _ in calls] == ["queued", "streaming"]
 
 
 def test_streaming_backend_failed_status_is_retryable(monkeypatch, tmp_path):
-    calls = []
-    _install_fake_sdk(monkeypatch, calls, streaming_status="Failed")
-    from kafka_sink_azure_kusto_spark.streaming.backends import StreamingKustoBackend
-
-    b = StreamingKustoBackend(ingest_url="https://ingest-c.kusto.windows.net")
+    b = _sdk_backend(monkeypatch, [], streaming_status="Failed")
     f = tmp_path / "x.multijson.gz"
     f.write_bytes(b"x")
     # Failed ⇒ TransientIngestError ⇒ the sink's retry loop replays it
     # (the hasStreamingSucceeded retry-continue, TopicPartitionWriter.java:107-116)
     with pytest.raises(TransientIngestError):
-        b.ingest_file(str(f), PROPS)
+        b.ingest_file(str(f), STREAMED)
 
 
 @pytest.mark.parametrize("kind", ["queued", "streaming"])
 def test_cli_proxy_reaches_ingest_and_query_clients(monkeypatch, kind):
     # proxy.host/proxy.port (C4, KustoSinkTask.java:311-317) become an
-    # HTTP proxy on both SDK clients the CLI's backend builds
+    # HTTP proxy on every SDK client the CLI's backend builds: the
+    # queued and the streaming ingest client, and the query client
     _install_fake_sdk(monkeypatch, [])
     from kafka_sink_azure_kusto_spark.__main__ import sdk_backend
     from kafka_sink_azure_kusto_spark.config import KustoSinkConfig
+
+    def ingest_client(b):
+        return b._client if kind == "queued" else b._streaming_client()
 
     props = {
         "kusto.ingestion.url": "https://ingest-c.kusto.windows.net",
@@ -162,12 +175,12 @@ def test_cli_proxy_reaches_ingest_and_query_clients(monkeypatch, kind):
         "aad.auth.appkey": "k",
         "aad.auth.authority": "t",
     }
-    plain = sdk_backend(kind, KustoSinkConfig.from_connect_properties(props))
-    assert plain.proxy_url is None and plain._client.proxy is None
+    plain = sdk_backend(KustoSinkConfig.from_connect_properties(props))
+    assert plain.proxy_url is None and ingest_client(plain).proxy is None
     assert plain._query_client().proxy is None
     props.update({"proxy.host": "proxy.corp", "proxy.port": "3128"})
-    b = sdk_backend(kind, KustoSinkConfig.from_connect_properties(props))
-    assert b._client.proxy == "http://proxy.corp:3128"
+    b = sdk_backend(KustoSinkConfig.from_connect_properties(props))
+    assert ingest_client(b).proxy == "http://proxy.corp:3128"
     assert b._query_client().proxy == "http://proxy.corp:3128"
 
 
@@ -188,16 +201,11 @@ def test_streaming_status_dispositions(status, accepted):
 
 
 def test_backends_gate_cleanly_without_sdk():
-    from kafka_sink_azure_kusto_spark.streaming.backends import (
-        QueuedKustoBackend,
-        StreamingKustoBackend,
-    )
+    from kafka_sink_azure_kusto_spark.streaming.backends import KustoSdkBackend
 
     assert "azure.kusto.ingest" not in sys.modules
     with pytest.raises(NotImplementedError, match="azure-kusto-ingest"):
-        QueuedKustoBackend(ingest_url="https://ingest-c.kusto.windows.net")
-    with pytest.raises(NotImplementedError, match="azure-kusto-ingest"):
-        StreamingKustoBackend(ingest_url="https://ingest-c.kusto.windows.net")
+        KustoSdkBackend(ingest_url="https://ingest-c.kusto.windows.net")
 
 
 # ---------------------------------------------------------------- V1–V4 probes
@@ -248,16 +256,10 @@ class StubQueryClient:
 
 
 def _validating_backend(monkeypatch, stub, **auth_over):
-    calls = []
-    _install_fake_sdk(monkeypatch, calls)
-    from kafka_sink_azure_kusto_spark.streaming.backends import QueuedKustoBackend
-
     auth = {"app_id": "app-1", "app_key": "k", "authority": "tenant-1"}
     auth.update(auth_over)
-    return QueuedKustoBackend(
-        ingest_url="https://ingest-c.kusto.windows.net",
-        auth=auth,
-        query_client_factory=lambda: stub,
+    return _sdk_backend(
+        monkeypatch, [], auth=auth, query_client_factory=lambda: stub
     )
 
 

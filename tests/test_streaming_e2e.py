@@ -298,7 +298,7 @@ def test_multimodal_decode_real_content(spark, sf_dir):
     from kafka_sink_azure_kusto_spark.functions.codecs import decode_media_bytes
 
     docs = load_table(spark, sf_dir, "documents").limit(20)
-    out = M.decode_media(M.with_synth_media_blob(docs)).collect()
+    out = M.synth_decode_media(docs).collect()
     assert len(out) == 20
     for r in out:
         payload = M.synth_media_payload(r.doc_id)

@@ -75,7 +75,7 @@ def test_multimodal_feature_extract_decoded_content(spark):
     from kafka_sink_azure_kusto_spark.functions import multimodal as M
 
     df = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")  # ppm, wav, bmp
-    out = M.feature_extract(M.with_synth_media_blob(df)).collect()
+    out = M.synth_feature_extract(df).collect()
     assert len(out) == 24  # 8 features per doc, long form
     got = {(r.doc_id, r.feat_idx): r.feature for r in out}
 
