@@ -18,21 +18,51 @@ import sys
 
 
 def sdk_backend(cfg):
-    """The azure-kusto-ingest backend for ``--backend kusto``: AAD
-    application auth, and the proxy.host/proxy.port pair as an HTTP
-    proxy on every SDK client (KustoSinkTask.java:311-317)."""
+    """The azure-kusto-ingest backend for ``--backend kusto``: AAD auth
+    per ``aad.auth.strategy`` (with ``aad.auth.accesstoken`` when given),
+    and the proxy.host/proxy.port pair as an HTTP proxy on every SDK
+    client (KustoSinkTask.java:311-317)."""
     from kafka_sink_azure_kusto_spark.streaming.backends import KustoSdkBackend
 
     return KustoSdkBackend(
         ingest_url=cfg.ingest_url,
         query_url=cfg.query_url,
         auth={
+            "strategy": cfg.auth_strategy,
+            "access_token": cfg.auth_accesstoken,
             "app_id": cfg.auth_appid,
             "app_key": cfg.auth_appkey,
             "authority": cfg.auth_authority,
         },
         proxy_url=f"http://{cfg.proxy_host}:{cfg.proxy_port}" if cfg.proxy_host else None,
     )
+
+
+def check_kusto_auth(cfg) -> None:
+    """Fail fast, before a JVM starts, on auth the SDK backend cannot
+    use: a strategy with no SDK mapping, or application auth without a
+    token and with an empty appid/appkey/authority (which would defer
+    the failure to an opaque AAD error on the first ingest)."""
+    from kafka_sink_azure_kusto_spark.config import AuthStrategy, ConfigException
+    from kafka_sink_azure_kusto_spark.streaming.backends import kcsb_builder
+
+    kcsb_builder(cfg.auth_strategy, cfg.auth_accesstoken)
+    if cfg.auth_strategy is not AuthStrategy.APPLICATION or cfg.auth_accesstoken:
+        return
+    missing = [
+        key
+        for key, val in (
+            ("aad.auth.appid", cfg.auth_appid),
+            ("aad.auth.appkey", cfg.auth_appkey),
+            ("aad.auth.authority", cfg.auth_authority),
+        )
+        if not val
+    ]
+    if missing:
+        raise ConfigException(
+            "--backend kusto with application auth needs aad.auth.accesstoken "
+            f"or all of appid/appkey/authority; missing config keys: {', '.join(missing)}"
+        )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -50,28 +80,11 @@ def main(argv: list[str] | None = None) -> int:
     with open(args.config) as f:
         props = json.load(f)
 
-    from kafka_sink_azure_kusto_spark.config import ConfigException, KustoSinkConfig
+    from kafka_sink_azure_kusto_spark.config import KustoSinkConfig
 
     cfg = KustoSinkConfig.from_connect_properties(props)
-
-    # Fail fast BEFORE starting a JVM: empty-string credentials passed to
-    # the SDK backend would defer the failure to an opaque AAD error on
-    # the first ingest.
     if args.backend == "kusto":
-        missing = [
-            key
-            for key, val in (
-                ("aad.auth.appid", cfg.auth_appid),
-                ("aad.auth.appkey", cfg.auth_appkey),
-                ("aad.auth.authority", cfg.auth_authority),
-            )
-            if not val
-        ]
-        if missing:
-            raise ConfigException(
-                f"--backend {args.backend} requires AAD application auth; "
-                f"missing config keys: {', '.join(missing)}"
-            )
+        check_kusto_auth(cfg)
 
     from pyspark.sql import SparkSession
 

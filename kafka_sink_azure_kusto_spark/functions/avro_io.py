@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
+from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string, sql_type
 
 _MAGIC = b"Obj\x01"
 _EPOCH_DATE = _dt.date(1970, 1, 1)
@@ -828,7 +828,7 @@ def attach_avro_codegen_decode(
     for sf in schema.fields:
         step = step_of.get(sf.name)
         name = sql_string(sf.name)
-        dt = sf.dataType.simpleString()
+        dt = sql_type(sf.dataType)
         if step is None:
             fields.append(f"{name}, CAST(NULL AS {dt})")
         else:

@@ -24,7 +24,7 @@ from __future__ import annotations
 import struct
 from typing import Iterator, Optional, Sequence, Union
 
-from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string
+from kafka_sink_azure_kusto_spark.functions.sql_text import sql_string, sql_type
 
 _MASK64 = (1 << 64) - 1
 
@@ -656,7 +656,7 @@ def attach_codegen_decode(
             ((num, typ) for num, (nm, typ) in by_num.items() if nm == f.name),
             None,
         )
-        dt = f.dataType.simpleString()
+        dt = sql_type(f.dataType)
         if spec is None:
             fields.append(f"{sql_string(f.name)}, CAST(NULL AS {dt})")
             continue

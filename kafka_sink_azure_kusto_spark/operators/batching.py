@@ -14,9 +14,10 @@ It has two forms that agree record for record:
   registry's ``file_assignment`` query runs it.
 - ``roll_batches`` — the same rule as one streamed pass over a Kafka
   partition's Arrow batches, holding only the open file; the sink's
-  staging writer runs it after one exchange keyed on (topic, partition)
-  and one sort by offset, so each task owns whole partitions exactly
-  like the reference's TopicPartitionWriter.
+  staging writer runs it on each partition's run after one exchange
+  keyed on (topic, partition) and one sort by (topic, partition,
+  offset), so each task owns whole partitions exactly like the
+  reference's TopicPartitionWriter.
 
 Time-triggered flush (B2) needs no code at all: the micro-batch trigger
 interval IS the flush interval.

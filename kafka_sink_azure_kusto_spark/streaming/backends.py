@@ -30,7 +30,11 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Optional, Protocol
 
-from kafka_sink_azure_kusto_spark.config import mapping_kind_for_format
+from kafka_sink_azure_kusto_spark.config import (
+    AuthStrategy,
+    ConfigException,
+    mapping_kind_for_format,
+)
 
 
 @dataclass(frozen=True)
@@ -342,6 +346,42 @@ def streaming_status_accepted(status: str) -> bool:
     return False
 
 
+# aad.auth.strategy, and whether an aad.auth.accesstoken is given → the
+# azure-kusto-data ``KustoConnectionStringBuilder`` class method that
+# builds the connection string, and its arguments after the URL from the
+# backend's ``auth`` dict (the reference's per-strategy switch,
+# KustoSinkTask.java:309-332). A given token is the credential.
+_KCSB_BUILDERS = {
+    (AuthStrategy.APPLICATION, False): (
+        "with_aad_application_key_authentication",
+        lambda a: (a.get("app_id") or "", a.get("app_key") or "", a.get("authority") or ""),
+    ),
+    (AuthStrategy.APPLICATION, True): (
+        "with_aad_application_token_authentication", lambda a: (a["access_token"],),
+    ),
+    (AuthStrategy.MANAGED_IDENTITY, False): (
+        "with_aad_managed_service_identity_authentication", lambda a: (a.get("app_id"),),
+    ),
+    (AuthStrategy.AZ_DEV_TOKEN, False): ("with_az_cli_authentication", lambda a: ()),
+    (AuthStrategy.AZ_DEV_TOKEN, True): (
+        "with_aad_user_token_authentication", lambda a: (a["access_token"],),
+    ),
+}
+
+
+def kcsb_builder(strategy, access_token: Optional[str]):
+    """``(method name, args from auth)`` for ``strategy`` with or without
+    an access token. A combination with no SDK mapping is a
+    ``ConfigException``: it never falls back to app-key auth."""
+    key = (AuthStrategy.parse(strategy), bool(access_token))
+    if key not in _KCSB_BUILDERS:
+        raise ConfigException(
+            f"aad.auth.strategy {key[0].value!r} {'with' if key[1] else 'without'} "
+            "aad.auth.accesstoken has no azure-kusto-data connection-string builder"
+        )
+    return _KCSB_BUILDERS[key]
+
+
 @dataclass
 class KustoSdkBackend:
     """K1/K2 — ingestion through the public ``azure-kusto-ingest`` SDK,
@@ -357,6 +397,8 @@ class KustoSdkBackend:
 
     ingest_url: str
     query_url: Optional[str] = None
+    # ``strategy`` (aad.auth.strategy, default application),
+    # ``access_token``, ``app_id``, ``app_key``, ``authority``.
     auth: dict = field(default_factory=dict)
     # C4 — HTTP proxy for Kusto traffic (KustoSinkTask.java:311-317);
     # set on every SDK client this backend builds (ingest and query).
@@ -367,6 +409,10 @@ class KustoSdkBackend:
     query_client_factory: Optional[object] = None
 
     def __post_init__(self) -> None:
+        # an unmapped strategy fails here, before any SDK import
+        self._kcsb_builder = kcsb_builder(
+            self.auth.get("strategy") or "application", self.auth.get("access_token")
+        )
         try:
             from azure.kusto.ingest import QueuedIngestClient
         except ImportError as e:
@@ -382,12 +428,8 @@ class KustoSdkBackend:
     def _kcsb(self, url: str):
         from azure.kusto.data import KustoConnectionStringBuilder
 
-        return KustoConnectionStringBuilder.with_aad_application_key_authentication(
-            url,
-            self.auth.get("app_id", ""),
-            self.auth.get("app_key", ""),
-            self.auth.get("authority", ""),
-        )
+        method, args = self._kcsb_builder
+        return getattr(KustoConnectionStringBuilder, method)(url, *args(self.auth))
 
     def _proxied(self, client):
         if self.proxy_url:

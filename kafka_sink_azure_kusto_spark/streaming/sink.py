@@ -14,20 +14,29 @@ Scale notes:
   and encoded once, JVM-side (one ``line`` CASE on the route's format).
   The encoded frame is persisted before the F2 empty-line filter, so no
   filter below the cache re-runs the encoder, and the source is read
-  once; one aggregate over it sizes the epoch and counts unmapped
-  records.
+  once. The job that fills the cache also sizes the epoch and counts
+  unmapped records (an ``Observation`` on a noop write), so sizing costs
+  no job of its own. The cache keeps only the route's format, whose
+  null marks an unmapped record; the writer resolves a file's db and
+  table from the mapping table.
 - The only exchange is keyed on (topic, partition), the natural Kafka
-  parallelism unit, followed by one sort by offset. The staging call is
-  one streamed ``applyInArrow`` per Kafka partition, all routes at once:
-  it rolls files as its Arrow batches arrive
-  (``operators.batching.roll_batches``), exactly like one
-  TopicPartitionWriter appending in offset order, and holds one batch
-  plus the open file, so no partition can OOM an executor.
+  parallelism unit, followed by one sort by (topic, partition, offset).
+  The staging call is one streamed ``mapInArrow`` per staging task, all
+  routes at once: it splits its Arrow batches where (topic, partition)
+  changes and rolls each partition's run into files as the batches
+  arrive (``operators.batching.roll_batches``), exactly like one
+  TopicPartitionWriter per partition appending in offset order. It
+  holds one batch plus the open file, so no partition can OOM an
+  executor.
 - Staging tasks are sized by bytes, not by cores: the exchange gets
   ceil(encoded bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
   partitions — AQE's own rule with ``parallelismFirst`` off. Every Python
   staging task holds a worker process of about 130 MB, so a small epoch
   stages in one task and a large one scales out.
+- Generated code does not change from epoch to epoch: the DLQ
+  predicate reads the failed offset ranges from one map literal, which
+  Spark hands to generated code as data, so a failing epoch compiles no
+  new class.
 - Only the tiny per-file manifest is collected to the driver; record
   data never is (an injected ``dlq_writer``'s failure tail is the
   bounded exception). DLQ records are produced from the executors; the
@@ -38,7 +47,7 @@ Scale notes:
   slow file does not serialize the epoch behind its retry loop.
 
 Staging-directory requirement (multi-node clusters): without a
-``backend_factory``, files are WRITTEN by executors (``applyInArrow``)
+``backend_factory``, files are WRITTEN by executors (``mapInArrow``)
 and READ/deleted by the driver-side ingest loop, so
 ``config.staging_dir`` MUST be shared storage (NFS / DBFS /
 fuse-mounted object store) on a real cluster; executor-local paths only
@@ -56,16 +65,15 @@ manifest (metrics, behavior.on.error, DLQ).
 
 from __future__ import annotations
 
+import itertools
 import logging
 import math
 import os
-# Iterator must be a module global: applyInArrow resolves the staging
-# writer's string annotations here to pick its streamed iterator form.
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import BinaryType, StructType
@@ -112,7 +120,7 @@ _MANIFEST_SCHEMA = pa.schema([
 
 # Per-Python-worker backend cache for executor-side ingest: one client
 # per (worker process, cache token) instead of one per rolled file —
-# applyInArrow reuses worker processes across groups and batches.
+# Python workers are reused across staging tasks and epochs.
 _EXECUTOR_BACKENDS: dict = {}
 
 
@@ -182,28 +190,43 @@ def _failed_records(failed: list[Row], staged: list[Row]) -> Column:
     epoch frame. A file holds the offsets from its first to its last in
     its (topic, partition), so each run of adjacent failed files in
     ``staged`` (sorted by (topic, partition, file_offset) per mapping) is
-    one offset range: a whole failed partition is one term."""
+    one offset range: a whole failed partition is one range.
+
+    The ranges are data, not code: one constant
+    ``map<topic, map<partition, array<struct<lo, hi>>>>`` that Spark
+    folds into a literal and passes to the generated code by reference,
+    so the compiled predicate is the same every epoch. A record looks up
+    its own partition's ranges and scans only those."""
     bad = {(s.topic, s.partition, s.file_offset) for s in failed}
-    ranges: list[list] = []
+    ranges: dict[str, dict[int, list[list[int]]]] = {}
     prev = None
     for s in staged:
         key = (s.topic, s.partition)
         if (*key, s.file_offset) not in bad:
             prev = None
         elif prev == key:
-            ranges[-1][3] = s.last_offset
+            ranges[s.topic][s.partition][-1][1] = s.last_offset
         else:
-            ranges.append([s.topic, s.partition, s.file_offset, s.last_offset])
+            ranges.setdefault(s.topic, {}).setdefault(s.partition, []).append(
+                [s.file_offset, s.last_offset]
+            )
             prev = key
-    # One SQL string, one parse: Spark's parser builds a long OR chain as
-    # a balanced tree, so the expression stays shallow.
-    terms = " OR ".join(
-        f"(`topic` = {sql_string(t)} AND `partition` = {int(p)} "
-        f"AND `offset` BETWEEN {int(lo)} AND {int(hi)})"
-        for t, p, lo, hi in ranges
+    # One SQL string, one parse, whatever the number of ranges.
+    by_topic = ", ".join(
+        f"{sql_string(t)}, map("
+        + ", ".join(
+            f"{int(p)}L, array("
+            + ", ".join(f"named_struct('lo', {int(lo)}L, 'hi', {int(hi)}L)" for lo, hi in rs)
+            + ")"
+            for p, rs in parts.items()
+        )
+        + ")"
+        for t, parts in ranges.items()
     )
-    topics = ", ".join(map(sql_string, sorted({s.topic for s in failed})))
-    return F.expr(f"`topic` IN ({topics}) AND ({terms})")
+    return F.expr(
+        f"exists(map({by_topic})[`topic`][CAST(`partition` AS BIGINT)], "
+        "r -> `offset` BETWEEN r.lo AND r.hi)"
+    )
 
 
 def _dlq_value(line, avro: bool):
@@ -213,22 +236,47 @@ def _dlq_value(line, avro: bool):
     return str(line)
 
 
+def _partition_runs(
+    batches: Iterable[pa.RecordBatch],
+) -> Iterator[tuple[tuple[str, int], pa.RecordBatch]]:
+    """Split a staging task's batches, sorted by (topic, partition,
+    offset), where (topic, partition) changes: yields ``((topic,
+    partition), slice)`` in order. A partition whose records span a batch
+    boundary yields one slice per batch under the same key."""
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        topic, partition = batch.column("topic"), batch.column("partition")
+        changed = pc.or_(
+            pc.not_equal(topic.slice(1), topic.slice(0, n - 1)),
+            pc.not_equal(partition.slice(1), partition.slice(0, n - 1)),
+        )
+        starts = [0, *(i + 1 for i in pc.indices_nonzero(changed).to_pylist())]
+        for start, end in zip(starts, [*starts[1:], n]):
+            key = (topic[start].as_py(), partition[start].as_py())
+            yield key, batch.slice(start, end - start)
+
+
 def _epoch_writer(
     staging_root: str,
     flush_size_bytes: int,
     binary_values: bool,
     avro_schema: Optional[dict],
     arrow_schema,
+    routes: dict,
     ingest: Optional[dict],
 ):
-    """Build the applyInArrow writer of one epoch. It is called once per
-    (topic, partition) with that partition's Arrow batches in offset
-    order and rolls them into files as they stream in (B1,
-    ``roll_batches``), holding one batch plus the open file. Each file
-    is written in its route's format under ``staging_root/db/table``,
-    named per B4 (TopicPartitionWriter.java:235-242), with owner-only
-    perms like FileWriter.openFile (:93-154). The partition's manifest,
-    one row per file, is yielded at the end.
+    """Build the mapInArrow writer of one epoch. It is called once per
+    staging task with the task's Arrow batches, sorted by (topic,
+    partition, offset), splits them into each Kafka partition's run and
+    rolls each run into files as it streams in (B1, ``roll_batches``),
+    holding one batch plus the open file. Each file is written in its
+    route's format under ``staging_root/db/table``, the route looked up
+    in ``routes`` (topic, else ``*``, to ``(db, table, format)``), named
+    per B4 (TopicPartitionWriter.java:235-242), with owner-only perms
+    like FileWriter.openFile (:93-154). The task's manifest, one row per
+    file, is yielded at the end.
 
     Avro with binary values is the E4 passthrough, one complete container
     per message (ByteRecordWriterProvider.java:21-39); avro with struct
@@ -248,17 +296,19 @@ def _epoch_writer(
     import gzip
     import io
 
-    def write_file(table: pa.Table) -> dict:
-        head = table.select(
-            ["topic", "partition", "offset", "route_format", "route_db", "route_table"]
-        ).slice(0, 1).to_pylist()[0]
-        topic, partition = str(head["topic"]), int(head["partition"])
-        file_offset, fmt = int(head["offset"]), str(head["route_format"])
+    made_dirs: set = set()
+
+    def write_file(topic: str, partition: int, table: pa.Table) -> dict:
+        db, table_name, fmt = routes.get(topic) or routes["*"]
+        offsets = table.column("offset")
+        file_offset = offsets[0].as_py()
         avro = fmt in _AVRO_FORMATS
         columnar = fmt in _COLUMNAR_FORMATS and arrow_schema is not None
         ext = f".{fmt}" if columnar else f".{fmt}.gz"
-        out_dir = os.path.join(staging_root, str(head["route_db"]), str(head["route_table"]))
-        os.makedirs(out_dir, exist_ok=True)
+        out_dir = os.path.join(staging_root, db, table_name)
+        if out_dir not in made_dirs:
+            os.makedirs(out_dir, exist_ok=True)
+            made_dirs.add(out_dir)
         path = os.path.join(out_dir, f"kafka_{topic}_{partition}_{file_offset}{ext}")
         bio = io.BytesIO()
         if avro and avro_schema is not None:
@@ -307,15 +357,20 @@ def _epoch_writer(
                 pass
         return dict(
             path=path, topic=topic, partition=partition, file_offset=file_offset,
-            last_offset=table.column("offset")[-1].as_py(), records=table.num_rows,
+            last_offset=offsets[-1].as_py(), records=table.num_rows,
             raw_bytes=len(body), status=status, error=error, attempts=attempts[0],
         )
 
-    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        files = [write_file(table) for _, table in roll_batches(batches, flush_size_bytes)]
+    def write_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        files = []
+        for (topic, partition), run in itertools.groupby(
+            _partition_runs(batches), key=lambda r: r[0]
+        ):
+            rolled = roll_batches((b for _, b in run), flush_size_bytes)
+            files += [write_file(topic, partition, table) for _, table in rolled]
         yield pa.RecordBatch.from_pylist(files, schema=_MANIFEST_SCHEMA)
 
-    return write_partition
+    return write_task
 
 
 class KustoSparkSink:
@@ -393,21 +448,20 @@ class KustoSparkSink:
     # ------------------------------------------------------- the data plane
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """SURVEY §3.2 as one pass: drop tombstones (F1) → route (F3) →
-        encode → persist → drop empty lines → size the epoch and count
-        unmapped records → one grouped staging call that rolls files (B1)
-        → ingest with retry → R4 dispatch and DLQ per failed mapping, in
-        mapping order."""
+        encode → persist → drop empty lines → fill the cache while sizing
+        the epoch and counting unmapped records → one staging call per
+        task that rolls files (B1) → ingest with retry → R4 dispatch and
+        DLQ per failed mapping, in mapping order."""
         cfg = self.config
         df = with_route(drop_tombstones(batch_df), cfg.mappings)
-        routed = F.col("route_db").isNotNull()
+        routed = F.col("route_format").isNotNull()
         # B1 — sizes are UNCOMPRESSED bytes (+1 newline, matching
         # CountingOutputStream accounting, FileWriter.java:332-362).
         df = df.withColumn("line", _encode_line(df)).withColumn(
             "serialized_size", F.length("line").cast("long") + F.lit(1)
         )
         value_type = df.schema["value"].dataType
-        keep = ["route_db", "route_table", "route_format", "topic", "partition", "offset",
-                "line", "serialized_size"]
+        keep = ["route_format", "topic", "partition", "offset", "line", "serialized_size"]
         if isinstance(value_type, StructType) and any(
             m.ingest_format in _CONTAINER_FORMATS for m in cfg.mappings
         ):
@@ -419,12 +473,15 @@ class KustoSparkSink:
         enc = cached.filter(~routed | (F.col("serialized_size") > 1))
         staged: list[Row] = []
         try:
-            stats = enc.agg(
+            sizing = Observation()
+            enc.observe(
+                sizing,
                 F.count(F.when(routed, 1)).alias("routed"),
                 F.sum(F.when(routed, F.col("serialized_size"))).alias("bytes"),
                 F.count(F.when(~routed, 1)).alias("unrouted"),
                 F.min(F.when(~routed, F.col("topic"))).alias("unrouted_topic"),
-            ).first()
+            ).write.format("noop").mode("overwrite").save()  # fills the cache
+            stats = sizing.get
             if stats["unrouted"]:
                 # F3 — an unmapped topic with no '*' wildcard is a hard
                 # error under FAIL, before anything is staged
@@ -454,9 +511,10 @@ class KustoSparkSink:
         self, enc: DataFrame, epoch_id: int, encoded_bytes: int, value_type
     ) -> list[Row]:
         """One (topic, partition) exchange sized by bytes, one sort by
-        offset, then one streamed staging call per Kafka partition for
-        every route, which rolls its files (B1). Returns the manifest in
-        ingest order: mapping, topic, partition, file_offset."""
+        (topic, partition, offset), then one streamed staging call per
+        task for every route, which rolls each Kafka partition's files
+        (B1). Returns the manifest in ingest order: mapping, topic,
+        partition, file_offset."""
         cfg = self.config
         spark = enc.sparkSession
         # AQE's advisory partition size, read from the session: staging
@@ -478,14 +536,7 @@ class KustoSparkSink:
             size = threshold
         elif binary_values:
             size = F.when(route_format.isin(*_AVRO_FORMATS), threshold).otherwise(size)
-        partitions = (
-            enc.filter(F.col("route_db").isNotNull())
-            .withColumn("serialized_size", size)
-            .repartition(n, "topic", "partition")
-            .sortWithinPartitions("topic", "partition", "offset")
-        )
-        cols = ["topic", "partition", "offset", "serialized_size",
-                "route_db", "route_table", "route_format", "line"]
+        cols = ["topic", "partition", "offset", size.alias("serialized_size"), "line"]
         avro_schema = arrow_schema = None
         if "value" in enc.columns:
             # Container routes ship their structs and no line; text routes
@@ -513,12 +564,15 @@ class KustoSparkSink:
             }
         writer = _epoch_writer(
             os.path.join(cfg.staging_dir, f"epoch={epoch_id}"), cfg.flush_size_bytes,
-            binary_values, avro_schema, arrow_schema, ingest,
+            binary_values, avro_schema, arrow_schema,
+            {m.topic: (m.db, m.table, m.ingest_format) for m in cfg.mappings}, ingest,
         )
         manifest = (
-            partitions.select(*cols)
-            .groupBy("topic", "partition")
-            .applyInArrow(writer, schema=from_arrow_schema(_MANIFEST_SCHEMA))
+            enc.filter(route_format.isNotNull())
+            .select(*cols)
+            .repartition(n, "topic", "partition")
+            .sortWithinPartitions("topic", "partition", "offset")
+            .mapInArrow(writer, schema=from_arrow_schema(_MANIFEST_SCHEMA))
             .collect()  # tiny: one row per rolled file
         )
         return sorted(
@@ -611,7 +665,7 @@ class KustoSparkSink:
             groups.append((f"{m.db}.{m.table}", _failed_records(failed, staged),
                            m.ingest_format in _AVRO_FORMATS))
         if unrouted:
-            groups.append(("unmapped", F.col("route_db").isNull(), True))
+            groups.append(("unmapped", F.col("route_format").isNull(), True))
         for name, cond, avro in groups:
             self._send_to_dlq(enc.filter(cond), name, avro)
 

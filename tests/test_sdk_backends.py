@@ -27,14 +27,30 @@ def _install_fake_sdk(monkeypatch, calls, streaming_status="Succeeded"):
     ingest = types.ModuleType("azure.kusto.ingest")
 
     class KCSB:
-        def __init__(self, url, app_id, app_key, authority):
-            self.url, self.app_id, self.app_key, self.authority = (
-                url, app_id, app_key, authority,
-            )
+        """Records the builder that made it and the builder's arguments."""
+
+        def __init__(self, builder, url, *args):
+            self.builder, self.url, self.args = builder, url, args
 
         @classmethod
         def with_aad_application_key_authentication(cls, url, app_id, app_key, authority):
-            return cls(url, app_id, app_key, authority)
+            return cls("application_key", url, app_id, app_key, authority)
+
+        @classmethod
+        def with_aad_application_token_authentication(cls, url, application_token):
+            return cls("application_token", url, application_token)
+
+        @classmethod
+        def with_aad_user_token_authentication(cls, url, user_token):
+            return cls("user_token", url, user_token)
+
+        @classmethod
+        def with_aad_managed_service_identity_authentication(cls, url, client_id=None):
+            return cls("managed_identity", url, client_id)
+
+        @classmethod
+        def with_az_cli_authentication(cls, url):
+            return cls("az_cli", url)
 
     class SdkIngestionProperties:
         def __init__(self, database, table, data_format=None, ingestion_mapping_reference=None):
@@ -182,6 +198,71 @@ def test_cli_proxy_reaches_ingest_and_query_clients(monkeypatch, kind):
     b = sdk_backend(KustoSinkConfig.from_connect_properties(props))
     assert ingest_client(b).proxy == "http://proxy.corp:3128"
     assert b._query_client().proxy == "http://proxy.corp:3128"
+
+
+_APP = {"aad.auth.appid": "a", "aad.auth.appkey": "k", "aad.auth.authority": "t"}
+
+
+@pytest.mark.parametrize(
+    "auth,builder,args",
+    [
+        ({"aad.auth.strategy": "application", **_APP}, "application_key", ("a", "k", "t")),
+        ({"aad.auth.strategy": "application", "aad.auth.accesstoken": "tok"},
+         "application_token", ("tok",)),
+        ({"aad.auth.strategy": "application", "aad.auth.accesstoken": "tok", **_APP},
+         "application_token", ("tok",)),
+        ({"aad.auth.strategy": "managed_identity"}, "managed_identity", (None,)),
+        ({"aad.auth.strategy": "managed_identity", "aad.auth.appid": "uami"},
+         "managed_identity", ("uami",)),
+        ({"aad.auth.strategy": "az_dev_token", "aad.auth.accesstoken": "tok"},
+         "user_token", ("tok",)),
+        ({"aad.auth.strategy": "az_dev_token"}, "az_cli", ()),
+    ],
+)
+def test_cli_backend_builds_each_strategys_connection(monkeypatch, auth, builder, args):
+    # aad.auth.strategy picks the connection-string builder of every SDK
+    # client (ingest, streaming and query), and a given token is used
+    from kafka_sink_azure_kusto_spark.__main__ import check_kusto_auth, sdk_backend
+    from kafka_sink_azure_kusto_spark.config import KustoSinkConfig
+
+    _install_fake_sdk(monkeypatch, [])
+    props = {
+        "kusto.ingestion.url": "https://ingest-c.kusto.windows.net",
+        "kusto.tables.topics.mapping": '[{"topic":"t","db":"d","table":"x","format":"json"}]',
+        **auth,
+    }
+    cfg = KustoSinkConfig.from_connect_properties(props)
+    check_kusto_auth(cfg)  # the CLI accepts it before starting a JVM
+    b = sdk_backend(cfg)
+    for client in (b._client, b._streaming_client(), b._query_client()):
+        assert (client.kcsb.builder, client.kcsb.args) == (builder, args)
+
+
+@pytest.mark.parametrize(
+    "auth",
+    [
+        {"aad.auth.strategy": "workload_identity", **_APP},
+        {"aad.auth.strategy": "managed_identity", "aad.auth.accesstoken": "tok", **_APP},
+    ],
+)
+def test_strategy_without_sdk_mapping_is_rejected_at_config_time(monkeypatch, auth):
+    # never app-key auth in its place: the CLI check and the backend
+    # both refuse it before any client is built
+    from kafka_sink_azure_kusto_spark.__main__ import check_kusto_auth, sdk_backend
+    from kafka_sink_azure_kusto_spark.config import ConfigException, KustoSinkConfig
+
+    calls = []
+    _install_fake_sdk(monkeypatch, calls)
+    props = {
+        "kusto.ingestion.url": "https://ingest-c.kusto.windows.net",
+        "kusto.tables.topics.mapping": '[{"topic":"t","db":"d","table":"x","format":"json"}]',
+        **auth,
+    }
+    cfg = KustoSinkConfig.from_connect_properties(props)
+    with pytest.raises(ConfigException, match="no azure-kusto-data connection-string builder"):
+        check_kusto_auth(cfg)
+    with pytest.raises(ConfigException, match="no azure-kusto-data connection-string builder"):
+        sdk_backend(cfg)
 
 
 @pytest.mark.parametrize(

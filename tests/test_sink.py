@@ -734,6 +734,87 @@ def test_staged_files_do_not_depend_on_arrow_batch_size(spark, tmp_path):
     assert any((t, p, o[7]) not in starts for (t, p), o in offsets.items())
 
 
+def test_staged_files_and_manifest_do_not_depend_on_arrow_batch_size(
+    spark, tmp_path, monkeypatch
+):
+    # The epoch stages in one task, which gets all eight (topic,
+    # partition) runs in order. At 7 records per Arrow batch most batches
+    # end inside a run and some file spans a batch boundary, so a writer
+    # that split or rolled runs on batch boundaries would name, fill or
+    # count files differently than with the default batch size.
+    rows = _rich_rows()
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows[::-1], 3), _RICH_SCHEMA)
+    manifests, files = [], []
+    real = KustoSparkSink._stage
+
+    def recording(self, *args):
+        manifests.append(real(self, *args))
+        return manifests[-1]
+
+    monkeypatch.setattr(KustoSparkSink, "_stage", recording)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for records_per_batch in ("7", None):
+        backend = _Capture()
+        saved = spark.conf.get(key, None)
+        if records_per_batch:
+            spark.conf.set(key, records_per_batch)
+        try:
+            KustoSparkSink(_rich_cfg(tmp_path), backend).process_batch(df, epoch_id=0)
+        finally:
+            if saved is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, saved)
+        files.append(backend.files)
+    assert files[0] == files[1]  # names and bytes
+    assert manifests[0] == manifests[1]  # paths, offsets, counts, sizes
+    assert sum(s.records for s in manifests[0]) == len(rows)
+    # some file spans a boundary between two 7-record batches of the task
+    at, spans = 0, False
+    for s in sorted(manifests[0], key=lambda s: (s.topic, s.partition, s.file_offset)):
+        spans |= at // 7 != (at + s.records - 1) // 7
+        at += s.records
+    assert spans
+
+
+def test_failing_epochs_compile_no_new_code(spark, tmp_path):
+    # The DLQ predicate takes each epoch's failed offset ranges as data,
+    # so a second failing epoch with other offsets, partitions and range
+    # counts runs the classes the first one compiled.
+    from kafka_sink_azure_kusto_spark.streaming.backends import PermanentIngestError
+
+    class FailTable(LocalEmulatorBackend):
+        def ingest_file(self, path, props):
+            if props.table == "bad":
+                raise PermanentIngestError("boom")
+            return super().ingest_file(path, props)
+
+    cfg = _cfg(
+        tmp_path,
+        mappings=[TopicToTableMapping(topic="bad", db="db", table="bad", format="csv"),
+                  TopicToTableMapping(topic="*", db="db", table="good", format="csv")],
+        flush_size_bytes=100,  # two 54-byte lines per file
+        behavior_on_error=BehaviorOnError.LOG,
+    )
+    dlq: list[dict] = []
+    sink = KustoSparkSink(cfg, FailTable(str(tmp_path / "kusto")), dlq_writer=dlq.extend)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def epoch(epoch_id, first_offset, n, partitions):
+        rows = [(f"k{i}", "x" * 53, ("bad", "good")[i % 2], i % partitions, first_offset + i)
+                for i in range(n)]
+        df = spark.createDataFrame(
+            rows, "key string, value string, topic string, partition long, offset long"
+        )
+        before, sent = compiles.getCount(), len(dlq)
+        sink.process_batch(df, epoch_id=epoch_id)
+        assert len(dlq) - sent == n // 2  # every record of the failing topic
+        return compiles.getCount() - before
+
+    epoch(0, 0, 24, 3)
+    assert epoch(1, 5000, 60, 4) == 0
+
+
 def test_empty_line_inside_a_failed_file_is_neither_staged_nor_sent_to_dlq(spark, tmp_path):
     # F2 drops the empty record (offset 3) after the encoded frame is
     # persisted; it sits inside the failing file [2, 4], whose other
@@ -808,12 +889,13 @@ def test_staging_plan_sorts_once_and_has_no_window(spark, tmp_path, monkeypatch)
     import re
 
     plans = _plans_at(spark, monkeypatch, "collect", _every_format_epoch(spark, tmp_path))
-    staging = [p for p in plans if "FlatMapGroupsInArrow" in p]
+    staging = [p for p in plans if "MapInArrow" in p]
     assert len(staging) == 1, plans
     plan = staging[0]
     assert len(re.findall(r"\bSort \[", plan)) == 1, plan
     assert not re.search(r"\bWindow \[", plan), plan
-    assert re.search(r"FlatMapGroupsInArrow \[topic#\d+, partition#\d+L\],", plan), plan
+    # one Python call per staging task, fed the sorted (topic, partition, offset) rows
+    assert re.search(r"MapInArrow \w+\(topic#\d+, partition#\d+L, offset#\d+L,", plan), plan
 
 
 def test_no_filter_below_the_cache_reruns_the_encoder(spark, tmp_path, monkeypatch):

@@ -94,16 +94,22 @@ def test_hostile_value_col_in_wire_decoders(spark, name):
 
 @pytest.mark.parametrize("name", HOSTILE_NAMES)
 def test_hostile_output_field_names_in_codegen_decoders(spark, name):
+    # the absent nested struct reaches generated SQL as a CAST target, so
+    # its field names are quoted at every depth
+    nested = StructType(
+        [StructField(name, LongType()),
+         StructField("inner", StructType([StructField(name, StringType())]))]
+    )
     schema = StructType(
         [StructField(name, LongType()), StructField("b", StringType()),
-         StructField("absent", StringType())]
+         StructField("absent", StringType()), StructField("nested", nested)]
     )
     pb = encode_field(1, 7) + encode_field(2, "x")
     got = attach_codegen_decode(
         spark.createDataFrame([(pb,)], "body binary"),
         "body", {1: (name, "int64"), 2: ("b", "string")}, schema,
     ).collect()[0]["payload"]
-    assert got.asDict() == {name: 7, "b": "x", "absent": None}
+    assert got.asDict() == {name: 7, "b": "x", "absent": None, "nested": None}
 
     avro_schema = {
         "type": "record", "name": "T",
@@ -115,7 +121,7 @@ def test_hostile_output_field_names_in_codegen_decoders(spark, name):
         spark.createDataFrame([(body,)], "body binary"),
         "body", avro_schema, schema,
     ).collect()[0]["payload"]
-    assert got.asDict() == {name: -3, "b": "y", "absent": None}
+    assert got.asDict() == {name: -3, "b": "y", "absent": None, "nested": None}
 
 
 _PB_TYPES = ["int64", "sint64", "bool", "string", "bytes", "double", "float"]

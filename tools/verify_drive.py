@@ -30,6 +30,38 @@ from kafka_sink_azure_kusto_spark.sources.replay import (
 from kafka_sink_azure_kusto_spark.streaming import LocalEmulatorBackend, KustoSparkSink
 
 
+def _count_epoch_floor(spark, sink) -> list:
+    """Wrap ``sink.process_batch`` so each epoch's Spark jobs run in a job
+    group of their own and its Janino compilations are counted
+    (``CodegenMetrics``): the fixed per-epoch cost, visible without a
+    benchmark. Returns the list that collects ``(epoch, group,
+    compilations)``; ``attach`` must come after this call."""
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    process_batch, epochs = sink.process_batch, []
+
+    def counted(df, epoch_id):
+        group, outer = f"verify-epoch-{epoch_id}", sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        before = compiles.getCount()
+        try:
+            process_batch(df, epoch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            epochs.append((epoch_id, group, compiles.getCount() - before))
+
+    sink.process_batch = counted
+    return epochs
+
+
+def _print_epoch_floor(spark, epochs: list) -> None:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    for epoch_id, group, compiled in epochs:
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"epoch {epoch_id}: {jobs} Spark jobs, {compiled} Janino compilations")
+
+
 def main() -> int:
     spark = (
         SparkSession.builder.master("local[4]")
@@ -77,6 +109,7 @@ def main() -> int:
         )
         backend = LocalEmulatorBackend(f"{work}/emulator")
         sink = KustoSparkSink(cfg, backend)
+        epochs = _count_epoch_floor(spark, sink)
         query = sink.attach(replay_stream(spark, replay_dir))
         deadline = time.time() + 120
         while time.time() < deadline:
@@ -84,6 +117,7 @@ def main() -> int:
                 break
             time.sleep(1)
         KustoSparkSink.close(query)
+        _print_epoch_floor(spark, epochs)
         ingested = sum(e["records"] for e in backend.ingest_log())
         print(f"ingested records: {ingested} (want >= {live_count})")
         if ingested < live_count:
