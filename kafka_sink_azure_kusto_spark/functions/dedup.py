@@ -737,7 +737,7 @@ def semantic_dedup_cells(
             & (left["_lsub"] == right["_rsub"])
             & (left["_lid"] < right["_rid"]),
         )
-        .filter(cosine(F.col("_lv"), F.col("_rv")) >= threshold)
+        .filter(cosine("_lv", "_rv") >= threshold)
         .select(F.col("_rid").alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(1))

@@ -2,7 +2,7 @@
 
 Each Column operation in classic PySpark costs several py4j round-trips,
 so expressions with many terms (the decode walks, the routing CASE, the
-DLQ offset-range predicate) are assembled as one SQL string in Python
+DLQ offset-range predicate, the vector folds) are assembled as one SQL string in Python
 and parsed with a single ``F.expr``. Caller-supplied names, values and
 types go into that text only through these helpers.
 """

@@ -385,7 +385,8 @@ def word_count_upsert(
     store overwrite so its lineage cannot read the rewritten store}.
     """
     from kafka_sink_azure_kusto_spark.functions.similarity import (
-        _store_delete_partition,
+        _prune_partitions,
+        _rewrite_partitions,
         _store_exists,
     )
 
@@ -432,15 +433,13 @@ def word_count_upsert(
     affected = sorted(int(r["block"]) for r in block_counts)
     batch_docs = sum(int(r["n"]) for r in block_counts)
     if _store_exists(spark, store_dir):
-        idx = spark.read.parquet(store_dir)
+        idx = _prune_partitions(spark.read.parquet(store_dir), "block", affected)
         old_rows = (
-            idx.filter(F.col("block").isin(affected))
-            .join(latest.select("doc_id"), "doc_id", "left_semi")
+            idx.join(latest.select("doc_id"), "doc_id", "left_semi")
             .select("doc_id", "word", "cnt", "block")
         )
         keep = (
-            idx.filter(F.col("block").isin(affected))
-            .join(latest.select("doc_id"), "doc_id", "left_anti")
+            idx.join(latest.select("doc_id"), "doc_id", "left_anti")
             .select("doc_id", "word", "cnt", "block")
         )
     else:
@@ -450,8 +449,8 @@ def word_count_upsert(
         if old_rows is not None
         else spark.createDataFrame([], "word string, delta long")
     )
-    # BOTH checkpoints run BEFORE the overwrite below invalidates the
-    # store lineage
+    # BOTH checkpoints (this one and the rewrite's) run BEFORE the
+    # overwrite invalidates the store lineage
     deltas = (
         new_rows.select("word", F.col("cnt").alias("delta"))
         .unionByName(neg)
@@ -461,17 +460,10 @@ def word_count_upsert(
         .localCheckpoint()
     )
     new_store_rows = new_rows.select("doc_id", "word", "cnt", "block")
-    rewrite = (
-        new_store_rows if keep is None else keep.unionByName(new_store_rows)
-    ).localCheckpoint()
-    rewrite.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("block").parquet(store_dir)
-    kept_rows = rewrite.select("block").distinct().collect()  # ≤ n_blocks
-    kept_blocks = {r["block"] for r in kept_rows}
-    emptied = [blk for blk in affected if blk not in kept_blocks]
-    for blk in emptied:
-        _store_delete_partition(spark, store_dir, f"block={blk}")
+    emptied = _rewrite_partitions(
+        new_store_rows if keep is None else keep.unionByName(new_store_rows),
+        store_dir, "block", affected,
+    )
     return {
         "batch_docs": batch_docs,
         "affected_blocks": len(affected),

@@ -516,7 +516,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = emb.select(F.col("vec_id").alias("left_id"), F.col("embedding").alias("lv"))
     right = emb.select(F.col("vec_id").alias("right_id"), F.col("embedding").alias("rv"))
     pairs = left.join(right, F.col("left_id") < F.col("right_id"))
-    cos = S.cosine(F.col("lv"), F.col("rv"))
+    cos = S.cosine("lv", "rv")
     return (
         pairs.withColumn("cos_raw", cos)
         .filter(F.col("cos_raw") >= 0.45)

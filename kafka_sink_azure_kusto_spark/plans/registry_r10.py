@@ -293,7 +293,7 @@ def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(qc), "cell")
             .filter(F.col("nid") != F.col("qid"))
             .select(
-                "qid", "nid", cosine(F.col("qv"), F.col("cv")).alias("score")
+                "qid", "nid", cosine("qv", "cv").alias("score")
             )
             .localCheckpoint()
         )
@@ -448,7 +448,7 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _seed_arm() -> DataFrame:
         vecs = emb.select(
             F.col("vec_id").alias("nid"), F.col("embedding").alias("v")
-        ).withColumn("vn", l2_norm(F.col("v")))
+        ).withColumn("vn", l2_norm("v"))
         parts = []
         for ci, (p, b) in enumerate(_CAL_GRID):
             for band in range(b):
@@ -493,7 +493,7 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("src") != F.col("dst"))
             .select(
                 "cfg", "src", "dst",
-                (dot(F.col("sv"), F.col("dv")) / (F.col("sn") * F.col("dn")))
+                (dot("sv", "dv") / (F.col("sn") * F.col("dn")))
                 .alias("score"),
             )
             .distinct()  # multi-band repeats carry identical scores
@@ -578,12 +578,23 @@ _IVF_STREAM_ORACLE = f"""
 """
 
 
+_IVF_INDEX_SCHEMA = "vec_id long, v array<double>, cell int"
+_IVF_PROBE_SCHEMA = "query_id long, neighbor_id long, rank bigint, score double"
+
+
 def _run_ivf_stream_loop(
     spark: SparkSession, sf_dir: str, stats: dict | None = None
 ) -> DataFrame:
     """Engine of ``streaming_ivf_index_maintenance``; ``stats`` (tests)
     records per-epoch affected cells, emptied cells, and the per-cell
-    data-file counts after each batch."""
+    data files before and after each batch.
+
+    Both replay chunks come from one collect, the index and the probe
+    directory are read with their known schemas (no inference job),
+    and the result is the probe directory of the highest epoch the
+    ``foreachBatch`` saw. Each batch's upsert leaves one data file per
+    touched cell, so the index stays at one file per live cell."""
+    import json
     import os
 
     from kafka_sink_azure_kusto_spark.functions.similarity import (
@@ -603,39 +614,29 @@ def _run_ivf_stream_loop(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
     idx_dir = os.path.join(work, "idx")
-    plus1 = F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
-    b0 = (
-        dbl.filter(F.col("vec_id") % 3 == 1)
-        .unionByName(
-            dbl.filter(F.col("vec_id") % 9 == 0).withColumn("v", plus1)
-        )
-        .withColumn("seq", F.lit(0))
-    )
-    b1 = (
-        dbl.filter(F.col("vec_id") % 3 == 2)
-        .unionByName(
-            dbl.filter(F.col("vec_id") % 15 == 0).withColumn(
-                "v", F.lit(None).cast("array<double>")
-            )
-        )
-        .withColumn("seq", F.lit(1))
-    )
     replay = os.path.join(work, "replay")
     dbl.filter(F.col("vec_id") % 3 == 0).select(
         "vec_id", "v", F.col("label").alias("cell")
     ).write.partitionBy("cell").parquet(idx_dir)
-    # to_json omits NULL fields, so tombstones travel as
-    # {vec_id,label,seq}
-    chunks = [
+
+    # Both replay chunks are built on the driver from one collect, which
+    # generates far less code than a Spark union per chunk (vec_id is
+    # non-negative, so Python's % agrees with Spark's). A tombstone is a
+    # record without "v"; the JSON reader reads it as NULL.
+    def record(r, v, seq: int) -> str:
+        rec = {"vec_id": r.vec_id, "label": r.label, "seq": seq}
+        return json.dumps(rec if v is None else {**rec, "v": v})
+
+    rows = dbl.collect()
+    _stage_chunks(
         [
-            r[0]
-            for r in b.select(
-                F.to_json(F.struct("vec_id", "label", "v", "seq"))
-            ).collect()
-        ]
-        for b in (b0, b1)
-    ]
-    _stage_chunks(chunks, replay)
+            [record(r, r.v, 0) for r in rows if r.vec_id % 3 == 1]
+            + [record(r, [x + 1.0 for x in r.v], 0) for r in rows if r.vec_id % 9 == 0],
+            [record(r, r.v, 1) for r in rows if r.vec_id % 3 == 2]
+            + [record(r, None, 1) for r in rows if r.vec_id % 15 == 0],
+        ],
+        replay,
+    )
     probes_dir = os.path.join(work, "probes")
 
     def cell_files() -> dict:
@@ -647,6 +648,8 @@ def _run_ivf_stream_loop(
                     if f.endswith(".parquet")
                 )
         return out
+
+    epochs = []
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         mb = batch_df.sparkSession
@@ -661,7 +664,9 @@ def _run_ivf_stream_loop(
         # probe BETWEEN batches, off the updated on-disk index;
         # epoch-keyed overwrite so a micro-batch retry rewrites its own
         # directory instead of appending duplicates
-        idx = mb.read.parquet(idx_dir).withColumnRenamed("v", "embedding")
+        idx = mb.read.schema(_IVF_INDEX_SCHEMA).parquet(idx_dir).withColumnRenamed(
+            "v", "embedding"
+        )
         probe = ivf_topk(
             idx, idx.filter(F.col("vec_id") < 8),
             k=10, cell_col="cell", query_cell_col="cell",
@@ -673,6 +678,7 @@ def _run_ivf_stream_loop(
         ).write.mode("overwrite").parquet(
             os.path.join(probes_dir, f"epoch={int(epoch_id)}")
         )
+        epochs.append(int(epoch_id))
         if stats is not None:
             stats[int(epoch_id)] = {
                 "affected_cells": sorted(affected),
@@ -694,10 +700,8 @@ def _run_ivf_stream_loop(
     )
     _drain_stream(q, 180)
 
-    res = spark.read.parquet(probes_dir)
-    last = res.groupBy().agg(F.max("epoch").alias("epoch"))
-    return res.join(F.broadcast(last), "epoch").select(
-        "query_id", "neighbor_id", "rank", "score"
+    return spark.read.schema(_IVF_PROBE_SCHEMA).parquet(
+        os.path.join(probes_dir, f"epoch={max(epochs)}")
     )
 
 
@@ -714,9 +718,9 @@ def streaming_ivf_index_maintenance(
     batches with epoch-keyed overwrite results. Gate = the final
     probe vs the whole-snapshot oracle — a stale cell, missed
     tombstone, or double-write breaks the value hash. At 100 TB each
-    batch's I/O is |affected cells|, never |index|; per-batch file
-    growth is asserted per affected cell in tests/test_r10_operators.py
-    (`functions/similarity.ivf_index_upsert`)."""
+    batch's I/O is |affected cells|, never |index|, and each batch
+    leaves one data file per touched cell; both are asserted in
+    tests/test_r10_operators.py (`functions/similarity.ivf_index_upsert`)."""
     return _run_ivf_stream_loop(spark, sf_dir)
 
 
@@ -1785,7 +1789,7 @@ def split_semantic_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("dst")).alias("train_id"),
             F.when(F.col("lpart") == "train", F.col("dst"))
             .otherwise(F.col("src")).alias("eval_id"),
-            F.round(cosine(F.col("lv"), F.col("rv")), 6).alias("score"),
+            F.round(cosine("lv", "rv"), 6).alias("score"),
         )
     )
     return scored.filter(F.col("score") >= _SLK_T)

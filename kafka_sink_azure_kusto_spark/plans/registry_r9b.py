@@ -673,7 +673,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("nid"),
         F.col("embedding").alias("v"),
         "label",
-    ).withColumn("vn", l2_norm(F.col("v")))
+    ).withColumn("vn", l2_norm("v"))
     scored_parts = []
     for band in range(2):
         buckets = hyperplane_lsh_buckets(
@@ -708,7 +708,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(
                 "src", "dst", "src_label", "dst_label",
-                (dot(F.col("sv"), F.col("dv")) / (F.col("sn") * F.col("dn")))
+                (dot("sv", "dv") / (F.col("sn") * F.col("dn")))
                 .alias("score"),
             )
         )
@@ -961,7 +961,6 @@ def similarity_index_incremental_update(
     rewrite cost is |affected cells|, not |corpus| — the measured
     observables (cells rewritten vs total) are asserted in tests."""
     import os
-    import shutil
 
     from kafka_sink_azure_kusto_spark.functions import similarity as S
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
@@ -994,26 +993,20 @@ def similarity_index_incremental_update(
         | F.col("nfp").isNull()        # removed
         | (F.col("ofp") != F.col("nfp"))  # changed
     )
-    affected = (
-        diff.select(F.coalesce("nlabel", "olabel").alias("cell"))
+    affected = sorted(
+        r["cell"]
+        for r in diff.select(F.coalesce("nlabel", "olabel").alias("cell"))
         .distinct()
-        .localCheckpoint()  # |cells| rows — consumed twice below
+        .collect()  # bounded: ≤ |cells|
     )
-    rewrite = new.join(
-        F.broadcast(affected), new["label"] == affected["cell"]
-    ).select("vec_id", "v", "cell")
-    rewrite.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("cell").parquet(idx_dir)
-    # cells whose vectors ALL vanished: dynamic overwrite never saw
-    # them — drop their directories (bounded: cells are enumerable)
-    empty = affected.join(
-        rewrite.select("cell").distinct(), "cell", "left_anti"
-    ).collect()
-    for r in empty:
-        shutil.rmtree(
-            os.path.join(idx_dir, f"cell={r['cell']}"), ignore_errors=True
-        )
+    # cells whose vectors ALL vanished are absent from the rewrite;
+    # the shared tail deletes them
+    S._rewrite_partitions(
+        S._prune_partitions(
+            new.withColumnRenamed("label", "cell"), "cell", affected
+        ).select("vec_id", "v", "cell"),
+        idx_dir, "cell", affected,
+    )
 
     index = spark.read.parquet(idx_dir).withColumnRenamed("v", "embedding")
     queries = new.filter(F.col("vec_id") < 8).withColumnRenamed(

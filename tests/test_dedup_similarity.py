@@ -127,7 +127,7 @@ def test_cosine_exact(spark):
         [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0])],
         "a array<float>, b array<float>",
     )
-    got = [r.c for r in df.select(S.cosine(F.col("a"), F.col("b")).alias("c")).collect()]
+    got = [r.c for r in df.select(S.cosine("a", "b").alias("c")).collect()]
     assert got[0] == pytest.approx(0.0)
     assert got[1] == pytest.approx(1.0)
 

@@ -264,6 +264,58 @@ def test_ivf_upsert_cell_move_removes_stale_row(spark, tmp_path):
     }
 
 
+def test_ivf_upsert_steady_call_writes_one_file_per_cell_in_eight_jobs(
+    spark, tmp_path
+):
+    import os
+
+    from kafka_sink_azure_kusto_spark.functions.similarity import (
+        ivf_index_upsert,
+    )
+
+    idx_dir = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 5) for i in range(60)],
+        "vec_id long, v array<double>, cell int",
+    ).repartition(3).write.partitionBy("cell").parquet(idx_dir)
+
+    def files(cell):
+        d = os.path.join(idx_dir, f"cell={cell}")
+        return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+    assert all(len(files(c)) == 3 for c in range(5))
+    batch = spark.createDataFrame(
+        [(100, [1.0, 0.5], 0), (101, [0.5, 1.0], 1), (2, None, 2),
+         (7, [2.0, 2.0], 2)],
+        "vec_id long, v array<double>, cell int",
+    )
+    sc = spark.sparkContext
+    group = "ivf-steady-upsert"
+    sc.setJobGroup(group, "one steady ivf_index_upsert call")
+    try:
+        assert ivf_index_upsert(batch, idx_dir) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert [len(files(c)) for c in range(5)] == [1, 1, 1, 3, 3]
+    got = _read_idx(spark, idx_dir)
+    assert len(got) == 61 and got[(7, 2)] == (2.0, 2.0) and (2, 2) not in got
+
+
+def test_streaming_ivf_loop_keeps_one_file_per_live_cell(spark, sf_dir):
+    from kafka_sink_azure_kusto_spark.plans.registry_r10 import (
+        _run_ivf_stream_loop,
+    )
+
+    stats = {}
+    _run_ivf_stream_loop(spark, sf_dir, stats=stats)
+    assert len(stats) == 2
+    for s in stats.values():
+        for files in (s["files_before"], s["files_after"]):
+            assert files and all(len(f) == 1 for f in files.values()), files
+
+
 def test_streaming_ivf_loop_touches_only_affected_cells(spark, sf_dir):
     from kafka_sink_azure_kusto_spark.plans.registry_r10 import (
         _run_ivf_stream_loop,

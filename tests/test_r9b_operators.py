@@ -415,25 +415,20 @@ def test_incremental_index_rewrites_only_affected_cells(spark, tmp_path):
         F.col("ofp").isNull() | F.col("nfp").isNull()
         | (F.col("ofp") != F.col("nfp"))
     )
-    affected = diff.select(
-        F.coalesce("nc", "oc").alias("cell")
-    ).distinct().localCheckpoint()
-    assert {r.cell for r in affected.collect()} == {"B", "C"}
+    affected = sorted(
+        r.cell
+        for r in diff.select(F.coalesce("nc", "oc").alias("cell"))
+        .distinct()
+        .collect()
+    )
+    assert affected == ["B", "C"]
 
-    rewrite = new.join(F.broadcast(affected), "cell").select(
+    from kafka_sink_azure_kusto_spark.functions import similarity as S
+
+    rewrite = S._prune_partitions(new, "cell", affected).select(
         "vec_id", "v", "cell"
     )
-    rewrite.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("cell").parquet(idx)
-    import shutil
-
-    empty = affected.join(
-        rewrite.select("cell").distinct(), "cell", "left_anti"
-    ).collect()
-    for r in empty:
-        shutil.rmtree(os.path.join(idx, f"cell={r['cell']}"),
-                      ignore_errors=True)
+    assert S._rewrite_partitions(rewrite, idx, "cell", affected) == ["C"]
 
     # A untouched (same files, same mtimes), C gone, index == new
     assert sorted(os.listdir(os.path.join(idx, "cell=A"))) == a_files
