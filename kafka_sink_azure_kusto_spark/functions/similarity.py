@@ -189,8 +189,12 @@ def brute_force_topk(
     whose query side stays broadcast-small per probed cell. Pass
     ``max_broadcast_queries=None`` to opt out (you've pre-sized it).
 
-    Returns (query_id, neighbor_id, score, rank), excluding self-matches.
+    ``metric='cosine'`` (default) returns (query_id, neighbor_id, score,
+    rank) by cosine descending; ``metric='l2sq'`` returns (query_id,
+    neighbor_id, d2, rank) by squared L2 ascending — the ground truth
+    of the ADC audits. Self-matches are excluded.
     """
+    _check_metric("brute_force_topk", metric)
     if max_broadcast_queries is not None:
         probe = queries.limit(max_broadcast_queries + 1).count()
         if probe > max_broadcast_queries:
@@ -205,19 +209,89 @@ def brute_force_topk(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qvec")
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
-    scorer = cosine if metric == "cosine" else dot
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", scorer("qvec", "cvec"))
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+    return _rank_pairs(pairs, metric, k)
+
+
+def _check_metric(fn: str, metric: str) -> None:
+    if metric not in ("cosine", "l2sq"):
+        raise ValueError(f"{fn}: unknown metric {metric!r}")
+
+
+def _rank_pairs(pairs: DataFrame, metric: str, k: int) -> DataFrame:
+    """Score (query_id, neighbor_id, qvec, cvec) pairs by ``metric`` and
+    keep each query's top k: (query_id, neighbor_id, score | d2, rank)."""
+    if metric == "l2sq":
+        # zip_with pads the shorter array with nulls, so vectors of
+        # unequal length score a null distance
+        col, order = "d2", ["d2", "neighbor_id"]
+        scored = pairs.withColumn(col, F.aggregate(
+            F.zip_with("qvec", "cvec", lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ))
+    else:
+        col, order = "score", ["-score", "neighbor_id"]
+        scored = pairs.withColumn(col, cosine("qvec", "cvec"))
+    return topk_rows(scored, "query_id", order, k).select(
+        "query_id", "neighbor_id", col, "rank"
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+
+
+def topk_rows(df: DataFrame, part: str, order: list[str], k: int) -> DataFrame:
+    """The k best rows of ``df`` per ``part`` value, numbered 1..k in a
+    ``rank`` column.
+
+    ``order`` names the sort keys best first: the score, then the id
+    that breaks its ties. A leading ``-`` sorts a key descending. Every
+    key sorts nulls last, so a null score (a short vector that
+    ``zip_with`` pads) never outranks a real one."""
+    keys = [
+        F.col(o[1:]).desc_nulls_last() if o.startswith("-")
+        else F.col(o).asc_nulls_last()
+        for o in order
+    ]
+    w = Window.partitionBy(part).orderBy(*keys)
+    return df.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def recall_arm(
+    labels: list[Column],
+    gt: DataFrame,
+    found: DataFrame,
+    on: list[str],
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """One graded row of a recall audit: ``*labels``, then
+    [n_candidates], n_hits, n_possible, recall.
+
+    ``n_hits`` counts the ground-truth rows ``gt`` that ``found`` holds
+    (a semi-join on ``on``), ``n_possible`` all rows of ``gt``, and
+    ``recall`` is their ratio to 6 places; ``n_candidates`` counts the
+    rows of ``candidates`` (pass ``.distinct()`` to count distinct
+    ones). The counts are global aggregates, so an arm with no hits
+    still yields its row, with ``n_hits`` 0."""
+    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
+    hits = gt.join(found, on, "left_semi").agg(F.count(F.lit(1)).alias("n_hits"))
+    if candidates is None:
+        row, n_cand = hits.crossJoin(F.broadcast(tot)), []
+    else:
+        row = (
+            candidates.agg(F.count(F.lit(1)).alias("n_candidates"))
+            .crossJoin(F.broadcast(hits))
+            .crossJoin(F.broadcast(tot))
+        )
+        n_cand = ["n_candidates"]
+    return row.select(
+        *labels,
+        *n_cand,
+        "n_hits",
+        "n_possible",
+        F.round(F.col("n_hits") / F.col("n_possible"), 6).alias("recall"),
     )
 
 
@@ -902,8 +976,7 @@ def rerank_topk(
     (query_id, neighbor_id, d2, rank) by exact squared-L2 ASCENDING —
     the honest rerank for an ADC shortlist, which approximates L2²
     (r14 IVF-PQ serving pipeline)."""
-    if metric not in ("cosine", "l2sq"):
-        raise ValueError(f"rerank_topk: unknown metric {metric!r}")
+    _check_metric("rerank_topk", metric)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
     )
@@ -915,37 +988,7 @@ def rerank_topk(
         .join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
     )
-    if metric == "l2sq":
-        d2 = F.aggregate(
-            F.zip_with(
-                F.col("qvec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        scored = paired.withColumn("d2", d2)
-        # asc_nulls_last: a corrupt/short corpus vector zip_with-pads
-        # to a null distance — default NULLS FIRST would rank it as
-        # the closest neighbor for every query (r14 self-review)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("d2").asc_nulls_last(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "d2", "rank")
-        )
-    scored = paired.withColumn(
-        "score", cosine("qvec", "cvec")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _rank_pairs(paired, metric, k)
 
 
 def hyperplane_lsh_buckets(

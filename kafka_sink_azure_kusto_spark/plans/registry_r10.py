@@ -251,6 +251,8 @@ def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine,
         graph_search_topk,
         multiprobe_cells,
+        recall_arm,
+        topk_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -299,41 +301,16 @@ def graph_search_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     gt, gvis, icand = _gt_arm(), _graph_arm(), _ivf_arm()
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-    gw = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("nid").asc()
-    )
-    gres = (
-        gvis.withColumn("rnk", F.row_number().over(gw))
-        .filter(F.col("rnk") <= _AUD_K)
-        .select("qid", "nid")
-    )
-    ires = (
-        icand.withColumn("rnk", F.row_number().over(gw))
-        .filter(F.col("rnk") <= _AUD_K)
-        .select("qid", "nid")
-    )
-
-    def arm(name: str, res: DataFrame, cand: DataFrame) -> DataFrame:
-        hits = gt.join(res, ["qid", "nid"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
+    return recall_arm(
+        [F.lit("graph_search").alias("method")], gt,
+        topk_rows(gvis, "qid", ["-score", "nid"], _AUD_K), ["qid", "nid"],
+        candidates=gvis,
+    ).unionByName(
+        recall_arm(
+            [F.lit("ivf_multiprobe_1").alias("method")], gt,
+            topk_rows(icand, "qid", ["-score", "nid"], _AUD_K), ["qid", "nid"],
+            candidates=icand,
         )
-        n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-        return (
-            n_cand.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("method"),
-                "n_candidates",
-                "n_hits",
-                "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
-        )
-
-    return arm("graph_search", gres, gvis).unionByName(
-        arm("ivf_multiprobe_1", ires, icand)
     )
 
 

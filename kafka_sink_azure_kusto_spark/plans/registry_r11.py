@@ -21,7 +21,7 @@ same parameters as the Spark plans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, register
@@ -390,6 +390,8 @@ def graph_entry_strategy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_entry_points,
         knn_graph_build_exact,
         graph_search_topk,
+        recall_arm,
+        topk_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -414,9 +416,15 @@ def graph_entry_strategy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
     ).localCheckpoint()
     stride = max(1, n_dbl // 10)
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-
-    def arm(name: str, entries: DataFrame | None) -> DataFrame:
+    cent_entries = centroid_entry_points(
+        dbl, queries, n_entry_cells=_ES_CELLS,
+        cell_col="label", vec_col="v", query_vec_col="v",
+        centroid_round=6,  # both engines rank against 6-dp centroids
+    )
+    rows = []
+    for name, entries in (
+        ("entry_stride", None), ("entry_centroid", cent_entries)
+    ):
         vis = (
             graph_search_topk(
                 dbl, queries, edges,
@@ -428,37 +436,12 @@ def graph_entry_strategy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("query_id").alias("qid"), "nid", "score")
             .localCheckpoint()
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("nid").asc()
-        )
-        res = (
-            vis.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= _ES_K)
-            .select("qid", "nid")
-        )
-        hits = gt.join(res, ["qid", "nid"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
-        n_cand = vis.agg(F.count(F.lit(1)).alias("n_candidates"))
-        return (
-            n_cand.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("strategy"),
-                "n_candidates", "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
-        )
-
-    cent_entries = centroid_entry_points(
-        dbl, queries, n_entry_cells=_ES_CELLS,
-        cell_col="label", vec_col="v", query_vec_col="v",
-        centroid_round=6,  # both engines rank against 6-dp centroids
-    )
-    stride_row = arm("entry_stride", None)
-    cent_row = arm("entry_centroid", cent_entries)
-    return stride_row.unionByName(cent_row)
+        rows.append(recall_arm(
+            [F.lit(name).alias("strategy")], gt,
+            topk_rows(vis, "qid", ["-score", "nid"], _ES_K), ["qid", "nid"],
+            candidates=vis,
+        ))
+    return rows[0].unionByName(rows[1])
 
 
 # ---------------------------------------------------------------------

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.plans.registry import (
@@ -648,6 +648,8 @@ def graph_hierarchy_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         brute_force_topk,
         graph_search_topk,
         hierarchical_graph_search_topk,
+        recall_arm,
+        topk_rows,
     )
 
     dbl, queries = _hl_corpus(spark, sf_dir)
@@ -661,46 +663,25 @@ def graph_hierarchy_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     n_dbl = dbl.count()
     stride = max(1, n_dbl // 10)
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
 
-    def grade(name: str, vis: DataFrame) -> DataFrame:
-        vis = (
+    def _visited(vis: DataFrame) -> DataFrame:
+        return (
             vis.filter(F.col("nid") != F.col("query_id"))
             .select(F.col("query_id").alias("qid"), "nid", "score")
             .localCheckpoint()
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("nid").asc()
-        )
-        res = (
-            vis.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= _HL_AK)
-            .select("qid", "nid")
-        )
-        hits = gt.join(res, ["qid", "nid"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
-        n_cand = vis.select("qid", "nid").distinct().agg(
-            F.count(F.lit(1)).alias("n_candidates")
-        )
-        return (
-            n_cand.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("strategy"),
-                "n_candidates", "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
-        )
 
     def _flat_arm() -> DataFrame:
-        flat_vis = graph_search_topk(
+        vis = _visited(graph_search_topk(
             dbl, queries, edges0,
             rounds=_HL_ROUNDS, beam=_HL_BEAM, entry_stride=stride,
             vec_col="v", query_vec_col="v", return_visited=True,
+        ))
+        return recall_arm(
+            [F.lit("flat_stride").alias("strategy")], gt,
+            topk_rows(vis, "qid", ["-score", "nid"], _HL_AK), ["qid", "nid"],
+            candidates=vis.select("qid", "nid").distinct(),
         )
-        return grade("flat_stride", flat_vis)
 
     def _hier_arm() -> DataFrame:
         hier_all = hierarchical_graph_search_topk(
@@ -710,17 +691,14 @@ def graph_hierarchy_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # grade the hierarchical RESULT from layer 0 only (what the
         # searcher returns); count candidates across ALL layers
-        hier_l0 = hier_all.filter(F.col("layer") == 0).drop("layer")
-        hier_hits_row = grade("hierarchical", hier_l0)
-        hier_cand = (
-            hier_all.filter(F.col("nid") != F.col("query_id"))
+        vis = _visited(hier_all.filter(F.col("layer") == 0).drop("layer"))
+        return recall_arm(
+            [F.lit("hierarchical").alias("strategy")], gt,
+            topk_rows(vis, "qid", ["-score", "nid"], _HL_AK), ["qid", "nid"],
+            candidates=hier_all.filter(F.col("nid") != F.col("query_id"))
             .select(F.col("query_id").alias("qid"), "nid")
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n_candidates"))
+            .distinct(),
         )
-        return hier_hits_row.drop("n_candidates").crossJoin(
-            F.broadcast(hier_cand)
-        ).select("strategy", "n_candidates", "n_hits", "n_possible", "recall")
 
     return _flat_arm().unionByName(_hier_arm())
 

@@ -294,63 +294,26 @@ def adc_nprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = queries.select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("qvec"), F.col("cv"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    def _gt_arm() -> DataFrame:
-        return (
-            dbl.select("vec_id", F.col("v").alias("cv"))
-            .crossJoin(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("_d2", d2)
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("_d2").asc(), F.col("vec_id").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rnk") <= _NP_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .localCheckpoint()
-        )
-
-    gt = _gt_arm()
+    gt = S.brute_force_topk(
+        dbl, queries, k=_NP_K, vec_col="v", query_vec_col="v", metric="l2sq"
+    ).select("query_id", "neighbor_id").localCheckpoint()
     qcells_by_arm = [
         S.multiprobe_cells(qdf, cents, np_).localCheckpoint()
         for np_ in _NP_ARMS
     ]
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     cell_of = dbl.select("vec_id", F.col("label").alias("cell"))
     rows = None
     for np_, qcells in zip(_NP_ARMS, qcells_by_arm):
         res = S.pq_adc_topk(
             codes, queries, cb, _PQ_M, _PQ_SUB, k=_NP_K,
             query_vec_col="v", codes_cell_col="cell", query_cells=qcells,
-        ).select("query_id", "neighbor_id")
-        hits = gt.join(res, ["query_id", "neighbor_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
         )
-        n_cand = (
-            qcells.join(cell_of, "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .agg(F.count(F.lit(1)).alias("n_candidates"))
-        )
-        row = (
-            n_cand.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(np_).alias("n_probe"),
-                "n_candidates", "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
+        row = S.recall_arm(
+            [F.lit(np_).alias("n_probe")], gt, res,
+            ["query_id", "neighbor_id"],
+            candidates=qcells.join(cell_of, "cell").filter(
+                F.col("vec_id") != F.col("query_id")
+            ),
         )
         rows = row if rows is None else rows.unionByName(row)
     return rows
@@ -665,6 +628,8 @@ def hierarchical_build_recall_audit(
     from kafka_sink_azure_kusto_spark.functions.similarity import (
         brute_force_topk,
         hierarchical_graph_search_topk,
+        recall_arm,
+        topk_rows,
     )
 
     # the nn-descent build, the exact all-pairs build, and the
@@ -680,9 +645,11 @@ def hierarchical_build_recall_audit(
     ).select(
         F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
     ).localCheckpoint()
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-
-    def grade(name: str, edges0, layers) -> DataFrame:
+    rows = []
+    for name, edges0, layers in (
+        ("exact_built", edges0x, layersx),
+        ("nn_descent_built", edges0n, layersn),
+    ):
         vis = hierarchical_graph_search_topk(
             dbl, queries, edges0, layers,
             rounds=_HL_ROUNDS, beam=_HL_BEAM,
@@ -693,35 +660,16 @@ def hierarchical_build_recall_audit(
             .select(F.col("query_id").alias("qid"), "nid", "score", "layer")
             .localCheckpoint()
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("nid").asc()
-        )
-        res = (
-            vis.filter(F.col("layer") == 0)
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= _HL_AK)
-            .select("qid", "nid")
-        )
-        hits = gt.join(res, ["qid", "nid"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
-        n_cand = vis.select("qid", "nid").distinct().agg(
-            F.count(F.lit(1)).alias("n_candidates")
-        )
-        return (
-            n_cand.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("strategy"),
-                "n_candidates", "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
-        )
-
-    return grade("exact_built", edges0x, layersx).unionByName(
-        grade("nn_descent_built", edges0n, layersn)
-    )
+        rows.append(recall_arm(
+            [F.lit(name).alias("strategy")], gt,
+            topk_rows(
+                vis.filter(F.col("layer") == 0), "qid", ["-score", "nid"],
+                _HL_AK,
+            ),
+            ["qid", "nid"],
+            candidates=vis.select("qid", "nid").distinct(),
+        ))
+    return rows[0].unionByName(rows[1])
 
 
 # =====================================================================

@@ -334,45 +334,19 @@ def ivfpq_serving_recall_audit(
     qdf = queries.select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("qvec"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    gt = (
-        dbl.select("vec_id", F.col("v").alias("cv"))
-        .crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("_d2", d2)
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_d2").asc(), F.col("vec_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("rnk") <= _SV_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .localCheckpoint()
-    )
+    gt = S.brute_force_topk(
+        dbl, queries, k=_SV_K, vec_col="v", query_vec_col="v", metric="l2sq"
+    ).select("query_id", "neighbor_id").localCheckpoint()
     qcells = S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint()
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     cell_of = dbl.select(
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell")
     )
-    ceil_hits = (
-        gt.join(cell_of, "neighbor_id")
-        .join(qcells, ["query_id", "cell"], "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    rows = ceil_hits.crossJoin(F.broadcast(tot)).select(
-        F.lit("probed_cells_ceiling").alias("arm"),
-        F.lit(None).cast("bigint").alias("shortlist"),
-        "n_hits", "n_possible",
-        F.round(F.col("n_hits") / F.col("n_possible"), 6).alias("recall"),
+    rows = S.recall_arm(
+        [
+            F.lit("probed_cells_ceiling").alias("arm"),
+            F.lit(None).cast("bigint").alias("shortlist"),
+        ],
+        gt, qcells.join(cell_of, "cell"), ["query_id", "neighbor_id"],
     )
     short_max = S.pq_adc_topk(
         codes, queries, cb, _PQ_M, _PQ_SUB, k=max(_SV_BUDGETS),
@@ -382,19 +356,14 @@ def ivfpq_serving_recall_audit(
         res = S.rerank_topk(
             short_max.filter(F.col("rank") <= b), dbl, queries,
             k=_SV_K, vec_col="v", query_vec_col="v", metric="l2sq",
-        ).select("query_id", "neighbor_id")
-        hits = gt.join(res, ["query_id", "neighbor_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
         )
-        rows = rows.unionByName(
-            hits.crossJoin(F.broadcast(tot)).select(
+        rows = rows.unionByName(S.recall_arm(
+            [
                 F.lit(f"rerank_top{_SV_K}").alias("arm"),
                 F.lit(b).cast("bigint").alias("shortlist"),
-                "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
-            )
-        )
+            ],
+            gt, res, ["query_id", "neighbor_id"],
+        ))
     return rows
 
 
@@ -752,37 +721,11 @@ def ivfpq_residual_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = queries.select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("qvec"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _gt_arm() -> DataFrame:
-        return (
-            dbl.select("vec_id", F.col("v").alias("cv"))
-            .crossJoin(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("_d2", d2)
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("_d2").asc(), F.col("vec_id").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rnk") <= _SV_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .localCheckpoint()
-        )
-
-    gt = _gt_arm()
+    gt = S.brute_force_topk(
+        dbl, queries, k=_SV_K, vec_col="v", query_vec_col="v", metric="l2sq"
+    ).select("query_id", "neighbor_id").localCheckpoint()
     qcells = S.multiprobe_cells(qdf, cents, _SV_PROBE).localCheckpoint()
     _, rcb, rcodes, _, _ = _rs_store(spark, sf_dir)
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
     plain_short = S.pq_adc_topk(
         pcodes, queries, pcb, _PQ_M, _PQ_SUB, k=max(_RS_BUDGETS),
         query_vec_col="v", codes_cell_col="cell", query_cells=qcells,
@@ -797,16 +740,13 @@ def ivfpq_residual_gain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             res = S.rerank_topk(
                 short.filter(F.col("rank") <= b), dbl, queries,
                 k=_SV_K, vec_col="v", query_vec_col="v", metric="l2sq",
-            ).select("query_id", "neighbor_id")
-            hits = gt.join(
-                res, ["query_id", "neighbor_id"], "left_semi"
-            ).agg(F.count(F.lit(1)).alias("n_hits"))
-            row = hits.crossJoin(F.broadcast(tot)).select(
-                F.lit(enc).alias("encoding"),
-                F.lit(b).cast("bigint").alias("shortlist"),
-                "n_hits", "n_possible",
-                F.round(F.col("n_hits") / F.col("n_possible"), 6)
-                .alias("recall"),
+            )
+            row = S.recall_arm(
+                [
+                    F.lit(enc).alias("encoding"),
+                    F.lit(b).cast("bigint").alias("shortlist"),
+                ],
+                gt, res, ["query_id", "neighbor_id"],
             )
             rows = row if rows is None else rows.unionByName(row)
     return rows

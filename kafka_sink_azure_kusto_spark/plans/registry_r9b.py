@@ -327,6 +327,7 @@ def knn_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         brute_force_topk,
         lsh_topk_directed,
         nn_descent_refine,
+        recall_arm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -349,26 +350,13 @@ def knn_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, num_planes=_KNN_PLANES, k=_KNN_K, bucket_cap=_KNN_CAP, bands=2,
         seed=seed_full,
     ).select("src", "dst")
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-
-    def arm(name: str, edges: DataFrame) -> DataFrame:
-        hits = gt.join(edges, ["src", "dst"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
+    return recall_arm(
+        [F.lit("lsh_seed").alias("method")], gt, seed, ["src", "dst"]
+    ).unionByName(
+        recall_arm(
+            [F.lit("nn_descent_1round").alias("method")],
+            gt, refined, ["src", "dst"],
         )
-        return (
-            hits.crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("method"),
-                "n_hits",
-                "n_possible",
-                F.round(
-                    F.col("n_hits") / F.col("n_possible"), 6
-                ).alias("recall"),
-            )
-        )
-
-    return arm("lsh_seed", seed).unionByName(
-        arm("nn_descent_1round", refined)
     )
 
 
@@ -843,6 +831,7 @@ def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the truncated index serves the fleet."""
     from kafka_sink_azure_kusto_spark.functions.similarity import (
         brute_force_topk,
+        recall_arm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -862,18 +851,9 @@ def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = brute_force_topk(trunc, tq, k=_MAT_K).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     ).localCheckpoint()
-    tot = gt.agg(F.count(F.lit(1)).alias("n_possible"))
-    hits = gt.join(tr, ["src", "dst"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return (
-        hits.crossJoin(F.broadcast(tot))
-        .select(
-            F.lit(_MAT_DIM).cast("int").alias("truncated_dim"),
-            "n_hits",
-            "n_possible",
-            F.round(F.col("n_hits") / F.col("n_possible"), 6).alias("recall"),
-        )
+    return recall_arm(
+        [F.lit(_MAT_DIM).cast("int").alias("truncated_dim")],
+        gt, tr, ["src", "dst"],
     )
 
 
