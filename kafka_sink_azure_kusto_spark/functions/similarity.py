@@ -156,6 +156,19 @@ def _rewrite_partitions(
     return emptied
 
 
+def _check_query_cap(
+    fn: str, queries: DataFrame, cap: int | None, guidance: str
+) -> None:
+    """Raise when the broadcast query side of ``fn`` holds more than
+    ``cap`` rows (``None`` opts out). Counts at most ``cap + 1`` rows,
+    which runs as 2 small Spark jobs (the limit's stage, then the
+    count) and evaluates the query frame's lineage once."""
+    if cap is not None and queries.limit(cap + 1).count() > cap:
+        raise ValueError(
+            f"{fn}: query side exceeds max_broadcast_queries={cap}; {guidance}"
+        )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -177,9 +190,10 @@ def brute_force_topk(
     is broadcast into a nested-loop join, so its size multiplies every
     corpus partition's work AND ships to every executor — a
     million-row query frame here is an accidental O(n·m) disaster. The
-    guard counts at most N+1 query rows (one tiny bounded job at plan
-    build) and raises with guidance beyond the cap. For genuinely large
-    query sets, chunk on your id column and union the results::
+    guard counts at most N+1 query rows (``_check_query_cap``: 2 small
+    Spark jobs at plan build) and raises with guidance beyond the cap.
+    For genuinely large query sets, chunk on your id column and union
+    the results::
 
         parts = [brute_force_topk(corpus, queries.filter(hash(id) % C == i), ...)
                  for i in range(C)]
@@ -195,16 +209,13 @@ def brute_force_topk(
     of the ADC audits. Self-matches are excluded.
     """
     _check_metric("brute_force_topk", metric)
-    if max_broadcast_queries is not None:
-        probe = queries.limit(max_broadcast_queries + 1).count()
-        if probe > max_broadcast_queries:
-            raise ValueError(
-                f"brute_force_topk: query side exceeds max_broadcast_queries="
-                f"{max_broadcast_queries}; a broadcast nested-loop join over "
-                f"this many queries would scan corpus × queries. Chunk the "
-                f"queries and union (see docstring), use ivf_topk / "
-                f"ivf_pq_topk, or pass max_broadcast_queries=None explicitly."
-            )
+    _check_query_cap(
+        "brute_force_topk", queries, max_broadcast_queries,
+        "a broadcast nested-loop join over this many queries would scan "
+        "corpus × queries. Chunk the queries and union (see docstring), "
+        "use ivf_topk / ivf_pq_topk, or pass max_broadcast_queries=None "
+        "explicitly.",
+    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qvec")
     )
@@ -1803,16 +1814,10 @@ def graph_search_topk(
     # sf0.1 (barrier jobs dominated, not compute).
     # The query-cap ValueError fires before anything broadcasts the
     # query side (the search plan only executes at the caller's action).
-    if (
-        max_broadcast_queries is not None
-        and queries.limit(max_broadcast_queries + 1).count()
-        > max_broadcast_queries
-    ):
-        raise ValueError(
-            f"graph_search_topk: query side exceeds "
-            f"max_broadcast_queries={max_broadcast_queries}; chunk the "
-            f"queries and union, or pass max_broadcast_queries=None."
-        )
+    _check_query_cap(
+        "graph_search_topk", queries, max_broadcast_queries,
+        "chunk the queries and union, or pass max_broadcast_queries=None.",
+    )
     und = undirected_edges(edges).localCheckpoint()
     vecs = corpus.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("v")

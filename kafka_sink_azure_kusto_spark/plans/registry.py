@@ -17,6 +17,7 @@ offset = dense per-(topic, partition) sequence ordered by event_id.
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable
 from typing import Optional
 
@@ -37,6 +38,7 @@ from kafka_sink_azure_kusto_spark.operators.batching import (
     staged_file_name,
     with_file_assignment,
 )
+from kafka_sink_azure_kusto_spark.sources.replay import replay_stream, stage_chunks
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
 # The mapping fixture used by the routing/dataflow queries — mirrors the
@@ -125,6 +127,40 @@ def _drain_stream(q, timeout_s: int) -> None:
             "refusing to grade partial stream output"
         )
     q.stop()
+
+
+def run_replay(
+    spark: SparkSession,
+    work: str,
+    schema: str,
+    chunks: list[list[str]],
+    on_batch: Callable[[DataFrame, int], None],
+    timeout_s: int = 180,
+) -> list[int]:
+    """The one replay loop of the streaming gates: stage ``chunks`` (one
+    NDJSON file each) under ``work/replay``, stream them back through
+    ``replay_stream`` with ``schema``, run ``on_batch`` per micro-batch
+    (checkpoint ``work/chk``, availableNow) and drain through
+    ``_drain_stream``. Returns the epoch ids ``on_batch`` completed, in
+    order — a gate that grades the last epoch's output reads
+    ``epoch={ids[-1]}`` directly."""
+    replay = os.path.join(work, "replay")
+    stage_chunks(chunks, replay)
+    epochs: list[int] = []
+
+    def batch(df: DataFrame, epoch_id: int) -> None:
+        on_batch(df, epoch_id)
+        epochs.append(int(epoch_id))
+
+    q = (
+        replay_stream(spark, replay, schema=schema)
+        .writeStream.foreachBatch(batch)
+        .option("checkpointLocation", os.path.join(work, "chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain_stream(q, timeout_s)
+    return epochs
 
 
 # Driver-gate ordering: the external correctness gate evaluates the first

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.operators.skew import salted_sum_count
-from kafka_sink_azure_kusto_spark.plans.registry import _workdir, register
+from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, _workdir, register
 from kafka_sink_azure_kusto_spark.sources.tables import load_table, register_temp_views
 
 
@@ -465,15 +465,9 @@ def streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     backend = LocalEmulatorBackend(os.path.join(work, "kusto"))
     sink = KustoSparkSink(cfg, backend)
     q = sink.attach(replay_stream(spark, os.path.join(work, "replay")), available_now=True)
-    # loud-fail on a hung stream (ADVICE r12 #3): grading the emulator
-    # table after a timeout would silently gate on partial ingestion
-    if not q.awaitTermination(120):
-        KustoSparkSink.close(q)
-        raise RuntimeError(
-            "streaming_sink_roundtrip did not drain within 120s — "
-            "refusing to grade a partially ingested table"
-        )
-    KustoSparkSink.close(q)
+    # loud-fail on a hung stream: grading the emulator table after a
+    # timeout would silently gate on partial ingestion
+    _drain_stream(q, 120)
     table_dir = os.path.join(work, "kusto", "db", "t")
     out = spark.read.json(f"{table_dir}/part-*")
     return out.select("event_id", "user_id", "event_type").orderBy("event_id")

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
-from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, register
+from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.plans.registry_r9b import (
     _KNN_CAP,
     _KNN_K,
@@ -579,9 +579,6 @@ def _run_ivf_stream_loop(
         ivf_topk,
     )
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_ivf_")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -591,7 +588,6 @@ def _run_ivf_stream_loop(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
     idx_dir = os.path.join(work, "idx")
-    replay = os.path.join(work, "replay")
     dbl.filter(F.col("vec_id") % 3 == 0).select(
         "vec_id", "v", F.col("label").alias("cell")
     ).write.partitionBy("cell").parquet(idx_dir)
@@ -605,15 +601,12 @@ def _run_ivf_stream_loop(
         return json.dumps(rec if v is None else {**rec, "v": v})
 
     rows = dbl.collect()
-    _stage_chunks(
-        [
-            [record(r, r.v, 0) for r in rows if r.vec_id % 3 == 1]
-            + [record(r, [x + 1.0 for x in r.v], 0) for r in rows if r.vec_id % 9 == 0],
-            [record(r, r.v, 1) for r in rows if r.vec_id % 3 == 2]
-            + [record(r, None, 1) for r in rows if r.vec_id % 15 == 0],
-        ],
-        replay,
-    )
+    chunks = [
+        [record(r, r.v, 0) for r in rows if r.vec_id % 3 == 1]
+        + [record(r, [x + 1.0 for x in r.v], 0) for r in rows if r.vec_id % 9 == 0],
+        [record(r, r.v, 1) for r in rows if r.vec_id % 3 == 2]
+        + [record(r, None, 1) for r in rows if r.vec_id % 15 == 0],
+    ]
     probes_dir = os.path.join(work, "probes")
 
     def cell_files() -> dict:
@@ -625,8 +618,6 @@ def _run_ivf_stream_loop(
                     if f.endswith(".parquet")
                 )
         return out
-
-    epochs = []
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         mb = batch_df.sparkSession
@@ -655,7 +646,6 @@ def _run_ivf_stream_loop(
         ).write.mode("overwrite").parquet(
             os.path.join(probes_dir, f"epoch={int(epoch_id)}")
         )
-        epochs.append(int(epoch_id))
         if stats is not None:
             stats[int(epoch_id)] = {
                 "affected_cells": sorted(affected),
@@ -664,21 +654,12 @@ def _run_ivf_stream_loop(
                 "files_after": cell_files(),
             }
 
-    stream = (
-        spark.readStream.schema("vec_id long, label int, v array<double>, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    epochs = run_replay(
+        spark, work, "vec_id long, label int, v array<double>, seq int",
+        chunks, upsert_and_probe,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_and_probe)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
-
     return spark.read.schema(_IVF_PROBE_SCHEMA).parquet(
-        os.path.join(probes_dir, f"epoch={max(epochs)}")
+        os.path.join(probes_dir, f"epoch={epochs[-1]}")
     )
 
 
@@ -1417,23 +1398,11 @@ def streaming_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
+    from kafka_sink_azure_kusto_spark.sources.replay import key_chunks
 
     work = _workdir("stream_bm25_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = [
-        [
-            r[0]
-            for r in docs.filter(F.col("doc_id") % 3 == c)
-            .select(F.to_json(F.struct("doc_id", "text")))
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    chunks = key_chunks(docs, "doc_id", ["doc_id", "text"])
     reg = os.path.join(work, "registers")
 
     def update_index(batch_df, epoch_id: int) -> None:
@@ -1466,18 +1435,7 @@ def streaming_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(reg, f"dlen/epoch={ep}")
         )
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(update_index)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "doc_id long, text string", chunks, update_index)
 
     postings = spark.read.parquet(os.path.join(reg, "postings")).drop("epoch")
     df_ = (
@@ -1542,24 +1500,12 @@ def streaming_dsir_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafka_sink_azure_kusto_spark.functions.corpus import dsir_features
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
+    from kafka_sink_azure_kusto_spark.sources.replay import key_chunks
 
     n_buckets = 256
     work = _workdir("stream_dsir_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = [
-        [
-            r[0]
-            for r in docs.filter(F.col("doc_id") % 3 == c)
-            .select(F.to_json(F.struct("doc_id", "text")))
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    chunks = key_chunks(docs, "doc_id", ["doc_id", "text"])
     reg = os.path.join(work, "registers")
 
     def update_registers(batch_df, epoch_id: int) -> None:
@@ -1592,18 +1538,7 @@ def streaming_dsir_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so a long-running stream doesn't accumulate one per epoch
         feats.unpersist()
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(update_registers)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "doc_id long, text string", chunks, update_registers)
 
     raw_c = (
         spark.read.parquet(os.path.join(reg, "raw"))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, register
+from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
@@ -121,9 +121,6 @@ def _run_knn_graph_stream_loop(
         knn_graph_upsert,
     )
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_knng_")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -169,8 +166,6 @@ def _run_knn_graph_stream_loop(
         ]
         for b in (b0, b1)
     ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
 
     from kafka_sink_azure_kusto_spark.functions.similarity import (
         graph_search_topk,
@@ -200,24 +195,13 @@ def _run_knn_graph_stream_loop(
         if stats is not None:
             stats[int(epoch_id)] = st
 
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    epochs = run_replay(
+        spark, work, "vec_id long, v array<double>, seq int", chunks,
+        upsert_and_probe,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_and_probe)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
-
-    res = spark.read.parquet(probes_dir)
-    last = res.groupBy().agg(F.max("epoch").alias("epoch"))
-    return res.join(F.broadcast(last), "epoch").select(
-        "query_id", "neighbor_id", "score", "rank"
-    )
+    return spark.read.parquet(
+        os.path.join(probes_dir, f"epoch={epochs[-1]}")
+    ).select("query_id", "neighbor_id", "score", "rank")
 
 
 @register(

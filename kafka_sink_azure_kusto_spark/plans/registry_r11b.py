@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, register
+from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
@@ -1401,29 +1401,11 @@ def streaming_expectation_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
 
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
+    from kafka_sink_azure_kusto_spark.sources.replay import key_chunks
 
     work = _workdir("stream_expect_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "props"
-    )
-    chunks = [
-        [
-            r[0]
-            for r in ev.filter(F.col("event_id") % 3 == c)
-            .select(
-                F.to_json(
-                    F.struct("event_id", "user_id", "event_type", "value", "props")
-                )
-            )
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    cols = ["event_id", "user_id", "event_type", "value", "props"]
+    chunks = key_chunks(load_table(spark, sf_dir, "events"), "event_id", cols)
     reg_dir = os.path.join(work, "registers")
 
     def audit_batch(batch_df, epoch_id: int) -> None:
@@ -1460,21 +1442,11 @@ def streaming_expectation_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
             os.path.join(reg_dir, f"epoch={int(epoch_id)}")
         )
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    run_replay(
+        spark, work,
+        "event_id long, user_id long, event_type string, value double, props string",
+        chunks, audit_batch,
     )
-    q = (
-        stream.writeStream.foreachBatch(audit_batch)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
 
     merged = (
         spark.read.parquet(reg_dir)
@@ -1871,9 +1843,6 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         sign_bit_words,
     )
     from kafka_sink_azure_kusto_spark.plans.registry import _workdir
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_mih_")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1900,7 +1869,6 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .withColumn("seq", F.lit(1))
     )
-    replay = os.path.join(work, "replay")
     sign_bit_words(seed, "v").withColumn(
         "block", (F.col("vec_id") % 8).cast("int")
     ).select("vec_id", "v", "w0", "w1", "block").write.partitionBy(
@@ -1915,7 +1883,6 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         ]
         for b in (b0, b1)
     ]
-    _stage_chunks(chunks, replay)
     probes_dir = os.path.join(work, "probes")
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
@@ -1937,21 +1904,10 @@ def streaming_mih_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
             os.path.join(probes_dir, f"epoch={int(epoch_id)}")
         )
 
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    epochs = run_replay(
+        spark, work, "vec_id long, v array<double>, seq int", chunks,
+        upsert_and_probe,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_and_probe)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
-
-    res = spark.read.parquet(probes_dir)
-    last = res.groupBy().agg(F.max("epoch").alias("epoch"))
-    return res.join(F.broadcast(last), "epoch").select(
-        "query_id", "neighbor_id", "hamming", "score", "rank"
-    )
+    return spark.read.parquet(
+        os.path.join(probes_dir, f"epoch={epochs[-1]}")
+    ).select("query_id", "neighbor_id", "hamming", "score", "rank")

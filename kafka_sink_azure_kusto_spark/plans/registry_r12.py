@@ -31,10 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.plans.registry import (
-    _drain_stream,
     _workdir,
     memo_substrate,
     register,
+    run_replay,
     substrate,
 )
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
@@ -136,9 +136,6 @@ def _run_pq_stream_loop(
     (streaming_pq_index_maintenance + streaming_pq_drift_audit), so it
     is a cached substrate per (application, sf_dir)."""
     from kafka_sink_azure_kusto_spark.functions import similarity as S
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_pq_")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -196,7 +193,6 @@ def _run_pq_stream_loop(
         )
         .withColumn("seq", F.lit(1))
     )
-    replay = os.path.join(work, "replay")
     # seed store write and seed drift-register write, both off the
     # checkpointed seed codes
     seed_codes.write.partitionBy("block").parquet(code_dir)
@@ -215,7 +211,6 @@ def _run_pq_stream_loop(
         ]
         for b in (b0, b1)
     ]
-    _stage_chunks(chunks, replay)
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
@@ -247,24 +242,13 @@ def _run_pq_stream_loop(
             os.path.join(probes_dir, f"epoch={ep}")
         )
 
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    epochs = run_replay(
+        spark, work, "vec_id long, v array<double>, seq int", chunks,
+        upsert_and_probe,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_and_probe)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
-
-    res = spark.read.parquet(probes_dir)
-    last = res.groupBy().agg(F.max("epoch").alias("epoch"))
-    final_probe = res.join(F.broadcast(last), "epoch").select(
-        "query_id", "neighbor_id", "adc_d2", "rank"
-    )
+    final_probe = spark.read.parquet(
+        os.path.join(probes_dir, f"epoch={epochs[-1]}")
+    ).select("query_id", "neighbor_id", "adc_d2", "rank")
 
     # ---- drift audit: SUM-merge the stream epochs' registers, compare
     # mean qerr per subspace against the seed baseline
@@ -987,9 +971,6 @@ def streaming_ivfpq_index_maintenance(
     import os
 
     from kafka_sink_azure_kusto_spark.functions import similarity as S
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_ivfpq_")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1052,8 +1033,6 @@ def streaming_ivfpq_index_maintenance(
         .write.partitionBy("cell")
         .parquet(idx_dir)
     )
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
 
     def upsert_and_probe(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
@@ -1076,26 +1055,13 @@ def streaming_ivfpq_index_maintenance(
             os.path.join(probes_dir, f"epoch={ep}")
         )
 
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, label int, v array<double>, seq int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    epochs = run_replay(
+        spark, work, "vec_id long, label int, v array<double>, seq int",
+        chunks, upsert_and_probe,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_and_probe)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
-
-    res = spark.read.parquet(probes_dir)
-    last = res.groupBy().agg(F.max("epoch").alias("epoch"))
-    return res.join(F.broadcast(last), "epoch").select(
-        "query_id", "neighbor_id", "adc_d2", "rank"
-    )
+    return spark.read.parquet(
+        os.path.join(probes_dir, f"epoch={epochs[-1]}")
+    ).select("query_id", "neighbor_id", "adc_d2", "rank")
 
 
 # ---------------------------------------------------------------------
@@ -1150,9 +1116,6 @@ def streaming_hierarchical_graph_maintenance(
         knn_graph_build_exact,
         knn_graph_upsert,
     )
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     n_blocks = 8
     work = _workdir("stream_hier_")
@@ -1199,8 +1162,6 @@ def streaming_hierarchical_graph_maintenance(
         [r[0] for r in b.select(F.to_json(F.struct("vec_id", "v", "seq"))).collect()]
         for b in (b0, b1)
     ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
 
     def upsert_layers(batch_df, epoch_id: int) -> None:
         # each layer upserts its OWN pair of stores (disjoint dirs)
@@ -1212,18 +1173,10 @@ def streaming_hierarchical_graph_maintenance(
                 id_col="vec_id", vec_col="v", seq_col="seq",
             )
 
-    stream = (
-        spark.readStream.schema("vec_id long, v array<double>, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    run_replay(
+        spark, work, "vec_id long, v array<double>, seq int", chunks,
+        upsert_layers, timeout_s=240,
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert_layers)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 240)
 
     # gate probe: ONE descent off the final on-disk stores. The
     # serve-BETWEEN-batches shape is the sibling loops' proven

@@ -40,10 +40,10 @@ from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
 from kafka_sink_azure_kusto_spark.plans.registry import (
-    _drain_stream,
     _workdir,
     memo_substrate,
     register,
+    run_replay,
 )
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
 from kafka_sink_azure_kusto_spark.plans.registry_r11 import _graph_rounds_sql
@@ -831,9 +831,6 @@ def _run_vocab_stream_loop(
     drift/retrain audit rows, path of the persisted RETRAINED
     vocabulary store — the r14 serving read's input)."""
     from kafka_sink_azure_kusto_spark.functions import unigram as U
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
 
     work = _workdir("stream_vocab_")
     store = os.path.join(work, "store")
@@ -899,7 +896,6 @@ def _run_vocab_stream_loop(
         )
         .withColumn("seq", F.lit(1))
     )
-    replay = os.path.join(work, "replay")
     # the seed coverage register reads the persisted seed vocab
     oov_stats(seedw, lp_seed).write.parquet(os.path.join(reg, "oov_seed"))
     chunks = [
@@ -911,7 +907,6 @@ def _run_vocab_stream_loop(
         ]
         for b in (b0, b1)
     ]
-    _stage_chunks(chunks, replay)
 
     def update_vocab(batch_df, epoch_id: int) -> None:
         ep = int(epoch_id)
@@ -936,18 +931,7 @@ def _run_vocab_stream_loop(
             "overwrite"
         ).parquet(os.path.join(reg, f"oov_stream/epoch={ep}"))
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, seq int")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(update_vocab)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "doc_id long, text string, seq int", chunks, update_vocab)
 
     # ---- merged histogram (seed register + stream deltas) — the gate
     hist = (

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.plans.registry import _drain_stream, register
+from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
 _SPAN_K = 6
@@ -325,23 +325,11 @@ def streaming_substring_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_bucketed,
         write_bucketed,
     )
-    from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-        _stage_chunks,
-    )
+    from kafka_sink_azure_kusto_spark.sources.replay import key_chunks
 
     work = _workdir("stream_substr_store_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = [
-        [
-            r[0]
-            for r in docs.filter(F.col("doc_id") % 3 == c)
-            .select(F.to_json(F.struct("doc_id", "text")))
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    chunks = key_chunks(docs, "doc_id", ["doc_id", "text"])
 
     tbl = "stream_anchor_store_live"
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -369,18 +357,7 @@ def streaming_substring_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             tbl, ["h"], num_buckets=8,
         )
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(triage_and_admit)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "doc_id long, text string", chunks, triage_and_admit)
     return spark.read.parquet(results_dir).select("doc_id", "status")
 
 

@@ -41,23 +41,14 @@ from kafka_sink_azure_kusto_spark.plans.registry import (
     _drain_stream,
     _workdir,
     register,
+    run_replay,
+)
+from kafka_sink_azure_kusto_spark.sources.replay import (
+    key_chunks,
+    replay_stream,
+    stage_chunks,
 )
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
-
-_MTIME = [1_700_000_000]
-
-
-def _stage_chunks(chunks: list[list[str]], replay_dir: str) -> None:
-    """Write NDJSON chunk files with strictly increasing mtimes so the
-    file stream replays them in order, one micro-batch each."""
-    os.makedirs(replay_dir, exist_ok=True)
-    for i, rows in enumerate(chunks):
-        path = os.path.join(replay_dir, f"chunk_{i:03d}.json")
-        with open(path, "w") as f:
-            for r in rows:
-                f.write(r + "\n")
-        _MTIME[0] += 1000
-        os.utime(path, (_MTIME[0], _MTIME[0]))
 
 
 def _split(rows: list[str], n: int) -> list[list[str]]:
@@ -141,12 +132,12 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chunks = _split(json_rows, 3) + [[sentinel]]
     replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    stage_chunks(chunks, replay)
 
     stream = (
-        spark.readStream.schema("event_id long, user_id long, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+        replay_stream(
+            spark, replay, schema="event_id long, user_id long, ts_us long, value double"
+        )
         .withColumn("ts", F.timestamp_micros("ts_us"))
         .withWatermark("ts", "1 minute")
     )
@@ -196,17 +187,15 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
     replay = os.path.join(work, "replay")
-    _stage_chunks(_split(rows, 3), replay)
+    stage_chunks(_split(rows, 3), replay)
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     dim = cust.join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey")).select(
         "c_custkey", "n_name"
     )
-    stream = (
-        spark.readStream.schema("o_orderkey long, o_custkey long, o_totalprice double")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    stream = replay_stream(
+        spark, replay, schema="o_orderkey long, o_custkey long, o_totalprice double"
     )
     enriched = stream.join(dim, F.col("o_custkey") == F.col("c_custkey")).select(
         "o_orderkey", "n_name", F.col("o_totalprice").cast("double").alias("o_totalprice")
@@ -249,12 +238,12 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             d["ts_us"] += 30 * 1_000_000
             chunks[i + 1].insert(0, json.dumps(d))
     replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    stage_chunks(chunks, replay)
 
     stream = (
-        spark.readStream.schema("event_id long, user_id long, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+        replay_stream(
+            spark, replay, schema="event_id long, user_id long, ts_us long, value double"
+        )
         .withColumn("ts", F.timestamp_micros("ts_us"))
         .withWatermark("ts", "96 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -300,9 +289,6 @@ def streaming_upsert_materialized(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(F.to_json(F.struct("event_id", "user_id", "ts_us", "event_type")))
         .collect()
     )
-    replay = os.path.join(work, "replay")
-    _stage_chunks(_split([r[0] for r in rows], 3), replay)
-
     state_root = os.path.join(work, "state")
     os.makedirs(state_root, exist_ok=True)
     pointer = os.path.join(state_root, "_CURRENT")
@@ -351,20 +337,10 @@ def streaming_upsert_materialized(spark: SparkSession, sf_dir: str) -> DataFrame
             f.write(version)
         os.replace(tmp, pointer)  # atomic pointer swap
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts_us long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
+    run_replay(
+        spark, work, "event_id long, user_id long, ts_us long, event_type string",
+        _split([r[0] for r in rows], 3), merge_batch,
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
     final = current_snapshot()
     return final.select(
         "user_id", "state", F.timestamp_micros("state_ts_us").alias("state_ts")
@@ -431,14 +407,12 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"event_id": -1, "user_id": -1, "ts_us": last_us + 1000 * 3600 * 1_000_000}
         )
         replay = os.path.join(work, subdir)
-        _stage_chunks(_split(json_rows, 3) + [[sentinel]], replay)
+        stage_chunks(_split(json_rows, 3) + [[sentinel]], replay)
         return replay
 
     def read(replay: str) -> DataFrame:
         return (
-            spark.readStream.schema("event_id long, user_id long, ts_us long")
-            .option("maxFilesPerTrigger", 1)
-            .json(replay)
+            replay_stream(spark, replay, schema="event_id long, user_id long, ts_us long")
             .withColumn("ts", F.timestamp_micros("ts_us"))
             .select("event_id", "user_id", "ts")
         )
@@ -523,17 +497,7 @@ def _run_incr_store_loop(
 
     work = _workdir("stream_incr_store_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = [
-        [
-            r[0]
-            for r in docs.filter(F.col("doc_id") % 3 == c)
-            .select(F.to_json(F.struct("doc_id", "text")))
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    chunks = key_chunks(docs, "doc_id", ["doc_id", "text"])
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -590,18 +554,7 @@ def _run_incr_store_loop(
             if file_counts is not None:
                 file_counts["post_compact"] = n
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(triage_and_admit)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "doc_id long, text string", chunks, triage_and_admit)
     return spark.read.parquet(results_dir).select("doc_id", "status")
 
 
@@ -677,17 +630,7 @@ def streaming_countmin_maintenance(
     depth, width = 4, 64
     work = _workdir("stream_cm_")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    chunks = [
-        [
-            r[0]
-            for r in ev.filter(F.col("event_id") % 3 == c)
-            .select(F.to_json(F.struct("event_id", "user_id")))
-            .collect()
-        ]
-        for c in range(3)
-    ]
-    replay = os.path.join(work, "replay")
-    _stage_chunks(chunks, replay)
+    chunks = key_chunks(ev, "event_id", ["event_id", "user_id"])
     reg_dir = os.path.join(work, "registers")
 
     def update_registers(batch_df, epoch_id: int) -> None:
@@ -704,18 +647,7 @@ def streaming_countmin_maintenance(
             os.path.join(reg_dir, f"epoch={int(epoch_id)}")
         )
 
-    stream = (
-        spark.readStream.schema("event_id long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .json(replay)
-    )
-    q = (
-        stream.writeStream.foreachBatch(update_registers)
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_stream(q, 180)
+    run_replay(spark, work, "event_id long, user_id long", chunks, update_registers)
 
     merged = (
         spark.read.parquet(reg_dir)

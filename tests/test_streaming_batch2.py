@@ -11,11 +11,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import (
-    _split,
-    _stage_chunks,
-    _run_to_memory,
-)
+from kafka_sink_azure_kusto_spark.plans.registry_streaming2 import _split, _run_to_memory
+from kafka_sink_azure_kusto_spark.sources.replay import stage_chunks as _stage_chunks
 
 H = 3600 * 1_000_000  # one hour in micros
 T0 = 1_700_000_000 * 1_000_000
