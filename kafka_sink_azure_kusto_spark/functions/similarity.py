@@ -17,6 +17,8 @@ Scale design:
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -154,6 +156,93 @@ def _rewrite_partitions(
     for p in emptied:
         _store_delete_partition(frame.sparkSession, store_dir, f"{part_col}={p}")
     return emptied
+
+
+def last_write_wins(
+    df: DataFrame, key: str, value: str, seq_col: str | None = None
+) -> DataFrame:
+    """One row per ``key`` — the Kafka rule for several deliveries of
+    one key (a NULL ``value`` is a tombstone, the later delivery wins):
+    the highest ``seq_col`` first; then a live row before a tombstone
+    and the greatest ``value``; then the greatest of the remaining
+    columns. Without ``seq_col`` the tiebreak alone decides, so the
+    surviving row never depends on how ``df`` is partitioned.
+    ``seq_col`` is dropped."""
+    order = [F.col(seq_col).desc()] if seq_col else []
+    order += [F.col(value).desc_nulls_last()] + [
+        F.col(c).desc() for c in df.columns if c not in (key, value, seq_col)
+    ]
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("_lw", F.row_number().over(w))
+        .filter(F.col("_lw") == 1)
+        .drop("_lw", *([seq_col] if seq_col else []))
+    )
+
+
+class _Upsert(NamedTuple):
+    latest: DataFrame  # one row per batch key, with the partition column
+    new: DataFrame  # the store rows the batch's live rows encode to
+    keep: DataFrame  # stored rows of the affected partitions, keys not in the batch
+    old: DataFrame  # stored rows of the affected partitions, keys in the batch
+    affected: list
+    batch_rows: int
+
+
+def _upsert_head(
+    batch: DataFrame,
+    store_dir: str,
+    encode: Callable[[DataFrame], DataFrame],
+    key: str,
+    value: str,
+    part: str,
+    n_blocks: int | None = None,
+    seq_col: str | None = None,
+) -> _Upsert:
+    """The head of every keyed-store upsert; ``_rewrite_partitions`` is
+    its tail. ``batch`` holds ``key``, ``value`` (NULL = tombstone),
+    optionally ``seq_col`` and, for a cell store, the carried ``part``
+    column; ``encode`` maps live batch rows to store rows, and its
+    schema is the store's.
+
+    - ``last_write_wins`` keeps one row per key; with ``n_blocks`` the
+      partition is ``part = key % n_blocks``, fixed for a key.
+    - The batch's partitions and row count are observed on its
+      checkpoint. A cell store adds, in one collect, the cells the
+      store holds the batch's keys in now: a key that moved cells must
+      leave the old one, or it survives there as a duplicate.
+    - A store without data (missing, or emptied by tombstones) starts
+      empty; a read failure on a store that holds data propagates,
+      since swallowing it would let the rewrite drop every kept row.
+    - The store is read with the schema ``encode`` gives, so nothing
+      is inferred, and pruned to the affected partitions."""
+    spark = batch.sparkSession
+    latest = last_write_wins(batch, key, value, seq_col)
+    if n_blocks is not None:
+        latest = latest.withColumn(part, (F.col(key) % n_blocks).cast("int"))
+    seen = Observation()
+    latest = latest.observe(
+        seen, F.count(F.lit(1)).alias("n"), F.collect_set(part).alias("parts")
+    ).localCheckpoint()
+    new = encode(latest.filter(F.col(value).isNotNull()))
+    store = (
+        spark.read.schema(new.schema).parquet(store_dir)
+        if _store_exists(spark, store_dir)
+        else spark.createDataFrame([], new.schema)
+    )
+    ids = F.broadcast(latest.select(key))
+    observed = seen.get
+    affected = set(observed["parts"])
+    if n_blocks is None:
+        affected |= {
+            r[0] for r in store.select(key, part).join(ids, key).select(part).collect()
+        }
+    affected = sorted(affected)
+    pruned = _prune_partitions(store, part, affected)
+    return _Upsert(
+        latest, new, pruned.join(ids, key, "left_anti"),
+        pruned.join(ids, key, "left_semi"), affected, observed["n"],
+    )
 
 
 def _check_query_cap(
@@ -1369,59 +1458,25 @@ def ivf_index_upsert(
 
     ``batch`` rows: (id, vec, cell); a NULL vector is a TOMBSTONE
     (delete this id from its cell — the Kafka null-value convention).
-    With ``seq_col``, last-write-wins WITHIN the batch by that column
-    (a merged micro-batch can carry both a value and its later
-    tombstone; without an order the wrong one could survive).
-
-    Mechanics: affected cells = the batch's cells plus the index's
-    current cells for the batch's ids; the surviving index rows in
-    those cells (ids the batch does not supersede) union the batch's
-    live rows replace those cells through ``_rewrite_partitions``, so
-    a batch costs |affected cells| of I/O, never |index|, and leaves
-    one file per touched cell. Cells left EMPTY by deletes are removed
-    (dynamic overwrite never touches a partition absent from the
-    written frame — the standard incremental-index hole); the emptied
-    cell list is returned for observability. The index is read with
-    the batch's projected schema (vec_id, v, cell), so a read infers
-    nothing; a steady call runs 8 Spark jobs.
+    The cell is carried, so a re-embedded vector may move cells.
+    ``_upsert_head`` resolves the batch (last write wins, by
+    ``seq_col`` when given), finds the affected cells and reads the
+    rows they keep; its live rows and those rows replace the affected
+    cells through ``_rewrite_partitions``, so a batch costs |affected
+    cells| of I/O, never |index|. Returns the cells the batch emptied.
     """
-    spark = batch.sparkSession
-    if seq_col is not None:
-        w = Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
-        batch = (
-            batch.withColumn("_lw", F.row_number().over(w))
-            .filter(F.col("_lw") == 1)
-            .drop("_lw", seq_col)
-        )
-    batch = batch.select(
+    b = batch.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("v"),
         F.col(cell_col).alias("cell"),
-    ).localCheckpoint()  # consumed by 3 branches below
-    idx = spark.read.schema(batch.schema).parquet(idx_dir)
-    # Affected cells = the batch's claimed cells PLUS the index's
-    # CURRENT cells for the batch's ids. The second set is the cell-move
-    # case (re-embedded vector assigned a new nearest centroid): without
-    # it the stale row in the OLD cell is invisible to the anti-join and
-    # survives as a duplicate vec_id. The lookup scans only
-    # (vec_id, cell) — cell is the partition column and vec_id one thin
-    # column — with the ≤|batch| id set broadcast. One collect of
-    # ≤ 2·|batch| rows, deduped here rather than by a shuffle.
-    old_cells = (
-        idx.select("vec_id", "cell")
-        .join(F.broadcast(batch.select("vec_id")), "vec_id")
-        .select("cell")
+        *([seq_col] if seq_col else []),
     )
-    affected = sorted(
-        {r["cell"] for r in batch.select("cell").unionByName(old_cells).collect()}
+    up = _upsert_head(
+        b, idx_dir, lambda live: live, "vec_id", "v", "cell", seq_col=seq_col
     )
-    keep = (
-        _prune_partitions(idx, "cell", affected)
-        .join(F.broadcast(batch.select("vec_id")), "vec_id", "left_anti")
-        .select("vec_id", "v", "cell")
+    return _rewrite_partitions(
+        up.keep.unionByName(up.new), idx_dir, "cell", up.affected
     )
-    live = batch.filter(F.col("v").isNotNull()).select("vec_id", "v", "cell")
-    return _rewrite_partitions(keep.unionByName(live), idx_dir, "cell", affected)
 
 
 def knn_graph_build_exact(
@@ -1489,8 +1544,9 @@ def knn_graph_upsert(
       (``knn_graph_build_exact``'s invariant), parquet partitioned by
       ``block = src % n_blocks``
 
-    ``batch`` rows: (id, vec); NULL vec is a tombstone. With
-    ``seq_col``, last-write-wins within the batch.
+    ``batch`` rows: (id, vec); NULL vec is a tombstone. The vector
+    store is upserted through ``_upsert_head`` (last write wins, by
+    ``seq_col`` when given) before the graph is touched.
 
     The maintained invariant is EXACT: after every batch the adjacency
     equals ``knn_graph_build_exact`` over the post-batch corpus, row
@@ -1522,48 +1578,32 @@ def knn_graph_upsert(
     Returns {"n_frontier", "affected_blocks", "emptied_blocks"}.
     """
     spark = batch.sparkSession
-    if seq_col is not None:
-        w = Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
-        batch = (
-            batch.withColumn("_lw", F.row_number().over(w))
-            .filter(F.col("_lw") == 1)
-            .drop("_lw", seq_col)
-        )
-    batch = batch.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        (F.col(id_col) % n_blocks).cast("int").alias("block"),
-    ).localCheckpoint()
-    batch_ids = batch.select("vec_id")
-    live = batch.filter(F.col("v").isNotNull())
-
     # ---- 1. vector store: rewrite only the batch ids' blocks.
-    # block is a pure function of the id, so (unlike IVF cells) rows
-    # can't move between partitions and the claimed blocks are complete.
     # (r14 note: an attempted "post-batch corpus = untouched blocks ∪
     # checkpointed rewrite" restructure — to overlap this write with
     # the frontier recompute — MEASURED 2× SLOWER at fixture scale and
     # is structurally worse at 100 TB: every downstream corpus scan
     # paid the distinct-shuffle + broadcast anti-join instead of a
     # plain store read. The read-after-write barrier stays.)
-    # per-epoch job folding (VERDICT r14 #2): affected blocks as one
-    # bounded collect pruning the store scan. Values unchanged.
-    vec_affected = sorted(
-        r["block"]
-        for r in batch.select("block").distinct().collect()  # ≤ n_blocks
-    )
-    vkeep = (
-        _prune_partitions(spark.read.parquet(vec_dir), "block", vec_affected)
-        .join(batch_ids, "vec_id", "left_anti")
-        .select("vec_id", "v", "block")
+    up = _upsert_head(
+        batch.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("v"),
+            *([seq_col] if seq_col else []),
+        ),
+        vec_dir, lambda live: live.select("vec_id", "v", "block"),
+        "vec_id", "v", "block", n_blocks=n_blocks, seq_col=seq_col,
     )
     _rewrite_partitions(
-        vkeep.unionByName(live.select("vec_id", "v", "block")),
-        vec_dir, "block", vec_affected,
+        up.keep.unionByName(up.new), vec_dir, "block", up.affected
     )
-
-    corpus = spark.read.parquet(vec_dir)  # post-batch state
-    graph = spark.read.parquet(graph_dir)
+    batch_ids, live = up.latest.select("vec_id"), up.new
+    # post-batch state, read with the known schemas
+    corpus = spark.read.schema(up.new.schema).parquet(vec_dir)
+    id_type = up.new.schema["vec_id"].dataType.simpleString()
+    graph = spark.read.schema(
+        f"src {id_type}, dst {id_type}, score double, block int"
+    ).parquet(graph_dir)
 
     # ---- 2. bounded frontier
     rev = (
@@ -2046,51 +2086,27 @@ def mih_code_upsert(
     stored row is (id, vector, w0, w1) with ``block = id % n_blocks``
     as the partition key, so id→block is IMMUTABLE by construction —
     the cell-move staleness hazard the IVF upsert has to defend against
-    (ADVICE r10 #2) cannot exist here. Affected blocks come from the
-    batch's ids alone; only those partitions rewrite (dynamic partition
-    overwrite, last-write-wins by ``seq_col`` within the batch);
-    emptied blocks are deleted through the Hadoop FileSystem API so the
-    maintenance contract holds on HDFS/S3 as well as the local
-    filesystem. A missing store (first run) starts empty; any OTHER
-    read failure on an existing store propagates loudly — swallowing
-    it would make the dynamic overwrite drop every pre-existing row in
-    the affected blocks (ADVICE r11 #1). Returns per-batch stats."""
-    spark = batch.sparkSession
-    b = batch.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        *( [F.col(seq_col).alias("_seq")] if seq_col else [F.lit(0).alias("_seq")] ),
+    (ADVICE r10 #2) cannot exist here. ``_upsert_head`` resolves the
+    batch and reads the rows its blocks keep; only those blocks
+    rewrite. Returns per-batch stats."""
+    up = _upsert_head(
+        batch.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("v"),
+            *([seq_col] if seq_col else []),
+        ),
+        code_dir,
+        lambda live: sign_bit_words(live, "v").select(
+            "vec_id", "v", "w0", "w1", "block"
+        ),
+        "vec_id", "v", "block", n_blocks=n_blocks, seq_col=seq_col,
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("_seq").desc())
-    latest = (
-        b.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .drop("_r", "_seq")
-        .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
-        .localCheckpoint()
+    emptied = _rewrite_partitions(
+        up.keep.unionByName(up.new), code_dir, "block", up.affected
     )
-    # per-epoch job folding (VERDICT r14 #2): one per-block count
-    # aggregate replaces the affected-blocks checkpoint AND the two
-    # final counts. Values unchanged.
-    block_counts = latest.groupBy("block").agg(
-        F.count(F.lit(1)).alias("n")
-    ).collect()  # bounded: ≤ n_blocks rows
-    affected = sorted(int(r["block"]) for r in block_counts)
-    batch_rows = sum(int(r["n"]) for r in block_counts)
-    rewrite = sign_bit_words(
-        latest.filter(F.col("v").isNotNull()), "v"
-    ).select("vec_id", "v", "w0", "w1", "block")
-    if _store_exists(spark, code_dir):  # else: first run, nothing to keep
-        rewrite = (
-            _prune_partitions(spark.read.parquet(code_dir), "block", affected)
-            .join(latest.select("vec_id"), "vec_id", "left_anti")
-            .select("vec_id", "v", "w0", "w1", "block")
-            .unionByName(rewrite)
-        )
-    emptied = _rewrite_partitions(rewrite, code_dir, "block", affected)
     return {
-        "batch_rows": batch_rows,
-        "affected_blocks": len(affected),
+        "batch_rows": up.batch_rows,
+        "affected_blocks": len(up.affected),
         "emptied_blocks": len(emptied),
     }
 
@@ -2120,10 +2136,8 @@ def pq_code_upsert(
     n_blocks`` as the partition key — id→block is IMMUTABLE by
     construction, so (like MIH, unlike IVF cells) the cell-move
     staleness hazard cannot exist. Tombstones drop all ``num_subspaces``
-    rows of the id; last-write-wins by ``seq_col`` within the batch;
-    emptied blocks are deleted through the Hadoop FileSystem API; a
-    read failure on an existing store propagates loudly (first run
-    only starts empty).
+    rows of the id; ``_upsert_head`` resolves the batch and reads the
+    rows its blocks keep.
 
     The frozen-codebook regime silently DEGRADES if upserts shift the
     vector distribution — exactly what the returned per-subspace drift
@@ -2137,63 +2151,41 @@ def pq_code_upsert(
     Returns {"batch_rows", "affected_blocks", "emptied_blocks",
     "drift": [(m, n, sum_qerr), ...]}.
     """
-    spark = batch.sparkSession
-    b = batch.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        *([F.col(seq_col).alias("_seq")] if seq_col else [F.lit(0).alias("_seq")]),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("_seq").desc())
-    latest = (
-        b.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .drop("_r", "_seq")
-        .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
-        .localCheckpoint()
-    )
-    # per-epoch job folding (VERDICT r14 #2): one per-block count
-    # aggregate replaces the separate affected-blocks collect AND the
-    # final latest.count(). Values unchanged.
-    block_counts = (
-        latest.groupBy("block")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: ≤ n_blocks rows
-    )
-    adds = (
-        pq_encode(
-            latest.filter(F.col("v").isNotNull()),
-            codebook, num_subspaces, sub_len, id_col="vec_id", vec_col="v",
+    up = _upsert_head(
+        batch.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("v"),
+            *([seq_col] if seq_col else []),
+        ),
+        code_dir,
+        lambda live: pq_encode(
+            live, codebook, num_subspaces, sub_len, id_col="vec_id", vec_col="v"
         )
         .withColumn("block", (F.col("vec_id") % n_blocks).cast("int"))
-        .select("vec_id", "m", "code", "qerr", "block")
-        .localCheckpoint()
+        .select("vec_id", "m", "code", "qerr", "block"),
+        "vec_id", "v", "block", n_blocks=n_blocks, seq_col=seq_col,
     )
-    # affected blocks as a literal list — pruning costs one
-    # partition-pruned scan instead of a checkpoint + broadcast join
-    # per epoch
-    affected = sorted(int(r["block"]) for r in block_counts)
-    batch_rows = sum(int(r["n"]) for r in block_counts)
-    drift = [
+    adds = up.new.localCheckpoint()  # read by the drift registers and the rewrite
+    emptied = _rewrite_partitions(
+        up.keep.unionByName(adds), code_dir, "block", up.affected
+    )
+    return {
+        "batch_rows": up.batch_rows,
+        "affected_blocks": len(up.affected),
+        "emptied_blocks": len(emptied),
+        "drift": _drift(adds),
+    }
+
+
+def _drift(adds: DataFrame) -> list:
+    """Per-subspace drift registers [(m, n, sum_qerr)] of a batch's PQ
+    encodings (≤ num_subspaces rows collected)."""
+    return sorted(
         (int(r["m"]), int(r["n"]), float(r["sq"]))
         for r in adds.groupBy("m")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("qerr").alias("sq"))
-        .collect()  # bounded: ≤ num_subspaces rows
-    ]
-    rewrite = adds
-    if _store_exists(spark, code_dir):  # else: first run, nothing to keep
-        rewrite = (
-            _prune_partitions(spark.read.parquet(code_dir), "block", affected)
-            .join(latest.select("vec_id"), "vec_id", "left_anti")
-            .select("vec_id", "m", "code", "qerr", "block")
-            .unionByName(adds)
-        )
-    emptied = _rewrite_partitions(rewrite, code_dir, "block", affected)
-    return {
-        "batch_rows": batch_rows,
-        "affected_blocks": len(affected),
-        "emptied_blocks": len(emptied),
-        "drift": sorted(drift),
-    }
+        .collect()
+    )
 
 
 def hierarchical_graph_search_topk(
@@ -2343,86 +2335,38 @@ def ivfpq_code_upsert(
     the layout a billion-vector serving index actually uses.
 
     Inherits BOTH hazards of its parents: the cell is carried with the
-    batch (a re-embedded vector may be reassigned), so affected cells =
-    the batch's claimed cells ∪ the store's CURRENT cells for the
-    batch's ids — without the second set a moved vector's stale codes
-    survive in the old cell as duplicates (the ivf_index_upsert
-    cell-move defense, ADVICE r10 #2); and codes are computed against
-    the FROZEN training-time codebook, so the same per-subspace drift
-    registers as ``pq_code_upsert`` come back for the retrain monitor.
-    Last-write-wins by ``seq_col`` within the batch; emptied cells are
-    deleted through the Hadoop FileSystem API; a read failure on an
-    existing store propagates loudly.
+    batch, so ``_upsert_head`` applies the IVF cell-move defense; and
+    codes are computed against the FROZEN training-time codebook, so
+    the same per-subspace drift registers as ``pq_code_upsert`` come
+    back for the retrain monitor.
 
     Returns {"batch_rows", "affected_cells", "emptied_cells",
     "drift": [(m, n, sum_qerr), ...]}.
     """
-    spark = batch.sparkSession
-    b = batch.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        F.col(cell_col).alias("cell"),
-        *([F.col(seq_col).alias("_seq")] if seq_col else [F.lit(0).alias("_seq")]),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("_seq").desc())
-    latest = (
-        b.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .drop("_r", "_seq")
-        .localCheckpoint()
-    )
-    # per-epoch job folding (VERDICT r14 #2): one per-cell count
-    # aggregate replaces the claimed-cells collect AND the final
-    # latest.count(). Values unchanged.
-    live = latest.filter(F.col("v").isNotNull())
-    store_exists = _store_exists(spark, idx_dir)
-    idx = spark.read.parquet(idx_dir) if store_exists else None
-    cell_counts = (
-        latest.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: ≤ |batch| cells
-    )
-    # cell-move lookup: (vec_id, cell) only — cell is the partition
-    # column and vec_id one thin column, a pruned metadata-ish scan
-    # with the ≤|batch| id set broadcast
-    current = set() if idx is None else {
-        r["cell"]
-        for r in idx.select("vec_id", "cell")
-        .join(F.broadcast(latest.select("vec_id").distinct()), "vec_id")
-        .select("cell")
-        .distinct()
-        .collect()  # bounded: ≤ |batch| cells
-    }
-    adds = (
-        pq_encode(live, codebook, num_subspaces, sub_len,
-                  id_col="vec_id", vec_col="v")
-        .join(F.broadcast(live.select("vec_id", "cell")), "vec_id")
-        .select("vec_id", "m", "code", "qerr", "cell")
-        .localCheckpoint()
-    )
-    claimed = {r["cell"] for r in cell_counts}
-    batch_rows = sum(int(r["n"]) for r in cell_counts)
-    affected = sorted(claimed | current)
-    drift = [
-        (int(r["m"]), int(r["n"]), float(r["sq"]))
-        for r in adds.groupBy("m")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("qerr").alias("sq"))
-        .collect()  # bounded: ≤ num_subspaces rows
-    ]
-    rewrite = adds
-    if idx is not None:  # else: first run, nothing to keep
-        rewrite = (
-            _prune_partitions(idx, "cell", affected)
-            .join(latest.select("vec_id"), "vec_id", "left_anti")
-            .select("vec_id", "m", "code", "qerr", "cell")
-            .unionByName(adds)
+    up = _upsert_head(
+        batch.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("v"),
+            F.col(cell_col).alias("cell"),
+            *([seq_col] if seq_col else []),
+        ),
+        idx_dir,
+        lambda live: pq_encode(
+            live, codebook, num_subspaces, sub_len, id_col="vec_id", vec_col="v"
         )
-    emptied = _rewrite_partitions(rewrite, idx_dir, "cell", affected)
+        .join(F.broadcast(live.select("vec_id", "cell")), "vec_id")
+        .select("vec_id", "m", "code", "qerr", "cell"),
+        "vec_id", "v", "cell", seq_col=seq_col,
+    )
+    adds = up.new.localCheckpoint()  # read by the drift registers and the rewrite
+    emptied = _rewrite_partitions(
+        up.keep.unionByName(adds), idx_dir, "cell", up.affected
+    )
     return {
-        "batch_rows": batch_rows,
-        "affected_cells": len(affected),
+        "batch_rows": up.batch_rows,
+        "affected_cells": len(up.affected),
         "emptied_cells": len(emptied),
-        "drift": sorted(drift),
+        "drift": _drift(adds),
     }
 
 

@@ -366,107 +366,60 @@ def word_count_upsert(
     is the whole point: at 100 TB the vocabulary monitor and any
     retrain read the register store (vocabulary-sized), never the
     corpus. Per-batch cost = |batch| tokenizations + |affected blocks|
-    of store I/O, never |index|. Last-write-wins within the batch by
-    ``seq_col``; emptied blocks are deleted through the Hadoop FS API;
-    a read failure on an existing store propagates loudly.
+    of store I/O, never |index|. ``similarity._upsert_head`` resolves
+    the batch (last write wins: ``seq_col`` when given, then a live
+    delivery before a tombstone, then the greatest text) and reads the
+    affected blocks' old and kept rows.
 
     ``n_blocks`` is part of the store's on-disk layout: it is persisted
     in a ``_n_blocks`` sidecar at store creation and every later call
     raises loudly on mismatch (ADVICE r13 #2 — a different modulus
     would compute ``affected`` under the wrong layout, silently leaving
-    stale rows and un-negated deltas). In-batch duplicate doc_ids with
-    no ``seq_col`` resolve by a DETERMINISTIC tiebreak — non-null text
-    beats tombstone, then lexicographically greatest text — so the
-    surviving delivery is stable across retries and partitionings
-    (ADVICE r13 #3); pass ``seq_col`` when delivery order matters.
+    stale rows and un-negated deltas).
 
     Returns {"batch_docs", "affected_blocks", "emptied_blocks",
     "deltas": DataFrame (word, delta) — localCheckpointed BEFORE the
     store overwrite so its lineage cannot read the rewritten store}.
     """
     from kafka_sink_azure_kusto_spark.functions.similarity import (
-        _prune_partitions,
         _rewrite_partitions,
-        _store_exists,
+        _upsert_head,
     )
 
-    spark = batch.sparkSession
-    _check_store_n_blocks(spark, store_dir, n_blocks)
-    b = batch.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        *([F.col(seq_col).alias("_seq")] if seq_col else [F.lit(0).alias("_seq")]),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("_seq").desc(),
-        # deterministic within-_seq tiebreak (ADVICE r13 #3): prefer a
-        # live delivery over a tombstone, then greatest text
-        F.col("text").isNull().cast("int").asc(),
-        F.col("text").desc(),
-    )
-    latest = (
-        b.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .drop("_r", "_seq")
-        .withColumn("block", (F.col("doc_id") % n_blocks).cast("int"))
-        .localCheckpoint()
-    )
-    # per-epoch job folding (VERDICT r14 #2): one per-block count
-    # aggregate replaces the affected-blocks collect AND the final
-    # latest.count()
-    block_counts = (
-        latest.groupBy("block")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded ≤ n_blocks rows
-    )
-    new_rows = (
-        latest.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id", "block",
-            F.explode(F.split("text", " ")).alias("word"),
+    _check_store_n_blocks(batch.sparkSession, store_dir, n_blocks)
+    up = _upsert_head(
+        batch.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(text_col).alias("text"),
+            *([seq_col] if seq_col else []),
+        ),
+        store_dir,
+        lambda live: live.select(
+            "doc_id", "block", F.explode(F.split("text", " ")).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("doc_id", "block", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
+        .select("doc_id", "word", "cnt", "block"),
+        "doc_id", "text", "block", n_blocks=n_blocks, seq_col=seq_col,
     )
-    affected = sorted(int(r["block"]) for r in block_counts)
-    batch_docs = sum(int(r["n"]) for r in block_counts)
-    if _store_exists(spark, store_dir):
-        idx = _prune_partitions(spark.read.parquet(store_dir), "block", affected)
-        old_rows = (
-            idx.join(latest.select("doc_id"), "doc_id", "left_semi")
-            .select("doc_id", "word", "cnt", "block")
-        )
-        keep = (
-            idx.join(latest.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id", "word", "cnt", "block")
-        )
-    else:
-        old_rows, keep = None, None  # first run — store never written
-    neg = (
-        old_rows.select("word", (-F.col("cnt")).alias("delta"))
-        if old_rows is not None
-        else spark.createDataFrame([], "word string, delta long")
-    )
+    new_rows = up.new.localCheckpoint()
     # BOTH checkpoints (this one and the rewrite's) run BEFORE the
     # overwrite invalidates the store lineage
     deltas = (
         new_rows.select("word", F.col("cnt").alias("delta"))
-        .unionByName(neg)
+        .unionByName(up.old.select("word", (-F.col("cnt")).alias("delta")))
         .groupBy("word")
         .agg(F.sum("delta").cast("long").alias("delta"))
         .filter(F.col("delta") != 0)
         .localCheckpoint()
     )
-    new_store_rows = new_rows.select("doc_id", "word", "cnt", "block")
     emptied = _rewrite_partitions(
-        new_store_rows if keep is None else keep.unionByName(new_store_rows),
-        store_dir, "block", affected,
+        up.keep.unionByName(new_rows), store_dir, "block", up.affected
     )
     return {
-        "batch_docs": batch_docs,
-        "affected_blocks": len(affected),
+        "batch_docs": up.batch_rows,
+        "affected_blocks": len(up.affected),
         "emptied_blocks": len(emptied),
         "deltas": deltas,
     }

@@ -5,7 +5,6 @@ aggregation, SQL passthrough, and the streaming round-trip (rows-only).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F

@@ -831,6 +831,7 @@ def _run_vocab_stream_loop(
     drift/retrain audit rows, path of the persisted RETRAINED
     vocabulary store — the r14 serving read's input)."""
     from kafka_sink_azure_kusto_spark.functions import unigram as U
+    from kafka_sink_azure_kusto_spark.functions.similarity import last_write_wins
 
     work = _workdir("stream_vocab_")
     store = os.path.join(work, "store")
@@ -920,12 +921,11 @@ def _run_vocab_stream_loop(
         # per-epoch coverage registers: the batch's LIVE text under
         # the PERSISTED seed vocabulary (the serving store, not a
         # recompute) — reads only the batch + the seed vocab store,
-        # so it shares no state with the doc-store upsert
-        w = Window.partitionBy("doc_id").orderBy(F.col("seq").desc())
-        live = (
-            batch_df.withColumn("_r", F.row_number().over(w))
-            .filter((F.col("_r") == 1) & F.col("text").isNotNull())
-            .drop("_r")
+        # so it shares no state with the doc-store upsert; the batch
+        # resolves by the store's own last-write-wins rule, so both
+        # keep the same delivery of a doc
+        live = last_write_wins(batch_df, "doc_id", "text", "seq").filter(
+            F.col("text").isNotNull()
         )
         oov_stats(U.word_counts(live), mb.read.parquet(vocab_dir)).write.mode(
             "overwrite"
