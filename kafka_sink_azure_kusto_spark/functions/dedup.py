@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.functions.parallelism import ensure_min_parallelism
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.functions.text import fingerprint, tokens
 
 
@@ -1044,12 +1045,7 @@ def substring_span_dedup(
     bucket cap bounds every bucket's pair fan-out at cap² regardless of
     how pathological the boilerplate is."""
     grams = substring_span_grams(df, text_col, id_col, k)
-    wcap = Window.partitionBy("h").orderBy(id_col, "p")
-    capped = (
-        grams.withColumn("rnk", F.row_number().over(wcap))
-        .filter(F.col("rnk") <= bucket_cap)
-        .drop("rnk")
-    )
+    capped = topk_rows(grams, "h", [id_col, "p"], bucket_cap).drop("rank")
     left = capped.select(
         F.col(id_col).alias("l_id"), F.col("p").alias("pl"), "h"
     )
@@ -1074,13 +1070,8 @@ def substring_span_dedup(
             F.col("r_id").alias(id_col), F.col("l_id").alias("partner_id"), "span"
         )
     )
-    wbest = Window.partitionBy(id_col).orderBy(
-        F.col("span").desc(), F.col("partner_id")
-    )
-    best = (
-        sym.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
-        .select(id_col, "partner_id", "span")
+    best = topk_rows(sym, id_col, ["-span", "partner_id"], 1).select(
+        id_col, "partner_id", "span"
     )
     c = F.col(text_col)
     docs = df.select(

@@ -168,15 +168,12 @@ def last_write_wins(
     columns. Without ``seq_col`` the tiebreak alone decides, so the
     surviving row never depends on how ``df`` is partitioned.
     ``seq_col`` is dropped."""
-    order = [F.col(seq_col).desc()] if seq_col else []
-    order += [F.col(value).desc_nulls_last()] + [
-        F.col(c).desc() for c in df.columns if c not in (key, value, seq_col)
+    order = [f"-{seq_col}"] if seq_col else []
+    order += [f"-{value}"] + [
+        f"-{c}" for c in df.columns if c not in (key, value, seq_col)
     ]
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("_lw", F.row_number().over(w))
-        .filter(F.col("_lw") == 1)
-        .drop("_lw", *([seq_col] if seq_col else []))
+    return topk_rows(df, key, order, 1).drop(
+        "rank", *([seq_col] if seq_col else [])
     )
 
 
@@ -340,14 +337,19 @@ def _rank_pairs(pairs: DataFrame, metric: str, k: int) -> DataFrame:
     )
 
 
-def topk_rows(df: DataFrame, part: str, order: list[str], k: int) -> DataFrame:
+def topk_rows(
+    df: DataFrame, part: str | list[str], order: list[str], k: int
+) -> DataFrame:
     """The k best rows of ``df`` per ``part`` value, numbered 1..k in a
-    ``rank`` column.
+    ``rank`` column (which replaces any ``rank`` column of ``df``).
+    ``part`` is one column or a list of them; an empty list ranks the
+    whole frame as one group.
 
     ``order`` names the sort keys best first: the score, then the id
     that breaks its ties. A leading ``-`` sorts a key descending. Every
-    key sorts nulls last, so a null score (a short vector that
-    ``zip_with`` pads) never outranks a real one."""
+    key sorts nulls last, as DuckDB's ``ROW_NUMBER`` does by default (a
+    bare Spark ``asc()`` sorts nulls first), so a null score (a short
+    vector that ``zip_with`` pads) never outranks a real one."""
     keys = [
         F.col(o[1:]).desc_nulls_last() if o.startswith("-")
         else F.col(o).asc_nulls_last()
@@ -497,13 +499,8 @@ def multiprobe_cells(
     scored = queries.crossJoin(F.broadcast(centroids)).withColumn(
         "_cd", cosine(query_vec_col, "centroid")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_cd").desc(), F.col("cell").asc()
-    )
-    return (
-        scored.withColumn("_cr", F.row_number().over(w))
-        .filter(F.col("_cr") <= n_probe)
-        .select(query_id_col, query_vec_col, "cell")
+    return topk_rows(scored, query_id_col, ["-_cd", "cell"], n_probe).select(
+        query_id_col, query_vec_col, "cell"
     )
 
 
@@ -566,13 +563,8 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", cosine("qvec", "cvec"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return topk_rows(scored, "query_id", ["-score", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "score", "rank"
     )
 
 
@@ -884,13 +876,8 @@ def pq_adc_topk(
         .agg(F.round(F.sum("qd"), 6).alias("adc_d2"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    return topk_rows(adc, "query_id", ["adc_d2", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "adc_d2", "rank"
     )
 
 
@@ -1041,13 +1028,8 @@ def ivf_pq_residual_topk(
         .agg(F.round(F.sum("qd"), 6).alias("adc_d2"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    return topk_rows(adc, "query_id", ["adc_d2", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "adc_d2", "rank"
     )
 
 
@@ -1251,21 +1233,18 @@ def lsh_topk_directed(
             df, num_planes=num_planes, id_col=id_col, vec_col=vec_col,
             plane_offset=b * num_planes,
         ).withColumnRenamed("id", "nid")
-        capw = Window.partitionBy("bucket").orderBy(
-            md5_unit_interval(F.col("nid"), salt="knncap:"), F.col("nid")
-        )
         # vectors ride ALONG the bucket exchange (each vector ships once
         # per band) and the pair score is computed and projected away in
         # the join stage itself — scoring pairs by re-joining the vector
         # table later would sort PAIR-cardinality rows with vector
         # payloads attached (measured: OOM at the 50k probe; this shape
         # peaks at corpus-cardinality payload rows instead).
-        capped = (
-            vecs.join(buckets, "nid")
-            .withColumn("_cr", F.row_number().over(capw))
-            .filter(F.col("_cr") <= bucket_cap)
-            .select("nid", "v", "vn", "bucket")
-        )
+        capped = topk_rows(
+            vecs.join(buckets, "nid").withColumn(
+                "_h", md5_unit_interval(F.col("nid"), salt="knncap:")
+            ),
+            "bucket", ["_h", "nid"], bucket_cap,
+        ).select("nid", "v", "vn", "bucket")
         scored_parts.append(
             capped.select(F.col("nid").alias("src"),
                           F.col("v").alias("sv"),
@@ -1290,13 +1269,7 @@ def lsh_topk_directed(
         # the same pair found by two bands carries the identical
         # deterministic score — plain distinct dedups it
         scored = scored.distinct()
-    w = Window.partitionBy("src").orderBy(
-        F.col("score").desc(), F.col("dst").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk_rows(scored, "src", ["-score", "dst"], k)
 
 
 def nn_descent_refine(
@@ -1336,13 +1309,8 @@ def nn_descent_refine(
             num_planes=num_planes, k=k, bucket_cap=bucket_cap, bands=bands,
         ).localCheckpoint()
     fwd = seed.select("src", "dst")
-    revw = Window.partitionBy("dst").orderBy(
-        F.col("score").desc(), F.col("src").asc()
-    )
-    rev = (
-        seed.withColumn("_rr", F.row_number().over(revw))
-        .filter(F.col("_rr") <= k)
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    rev = topk_rows(seed, "dst", ["-score", "src"], k).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst")
     )
     nbrs = fwd.unionByName(rev).distinct()
     hop2 = (
@@ -1373,13 +1341,7 @@ def nn_descent_refine(
             .alias("score"),
         )
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("score").desc(), F.col("dst").asc()
-    )
-    refined = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    refined = topk_rows(scored, "src", ["-score", "dst"], k)
     seed_kth = seed.groupBy("src").agg(F.min("score").alias("seed_kth"))
     return (
         refined.join(seed_kth, "src", "left")
@@ -1514,11 +1476,9 @@ def knn_graph_build_exact(
              / (F.col("a.vn") * F.col("b.vn"))).alias("score"),
         )
     )
-    w = Window.partitionBy("src").orderBy(F.col("score").desc(), F.col("dst").asc())
     return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
+        topk_rows(scored, "src", ["-score", "dst"], k)
+        .drop("rank")
         .withColumn("block", (F.col("src") % n_blocks).cast("int"))
     )
 
@@ -1692,13 +1652,9 @@ def knn_graph_upsert(
             .alias("score"),
         )
     )
-    rw = Window.partitionBy("src").orderBy(
-        F.col("score").desc(), F.col("dst").asc()
-    )
     recomputed = (
-        scored.withColumn("_r", F.row_number().over(rw))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
+        topk_rows(scored, "src", ["-score", "dst"], k)
+        .drop("rank")
         .withColumn("block", (F.col("src") % n_blocks).cast("int"))
     )
 
@@ -1894,14 +1850,9 @@ def graph_search_topk(
     scored = score(start, rnd=0)
     visited = scored
     frontier = scored
-    bw = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nid").asc()
-    )
     for rnd in range(1, rounds + 1):
-        expand = (
-            frontier.withColumn("_br", F.row_number().over(bw))
-            .filter(F.col("_br") <= beam)
-            .select("query_id", "nid")
+        expand = topk_rows(frontier, "query_id", ["-score", "nid"], beam).select(
+            "query_id", "nid"
         )
         cand = (
             expand.join(und, expand.nid == und.src)
@@ -1920,19 +1871,12 @@ def graph_search_topk(
     # the query's own node (when the query set is drawn from the
     # corpus) stays in the frontier — it's the best expansion seed —
     # but is excluded from the RANKED output like every other topk op
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nid").asc()
-    )
-    return (
-        visited.filter(F.col("nid") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("nid").alias("neighbor_id"),
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    ranked = visited.filter(F.col("nid") != F.col("query_id"))
+    return topk_rows(ranked, "query_id", ["-score", "nid"], k).select(
+        "query_id",
+        F.col("nid").alias("neighbor_id"),
+        F.round("score", 6).alias("score"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 
@@ -2044,31 +1988,23 @@ def binary_hamming_topk(
             ).cast("bigint").alias("hamming"),
         )
     )
-    wh = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("nid").asc())
-    top = (
-        ham.withColumn("hr", F.row_number().over(wh))
-        .filter(F.col("hr") <= n_candidates)
-        .select("qid", "nid", "hamming")
+    top = topk_rows(ham, "qid", ["hamming", "nid"], n_candidates).select(
+        "qid", "nid", "hamming"
     )
     rer = (
         top.join(F.broadcast(q.select("qid", "qv")), "qid")
         .join(e.select(F.col("id").alias("nid"), F.col("v")), "nid")
         .withColumn("score", cosine("qv", "v"))
     )
-    wr = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
     score_col = (
         F.round("score", score_round) if score_round is not None else F.col("score")
     )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "hamming",
-            score_col.alias("score"),
-            F.col("rnk").cast("bigint").alias("rank"),
-        )
+    return topk_rows(rer, "qid", ["-score", "nid"], k).select(
+        F.col("qid").alias("query_id"),
+        F.col("nid").alias("neighbor_id"),
+        "hamming",
+        score_col.alias("score"),
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -2246,21 +2182,6 @@ def hierarchical_graph_search_topk(
     )
     entries: DataFrame | None = None
     all_vis: list[DataFrame] = []
-    if not upper_layers:
-        # degenerate flat call: the layer loop never runs, so the
-        # bottom search must carry the query-size guard itself
-        flat = graph_search_topk(
-            corpus, queries, edges, k=k, rounds=rounds, beam=beam,
-            id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-            max_broadcast_queries=max_broadcast_queries,
-            return_visited=return_visited or return_all_visited,
-        )
-        if return_all_visited:
-            flat = flat.select(
-                "query_id", "nid", "score", F.lit(0).alias("layer")
-            )
-        return flat
     for li, layer in enumerate(upper_layers):
         members = layer["members"].select("nid")
         lcorpus = vecs.join(F.broadcast(members), "nid")
@@ -2285,12 +2206,8 @@ def hierarchical_graph_search_topk(
                     F.lit(len(upper_layers) - li).alias("layer"),
                 )
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("nid").asc()
-        )
         entries = (
-            vis.withColumn("_cr", F.row_number().over(w))
-            .filter(F.col("_cr") <= layer["carry"])
+            topk_rows(vis, "query_id", ["-score", "nid"], layer["carry"])
             .select("query_id", "nid")
             # bounded (≤ carry × |queries| rows) barrier: without it the
             # next layer's plan chains the WHOLE upper-layer search
@@ -2301,7 +2218,9 @@ def hierarchical_graph_search_topk(
         corpus, queries, edges, k=k, rounds=rounds, beam=beam,
         id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
-        max_broadcast_queries=None,  # probed on the top layer already
+        # the top layer probed the query cap already; a flat call
+        # (no upper layers) probes it here
+        max_broadcast_queries=None if upper_layers else max_broadcast_queries,
         return_visited=return_visited or return_all_visited, entries=entries,
     )
     if not return_all_visited:

@@ -38,6 +38,7 @@ from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval,
     md5_unit_interval_sql,
 )
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 
 
 def cm_bucket(key: Column, row: int, width: int) -> Column:
@@ -141,11 +142,8 @@ def kmv_distinct(
     — two exchanges on the group key, per-group state bounded at k.
 
     NULL keys are dropped BEFORE hashing (standard sketch semantics —
-    COUNT(DISTINCT) ignores NULL). This also pins cross-engine rank
-    parity: a NULL key hashes to a NULL kmv_u, and Spark's default
-    ascending sort puts NULLS FIRST while DuckDB's ROW_NUMBER default is
-    NULLS LAST, so leaving NULLs in would shift u_k between engines
-    (round-6 advice).
+    COUNT(DISTINCT) ignores NULL); for the null order of ranks see
+    ``similarity.topk_rows``.
     """
     if k < 2:
         raise ValueError("kmv_distinct needs k >= 2")
@@ -667,13 +665,10 @@ def theta_sketch_rows(
         .distinct()
         .withColumn("kmv_u", u)
     )
-    w = Window.partitionBy(group_col).orderBy("kmv_u", key_col)
-    ranked = pairs.withColumn("kmv_rank", F.row_number().over(w)).filter(
-        F.col("kmv_rank") <= k
-    )
+    ranked = topk_rows(pairs, group_col, ["kmv_u", key_col], k)
     stats = ranked.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_distinct_seen"),
-        F.max(F.when(F.col("kmv_rank") == k, F.col("kmv_u"))).alias("u_k"),
+        F.max(F.when(F.col("rank") == k, F.col("kmv_u"))).alias("u_k"),
     )
     theta = F.coalesce(F.col("u_k"), F.lit(1.0))
     return ranked.select(group_col, "kmv_u").join(

@@ -1365,17 +1365,13 @@ def region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_topn_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-N per group with deterministic tie-break — the
     analytics-side window-function surface."""
+    from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
+
     o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.select(
-            F.col("o_custkey").alias("c_custkey"),
-            "o_orderkey",
-            F.row_number().over(w).alias("rnk"),
-        )
-        .filter(F.col("rnk") <= 2)
+    return topk_rows(o, "o_custkey", ["-o_totalprice", "o_orderkey"], 2).select(
+        F.col("o_custkey").alias("c_custkey"),
+        "o_orderkey",
+        F.col("rank").alias("rnk"),
     )
 
 

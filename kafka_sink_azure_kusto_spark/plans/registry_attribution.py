@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.plans.registry import register
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
 
@@ -129,21 +130,18 @@ def record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_desc = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     seq = attrs.select(
         "user_id",
         "ts",
+        "event_id",
         F.last("account_mark", ignorenulls=True).over(w).alias("last_account"),
         F.last("purchase_amount", ignorenulls=True)
         .over(w)
         .alias("last_purchase_amount"),
         F.last("error_ts", ignorenulls=True).over(w).alias("last_error_ts"),
         F.count(F.lit(1)).over(w).alias("n_events"),
-        F.row_number().over(w_desc).alias("rn"),
     )
-    return seq.filter(F.col("rn") == 1).select(
+    return topk_rows(seq, "user_id", ["-ts", "-event_id"], 1).select(
         "user_id",
         "last_account",
         F.col("last_purchase_amount").cast("double").alias("last_purchase_amount"),
@@ -463,19 +461,14 @@ def scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges aggregates)."""
     ev = load_table(spark, sf_dir, "events")
     cut = F.to_timestamp(F.lit("2024-01-16"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
 
     def latest(part: DataFrame) -> DataFrame:
-        return (
+        return topk_rows(
             part.select(
                 "user_id", F.col("event_type").alias("state"), "ts", "event_id"
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "state", "ts")
-        )
+            ),
+            "user_id", ["-ts", "-event_id"], 1,
+        ).select("user_id", "state", "ts")
 
     snap = latest(ev.filter(F.col("ts") < cut)).select(
         F.col("user_id").alias("s_key"),

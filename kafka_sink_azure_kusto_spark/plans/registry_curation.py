@@ -7,7 +7,6 @@ runs the literally-same integer/md5 arithmetic as the Spark plan.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -17,6 +16,7 @@ from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
     stratified_sample,
 )
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.functions.text import token_count
 from kafka_sink_azure_kusto_spark.operators.packing import pack_sequences, pack_stats
 from kafka_sink_azure_kusto_spark.plans.registry import _workdir, register
@@ -581,11 +581,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("tfidf"),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "term", "tf", "tfidf", "rank")
+    return topk_rows(scored, "doc_id", ["-tfidf", "term"], 3).select(
+        "doc_id", "term", "tf", "tfidf", F.col("rank").cast("bigint").alias("rank")
     )
 
 
@@ -1046,15 +1043,9 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cc = D.connected_components(docs, pairs)
     toks = docs.select("doc_id", token_count("text").cast("bigint").alias("nt"))
-    wk = Window.partitionBy("cluster_id").orderBy(
-        F.col("nt").desc(), F.col("doc_id").asc()
-    )
-    kept = (
-        cc.join(toks, "doc_id")
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") == 1)
-        .select("doc_id")
-    )
+    kept = topk_rows(
+        cc.join(toks, "doc_id"), "cluster_id", ["-nt", "doc_id"], 1
+    ).select("doc_id")
     # 3. decontamination (benchmark side broadcast inside the helper)
     clean = contamination_overlap(
         docs, docs.filter(F.col("doc_id") % 50 == 0), n=4

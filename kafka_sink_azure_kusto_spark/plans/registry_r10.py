@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.plans.registry_r9b import (
     _KNN_CAP,
@@ -444,15 +445,12 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         allb = parts[0]
         for pt in parts[1:]:
             allb = allb.unionByName(pt)
-        capw = Window.partitionBy("bkey").orderBy(
-            md5_unit_interval(F.col("nid"), salt="knncap:"), F.col("nid")
-        )
-        capped = (
-            allb.join(vecs, "nid")
-            .withColumn("_cr", F.row_number().over(capw))
-            .filter(F.col("_cr") <= _CAL_CAP)
-            .select("cfg", "bkey", "nid", "v", "vn")
-        )
+        capped = topk_rows(
+            allb.join(vecs, "nid").withColumn(
+                "_h", md5_unit_interval(F.col("nid"), salt="knncap:")
+            ),
+            "bkey", ["_h", "nid"], _CAL_CAP,
+        ).select("cfg", "bkey", "nid", "v", "vn")
         scored = (
             capped.select(
                 "cfg", "bkey",
@@ -475,12 +473,8 @@ def knn_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()  # multi-band repeats carry identical scores
         )
-        w = Window.partitionBy("cfg", "src").orderBy(
-            F.col("score").desc(), F.col("dst").asc()
-        )
         return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _CAL_K)
+            topk_rows(scored, ["cfg", "src"], ["-score", "dst"], _CAL_K)
             .select("cfg", "src", "dst")
             .localCheckpoint()
         )
@@ -1149,16 +1143,9 @@ def multimodal_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "doc_id",
         (dot / (F.sqrt(qn) * F.sqrt(inorm))).alias("s"),
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.col("s").desc(), F.col("doc_id").asc())
-    return (
-        sc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _XM_K)
-        .select(
-            "query_id", "doc_id", F.round("s", 6).alias("score"),
-            F.col("rnk").cast("bigint").alias("rank"),
-        )
+    return topk_rows(sc, "query_id", ["-s", "doc_id"], _XM_K).select(
+        "query_id", "doc_id", F.round("s", 6).alias("score"),
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -1668,14 +1655,12 @@ def split_semantic_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets = hyperplane_lsh_buckets(
             emb, num_planes=6, plane_offset=band * 6
         ).withColumnRenamed("id", "nid")
-        capw = Window.partitionBy("bucket").orderBy(
-            md5_unit_interval(F.col("nid"), salt="knncap:"), F.col("nid")
-        )
-        capped = (
-            buckets.withColumn("_cr", F.row_number().over(capw))
-            .filter(F.col("_cr") <= 256)
-            .select("nid", F.concat(F.lit(f"{band}:"), "bucket").alias("bkey"))
-        )
+        capped = topk_rows(
+            buckets.withColumn(
+                "_h", md5_unit_interval(F.col("nid"), salt="knncap:")
+            ),
+            "bucket", ["_h", "nid"], 256,
+        ).select("nid", F.concat(F.lit(f"{band}:"), "bucket").alias("bkey"))
         parts.append(
             capped.select(F.col("nid").alias("src"), "bkey")
             .join(

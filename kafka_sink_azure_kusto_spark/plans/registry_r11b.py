@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.plans.registry import register, run_replay
 from kafka_sink_azure_kusto_spark.plans.registry_r10 import _cos
 from kafka_sink_azure_kusto_spark.sources.tables import load_table
@@ -426,12 +427,7 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtok = toks.join(F.broadcast(q), toks.doc_id == q.qid).groupBy(
         "qid", "term"
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    wt = Window.partitionBy("qid").orderBy(F.col("cnt").desc(), F.col("term").asc())
-    qt = (
-        qtok.withColumn("tr", F.row_number().over(wt))
-        .filter(F.col("tr") <= _H_TERMS)
-        .select("qid", "term")
-    )
+    qt = topk_rows(qtok, "qid", ["-cnt", "term"], _H_TERMS).select("qid", "term")
     qterms = qt.select("term").distinct()
     tf = (
         toks.join(F.broadcast(qterms), "term")
@@ -471,11 +467,8 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum("_s"), 6).alias("s"))
     )
-    wl = Window.partitionBy("qid").orderBy(F.col("s").desc(), F.col("doc_id").asc())
-    lex = (
-        lexs.withColumn("lrank", F.row_number().over(wl))
-        .filter(F.col("lrank") <= _H_ARM_K)
-        .select("qid", "doc_id", "lrank")
+    lex = topk_rows(lexs, "qid", ["-s", "doc_id"], _H_ARM_K).select(
+        "qid", "doc_id", F.col("rank").alias("lrank")
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -507,18 +500,13 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.coalesce(1.0 / (F.lit(_H_RRF) + F.col("drank")), F.lit(0.0))
         ).alias("rrf"),
     )
-    wf = Window.partitionBy("qid").orderBy(F.col("rrf").desc(), F.col("doc_id").asc())
-    return (
-        fused.withColumn("frank", F.row_number().over(wf))
-        .filter(F.col("frank") <= _H_K)
-        .select(
-            F.col("qid").alias("query_id"),
-            "doc_id",
-            F.col("lex_rank").cast("bigint").alias("lex_rank"),
-            F.col("dense_rank").cast("bigint").alias("dense_rank"),
-            F.round(F.col("rrf"), 6).alias("rrf_score"),
-            F.col("frank").cast("bigint").alias("fused_rank"),
-        )
+    return topk_rows(fused, "qid", ["-rrf", "doc_id"], _H_K).select(
+        F.col("qid").alias("query_id"),
+        "doc_id",
+        F.col("lex_rank").cast("bigint").alias("lex_rank"),
+        F.col("dense_rank").cast("bigint").alias("dense_rank"),
+        F.round(F.col("rrf"), 6).alias("rrf_score"),
+        F.col("rank").cast("bigint").alias("fused_rank"),
     )
 
 
@@ -778,12 +766,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = pn.agg(
         (F.sum("n_triangles") / 3).cast("bigint").alias("total_triangles")
     )
-    wn = Window.orderBy(F.col("n_triangles").desc(), F.col("node").asc())
-    return (
-        pn.crossJoin(F.broadcast(tot))
-        .withColumn("rank", F.row_number().over(wn).cast("bigint"))
-        .filter(F.col("rank") <= _TRI_TOPN)
-        .select("node", "n_triangles", "total_triangles", "rank")
+    return topk_rows(
+        pn.crossJoin(F.broadcast(tot)), [], ["-n_triangles", "node"], _TRI_TOPN
+    ).select(
+        "node", "n_triangles", "total_triangles",
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -1197,20 +1184,15 @@ def inverted_index_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         (8 * F.count(F.lit(1))).cast("bigint").alias("raw_bytes"),
         F.sum(vb).cast("bigint").alias("compressed_bytes"),
     )
-    wr = Window.orderBy(F.col("n_postings").desc(), F.col("term").asc())
-    return (
-        per.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= _PC_TOPN)
-        .select(
-            "term",
-            "n_postings",
-            "raw_bytes",
-            "compressed_bytes",
-            F.round(
-                F.col("compressed_bytes") / F.col("raw_bytes").cast("double"), 6
-            ).alias("ratio"),
-            "rank",
-        )
+    return topk_rows(per, [], ["-n_postings", "term"], _PC_TOPN).select(
+        "term",
+        "n_postings",
+        "raw_bytes",
+        "compressed_bytes",
+        F.round(
+            F.col("compressed_bytes") / F.col("raw_bytes").cast("double"), 6
+        ).alias("ratio"),
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 

@@ -33,12 +33,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.plans.registry import (
     _workdir,
     memo_substrate,
@@ -946,11 +947,8 @@ def _run_vocab_stream_loop(
         .filter(F.col("wcnt") > 0)
         .localCheckpoint()
     )
-    wtop = Window.orderBy(F.col("wcnt").desc(), F.col("word").asc())
-    top = (
-        hist.withColumn("rank", F.row_number().over(wtop).cast("bigint"))
-        .filter(F.col("rank") <= _VB_TOP)
-        .select("word", "wcnt", "rank")
+    top = topk_rows(hist, [], ["-wcnt", "word"], _VB_TOP).select(
+        "word", "wcnt", F.col("rank").cast("bigint").alias("rank")
     )
 
     # ---- audit rows: per-epoch + merged coverage registers, the

@@ -25,6 +25,7 @@ from kafka_sink_azure_kusto_spark.functions.integrity import (
     fk_audit_sql,
 )
 from kafka_sink_azure_kusto_spark.functions.sampling import md5_unit_interval, md5_unit_interval_sql
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.functions.sketches import (
     countmin_estimates,
     countmin_estimates_sql,
@@ -555,11 +556,8 @@ def weighted_sample_wor(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = docs.select(
         "source", "doc_id", "n_chars", (-F.log(u) / F.col("n_chars")).alias("wkey")
     )
-    w = Window.partitionBy("source").orderBy("wkey", "doc_id")
-    return (
-        keyed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("source", "doc_id", "n_chars")
+    return topk_rows(keyed, "source", ["wkey", "doc_id"], 20).select(
+        "source", "doc_id", "n_chars"
     )
 
 

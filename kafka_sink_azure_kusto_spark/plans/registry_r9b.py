@@ -32,6 +32,7 @@ from kafka_sink_azure_kusto_spark.functions.corpus import (
 from kafka_sink_azure_kusto_spark.functions.sampling import (
     md5_unit_interval_sql,
 )
+from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 from kafka_sink_azure_kusto_spark.functions.sketches import (
     theta_setops_pairs,
     theta_setops_sql,
@@ -427,7 +428,6 @@ def theta_sketch_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_sink_azure_kusto_spark.functions.sampling import (
         md5_unit_interval,
     )
-    from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
@@ -440,24 +440,16 @@ def theta_sketch_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = pairs.withColumn(
         "u", md5_unit_interval(F.col("kmv_key"), salt="kmv:")
     )
-    wd = Window.partitionBy("grp", "day").orderBy("u", "kmv_key")
-    daily = (
-        hashed.withColumn("r", F.row_number().over(wd))
-        .filter(F.col("r") <= _THETA_K)
-        .select("grp", "u")
+    daily = topk_rows(hashed, ["grp", "day"], ["u", "kmv_key"], _THETA_K).select(
+        "grp", "u"
     )
-    wm = Window.partitionBy("grp").orderBy("u")
-    merged = (
-        daily.distinct()
-        .withColumn("r", F.row_number().over(wm))
-        .filter(F.col("r") <= _THETA_K)
-    )
+    merged = topk_rows(daily.distinct(), "grp", ["u"], _THETA_K)
 
     def estimate(ranked: DataFrame) -> DataFrame:
         per = ranked.groupBy("grp").agg(
             F.count(F.lit(1)).alias("n_seen"),
             F.max(
-                F.when(F.col("r") == _THETA_K, F.col("u"))
+                F.when(F.col("rank") == _THETA_K, F.col("u"))
             ).alias("u_k"),
         )
         est = F.when(
@@ -469,12 +461,9 @@ def theta_sketch_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``hashed`` carries one row per (group, user, day), and ranking
     # the day-duplicated multiset would pull u_k in by ~days× (the
     # merged path dedups naturally via union-distinct)
-    ws = Window.partitionBy("grp").orderBy("u", "kmv_key")
-    single_ranked = (
-        hashed.select("grp", "kmv_key", "u")
-        .distinct()
-        .withColumn("r", F.row_number().over(ws))
-        .filter(F.col("r") <= _THETA_K)
+    single_ranked = topk_rows(
+        hashed.select("grp", "kmv_key", "u").distinct(),
+        "grp", ["u", "kmv_key"], _THETA_K,
     )
     m = estimate(merged).withColumnRenamed("est", "est_m")
     s = estimate(single_ranked).withColumnRenamed("est", "est_s")
@@ -646,7 +635,6 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-mismatch filter applies before ranking. At 100 TB the label
     is any supervision signal: source, dedup cluster, language
     (`functions/similarity.lsh_topk_directed` + label filter)."""
-    from pyspark.sql import Window
     from kafka_sink_azure_kusto_spark.functions.sampling import (
         md5_unit_interval,
     )
@@ -667,15 +655,12 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets = hyperplane_lsh_buckets(
             emb, num_planes=_KNN_PLANES, plane_offset=band * _KNN_PLANES
         ).withColumnRenamed("id", "nid")
-        capw = Window.partitionBy("bucket").orderBy(
-            md5_unit_interval(F.col("nid"), salt="knncap:"), F.col("nid")
-        )
-        capped = (
-            vecs.join(buckets, "nid")
-            .withColumn("_cr", F.row_number().over(capw))
-            .filter(F.col("_cr") <= _KNN_CAP)
-            .select("nid", "v", "vn", "label", "bucket")
-        )
+        capped = topk_rows(
+            vecs.join(buckets, "nid").withColumn(
+                "_h", md5_unit_interval(F.col("nid"), salt="knncap:")
+            ),
+            "bucket", ["_h", "nid"], _KNN_CAP,
+        ).select("nid", "v", "vn", "label", "bucket")
         scored_parts.append(
             capped.select(
                 F.col("nid").alias("src"), F.col("v").alias("sv"),
@@ -701,19 +686,12 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     scored = scored_parts[0].unionByName(scored_parts[1]).distinct()
-    w = Window.partitionBy("src").orderBy(
-        F.col("score").desc(), F.col("dst").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _HN_K)
-        .select(
-            F.col("src").alias("anchor_id"),
-            F.col("dst").alias("negative_id"),
-            "src_label", "dst_label",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return topk_rows(scored, "src", ["-score", "dst"], _HN_K).select(
+        F.col("src").alias("anchor_id"),
+        F.col("dst").alias("negative_id"),
+        "src_label", "dst_label",
+        F.round("score", 6).alias("score"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 

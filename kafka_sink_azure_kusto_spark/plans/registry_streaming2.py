@@ -279,7 +279,7 @@ def streaming_upsert_materialized(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: each batch touches the snapshot (O(keys)) and the delta —
     never the event history; the snapshot join shuffles on the entity
     key exactly like a production MERGE INTO."""
-    from pyspark.sql import Window
+    from kafka_sink_azure_kusto_spark.functions.similarity import topk_rows
 
     work = _workdir("stream_mv_")
     ev = load_table(spark, sf_dir, "events").orderBy("event_id").limit(3000)
@@ -300,17 +300,10 @@ def streaming_upsert_materialized(spark: SparkSession, sf_dir: str) -> DataFrame
             return spark.read.parquet(os.path.join(state_root, f.read().strip()))
 
     def merge_batch(batch_df, epoch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts_us").desc(), F.col("event_id").desc()
-        )
-        delta = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("user_id").alias("d_key"),
-                F.col("event_type").alias("d_state"),
-                F.col("ts_us").alias("d_ts"),
-            )
+        delta = topk_rows(batch_df, "user_id", ["-ts_us", "-event_id"], 1).select(
+            F.col("user_id").alias("d_key"),
+            F.col("event_type").alias("d_state"),
+            F.col("ts_us").alias("d_ts"),
         )
         snap = current_snapshot()
         if snap is None:

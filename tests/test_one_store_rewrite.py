@@ -428,7 +428,9 @@ def test_upsert_head_is_the_only_keyed_store_head():
 
     seq_orders = {
         f for f, src in funcs.items()
-        if re.search(r'col\((seq_col|"_?seq")\)\.(desc|asc)', src)
+        if re.search(
+            r'col\((seq_col|"_?seq")\)\.(desc|asc)|"-_?seq"|f"-\{seq_col\}"', src
+        )
     }
     assert seq_orders == {"last_write_wins"}
     assert callers("_store_exists") == {"_upsert_head", "_check_store_n_blocks"}

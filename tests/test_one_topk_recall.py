@@ -1,13 +1,14 @@
 """One exact top-k rule (``similarity.topk_rows``) and one recall grader
-(``similarity.recall_arm``) serve the exact scorers and the ANN recall
-audits: the null and tie rules of the top-k, the graded row of the
-grader, the ported audits against their DuckDB oracles, and a source
-guard that keeps the hand-written copies from coming back."""
+(``similarity.recall_arm``) serve the package: the null and tie rules of
+the top-k and its parity with DuckDB's ``ROW_NUMBER``, the graded row of
+the grader, the ported queries against their DuckDB oracles, and source
+guards that keep the hand-written copies from coming back."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 import sys
 
 import numpy as np
@@ -93,6 +94,84 @@ def test_brute_force_l2sq_matches_a_numpy_argsort_with_id_tie_break(spark):
     assert got == sorted(want)
 
 
+_KEYED = "g string, h long, id long, s double"
+# null scores, score ties, and a group (b) whose scores are all null
+_KEYED_ROWS = [
+    ("a", 0, 1, 2.0), ("a", 0, 2, None), ("a", 1, 3, 2.0), ("a", 1, 4, 1.0),
+    ("a", 0, 5, 3.0), ("a", 1, 6, None), ("b", 0, 7, None), ("b", 0, 8, None),
+    ("b", 1, 9, 5.0), ("a", 0, 10, 2.0),
+]
+
+
+@pytest.mark.parametrize(
+    "order, want",
+    [
+        (["-s", "id"], [(5, 1), (1, 2), (3, 3), (10, 4), (4, 5), (2, 6), (6, 7)]),
+        (["s", "id"], [(4, 1), (1, 2), (3, 3), (10, 4), (5, 5), (2, 6), (6, 7)]),
+    ],
+    ids=["desc", "asc"],
+)
+def test_topk_rows_ranks_null_keys_last_and_breaks_ties_by_id(spark, order, want):
+    df = spark.createDataFrame(_KEYED_ROWS, _KEYED).filter(F.col("g") == "a")
+    got = S.topk_rows(df, "g", order, 10).select("id", "rank").collect()
+    assert sorted(map(tuple, got), key=lambda r: r[1]) == want
+
+
+@pytest.mark.parametrize(
+    "part, order, k",
+    [
+        ("g", ["-s", "id"], 2),
+        ("g", ["s", "-id"], 3),
+        (["g", "h"], ["-s", "id"], 1),
+        (["g", "h"], ["s", "id"], 2),
+        ([], ["-s", "-id"], 4),
+    ],
+    ids=["one-desc", "one-asc", "list-desc", "list-asc", "whole-frame"],
+)
+def test_topk_rows_matches_duckdb_row_number(spark, part, order, k):
+    import duckdb
+    import pandas as pd
+
+    df = spark.createDataFrame(_KEYED_ROWS, _KEYED)
+    got = sorted(
+        tuple(r) for r in S.topk_rows(df, part, order, k)
+        .select("id", "rank").collect()
+    )
+    cols = [part] if isinstance(part, str) else part
+    keys = ", ".join(
+        f"{o[1:]} DESC" if o.startswith("-") else o for o in order
+    )
+    over = (f"PARTITION BY {', '.join(cols)} " if cols else "") + f"ORDER BY {keys}"
+    t = pd.DataFrame(_KEYED_ROWS, columns=["g", "h", "id", "s"])
+    con = duckdb.connect()
+    try:
+        con.register("t", t)
+        want = con.execute(
+            f"SELECT id, rank FROM (SELECT id, "
+            f"ROW_NUMBER() OVER ({over}) AS rank FROM t) WHERE rank <= {k}"
+        ).fetchall()
+    finally:
+        con.close()
+    assert got == sorted((int(i), int(r)) for i, r in want)
+
+
+def test_topk_rows_at_one_equals_last_write_wins_on_equal_seq_duplicates(spark):
+    # key 1: three deliveries at seq 2 — a tombstone, "x" and "y"; key 2:
+    # equal seq and value, so the remaining column decides
+    df = spark.createDataFrame(
+        [(1, None, 2, 0), (1, "x", 2, 5), (1, "y", 2, 1), (1, "z", 1, 9),
+         (2, "v", 3, 1), (2, "v", 3, 4), (3, None, 1, 0)],
+        "k long, v string, seq long, x long",
+    )
+    for n in (1, 3):
+        parted = df.repartition(n)
+        lww = S.last_write_wins(parted, "k", "v", "seq")
+        top = S.topk_rows(parted, "k", ["-seq", "-v", "-x"], 1).drop("rank", "seq")
+        assert sorted(map(tuple, lww.collect())) == sorted(
+            map(tuple, top.collect())
+        ) == [(1, "y", 1), (2, "v", 4), (3, None, 0)]
+
+
 # ------------------------------------------------------------ recall
 
 
@@ -140,7 +219,7 @@ def test_recall_arm_with_zero_hits_still_yields_its_row(spark):
     assert [tuple(r) for r in counted.collect()] == [("z", 0, 0, 3, 0.0)]
 
 
-# --------------------------------------------- audits against oracles
+# ------------------------------------ ported queries against oracles
 
 _PORTED = [
     "knn_recall_audit",
@@ -152,6 +231,16 @@ _PORTED = [
     "adc_nprobe_recall_audit",
     "ivfpq_serving_recall_audit",
     "ivfpq_residual_gain_audit",
+    # queries whose hand-written cut became ``topk_rows``
+    "window_topn_per_customer",
+    "weighted_sample_wor",
+    "tfidf_top_terms",
+    "hybrid_retrieval_rrf",
+    "scd1_upsert",
+    "record_survivorship",
+    "theta_sketch_merge_lifecycle",
+    "multimodal_crossmodal_topk",
+    "split_semantic_leakage_audit",
 ]
 
 
@@ -229,3 +318,60 @@ def test_no_hand_written_recall_closures_remain():
         assert "def grade(" not in (plans / f"{mod}.py").read_text(
             encoding="utf-8"
         )
+
+
+def _function_sources(text):
+    lines = text.splitlines()
+    return {
+        node.name: "\n".join(lines[node.lineno - 1:node.end_lineno])
+        for node in ast.parse(text).body
+        if isinstance(node, ast.FunctionDef)
+    }
+
+
+def _cut_modules():
+    return [
+        p for d in ("functions", "plans") for p in sorted((_PKG / d).glob("*.py"))
+    ]
+
+
+def _row_number_cuts():
+    """(module, top-level function) of every ``F.row_number()`` whose
+    column a ``<=`` or ``==`` compares within the next few lines."""
+    cuts = set()
+    for p in _cut_modules():
+        for fn, src in _function_sources(p.read_text(encoding="utf-8")).items():
+            lines = src.splitlines()
+            for i, line in enumerate(lines):
+                if "F.row_number()" not in line:
+                    continue
+                head = "\n".join(lines[max(i - 1, 0):i + 3])
+                near = "\n".join(lines[max(i - 1, 0):i + 8])
+                names = re.findall(r'(?:withColumn\(\s*|alias\()"(\w+)"', head)
+                if re.search(r"\.over\(\w+\)\s*(<=|==)", near) or any(
+                    re.search(rf'col\("{n}"\)\s*(<=|==)', near) for n in names
+                ):
+                    cuts.add((p.stem, fn))
+    return cuts
+
+
+def test_topk_rows_is_the_only_row_number_cut():
+    assert _row_number_cuts() == {
+        ("similarity", "topk_rows"),
+        # kept: each compares the rank but keeps every row
+        ("sketches", "kmv_distinct"),  # reads the k-th hash
+        ("registry_curation", "dedup_keep_best"),  # a kept flag per row
+        ("registry_windows", "value_winsorize"),  # percentile bounds
+    }
+
+
+def test_window_is_imported_only_where_it_is_used():
+    for p in _cut_modules():
+        tree = ast.parse(p.read_text(encoding="utf-8"))
+        bound = {
+            a.asname or a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.name == "Window"
+        }
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        assert bound <= used, p.name

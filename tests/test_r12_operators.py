@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -224,6 +225,37 @@ def test_hierarchy_gain_audit_beats_flat(spark, sf_dir):
     # budget honesty: the hierarchical arm's candidates include the
     # descent layers, and stay in the same ballpark as flat's
     assert h.n_candidates <= 2 * f.n_candidates
+
+
+def test_flat_hierarchical_search_is_the_layer0_search(spark):
+    """With no upper layers the descent is the plain layer-0 beam
+    search, and it probes the query cap itself."""
+    from kafka_sink_azure_kusto_spark.functions.similarity import (
+        graph_search_topk,
+        hierarchical_graph_search_topk,
+        knn_graph_build_exact,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, [1.0 + i % 4, 1.0 + i // 4]) for i in range(12)],
+        "vec_id long, v array<double>",
+    )
+    edges = knn_graph_build_exact(corpus, k=3).select("src", "dst")
+    queries = corpus.filter(F.col("vec_id") % 5 == 1)
+    kw = dict(rounds=2, beam=2, vec_col="v", query_vec_col="v")
+    want = graph_search_topk(corpus, queries, edges, k=4, **kw).collect()
+    got = hierarchical_graph_search_topk(
+        corpus, queries, edges, [], k=4, **kw
+    ).collect()
+    assert len(got) > 0 and sorted(got) == sorted(want)
+    vis = hierarchical_graph_search_topk(
+        corpus, queries, edges, [], return_all_visited=True, **kw
+    )
+    assert {r.layer for r in vis.select("layer").distinct().collect()} == {0}
+    with pytest.raises(ValueError, match="max_broadcast_queries=1;"):
+        hierarchical_graph_search_topk(
+            corpus, queries, edges, [], max_broadcast_queries=1, **kw
+        )
 
 
 def test_hierarchical_search_layer_accounting(spark, sf_dir):
